@@ -3,9 +3,36 @@
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+@contextmanager
+def session_conf(spark: SparkSession, settings: Mapping[str, str]) -> Iterator[None]:
+    """Set session conf keys for the duration of a ``with`` block.
+
+    On every exit path each key goes back to exactly its prior state:
+    the earlier explicit value, or unset if the session never set it
+    (``conf.get(key, None)`` is ``None`` for an unset key, even one
+    with a built-in default).  Iterative operators use this for their
+    loop-local AQE / shuffle-width / codegen settings so a caller's
+    session is never left with a value it did not choose.
+    """
+    conf = spark.conf
+    prior = {key: conf.get(key, None) for key in settings}
+    try:
+        for key, value in settings.items():
+            conf.set(key, value)
+        yield
+    finally:
+        for key, value in prior.items():
+            if value is None:
+                conf.unset(key)
+            else:
+                conf.set(key, value)
 
 
 def spread(df: DataFrame, key: str) -> DataFrame:

@@ -10,12 +10,13 @@ step is an independent, composable DataFrame operator:
   shuffle and full whole-stage codegen — the Spark analogue of Flink's
   map-with-broadcast (``KMeans.java:264-290``), and the plan that
   survives a 100 TB scan (no N×k materialization, no exchange).
-* :func:`assign_points_param` — same semantics with the centroids as a
-  broadcast one-row DataFrame instead of literals: the generated stage
-  code carries no centroid values, so iterative callers compile the
-  stage once and reuse it every superstep (plan-stable form).
+* :func:`assign_points_param` — same semantics with the centroids as
+  three array literals read by a higher-order ``transform``: the
+  generated stage code carries no centroid values, so iterative callers
+  compile the stage once and reuse it every superstep (plan-stable
+  form).
 * :func:`assign_points_join` — same semantics via an explicit broadcast
-  join + per-key min, for when the centroid side is too large to inline.
+  join + per-key min, for when the centroid side is a DataFrame.
 * :func:`update_centroids` — O3/O4 grouped partial-sum + mean
   (``KMeans.java:311-336``): one hash-partition exchange on the cluster
   id with map-side partial aggregation (Catalyst's HashAggregate
@@ -23,10 +24,20 @@ step is an independent, composable DataFrame operator:
 * :func:`objective_from_assigned` / :func:`objective` — O9/O10 WCSS.
 * :func:`moved_centroids` — O6 convergence join+filter
   (``KMeans.java:169-181``).
-* :func:`lloyd` — O5 bulk iteration as a driver loop: the k-row centroid
-  state collects to the driver each superstep and re-enters the next
-  round as a broadcast one-row DataFrame (exactly MLlib's internal
-  collect+broadcast pattern, in plan-stable form).
+* :func:`lloyd` — O5 bulk iteration as a driver loop: each superstep is
+  the plan-stable assignment plus the grouped update, the k-row
+  centroid state collects to the driver and re-enters the next round
+  as array literals (MLlib's internal collect+broadcast pattern).
+* :func:`assign_points_nd` / :func:`update_centroids_nd` /
+  :func:`lloyd_nd` / :func:`spherical_kmeans_nd` — the same superstep
+  over an ``array<double>`` vector column.
+
+Each kernel has one definition, as SQL text: :func:`_argmin_2d_sql`
+(2-D argmin), :func:`assign_points_nd_sql` (n-d argmin) and
+:func:`_nd_sum_sql` (n-d partial sums).  The public operators and the
+driver loops all build from them; a loop pastes the text into one
+``selectExpr`` / ``spark.sql`` parse per superstep, which is far
+cheaper than composing the same tree Column by Column over py4j.
 
 Semantic fine print preserved from the reference (SURVEY.md §3.4):
 
@@ -46,15 +57,43 @@ from __future__ import annotations
 
 import math
 import random
+import uuid
 from collections.abc import Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from flink_kmeans_clustering_spark.operators.common import array_lit
+from flink_kmeans_clustering_spark.operators.common import array_lit_sql, session_conf
 
 Centroid = tuple[int, float, float]  # (id, x, y)
+
+
+def _quote(name: str) -> str:
+    """A column name as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _with_argmin(
+    df: DataFrame, argmin_sql: str, cluster_col: str, dist2_col: str | None
+) -> DataFrame:
+    """``df`` plus the cluster (and optionally dist²) of an argmin
+    struct given as SQL text.
+
+    Two projections: the first evaluates the struct once into a
+    temporary column, the second reads its fields.  Catalyst does not
+    collapse them when both fields are read (it never duplicates a
+    non-trivial expression), so the argmin runs once per row; reading
+    both fields off one inline expression would evaluate it twice.
+    """
+    tmp = "_argmin"
+    while tmp in df.columns:
+        tmp = "_" + tmp
+    cols = [F.col(_quote(c)) for c in df.columns]
+    cols.append(F.col(tmp)["cluster"].alias(cluster_col))
+    if dist2_col:
+        cols.append(F.col(tmp)["dist2"].alias(dist2_col))
+    return df.select("*", F.expr(argmin_sql).alias(tmp)).select(*cols)
 
 
 # ---------------------------------------------------------------------------
@@ -123,13 +162,14 @@ def assign_points_param(
     Same semantics as :func:`assign_points`, different physics: the
     centroid coordinates enter the plan as three **array literals**
     (ids/xs/ys) consumed by a higher-order ``transform`` over the index
-    range.  Array literals live in the codegen ``references`` table, not
-    in the generated Java source, so the stage source is byte-identical
-    across Lloyd supersteps — Janino compiles it once and every later
-    superstep hits the codegen cache.  The literal-unrolled
-    :func:`assign_points` recompiles each superstep because primitive
-    double literals are inlined into the source (~0.2 s/superstep;
-    docs/STATUS.md round 1).
+    range (:func:`_argmin_2d_sql`, the same text :func:`lloyd` runs
+    each superstep).  Array literals live in the codegen ``references``
+    table, not in the generated Java source, so the stage source is
+    byte-identical across Lloyd supersteps — Janino compiles it once
+    and every later superstep hits the codegen cache.  The
+    literal-unrolled :func:`assign_points` recompiles each superstep
+    because primitive double literals are inlined into the source
+    (~0.2 s/superstep; docs/STATUS.md round 1).
 
     The HOF lambda evaluates interpreted (CodegenFallback), but it is k
     struct constructions per row — measured ~25% cheaper per superstep
@@ -141,23 +181,32 @@ def assign_points_param(
     if not centroids:
         return assign_points(points, centroids, x=x, y=y,
                              cluster_col=cluster_col, dist2_col=dist2_col)
-    k = len(centroids)
-    ids = array_lit([int(c[0]) for c in centroids], kind="int")
-    xs = array_lit([float(c[1]) for c in centroids])
-    ys = array_lit([float(c[2]) for c in centroids])
-    idx = F.sequence(F.lit(0), F.lit(k - 1))
+    return _with_argmin(
+        points, _argmin_2d_sql(centroids, x, y), cluster_col, dist2_col
+    )
 
-    def _cand(i: Column) -> Column:
-        dx = F.col(x) - F.get(xs, i)
-        dy = F.col(y) - F.get(ys, i)
-        return F.struct((dx * dx + dy * dy).alias("dist2"), F.get(ids, i).alias("cluster"))
 
-    best = F.array_min(F.transform(idx, _cand))
-    out_cols = [F.col(c) for c in points.columns]
-    cols = [*out_cols, best["cluster"].alias(cluster_col)]
-    if dist2_col:
-        cols.append(best["dist2"].alias(dist2_col))
-    return points.select(*cols)
+def _argmin_2d_sql(centroids: Sequence[Centroid], x: str, y: str) -> str:
+    """The 2-D nearest-centroid argmin as one SQL expression: a
+    ``(dist2, cluster)`` struct, read as ``(expr).cluster`` /
+    ``(expr).dist2``.
+
+    dist² is ``(x−cx)·(x−cx) + (y−cy)·(y−cy)`` and ``array_min`` over
+    the structs keeps the lowest-id tie-break.  Coordinates render
+    through :func:`~.common.array_lit_sql`, which rejects NaN/±inf
+    with ``ValueError("non-finite literal …")``; the column names are
+    backtick-quoted.  ``centroids`` must be non-empty.
+    """
+    ids = array_lit_sql([int(c[0]) for c in centroids], kind="int")
+    xs = array_lit_sql([float(c[1]) for c in centroids])
+    ys = array_lit_sql([float(c[2]) for c in centroids])
+    qx, qy = _quote(x), _quote(y)
+    return (
+        f"array_min(transform(sequence(0, {len(centroids) - 1}), i -> named_struct("
+        f"'dist2', ({qx} - get({xs}, i)) * ({qx} - get({xs}, i))"
+        f" + ({qy} - get({ys}, i)) * ({qy} - get({ys}, i)),"
+        f" 'cluster', get({ids}, i))))"
+    )
 
 
 def assign_points_join(
@@ -230,68 +279,6 @@ def update_centroids(
     if count_col:
         cols.append(F.col("_n").alias(count_col))
     return agg.select(*cols)
-
-
-def update_centroids_observe(
-    assigned: DataFrame,
-    centroid_ids: Sequence[int],
-    cluster_col: str = "cluster",
-    x: str = "x",
-    y: str = "y",
-) -> list[Centroid]:
-    """O2+O3+O4 via ``df.observe`` accumulator metrics: the k×(Σx, Σy,
-    n) sums ride the assignment scan as AggregatingAccumulators — ONE
-    stage, ZERO exchange, no separate reduce tasks, no collect job.
-
-    :func:`update_centroids` (groupBy → k-row exchange) is the
-    canonical declarative form and the oracle surface; this variant
-    collapses the superstep's map+reduce stage pair to a single map
-    stage whose task-completion messages carry the merged sums.
-    MEASURED VERDICT (round 6, 100k/k=8 fixture, 5-run medians per
-    config): observe LOSES to the exchange at every partitioning
-    (2.08 vs 1.75 s @8 parts, 1.93 vs 1.53 @16, 1.95 vs 2.00 @32) —
-    CollectMetrics aggregates evaluate as interpreted
-    AggregatingAccumulators outside whole-stage codegen, and 3k
-    interpreted conditional sums per row cost more than the tiny
-    k-row exchange saves.  Kept as the measured alternative (and the
-    accumulator-harvest pattern reference); :func:`lloyd` defaults to
-    the exchange.  At cluster scale the accumulator payload is k×3
-    doubles per task — driver merge O(tasks·k), trivial at any N.
-
-    Determinism class is identical to the exchange path: per-partition
-    partial sums merged in arrival order (both are ±ulp of each other,
-    the same tolerance the WCSS golden assert already absorbs).
-
-    The conditional-sum expressions reference cluster ids through ONE
-    array literal (codegen ``references`` table), so the generated
-    stage source is byte-identical across supersteps while k is stable
-    — same Janino-cache discipline as :func:`assign_points_param`.
-
-    Empty clusters yield n=0 and are dropped (reference semantics).
-    Returns the new centroid list sorted by id.
-    """
-    from pyspark.sql import Observation
-
-    ids = [int(i) for i in centroid_ids]
-    ids_lit = array_lit(ids, kind="int")
-    aggs = []
-    for j in range(len(ids)):
-        cond = F.col(cluster_col) == F.get(ids_lit, F.lit(j))
-        aggs += [
-            F.sum(F.when(cond, F.col(x))).alias(f"_sx{j}"),
-            F.sum(F.when(cond, F.col(y))).alias(f"_sy{j}"),
-            F.sum(F.when(cond, F.lit(1)).otherwise(F.lit(0))).alias(f"_n{j}"),
-        ]
-    obs = Observation()
-    assigned.observe(obs, *aggs).write.format("noop").mode("overwrite").save()
-    m = obs.get
-    out: list[Centroid] = []
-    for j, cid in enumerate(ids):
-        n = m[f"_n{j}"]
-        if n:
-            out.append((cid, float(m[f"_sx{j}"]) / n, float(m[f"_sy{j}"]) / n))
-    out.sort(key=lambda c: c[0])
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -384,7 +371,6 @@ def lloyd(
     x: str = "x",
     y: str = "y",
     cache: bool = True,
-    update: str = "exchange",
 ) -> LloydResult:
     """Lloyd's K-Means as a driver-side bulk iteration (O5).
 
@@ -398,29 +384,20 @@ def lloyd(
     The points DataFrame is cached once and re-scanned each superstep —
     Spark's substitute for Flink's native feedback edge; with k-row
     driver state the per-iteration cost is one job over the cached scan.
-    Assignment uses :func:`assign_points_param` so the generated stage
+    Assignment is :func:`_argmin_2d_sql`, the argmin
+    :func:`assign_points_param` builds from, so the generated stage
     code is identical every superstep (one Janino compile per loop, not
-    one per iteration).
-
-    ``update`` selects the superstep's reduce physics: ``"exchange"``
-    (default) is the groupBy k-row shuffle + collect
-    (:func:`update_centroids`); ``"observe"`` harvests the k×3 sums as
-    accumulator metrics riding the assignment scan — one stage per
-    superstep, zero exchange, but MEASURED SLOWER (interpreted
-    CollectMetrics; see :func:`update_centroids_observe`).  Equality
-    of the two paths is pinned in tests.
+    one per iteration).  The update is the groupBy k-row shuffle of
+    :func:`update_centroids`.
 
     For the duration of the loop the session runs with AQE disabled and
-    ``spark.sql.shuffle.partitions`` pinned to k (restored afterwards):
-    each superstep's shuffle carries at most k rows per map partition,
-    so adaptive re-planning is pure per-job overhead here (~0.4 s/job
-    measured) and the k-key exchange needs no more than k reducers —
-    true at any input scale, since the shuffled data is the k-row
-    partial-aggregate, not the points.
+    ``spark.sql.shuffle.partitions`` pinned to k (restored afterwards by
+    :func:`~.common.session_conf`): each superstep's shuffle carries at
+    most k rows per map partition, so adaptive re-planning is pure
+    per-job overhead here (~0.4 s/job measured) and the k-key exchange
+    needs no more than k reducers — true at any input scale, since the
+    shuffled data is the k-row partial-aggregate, not the points.
     """
-    conf = points.sparkSession.conf
-    prev_aqe = conf.get("spark.sql.adaptive.enabled", "true")
-    prev_sp = conf.get("spark.sql.shuffle.partitions", None)
     if cache:
         # a single-file CSV/parquet source yields one partition — every
         # superstep's map would run on one core.  Round-robin rebalance
@@ -446,45 +423,18 @@ def lloyd(
         points = points.cache()
     current: list[Centroid] = [(int(i), float(px), float(py)) for i, px, py in init_centroids]
     iterations = 0
-    # Superstep plan construction cost (exchange mode): building
-    # assign_points_param + update_centroids Column-by-Column is ~40
-    # py4j round trips per superstep (~0.07 s at k=8 — a third of the
-    # whole superstep on the 100k fixture).  Instead the assignment is
-    # ONE selectExpr f-string (parsed JVM-side; codegen-value-
-    # independent like the param form — pinned by test) and the
-    # value-INdependent update aggregation Columns are hoisted out of
-    # the loop.  Same arithmetic term-for-term ((x−cx)²+(y−cy)², struct
-    # argmin with lowest-id ties, SUM/SUM/COUNT then Σ/n), so values
-    # are bit-identical — pinned by tests/test_kmeans_ops.py::
-    # test_lloyd_selectexpr_superstep_equals_column_form.  NOT a single
-    # spark.sql() with GROUP BY over the argmin alias: measured, the
-    # grouping key inlines the HOF into the aggregate (the projection-
-    # collapse trap) and each executed plan left the interpreted-eval
-    # path ~2× slower for the rest of the session.  The explicit
-    # selectExpr Project keeps the argmin in its own codegen stage.
-    def _assign_expr(cents: list) -> str:
-        # Same literal-safety contract as common.array_lit (ADVICE r10):
-        # a NaN/inf coordinate would render as unparseable SQL ('nanD'),
-        # so reject it eagerly with the same error shape; and the x/y
-        # identifiers are backtick-quoted so column names that need
-        # quoting parse instead of breaking the f-string plan.
-        for c in cents:
-            for v in (float(c[1]), float(c[2])):
-                if not math.isfinite(v):
-                    raise ValueError(f"non-finite literal {v!r}")
-        qx = "`" + x.replace("`", "``") + "`"
-        qy = "`" + y.replace("`", "``") + "`"
-        ids = ",".join(str(int(c[0])) for c in cents)
-        xs = ",".join(repr(float(c[1])) + "D" for c in cents)
-        ys = ",".join(repr(float(c[2])) + "D" for c in cents)
-        k = len(cents)
-        return (
-            f"array_min(transform(sequence(0, {k - 1}), i -> named_struct("
-            f"'dist2', ({qx} - get(array({xs}), i)) * ({qx} - get(array({xs}), i))"
-            f" + ({qy} - get(array({ys}), i)) * ({qy} - get(array({ys}), i)),"
-            f"'cluster', get(array({ids}), i)))).cluster AS cluster"
-        )
-
+    # Superstep plan construction cost: building the assignment and
+    # update Column-by-Column is ~40 py4j round trips per superstep
+    # (~0.07 s at k=8 — a third of the whole superstep on the 100k
+    # fixture).  Instead the assignment is ONE selectExpr string
+    # (parsed JVM-side) and the value-INdependent update aggregation
+    # Columns are hoisted out of the loop.  NOT a single spark.sql()
+    # with GROUP BY over the argmin alias: measured, the grouping key
+    # inlines the HOF into the aggregate (the projection-collapse trap)
+    # and each executed plan left the interpreted-eval path ~2× slower
+    # for the rest of the session.  The explicit selectExpr Project
+    # keeps the argmin in its own codegen stage.
+    qx, qy = _quote(x), _quote(y)
     _gid = F.col("cluster").alias("id")
     _aggs = [
         F.sum(x).alias("_sx"),
@@ -496,29 +446,22 @@ def lloyd(
         (F.col("_sx") / F.col("_n")).alias(x),
         (F.col("_sy") / F.col("_n")).alias(y),
     ]
-    try:
-        conf.set("spark.sql.adaptive.enabled", "false")
-        conf.set("spark.sql.shuffle.partitions", str(max(1, len(current))))
+    loop_conf = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": str(max(1, len(current))),
+    }
+    with session_conf(points.sparkSession, loop_conf):
         for _ in range(max_iterations):
-            if update == "observe":
-                assigned = assign_points_param(points, current, x=x, y=y)
-                new = update_centroids_observe(
-                    assigned, [c[0] for c in current], x=x, y=y
-                )
-            else:
-                new_rows = (
-                    points.selectExpr(
-                        "`" + x.replace("`", "``") + "`",
-                        "`" + y.replace("`", "``") + "`",
-                        _assign_expr(current),
-                    )
-                    .groupBy(_gid)
-                    .agg(*_aggs)
-                    .select(*_outs)
-                    .collect()
-                )
-                new = [(int(r["id"]), float(r[x]), float(r[y])) for r in new_rows]
-                new.sort(key=lambda c: c[0])
+            assign = _argmin_2d_sql(current, x, y)
+            new_rows = (
+                points.selectExpr(qx, qy, f"({assign}).cluster AS cluster")
+                .groupBy(_gid)
+                .agg(*_aggs)
+                .select(*_outs)
+                .collect()
+            )
+            new = [(int(r["id"]), float(r[x]), float(r[y])) for r in new_rows]
+            new.sort(key=lambda c: c[0])
             iterations += 1
             if epsilon is not None:
                 old_by_id = {c[0]: c for c in current}
@@ -536,14 +479,6 @@ def lloyd(
         assignments = assign_points_param(points, current, x=x, y=y, dist2_col="dist2")
         row = objective_from_assigned(assignments).collect()[0]
         wcss = float(row["wcss"]) if row["wcss"] is not None else 0.0
-    finally:
-        conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        if prev_sp is not None:
-            conf.set("spark.sql.shuffle.partitions", prev_sp)
-        else:
-            # never explicitly set before this call: unset instead of
-            # leaking the loop-local k-row value session-wide
-            conf.unset("spark.sql.shuffle.partitions")
     return LloydResult(centroids=current, iterations=iterations, assignments=assignments, wcss=wcss)
 
 
@@ -952,12 +887,13 @@ def assign_points_nd(
     """O1/O7 assignment generalized from (x, y) to a vector column —
     the reference hardcodes 2-D; the Spark-native data model is
     ``array<double>`` (SURVEY §1.3), and the same literal-argmin shape
-    carries over: the k×d centroid matrix enters the plan as ONE
-    array-of-arrays literal, dist² folds ``zip_with`` squared diffs
-    left-to-right (index order — an independent engine summing the
-    same 32 doubles in the same order lands on the same double), and
-    ``array_min`` over (dist², id) structs keeps the strict-<
-    lowest-id tie-break.  A narrow map: no join, no shuffle, any dim.
+    carries over (:func:`assign_points_nd_sql`): the k×d centroid
+    matrix enters the plan as ONE array-of-arrays literal, dist² folds
+    ``zip_with`` squared diffs left-to-right (index order — an
+    independent engine summing the same doubles in the same order
+    lands on the same double), and ``array_min`` over (dist², id)
+    structs keeps the strict-< lowest-id tie-break.  A narrow map: no
+    join, no shuffle, any dim.
 
     ``centroid_ids`` (default: positions) are the labels EMITTED — pass
     the surviving original ids in an iterative loop so labels stay
@@ -969,37 +905,12 @@ def assign_points_nd(
             "*", F.lit(-1).alias(cluster_col),
             *([F.lit(None).cast("double").alias(dist2_col)] if dist2_col else []),
         )
-    if centroid_ids is None:
-        centroid_ids = range(len(centroids))
-    mat = array_lit([[float(v) for v in c] for c in centroids])
-    ids = array_lit([int(i) for i in centroid_ids], kind="int")
-    vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    idx = F.sequence(F.lit(0), F.lit(len(centroids) - 1))
-
-    def _cand(v: Column, i: Column) -> Column:
-        diff2 = F.zip_with(v, F.get(mat, i), lambda a, b: (a - b) * (a - b))
-        d2 = F.aggregate(diff2, F.lit(0.0), lambda acc, v_: acc + v_)
-        return F.struct(
-            d2.alias("dist2"), F.get(ids, i).cast("int").alias("cluster")
-        )
-
-    # let-bind the cast vector: referencing `vec` directly inside the
-    # per-candidate lambda would re-inline the O(dim) cast+alloc k
-    # times per row (the HOF projection-collapse pitfall, in argmin
-    # position this time)
-    best = F.element_at(
-        F.transform(
-            F.array(vec),
-            lambda v: F.array_min(
-                F.transform(idx, lambda i: _cand(v, i))
-            ),
-        ),
-        1,
+    return _with_argmin(
+        vectors,
+        assign_points_nd_sql(centroids, vec_col=vec_col, centroid_ids=centroid_ids),
+        cluster_col,
+        dist2_col,
     )
-    cols = [*vectors.columns, best["cluster"].alias(cluster_col)]
-    if dist2_col:
-        cols.append(best["dist2"].alias(dist2_col))
-    return vectors.select(*cols)
 
 
 def assign_points_nd_sql(
@@ -1007,28 +918,26 @@ def assign_points_nd_sql(
     vec_col: str = "embedding",
     centroid_ids: Sequence[int] | None = None,
 ) -> str:
-    """SQL-text twin of :func:`assign_points_nd`'s argmin struct — the
-    whole (dist², cluster) expression as ONE string, for iterative
-    callers that author their per-iteration job as a single
-    ``spark.sql`` parse (the r14 SimHash treatment: composing the same
-    tree from Column objects costs ~0.25 s of py4j round-trips per
-    iteration at k=8, d=64; the parse is ~2 ms and bit-identical —
-    same zip_with/aggregate fold order, same strict-< struct argmin,
-    1-based ``element_at`` in place of 0-based ``get`` on the same
-    positions).  Equality with the Column form is pinned in
-    tests/test_r15_ops.py.  Field access: ``(expr).cluster`` /
-    ``(expr).dist2``."""
-    from flink_kmeans_clustering_spark.operators.common import (
-        array_lit_sql,
-    )
+    """The n-d nearest-centroid argmin as one SQL expression: a
+    ``(dist2, cluster)`` struct, read as ``(expr).cluster`` /
+    ``(expr).dist2``.  :func:`assign_points_nd` and the
+    :func:`lloyd_nd` / :func:`spherical_kmeans_nd` iterations all build
+    from this text; an iterative caller pastes it into its
+    per-iteration ``spark.sql`` (one ~2 ms parse instead of ~0.25 s of
+    py4j Column composition per iteration at k=8, d=64).
 
+    The vector is cast to ``array<double>`` once per row and let-bound
+    through a one-element ``transform`` — referencing the cast inside
+    the per-candidate lambda would re-inline the O(dim) cast k times
+    per row (the HOF projection-collapse pitfall).  ``vec_col`` is
+    backtick-quoted; ``centroids`` must be non-empty."""
     if centroid_ids is None:
         centroid_ids = range(len(centroids))
     mat = array_lit_sql([[float(v) for v in c] for c in centroids])
     ids = array_lit_sql([int(i) for i in centroid_ids], kind="int")
     k = len(centroids)
     return (
-        f"element_at(transform(array(transform({vec_col}, "
+        f"element_at(transform(array(transform({_quote(vec_col)}, "
         "x -> CAST(x AS DOUBLE))), "
         f"v -> array_min(transform(sequence(0, {k - 1}), "
         "i -> named_struct("
@@ -1038,48 +947,55 @@ def assign_points_nd_sql(
     )
 
 
+def _nd_sum_sql(dim: int, vec_col: str, cast: str = "DOUBLE") -> list[str]:
+    """The per-dim partial sums of the n-d mean update, as SQL
+    aggregate items ``sum(...) AS _s{j}``: each component is its own
+    SUM in one HashAggregate, so the shuffle carries k rows × (dim+1)
+    values — not the N×dim row blowup a posexplode would ship.
+
+    Each SUM input casts the ELEMENT, not the array: a whole-array
+    ``transform`` cast here would be re-inlined into all ``dim``
+    aggregate inputs (O(dim²) interpreted work per row and a dim×
+    bigger codegen unit); the per-element float→double cast is exact.
+    ``cast`` is the accumulator type: ``DOUBLE`` (raw double sums, the
+    :func:`lloyd_nd` update) or e.g. ``DECIMAL(25,8)`` (order-exact
+    sums, the :func:`spherical_kmeans_nd` update)."""
+    v = _quote(vec_col)
+    items = []
+    for j in range(dim):
+        term = f"CAST(element_at({v}, {j + 1}) AS DOUBLE)"
+        if cast != "DOUBLE":
+            term = f"CAST({term} AS {cast})"
+        items.append(f"sum({term}) AS _s{j}")
+    return items
+
+
 def update_centroids_nd(
     assigned: DataFrame,
     dim: int,
     vec_col: str = "embedding",
     cluster_col: str = "cluster",
 ) -> DataFrame:
-    """O3/O4 mean update for vector columns WITHOUT exploding: each of
-    the ``dim`` components is its own SUM column in one HashAggregate,
-    so the shuffle carries k rows × (dim+1) doubles — not the N×dim
-    row blowup a posexplode would ship.  Returns (id, centroid
-    array<double>, n).
-
-    Each SUM input is ``element_at(col, j).cast(double)`` — casting
-    the ELEMENT, not the array: a whole-array ``transform`` cast here
-    would be re-inlined into all ``dim`` aggregate inputs (O(dim²)
-    interpreted work per row and a dim× bigger codegen unit); the
-    per-element cast is bit-identical (float→double is exact)."""
-    sums, centroid = _nd_update_exprs(dim, vec_col)
+    """O3/O4 mean update for vector columns WITHOUT exploding: the
+    :func:`_nd_sum_sql` partial sums grouped by cluster, then the mean
+    array ``Σ/n``.  Returns (id, centroid array<double>, n)."""
     agg = assigned.groupBy(F.col(cluster_col).alias("id")).agg(
-        *sums, F.count(F.lit(1)).alias("n")
+        *[F.expr(s) for s in _nd_sum_sql(dim, vec_col)],
+        F.count(F.lit(1)).alias("n"),
     )
-    return agg.select("id", centroid.alias("centroid"), "n")
+    mean = ", ".join(f"_s{j} / n" for j in range(dim))
+    return agg.selectExpr("id", f"array({mean}) AS centroid", "n")
 
 
-def _nd_update_exprs(
-    dim: int, vec_col: str
-) -> tuple[list[Column], Column]:
-    """(per-dim SUM columns, mean-array expr) for the nd mean update.
-
-    Built ONCE per training call and reused across iterations: the
-    Column objects are unresolved expressions independent of any
-    DataFrame, and constructing ~3·dim of them costs ~1.2 s of py4j
-    round-trips per call at dim=64 — the measured per-iteration floor
-    of the driver loop before hoisting (1.2 s → 0.2 s)."""
-    sums = [
-        F.sum(F.element_at(F.col(vec_col), j + 1).cast("double")).alias(
-            f"_s{j}"
-        )
-        for j in range(dim)
-    ]
-    centroid = F.array(*[F.col(f"_s{j}") / F.col("n") for j in range(dim)])
-    return sums, centroid
+def _nd_iteration_sql(assign: str, sums: str, vec_col: str, view: str) -> str:
+    """One n-d superstep as ONE ``spark.sql`` text: assign each row of
+    ``view``, then the per-cluster partial sums and count."""
+    v = _quote(vec_col)
+    return (
+        f"SELECT cluster AS id, {sums}, count(1) AS n "
+        f"FROM (SELECT ({assign}).cluster AS cluster, {v} "
+        f"FROM {view}) GROUP BY cluster"
+    )
 
 
 def lloyd_nd(
@@ -1095,67 +1011,54 @@ def lloyd_nd(
     ids).  Empty clusters drop — reference semantics — and ids stay
     PERSISTENT across iterations (an emptied cluster's id is retired,
     not recycled by position), matching the 2-D :func:`lloyd` and the
-    DuckDB oracle's id-carrying CTE chain."""
+    DuckDB oracle's id-carrying CTE chain.
+
+    Each iteration is ONE ``spark.sql`` parse over a temp view of the
+    input (:func:`assign_points_nd_sql` + :func:`_nd_sum_sql`); the
+    view resolves to the same analyzed plan every round, so the
+    ``cache()`` serves every scan.  AQE is off and
+    ``spark.sql.shuffle.partitions`` is k for the loop (restored
+    afterwards): the per-iteration exchange carries ≤k rows, so 32
+    reduce tasks for 8 rows would be pure job-floor, and map-side width
+    is unaffected."""
     if cache:
         vectors = vectors.cache()
     spark = vectors.sparkSession
     dim = len(init_centroids[0])
     current = [list(map(float, c)) for c in init_centroids]
     ids = list(range(len(current)))
-    conf = spark.conf
-    prev_aqe = conf.get("spark.sql.adaptive.enabled", "true")
-    prev_sp = conf.get("spark.sql.shuffle.partitions", "200")
-    # one temp view for the whole training call: each iteration is then
-    # ONE spark.sql parse instead of ~0.25 s of py4j Column composition
-    # (r15, the SimHash SQL-text treatment; equality pinned in
-    # tests/test_r15_ops.py).  The view resolves to the same analyzed
-    # plan every round, so the cache() above still serves every scan.
-    import uuid as _uuid
-
-    view = f"_lloyd_nd_{_uuid.uuid4().hex[:12]}"
+    # raw double sums of float32-exact values
+    sums = ", ".join(_nd_sum_sql(dim, vec_col))
+    view = f"_lloyd_nd_{uuid.uuid4().hex[:12]}"
     vectors.createOrReplaceTempView(view)
+    loop_conf = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": str(max(1, len(current))),
+    }
     try:
-        conf.set("spark.sql.adaptive.enabled", "false")
-        # the per-iteration exchange carries ≤k rows — scheduling 32
-        # reduce tasks for 8 rows is pure job-floor; map-side width is
-        # unaffected, so this is scale-neutral
-        conf.set(
-            "spark.sql.shuffle.partitions", str(max(1, len(current)))
-        )
-        # per-dim mean-update SUMs, authored once as SQL text: raw
-        # double sums of float32-exact values — identical to the
-        # hoisted Column form (_nd_update_exprs) they replace
-        sum_sql = ", ".join(
-            f"sum(CAST(element_at({vec_col}, {j + 1}) AS DOUBLE))"
-            f" AS _s{j}"
-            for j in range(dim)
-        )
-        for _ in range(max_iterations):
+        with session_conf(spark, loop_conf):
+            for _ in range(max_iterations):
+                assign = assign_points_nd_sql(
+                    current, vec_col=vec_col, centroid_ids=ids
+                )
+                rows = spark.sql(
+                    _nd_iteration_sql(assign, sums, vec_col, view)
+                ).collect()
+                rows.sort(key=lambda r: r["id"])
+                ids = [int(r["id"]) for r in rows]
+                # driver-side mean: float(_sj) / n, one IEEE double
+                # division per component
+                current = [
+                    [float(r[f"_s{j}"]) / r["n"] for j in range(dim)]
+                    for r in rows
+                ]
             assign = assign_points_nd_sql(
                 current, vec_col=vec_col, centroid_ids=ids
             )
-            rows = spark.sql(
-                f"SELECT cluster AS id, {sum_sql}, count(1) AS n "
-                f"FROM (SELECT ({assign}).cluster AS cluster, {vec_col} "
-                f"FROM {view}) GROUP BY cluster"
+            [row] = spark.sql(
+                f"SELECT sum(({assign}).dist2) AS wcss FROM {view}"
             ).collect()
-            rows.sort(key=lambda r: r["id"])
-            ids = [int(r["id"]) for r in rows]
-            # driver-side mean: float(_sj) / n is the same IEEE double
-            # division the engine-side array(_s0/n, ...) performed
-            current = [
-                [float(r[f"_s{j}"]) / r["n"] for j in range(dim)]
-                for r in rows
-            ]
-        assign = assign_points_nd_sql(
-            current, vec_col=vec_col, centroid_ids=ids
-        )
-        [row] = spark.sql(
-            f"SELECT sum(({assign}).dist2) AS wcss FROM {view}"
-        ).collect()
     finally:
-        conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        conf.set("spark.sql.shuffle.partitions", prev_sp)
         spark.catalog.dropTempView(view)
         if cache:
             vectors.unpersist()
@@ -1213,8 +1116,8 @@ def spherical_kmeans_nd(
     semantic-dedup blocks): without the renormalization, long documents
     would drag centroids off the shell and cosine cells skew.
 
-    Engine-replayable by construction: assignment reuses
-    :func:`assign_points_nd` (argmin of index-ordered dist² folds on
+    Engine-replayable by construction: assignment is
+    :func:`assign_points_nd_sql` (argmin of index-ordered dist² folds on
     unit vectors — monotone in cosine); per-dim mean sums accumulate in
     DECIMAL(25,8) (normalized components are full-mantissa doubles, so
     plain double SUMs would be partition-order-dependent — the float32
@@ -1245,52 +1148,35 @@ def spherical_kmeans_nd(
     current = [u for u in (_unitize(c) for c in init_centroids) if u]
     ids = list(range(len(current)))
     spark = vectors.sparkSession
-    conf = spark.conf
-    prev_aqe = conf.get("spark.sql.adaptive.enabled", "true")
-    prev_sp = conf.get("spark.sql.shuffle.partitions", "200")
+    # order-exact decimal sums; vec_col is already array<double> after
+    # normalize_unit_nd, so the element cast to DOUBLE is a no-op
+    sums = ", ".join(_nd_sum_sql(dim, vec_col, cast="DECIMAL(25,8)"))
     # one temp view + one spark.sql parse per iteration — see lloyd_nd
-    # (r15; equality pinned in tests/test_r15_ops.py)
-    import uuid as _uuid
-
-    view = f"_spherical_{_uuid.uuid4().hex[:12]}"
+    view = f"_spherical_{uuid.uuid4().hex[:12]}"
     unit.createOrReplaceTempView(view)
+    loop_conf = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": str(max(1, len(current))),
+    }
     try:
-        conf.set("spark.sql.adaptive.enabled", "false")
-        # k-row exchanges — see lloyd_nd
-        conf.set(
-            "spark.sql.shuffle.partitions", str(max(1, len(current)))
-        )
-        # element-wise cast, not a whole-array transform: the HOF
-        # would be re-inlined into all dim aggregate inputs (see
-        # update_centroids_nd); vec_col is already array<double> after
-        # normalize_unit_nd, so the double cast is a no-op and the
-        # decimal cast sees identical values.
-        sum_sql = ", ".join(
-            f"sum(CAST(CAST(element_at({vec_col}, {j + 1}) AS DOUBLE)"
-            f" AS DECIMAL(25,8))) AS _s{j}"
-            for j in range(dim)
-        )
-        for _ in range(max_iterations):
-            assign = assign_points_nd_sql(
-                current, vec_col=vec_col, centroid_ids=ids
-            )
-            rows = spark.sql(
-                f"SELECT cluster AS id, {sum_sql}, count(1) AS n "
-                f"FROM (SELECT ({assign}).cluster AS cluster, {vec_col} "
-                f"FROM {view}) GROUP BY cluster"
-            ).collect()
-            rows.sort(key=lambda r: r["id"])
-            nxt_ids, nxt = [], []
-            for r in rows:
-                mu = [float(r[f"_s{j}"]) / r["n"] for j in range(dim)]
-                u = _unitize(mu)
-                if u is not None:
-                    nxt_ids.append(int(r["id"]))
-                    nxt.append(u)
-            ids, current = nxt_ids, nxt
+        with session_conf(spark, loop_conf):
+            for _ in range(max_iterations):
+                assign = assign_points_nd_sql(
+                    current, vec_col=vec_col, centroid_ids=ids
+                )
+                rows = spark.sql(
+                    _nd_iteration_sql(assign, sums, vec_col, view)
+                ).collect()
+                rows.sort(key=lambda r: r["id"])
+                nxt_ids, nxt = [], []
+                for r in rows:
+                    mu = [float(r[f"_s{j}"]) / r["n"] for j in range(dim)]
+                    u = _unitize(mu)
+                    if u is not None:
+                        nxt_ids.append(int(r["id"]))
+                        nxt.append(u)
+                ids, current = nxt_ids, nxt
     finally:
-        conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        conf.set("spark.sql.shuffle.partitions", prev_sp)
         spark.catalog.dropTempView(view)
         if cache:
             unit.unpersist()

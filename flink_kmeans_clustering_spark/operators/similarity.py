@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from flink_kmeans_clustering_spark.operators.common import (
     array_lit,
     array_lit_sql,
+    session_conf,
 )
 from flink_kmeans_clustering_spark.functions.vector import (
     cosine_similarity,
@@ -608,11 +609,18 @@ def pq_codebooks_trained_grouped(
     # iteration is pure scheduling overhead — m partitions suffice and
     # AQE has nothing to re-plan on a k-row exchange.  Trained books
     # verified bit-identical at shuffle.partitions ∈ {1, 8, 32}
-    # (measured ~0.55 s/call saved at sf0.1); conf restored in finally.
-    conf = df.sparkSession.conf
-    prev_aqe = conf.get("spark.sql.adaptive.enabled", "true")
-    prev_sp = conf.get("spark.sql.shuffle.partitions", None)
-    prev_cg = conf.get("spark.sql.codegen.wholeStage", "true")
+    # (measured ~0.55 s/call saved at sf0.1); session_conf restores.
+    #
+    # Every iteration's assignment parses FRESH codebook literals, so
+    # whole-stage codegen would Janino-compile a new class per iteration
+    # for a ≤16k-row job — interpreted eval skips that (measured ~0.4
+    # s/call warm at sf0.1; books verified bit-identical on/off, and
+    # re-hash-matched at 3 scales).
+    loop_conf = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": str(max(1, m)),
+        "spark.sql.codegen.wholeStage": "false",
+    }
     # fill the cache BEFORE the loop flips codegen off (r14): the
     # spread+explode+cast materialization is value-independent, so it
     # may as well run compiled — measured ~2.0 s as iteration 1's
@@ -620,46 +628,31 @@ def pq_codebooks_trained_grouped(
     # iterations then scan the same in-memory batches either way.
     sub.count()
     try:
-        conf.set("spark.sql.adaptive.enabled", "false")
-        conf.set("spark.sql.shuffle.partitions", str(max(1, m)))
-        # every iteration's assignment parses FRESH codebook literals,
-        # so whole-stage codegen Janino-compiles a new class per
-        # iteration for a ≤16k-row job — interpreted eval skips that
-        # (measured ~0.4 s/call warm at sf0.1; books verified
-        # bit-identical on/off, and re-hash-matched at 3 scales)
-        conf.set("spark.sql.codegen.wholeStage", "false")
-        for _ in range(iters):
-            cb = array_lit_sql(books)
-            idl = array_lit_sql(ids, kind="int")
-            assign = (
-                f"array_min(transform(sequence(0, size(get({cb}, s)) - 1),"
-                " c -> named_struct('dist2',"
-                f" aggregate(zip_with(sv, get(get({cb}, s), c),"
-                " (a, b) -> (a - b) * (a - b)), 0.0D, (acc, v) -> acc + v),"
-                f" 'code', CAST(get(get({idl}, s), c) AS INT)))).code AS code"
-            )
-            assigned = sub.selectExpr("s", "sv", assign)
-            rows = (
-                assigned.groupBy("s", "code")
-                .agg(*sums, n_agg)
-                .collect()
-            )
-            books = [[] for _ in range(m)]
-            ids = [[] for _ in range(m)]
-            for r in sorted(rows, key=lambda r: (r["s"], r["code"])):
-                ids[r["s"]].append(int(r["code"]))
-                books[r["s"]].append(
-                    [float(r[f"_s{j}"]) / r["n"] for j in range(d)]
+        with session_conf(df.sparkSession, loop_conf):
+            for _ in range(iters):
+                cb = array_lit_sql(books)
+                idl = array_lit_sql(ids, kind="int")
+                assign = (
+                    f"array_min(transform(sequence(0, size(get({cb}, s)) - 1),"
+                    " c -> named_struct('dist2',"
+                    f" aggregate(zip_with(sv, get(get({cb}, s), c),"
+                    " (a, b) -> (a - b) * (a - b)), 0.0D, (acc, v) -> acc + v),"
+                    f" 'code', CAST(get(get({idl}, s), c) AS INT)))).code AS code"
                 )
+                assigned = sub.selectExpr("s", "sv", assign)
+                rows = (
+                    assigned.groupBy("s", "code")
+                    .agg(*sums, n_agg)
+                    .collect()
+                )
+                books = [[] for _ in range(m)]
+                ids = [[] for _ in range(m)]
+                for r in sorted(rows, key=lambda r: (r["s"], r["code"])):
+                    ids[r["s"]].append(int(r["code"]))
+                    books[r["s"]].append(
+                        [float(r[f"_s{j}"]) / r["n"] for j in range(d)]
+                    )
     finally:
-        conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        conf.set("spark.sql.codegen.wholeStage", prev_cg)
-        if prev_sp is not None:
-            conf.set("spark.sql.shuffle.partitions", prev_sp)
-        else:
-            # never explicitly set before this call: unset instead of
-            # leaking the loop-local max(1, m) value session-wide
-            conf.unset("spark.sql.shuffle.partitions")
         sub.unpersist()
     return books
 

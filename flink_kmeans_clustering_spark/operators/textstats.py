@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from flink_kmeans_clustering_spark.operators.common import spread
+from flink_kmeans_clustering_spark.operators.common import session_conf, spread
 from flink_kmeans_clustering_spark.functions.text import tokenize
 
 # language -> distinctive high-frequency stopwords (alphabetical language
@@ -1965,12 +1965,11 @@ def quality_fit_weights(
     # the loop, restored after.  The DECIMAL(32,12) gradient sums are
     # order-independent, so the reducer count cannot perturb weights
     # (re-hash-verified at 3 scales).
-    conf = fv.sparkSession.conf
-    prev_aqe = conf.get("spark.sql.adaptive.enabled", "true")
-    prev_sp = conf.get("spark.sql.shuffle.partitions", None)
-    try:
-        conf.set("spark.sql.adaptive.enabled", "false")
-        conf.set("spark.sql.shuffle.partitions", "1")
+    loop_conf = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": "1",
+    }
+    with session_conf(fv.sparkSession, loop_conf):
         for _ in range(rounds):
             p = quality_p_sql(w)
             # σ(w·x) − y computes ONCE per row in an explicit Project
@@ -1997,12 +1996,6 @@ def quality_fit_weights(
                 round_half_away(w[j] - lr * float(row[f"g{j}"]) / n, 12)
                 for j in range(k)
             ]
-    finally:
-        conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        if prev_sp is None:
-            conf.unset("spark.sql.shuffle.partitions")
-        else:
-            conf.set("spark.sql.shuffle.partitions", prev_sp)
     return w, n
 
 

@@ -12,9 +12,11 @@ from __future__ import annotations
 
 import itertools
 import os
-from flink_kmeans_clustering_spark.scratch import scratch_dir
 
 from pyspark.sql import DataFrame
+
+from flink_kmeans_clustering_spark.operators.common import session_conf
+from flink_kmeans_clustering_spark.scratch import scratch_dir
 
 _QUERY_SEQ = itertools.count()
 
@@ -42,10 +44,12 @@ def run_available_now(
     spark = stream_df.sparkSession
     name = f"stream_result_{os.getpid()}_{next(_QUERY_SEQ)}"
     checkpoint = scratch_dir(f"ckpt_{name}_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+    drain_conf = (
+        {}
+        if state_partitions is None
+        else {"spark.sql.shuffle.partitions": str(state_partitions)}
+    )
+    with session_conf(spark, drain_conf):
         query = (
             stream_df.writeStream.format("memory")
             .queryName(name)
@@ -62,9 +66,6 @@ def run_available_now(
         finally:
             if query.isActive:
                 query.stop()
-    finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.table(name)
 
 

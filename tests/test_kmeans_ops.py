@@ -141,6 +141,27 @@ def test_lloyd_converges_and_wcss_non_increasing(spark):
         assert a[1] == pytest.approx(b[1]) and a[2] == pytest.approx(b[2])
 
 
+def _lloyd_python(pts, init, iterations):
+    """Pure-Python Lloyd with the reference semantics: (x−cx)·(x−cx) +
+    (y−cy)·(y−cy), lowest id on ties, empty clusters dropped."""
+    cur = sorted(init)
+    for _ in range(iterations):
+        sums = {}
+        for px, py in pts:
+            _, cid = min(
+                ((px - cx) * (px - cx) + (py - cy) * (py - cy), cid)
+                for cid, cx, cy in cur
+            )
+            sx, sy, n = sums.get(cid, (0.0, 0.0, 0))
+            sums[cid] = (sx + px, sy + py, n + 1)
+        cur = sorted((cid, sx / n, sy / n) for cid, (sx, sy, n) in sums.items())
+    wcss = sum(
+        min((px - cx) * (px - cx) + (py - cy) * (py - cy) for _, cx, cy in cur)
+        for px, py in pts
+    )
+    return cur, wcss
+
+
 def test_lloyd_drops_empty_cluster_forever(spark):
     pts = spark.createDataFrame(
         [(0, 0.0, 0.0), (1, 1.0, 1.0)], "point_id long, x double, y double"
@@ -148,6 +169,18 @@ def test_lloyd_drops_empty_cluster_forever(spark):
     init = [(0, 0.5, 0.5), (7, 1e6, 1e6)]  # centroid 7 never wins a point
     res = lloyd(pts, init, max_iterations=3)
     assert [c[0] for c in res.centroids] == [0]
+
+    # a cluster that empties mid-fixture: the survivors and the WCSS
+    # match a pure-Python replay (integer coordinates keep every
+    # partial sum exact, so the centroids match bit-for-bit)
+    rows = [(i, float(i % 7), float((i * 3) % 11)) for i in range(500)]
+    pts = spark.createDataFrame(rows, "point_id long, x double, y double")
+    init = [(0, 0.0, 0.0), (1, 6.0, 10.0), (7, 1e6, 1e6)]  # 7 empties
+    res = lloyd(pts, init, max_iterations=5)
+    ref, ref_wcss = _lloyd_python([(x, y) for _, x, y in rows], init, 5)
+    assert [c[0] for c in res.centroids] == [0, 1]
+    assert res.centroids == ref
+    assert res.wcss == pytest.approx(ref_wcss, rel=1e-12)
 
 
 def test_mllib_and_lloyd_agree_at_fixpoint(spark):
@@ -197,25 +230,6 @@ def test_mllib_and_lloyd_agree_at_fixpoint(spark):
         assert relabel.setdefault(c, theirs[pid]) == theirs[pid]
     assert len(set(relabel.values())) == len(relabel)
     pts.unpersist()
-
-
-def test_lloyd_observe_and_exchange_updates_agree(spark):
-    """The two superstep reduce paths — groupBy k-row exchange vs
-    df.observe accumulator metrics — must produce identical centroids
-    (1e-9), identical surviving ids, and the same WCSS on a fixture
-    with an emptying cluster (drop-semantics parity)."""
-    from flink_kmeans_clustering_spark.operators.kmeans import lloyd
-
-    rows = [(i, float(i % 7), float((i * 3) % 11)) for i in range(500)]
-    pts = spark.createDataFrame(rows, "point_id long, x double, y double")
-    init = [(0, 0.0, 0.0), (1, 6.0, 10.0), (7, 1e6, 1e6)]  # 7 empties
-    a = lloyd(pts, init, max_iterations=5, update="exchange")
-    b = lloyd(pts, init, max_iterations=5, update="observe")
-    assert [c[0] for c in a.centroids] == [c[0] for c in b.centroids]
-    for (ia, xa, ya), (ib, xb, yb) in zip(a.centroids, b.centroids):
-        assert abs(xa - xb) < 1e-9 and abs(ya - yb) < 1e-9
-    assert abs(a.wcss - b.wcss) / max(a.wcss, 1e-12) < 1e-9
-    assert 7 not in [c[0] for c in b.centroids]
 
 
 def test_mllib_fixpoint_checked_by_lloyd_nd_at_scale(spark):
@@ -391,12 +405,12 @@ def test_assign_nd_empty_centroids_is_minus_one(spark):
 
 def test_lloyd_selectexpr_superstep_equals_column_form(spark):
     """The loop's selectExpr-authored superstep must equal the
-    canonical assign_points_param + update_centroids composition
-    value-for-value (same arithmetic term order, same struct-argmin
-    tie-break) — the contract that lets the loop keep the cheap
-    JVM-parsed plan construction."""
+    Column-composed literal assign_points + update_centroids
+    composition value-for-value (same arithmetic term order, same
+    struct-argmin tie-break) — the contract that lets the loop keep the
+    cheap JVM-parsed plan construction."""
     from flink_kmeans_clustering_spark.operators.kmeans import (
-        assign_points_param,
+        assign_points,
         lloyd,
         update_centroids,
     )
@@ -412,7 +426,7 @@ def test_lloyd_selectexpr_superstep_equals_column_form(spark):
     res = lloyd(pts, init, max_iterations=3, cache=False)
     cur = [(int(i), float(a), float(b)) for i, a, b in init]
     for _ in range(3):
-        rows = update_centroids(assign_points_param(pts, cur)).collect()
+        rows = update_centroids(assign_points(pts, cur)).collect()
         cur = sorted(
             (int(r["id"]), float(r["x"]), float(r["y"])) for r in rows
         )
@@ -422,14 +436,14 @@ def test_lloyd_selectexpr_superstep_equals_column_form(spark):
 
 def test_lloyd_superstep_codegen_is_value_independent(spark):
     """Two different centroid sets entered through the loop's
-    selectExpr assignment must generate byte-identical stage code —
-    the Janino-cache property assign_points_param pioneered, now
-    pinned for the f-string form (inlined primitive literals would
-    recompile every superstep)."""
+    selectExpr assignment (_argmin_2d_sql) must generate byte-identical
+    stage code — the Janino-cache property of the plan-stable form
+    (inlined primitive literals would recompile every superstep)."""
     import contextlib
     import io
     import re
 
+    from flink_kmeans_clustering_spark.operators.kmeans import _argmin_2d_sql
     from flink_kmeans_clustering_spark.views import points_v
     from tests.conftest import SF_CORRECTNESS
 
@@ -449,16 +463,7 @@ def test_lloyd_superstep_codegen_is_value_independent(spark):
         return "\n".join(lines)
 
     def expr_for(cents):
-        ids = ",".join(str(int(c[0])) for c in cents)
-        xs = ",".join(repr(float(c[1])) + "D" for c in cents)
-        ys = ",".join(repr(float(c[2])) + "D" for c in cents)
-        k = len(cents)
-        return (
-            f"array_min(transform(sequence(0, {k - 1}), i -> named_struct("
-            f"'dist2', (x - get(array({xs}), i)) * (x - get(array({xs}), i))"
-            f" + (y - get(array({ys}), i)) * (y - get(array({ys}), i)),"
-            f"'cluster', get(array({ids}), i)))).cluster AS cluster"
-        )
+        return f"({_argmin_2d_sql(cents, 'x', 'y')}).cluster AS cluster"
 
     pts = points_v(spark, SF_CORRECTNESS)
     b1 = body(pts.selectExpr("x", "y", expr_for([(0, 0.0, 0.0), (1, 10.0, 10.0)])))
@@ -467,8 +472,8 @@ def test_lloyd_superstep_codegen_is_value_independent(spark):
 
 
 def test_lloyd_assign_expr_rejects_nonfinite_and_quotes_columns(spark):
-    """ADVICE r10: the f-string assignment must fail eagerly (clear
-    ValueError, same shape as common.array_lit) on a NaN/inf centroid
+    """The SQL-text assignment (_argmin_2d_sql) must fail eagerly (clear
+    ValueError from common.array_lit_sql) on a NaN/inf centroid
     coordinate instead of emitting unparseable 'nanD' SQL, and must
     backtick-quote the coordinate column names so quoting-needing
     identifiers parse."""
@@ -495,3 +500,121 @@ def test_lloyd_assign_expr_rejects_nonfinite_and_quotes_columns(spark):
                   cache=False)
     r_ref = lloyd(pts, init, max_iterations=2, cache=False)
     assert r_odd.centroids == r_ref.centroids
+
+
+LOOP_KEYS = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+
+
+def _conf_state(spark, keys=LOOP_KEYS):
+    """Explicit session values of ``keys`` (None = unset)."""
+    return {k: spark.conf.get(k, None) for k in keys}
+
+
+def _restore_conf(spark, state):
+    for k, v in state.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+
+
+def test_session_conf_restores_prior_state_on_every_exit(spark):
+    """session_conf puts each key back exactly: an explicit value is
+    re-set, a key the session never set is unset again — also when the
+    block raises."""
+    from flink_kmeans_clustering_spark.operators.common import session_conf
+
+    key_set, key_unset = "spark.sql.shuffle.partitions", "spark.sql.codegen.wholeStage"
+    before = _conf_state(spark, (key_set, key_unset))
+    assert before[key_unset] is None  # the test session never sets it
+    with session_conf(spark, {key_set: "3", key_unset: "false"}):
+        assert _conf_state(spark, (key_set, key_unset)) == {
+            key_set: "3", key_unset: "false"
+        }
+    assert _conf_state(spark, (key_set, key_unset)) == before
+    with pytest.raises(RuntimeError, match="boom"):
+        with session_conf(spark, {key_set: "5", key_unset: "false"}):
+            raise RuntimeError("boom")
+    assert _conf_state(spark, (key_set, key_unset)) == before
+
+
+def test_loops_restore_session_conf(spark):
+    """lloyd, lloyd_nd and spherical_kmeans_nd flip AQE and the shuffle
+    width only for their loop: afterwards the touched keys are
+    byte-identical to before — with the keys explicitly set, and with
+    shuffle.partitions never set (it must come back unset, not as a
+    default value).  A NaN centroid still raises and still restores."""
+    from flink_kmeans_clustering_spark.operators.kmeans import (
+        lloyd_nd,
+        spherical_kmeans_nd,
+    )
+
+    pts = spark.createDataFrame(
+        [(0, 0.0, 0.0), (1, 1.0, 0.0), (2, 10.0, 10.0), (3, 5.0, 0.0)],
+        "point_id long, x double, y double",
+    )
+    vecs = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.5]), (1, [0.0, 1.0, 0.5]), (2, [1.0, 1.0, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+    init_nd = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]]
+    runs = [
+        lambda: lloyd(pts, CENTROIDS, max_iterations=1, cache=False),
+        lambda: lloyd_nd(vecs, init_nd, max_iterations=1, cache=False),
+        lambda: spherical_kmeans_nd(vecs, init_nd, max_iterations=1, cache=False),
+    ]
+    nan_init = [(0, float("nan"), 0.0), (1, 1.0, 1.0)]
+    before = _conf_state(spark)
+    try:
+        for state in ("set", "unset"):
+            if state == "unset":
+                spark.conf.unset("spark.sql.shuffle.partitions")
+            expected = _conf_state(spark)
+            assert (expected["spark.sql.shuffle.partitions"] is None) == (
+                state == "unset"
+            )
+            for run in runs:
+                run()
+                assert _conf_state(spark) == expected
+            with pytest.raises(ValueError, match="non-finite"):
+                lloyd(pts, nan_init, max_iterations=1, cache=False)
+            assert _conf_state(spark) == expected
+    finally:
+        _restore_conf(spark, before)
+
+
+def test_assign_nd_quotes_vector_column(spark):
+    """A vector column whose name needs backticks (space, dot, backtick)
+    assigns, updates and iterates exactly like the same data under a
+    plain name."""
+    from flink_kmeans_clustering_spark.operators.kmeans import (
+        assign_points_nd,
+        lloyd_nd,
+        update_centroids_nd,
+    )
+
+    plain = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [4.0, 4.0]), (3, [5.0, 4.0])],
+        "vec_id long, embedding array<double>",
+    )
+    name = "the `vec`.v"
+    odd = plain.withColumnRenamed("embedding", name)
+    cents = [[0.0, 0.0], [5.0, 5.0]]
+
+    def rows(df, col):
+        a = assign_points_nd(df, cents, vec_col=col, dist2_col="d2")
+        assert a.columns == ["vec_id", col, "cluster", "d2"]
+        return sorted(
+            (r["vec_id"], r["cluster"], r["d2"])
+            for r in a.select("vec_id", "cluster", "d2").collect()
+        )
+
+    assert rows(odd, name) == rows(plain, "embedding")
+    upd_odd = update_centroids_nd(
+        assign_points_nd(odd, cents, vec_col=name), dim=2, vec_col=name
+    )
+    upd_ref = update_centroids_nd(assign_points_nd(plain, cents), dim=2)
+    assert sorted(upd_odd.collect()) == sorted(upd_ref.collect())
+    assert lloyd_nd(odd, cents, max_iterations=1, vec_col=name, cache=False) == (
+        lloyd_nd(plain, cents, max_iterations=1, cache=False)
+    )

@@ -938,6 +938,32 @@ def test_nd_assignment_narrow_and_update_single_shuffle(spark):
     assert "Generate" not in explain_str(upd), "vector must not explode"
 
 
+def test_assignment_with_dist2_evaluates_argmin_once(spark):
+    """Reading both cluster and dist² must not duplicate the argmin: the
+    plan-stable 2-D and the n-d assignment each carry exactly one
+    array_min in the optimized plan (two fields read off one inline
+    expression would evaluate the k-candidate scan twice per row)."""
+    from flink_kmeans_clustering_spark.operators.kmeans import (
+        assign_points_nd,
+        assign_points_param,
+    )
+
+    def n_argmin(df) -> int:
+        return df._jdf.queryExecution().optimizedPlan().toString().count("array_min(")
+
+    pts = points_v(spark, SF)
+    a2 = assign_points_param(pts, [(0, 0.0, 0.0), (1, 10.0, 10.0)], dist2_col="d2")
+    assert n_argmin(a2) == 1, explain_str(a2)
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    init = [
+        [float(v) for v in r["embedding"]]
+        for r in emb.orderBy("vec_id").limit(4).collect()
+    ]
+    an = assign_points_nd(emb, init, dist2_col="d2")
+    assert n_argmin(an) == 1, explain_str(an)
+
+
 def test_pq_scoring_is_narrow_takeordered(spark):
     """PQ/ADC scoring must be join-free and shuffle-free: codes and the
     LUT are literals, both cuts are TakeOrderedAndProject."""

@@ -1,9 +1,10 @@
-"""Equality pins for the r15 expression rewrites.
+"""Equality pins for the SQL-text n-d K-Means kernels.
 
-The optimization round rewrote the Lloyd-nd iteration jobs as SQL text
-(one parse per iteration instead of ~0.25 s of py4j Column composition)
-— these tests pin that the SQL twin computes bit-identical values to
-the Column form it replaced, on real data.
+The n-d argmin (assign_points_nd_sql) and the lloyd_nd / spherical
+iterations are authored as SQL text (one parse per iteration instead of
+~0.25 s of py4j Column composition).  These tests pin them, on real
+data, against independent references: a pure-Python argmin, and
+Column-composed replays of the update step.
 """
 
 import pytest
@@ -16,46 +17,70 @@ def emb(spark):
     return spark.read.parquet(f"{SF}/embeddings.parquet")
 
 
-def test_assign_sql_twin_matches_column_form(spark, emb):
-    """assign_points_nd_sql == assign_points_nd, value-for-value: same
-    cluster AND bit-identical dist² for every row (the fold order and
-    the strict-< struct argmin must survive the SQL authoring)."""
+def _nearest_python(vec, cents, ids):
+    """Pure-Python n-d argmin: dist² folds (a - b) * (a - b) from 0.0 in
+    index order, the smallest (dist², id) wins — lowest id on ties."""
+    best = None
+    for cid, c in zip(ids, cents):
+        d2 = 0.0
+        for a, b in zip(vec, c):
+            d2 += (a - b) * (a - b)
+        if best is None or (d2, cid) < best:
+            best = (d2, cid)
+    return best[1], best[0]
+
+
+def test_assign_nd_sql_matches_python_reference(spark, emb):
+    """assign_points_nd and its SQL text (assign_points_nd_sql, as the
+    nd loops paste it into spark.sql) == a pure-Python reference,
+    bit-for-bit: same cluster AND same dist² double for every row (the
+    fold order and the strict-< struct argmin must survive the SQL
+    authoring)."""
     from flink_kmeans_clustering_spark.operators.kmeans import (
         assign_points_nd,
         assign_points_nd_sql,
     )
 
-    init_rows = emb.orderBy("vec_id").limit(8).collect()
+    vec = emb.select("vec_id", "embedding")
+    data = vec.collect()
+    init_rows = sorted(data, key=lambda r: r["vec_id"])[:8]
     cents = [[float(v) for v in r["embedding"]] for r in init_rows]
     ids = [3, 7, 11, 12, 20, 21, 30, 41]  # non-positional labels
+    ref = {
+        r["vec_id"]: _nearest_python(
+            [float(v) for v in r["embedding"]], cents, ids
+        )
+        for r in data
+    }
 
-    col_form = assign_points_nd(
-        emb.select("vec_id", "embedding"),
-        cents,
-        dist2_col="_d2",
-        centroid_ids=ids,
+    op_form = assign_points_nd(
+        vec, cents, dist2_col="_d2", centroid_ids=ids
     ).select("vec_id", "cluster", "_d2")
     sql = assign_points_nd_sql(cents, centroid_ids=ids)
     view = "_t_assign_pin"
-    emb.select("vec_id", "embedding").createOrReplaceTempView(view)
-    sql_form = spark.sql(
-        f"SELECT vec_id, ({sql}).cluster AS cluster, "
-        f"({sql}).dist2 AS _d2 FROM {view}"
-    )
-    a = {r["vec_id"]: (r["cluster"], r["_d2"]) for r in col_form.collect()}
-    b = {r["vec_id"]: (r["cluster"], r["_d2"]) for r in sql_form.collect()}
-    assert a == b  # exact equality, doubles included
-    spark.catalog.dropTempView(view)
+    vec.createOrReplaceTempView(view)
+    try:
+        sql_form = spark.sql(
+            f"SELECT vec_id, ({sql}).cluster AS cluster, "
+            f"({sql}).dist2 AS _d2 FROM {view}"
+        )
+        for df in (op_form, sql_form):
+            got = {
+                r["vec_id"]: (r["cluster"], r["_d2"]) for r in df.collect()
+            }
+            assert got == ref  # exact equality, doubles included
+    finally:
+        spark.catalog.dropTempView(view)
 
 
 def test_lloyd_nd_sql_iteration_matches_column_replay(spark, emb):
-    """One lloyd_nd SQL iteration == the Column-form assign+agg replay
-    it replaced: same surviving ids, bit-identical per-dim sums and
-    driver-side means."""
+    """One lloyd_nd SQL iteration == a replay through assign_points_nd
+    (pinned against Python above) and Column-composed per-dim sums:
+    same surviving ids, bit-identical per-dim sums and driver-side
+    means."""
     from pyspark.sql import functions as F
 
     from flink_kmeans_clustering_spark.operators.kmeans import (
-        _nd_update_exprs,
         assign_points_nd,
         lloyd_nd,
     )
@@ -69,8 +94,15 @@ def test_lloyd_nd_sql_iteration_matches_column_replay(spark, emb):
         vec, init, max_iterations=1, cache=False
     )
 
-    # the pre-r15 Column-form replay of the same iteration
-    sums, centroid = _nd_update_exprs(64, "embedding")
+    # Column-form replay of the same iteration: per-dim double SUMs of
+    # the element-wise cast, then the mean array
+    sums = [
+        F.sum(F.element_at(F.col("embedding"), j + 1).cast("double")).alias(
+            f"_s{j}"
+        )
+        for j in range(64)
+    ]
+    centroid = F.array(*[F.col(f"_s{j}") / F.col("n") for j in range(64)])
     a = assign_points_nd(vec, init)
     rows = (
         a.groupBy(F.col("cluster").alias("id"))
