@@ -9079,7 +9079,7 @@ WHERE CAST(inter AS DOUBLE) / least(sa.sz, sb.sz) >= {CONTAINMENT_THRESHOLD}
     # transitive closure over the capped near-dup pair graph: a node's
     # component is the smallest doc_id it can reach.  DuckDB's
     # recursive CTE is the independent fixpoint computation checking
-    # the engine's iterative min-label propagation.
+    # the engine's connected components.
     dedup_cc_sql = f"""
 WITH RECURSIVE {ngram_capped_ctes},
 cc_edges AS (

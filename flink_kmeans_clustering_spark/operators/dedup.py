@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from flink_kmeans_clustering_spark.operators.common import array_lit, spread as _spread
 from flink_kmeans_clustering_spark.functions.hashing import (
@@ -616,6 +617,14 @@ def drop_near_duplicates(
     return df.join(losers, id_col, "left_anti")
 
 
+# Largest pair table (rows) that connected_components collects and
+# union-finds on the driver; a larger one runs _cc_star on the
+# executors.  docs/CC_DEPTH.md (scripts/cc_depth_bench.py, 4 vCPUs):
+# at 10^6 edges union-find took 8.3 s on a chain and 6.9 s on a hub
+# (star: 103 s and 19 s), with the driver Python peaking near 0.6 GB.
+_LOCAL_CC_MAX_EDGES = 1_000_000
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -623,155 +632,71 @@ def connected_components(
     node_col: str = "id",
     comp_col: str = "component_id",
     max_iterations: int = 50,
-    method: str = "label_prop",
 ) -> DataFrame:
     """Connected components over a near-dup pair graph.
 
     Transitive closure for dedup: if A~B and B~C, all three belong to
-    one duplicate group even when A~C was never emitted.  Two
-    interchangeable engines (property-tested label-equal):
-
-    * ``method="label_prop"`` (default) — each node's label starts as
-      its own id and every round takes the min over its neighborhood;
-      rounds needed = graph diameter.  LSH duplicate clusters are
-      shallow near-cliques, so this converges in a handful of rounds
-      and each round is ONE co-partitioned join + min agg.
-    * ``method="star"`` — alternating large-star/small-star (Kiveris
-      et al., "Connected Components in MapReduce and Beyond", SoCC
-      2014): each round rewires the edge set itself toward min-rooted
-      stars, roughly halving effective diameter per round — O(log d)
-      rounds on adversarially deep graphs (long chains) where
-      label_prop needs O(d).  Costs two groupBy+join passes per round,
-      so it only wins when the diameter is genuinely large.
+    one duplicate group even when A~C was never emitted.
 
     Output: one row per node that appears in any pair —
-    (``node_col``, ``comp_col``) with ``comp_col`` = min reachable id.
+    (``node_col``, ``comp_col``) with ``comp_col`` = min reachable id,
+    both of the input id type.  A node whose only pair is a self-pair
+    is its own root; a null id is one ``(null, null)`` row and
+    connects nothing.
+
+    The pair table is materialized once and its row count picks the
+    engine.  Up to ``_LOCAL_CC_MAX_EDGES`` pairs are union-found on the
+    driver: no rounds, whatever the graph depth (McSherry et al.,
+    "Scalability! But at what COST?", HotOS 2015).  A larger table runs
+    :func:`_cc_star` on the executors, which raises ``RuntimeError`` if
+    it has not converged within ``max_iterations`` rounds.
     """
-    # materialize the pair list BEFORE mirroring it: the union's two
-    # branches would otherwise each re-execute the (expensive — shingle
-    # explode + band join) upstream pair DAG once
     p = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    p = p.localCheckpoint()
-    if method == "star":
-        labels, rounds, converged = _cc_star(p, max_iterations)
-    elif method == "label_prop":
-        labels, rounds, converged = _cc_label_prop(p, max_iterations)
+    # the checkpoint fills on its first read: the capped take, which
+    # both counts the pairs and collects them in one job (above the
+    # bound the taken rows are dropped)
+    p = p.localCheckpoint(eager=False)
+    rows = p.take(_LOCAL_CC_MAX_EDGES + 1)
+    if len(rows) > _LOCAL_CC_MAX_EDGES:
+        labels, _ = _cc_star(p, max_iterations)
     else:
-        raise ValueError(f"unknown method: {method!r}")
-    if not converged:
-        # The fixpoint was never CONFIRMED (the loop exhausted its budget
-        # without the Σ-label / edge-signature probe going stable) —
-        # returning the current labels would silently split components
-        # on a deep graph (docs/CC_DEPTH.md: a 256-node chain needs 256
-        # label_prop rounds; the default budget of 50 would stop
-        # mid-propagation).  A fixpoint confirmed ON the last budgeted
-        # round counts as converged — rounds == max_iterations alone is
-        # not a failure.
-        raise RuntimeError(
-            f"connected_components({method!r}) did not converge within "
-            f"{max_iterations} rounds — the pair graph is deeper than "
-            "expected; use method='star' (O(log d) rounds) or raise "
-            "max_iterations"
-        )
+        labels = _cc_union_find(p, rows)
     return labels.select(F.col("id").alias(node_col), F.col("comp").alias(comp_col))
 
 
-def _observed_or_agg(obs, fallback, timeout_s: float = 30.0) -> dict:
-    """``obs.get`` with a bounded wait (ADVICE r14): the observed-
-    metrics event is delivered via the async listener bus, which can
-    drop events under backlog — ``obs.get`` would then block forever,
-    whereas the agg+collect it replaced had no hang mode.  The action
-    that computes the metric (the checkpoint job) has already finished
-    by the time callers get here, so the event normally arrives within
-    milliseconds; after ``timeout_s`` we fall back to the explicit
-    aggregate (one extra job — exactly the pre-r14 cost, correctness
-    identical).  A daemon thread so a lost event can never wedge
-    interpreter exit."""
-    import queue as _queue
-    import threading as _threading
+def _cc_union_find(p: DataFrame, rows: list) -> DataFrame:
+    """Union-find over ``rows``, the collected (src, dst) pairs of
+    ``p``; returns labels(id, comp) with the min id of each component
+    as its root (path halving; the smaller root always wins a union)."""
+    parent: dict = {}
 
-    q: "_queue.Queue" = _queue.Queue()
-    _fail = object()
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
 
-    def _getter() -> None:
-        try:
-            q.put(obs.get)
-        except Exception:
-            # e.g. a metrics row the py4j bridge cannot convert (seen
-            # on the empty-input plan) — signal immediately so the
-            # fallback aggregate runs without eating the full timeout
-            q.put(_fail)
-
-    _threading.Thread(target=_getter, daemon=True).start()
-    try:
-        got = q.get(timeout=timeout_s)
-    except _queue.Empty:
-        return fallback()
-    return fallback() if got is _fail else got
-
-
-def _cc_label_prop(
-    p: DataFrame, max_iterations: int
-) -> tuple[DataFrame, int, bool]:
-    """Min-label propagation; returns (labels(id, comp), rounds, converged).
-
-    Convergence is detected by a *scalar*: labels only ever decrease,
-    so Σlabel strictly decreases until fixpoint — one cheap aggregate
-    per round instead of an old-vs-new join.  ``localCheckpoint``
-    truncates lineage each round.
-    """
-    edges = p.union(
-        p.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).cache()
-    labels = edges.select(F.col("src").alias("id")).distinct().select(
-        "id", F.col("id").alias("comp")
+    for a, b in rows:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        if a is None or b is None:
+            continue
+        ra, rb = find(a), find(b)
+        if rb < ra:
+            ra, rb = rb, ra
+        parent[rb] = ra
+    # the union of both endpoint columns carries the widened id type
+    id_type = p.select("src").union(p.select("dst")).schema[0].dataType
+    schema = StructType([StructField("id", id_type), StructField("comp", id_type)])
+    return p.sparkSession.createDataFrame(
+        [(x, find(x)) for x in parent], schema, verifySchema=False
     )
-    labels = labels.localCheckpoint()
-    from pyspark.sql import Observation
-
-    prev_sum = None
-    rounds = 0
-    converged = False
-    for _ in range(max_iterations):
-        nbr = (
-            edges.join(labels, edges["src"] == labels["id"])
-            .groupBy("dst")
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        # the Σlabel convergence probe rides the checkpoint job as an
-        # observed metric (r14 optimization): a separate agg+collect
-        # per round doubled the loop's job count for a value the
-        # checkpoint pass computes for free
-        obs = Observation()
-        labels = (
-            labels.join(nbr, labels["id"] == nbr["dst"], "left")
-            .select(
-                labels["id"],
-                F.least(F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp"))).alias(
-                    "comp"
-                ),
-            )
-            .observe(obs, F.sum("comp").alias("s"))
-            .localCheckpoint()
-        )
-        rounds += 1
-        lbl = labels
-        cur_sum = _observed_or_agg(
-            obs,
-            lambda: lbl.agg(F.sum("comp").alias("s")).collect()[0].asDict(),
-        )["s"]
-        if cur_sum is None or cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    edges.unpersist()
-    return labels, rounds, converged
 
 
-def _cc_star(
-    p: DataFrame, max_iterations: int
-) -> tuple[DataFrame, int, bool]:
-    """Alternating large-star/small-star; returns (labels, rounds, converged).
+def _cc_star(p: DataFrame, max_iterations: int) -> tuple[DataFrame, int]:
+    """Alternating large-star/small-star (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC 2014) over (src, dst)
+    pairs; returns (labels(id, comp), rounds).
 
     Per round (one round = large-star then small-star, each a
     groupBy-min + join on the node id):
@@ -783,19 +708,21 @@ def _cc_star(
       neighbors N(u), m = min(N(u) ∪ {u}); emit (v, m) for
       v ∈ N(u) ∪ {u} \\ {m} — compresses the small side into a star.
 
-    The edge set converges to min-rooted stars; labels read directly
-    off the final edges.  Fixpoint detection compares a canonical
-    (count, Σu, Σv, Σxxhash64(u,v)) signature of the distinct edge
-    set across rounds — one scalar aggregate per round, same cost
-    discipline as label_prop's Σlabel.
+    The edge set converges to min-rooted stars in O(log d) rounds on a
+    graph of diameter d; labels read directly off the final edges.  A
+    round whose distinct edge set has the same (count,
+    Σxxhash64(u, v), Σxxhash64(v, u)) signature as the previous one is
+    the fixpoint — one aggregate job per round that does no arithmetic
+    on the ids, so any orderable id type works.  Raises
+    ``RuntimeError`` if no fixpoint is confirmed within
+    ``max_iterations`` rounds: the current labels would split
+    components.
     """
     edges = p.filter(F.col("src") != F.col("dst")).select(
         F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
     ).distinct().localCheckpoint()
     prev_sig = None
-    rounds = 0
-    converged = False
-    for _ in range(max_iterations):
+    for rounds in range(1, max_iterations + 1):
         # large-star over the undirected view
         bidir = edges.select(F.col("u").alias("a"), F.col("v").alias("b")).union(
             edges.select(F.col("v").alias("a"), F.col("u").alias("b"))
@@ -817,45 +744,28 @@ def _cc_star(
             .filter(F.col("v") != F.col("m"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
         )
-        # the fixpoint signature rides the checkpoint job as observed
-        # metrics (r14, same move as _cc_label_prop): a separate
-        # agg+collect per round doubled the loop's job count
-        from pyspark.sql import Observation
-
-        obs = Observation()
         edges = (
             attach.union(sm.select(F.col("u"), F.col("m").alias("v")))
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.sum("u").alias("su"),
-                F.sum("v").alias("sv"),
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("sh"),
-            )
             .localCheckpoint()
         )
-        rounds += 1
-        ed = edges
-        g = _observed_or_agg(
-            obs,
-            lambda: ed.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("u").alias("su"),
-                F.sum("v").alias("sv"),
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias(
-                    "sh"
-                ),
-            )
-            .collect()[0]
-            .asDict(),
+        sig = tuple(
+            edges.agg(
+                F.count(F.lit(1)),
+                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
+                F.sum(F.xxhash64("v", "u").cast("decimal(38,0)")),
+            ).first()
         )
-        sig = (g["n"], g["su"], g["sv"], g["sh"])
         if sig == prev_sig:
-            converged = True
             break
         prev_sig = sig
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge within {max_iterations} "
+            "star rounds — the pair graph is deeper than expected; raise "
+            "max_iterations"
+        )
     roots = edges.select(F.col("v").alias("id")).distinct().join(
         edges.select(F.col("u").alias("id")).distinct(), "id", "left_anti"
     )
@@ -863,10 +773,8 @@ def _cc_star(
         F.col("u").alias("id"), F.col("v").alias("comp")
     ).union(roots.select("id", F.col("id").alias("comp")))
     # the src != dst pre-filter dropped nodes whose ONLY pair is a
-    # self-pair; the documented contract ("one row per node that
-    # appears in any pair") and _cc_label_prop both emit them as their
-    # own roots — union them back so the two engines stay label-equal
-    # on degenerate input
+    # self-pair (and null ids); the output contract ("one row per node
+    # that appears in any pair") emits them as their own roots
     iso = (
         p.select(F.col("src").alias("id"))
         .union(p.select(F.col("dst").alias("id")))
@@ -874,7 +782,7 @@ def _cc_star(
         .join(labels.select("id"), "id", "left_anti")
     )
     labels = labels.union(iso.select("id", F.col("id").alias("comp")))
-    return labels, rounds, converged
+    return labels, rounds
 
 
 def embedding_cosine_pairs_gemm(

@@ -6,11 +6,11 @@ answers "which docs are CENTRAL?" — e.g. PageRank over the similarity
 graph surfaces template/boilerplate hubs (a page near-duplicated by
 thousands of others) that plain pair counts miss.
 
-Same execution discipline as the CC operator: the edge list is
-materialized once, every superstep is one equi-join + one grouped sum
-(both hash-partitioned on node id, so the exchange is reused), the
-driver loop holds only loop control, and ``localCheckpoint`` truncates
-lineage so step N's plan does not replay steps 1..N-1.
+Execution discipline: the edge list is materialized once, every
+superstep is one equi-join + one grouped sum (both hash-partitioned on
+node id, so the exchange is reused), the driver loop holds only loop
+control, and ``localCheckpoint`` truncates lineage so step N's plan
+does not replay steps 1..N-1.
 """
 
 from __future__ import annotations
@@ -154,34 +154,15 @@ def pagerank(
         p.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).cache()
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # contribution edge list: (src, dst, 1/deg) — deg is static, join once.
-    # The node count rides the checkpoint job as an observed metric
-    # (r15, the _cc_label_prop move): contrib has exactly one row per
-    # edge, so count_distinct(src) over it IS |nodes| — the separate
-    # deg.count() job (a second scan + aggregate, ~0.4 s at sf0.1) goes
-    # away.  Same bounded-wait fallback discipline as the CC probes.
-    from pyspark.sql import Observation
-
-    from flink_kmeans_clustering_spark.operators.dedup import (
-        _observed_or_agg,
-    )
-
-    obs = Observation()
-    # the metric sits ON deg (one row per node flows through it inside
-    # the contrib job) — DISTINCT aggregates are rejected in observed
-    # metrics, a plain count here needs none
-    deg_obs = deg.observe(obs, F.count(F.lit(1)).alias("n"))
-    contrib = edges.join(deg_obs, "src").select(
+    # contribution edge list: (src, dst, 1/deg) — deg is static, join once
+    contrib = edges.join(deg, "src").select(
         "src", "dst", (F.lit(1.0) / F.col("deg")).alias("inv_deg")
     )
     contrib = contrib.localCheckpoint()
-    dg = deg
-    n = int(
-        _observed_or_agg(
-            obs, lambda: {"n": dg.count()}
-        )["n"]
-        or 0
-    )
+    # N scales every rank (the (1−d)/N term and the 1/N start), so it is
+    # an exact count: accumulator-based observed metrics can over-count
+    # when a task is retried
+    n = deg.count()
     if n == 0:
         edges.unpersist()
         return pairs.sparkSession.createDataFrame(

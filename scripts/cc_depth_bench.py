@@ -1,22 +1,22 @@
-"""Deep-graph connected-components evidence: rounds vs diameter.
+"""Connected-components engines against graph size and depth.
 
-VERDICT r05 item 5: star-CC's O(log d) claim was only exercised on
-shallow fixtures.  This script measures BOTH engines on adversarial
-path graphs (diameter = n-1, the worst case for label propagation) and
-a hub star graph, and writes docs/CC_DEPTH.md:
+``connected_components`` union-finds a pair table of up to
+``dedup._LOCAL_CC_MAX_EDGES`` rows on the driver and runs star-CC
+(``_cc_star``, Kiveris et al., SoCC 2014) on the executors above that.
+This script measures both engines on the same inputs and writes
+docs/CC_DEPTH.md and docs/cc_depth.json, the table the bound is read
+from:
 
-* label_prop rounds grow LINEARLY with the chain length (it moves the
-  min label one hop per round) — fine for LSH near-clique duplicate
-  groups (diameter ~2-3), catastrophic on deep graphs;
-* star-CC rounds grow LOGARITHMICALLY (large-star/small-star roughly
-  halves effective depth per round; Kiveris et al., SoCC 2014) — at a
-  10^5-node chain it converges in ~⌈log2 d⌉ + small-constant rounds.
+* chain 0-1-2-...-n: diameter n, the adversarial case — star needs
+  ~⌈log2 d⌉ + a small constant rounds, union-find needs none;
+* hub 0-{1..n}: diameter 2, the shape LSH duplicate groups have.
 
-Also profiles the per-round convergence probe (`Σcomp` scalar agg)
-against the round's main work so the "fold it into the label job"
-question is answered with a measurement, not a guess.
+Every case runs in a fresh Python process (its own Spark session), so
+``py_max_rss_mb`` is that case's driver-side Python high-water mark.
+Time is one warm call: the engine from the checkpointed (src, dst)
+table to its labels, checked as one component of n+1 nodes.
 
-Usage: python scripts/cc_depth_bench.py [--max-chain 100000]
+Usage: python scripts/cc_depth_bench.py [--max-edges 1000000]
 """
 
 from __future__ import annotations
@@ -25,119 +25,131 @@ import argparse
 import json
 import math
 import os
+import resource
+import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
-def chain_pairs(spark, n: int):
-    """Path graph 0-1-2-...-(n-1): diameter n-1."""
+def pair_table(spark, graph: str, n: int):
+    """n edges as a checkpointed (src, dst) table: ``chain`` i-(i+1) or
+    ``hub`` 0-i."""
     from pyspark.sql import functions as F
 
-    return spark.range(n - 1).select(
-        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
-    )
+    src = F.col("id") if graph == "chain" else F.lit(0).cast("long")
+    dst = F.col("id") + 1
+    return spark.range(n).select(src.alias("src"), dst.alias("dst")).localCheckpoint()
 
 
-def star_pairs(spark, n: int):
-    """Hub star 0-{1..n-1}: diameter 2 — the shape LSH dup groups have."""
+def run_engine(p, engine: str) -> tuple[int, int, int]:
+    """One engine call on p, its labels materialized: (components,
+    labeled nodes, star rounds — 0 for union-find)."""
     from pyspark.sql import functions as F
 
-    return spark.range(1, n).select(
-        F.lit(0).cast("long").alias("id_a"), F.col("id").alias("id_b")
-    )
+    from flink_kmeans_clustering_spark.operators.dedup import _cc_star, _cc_union_find
 
-
-def measure(spark, gen, n: int, method: str, max_iterations: int = 200):
-    """Run one engine, return (rounds, seconds, n_components_check)."""
-    from pyspark.sql import functions as F
-
-    from flink_kmeans_clustering_spark.operators.dedup import (
-        _cc_label_prop,
-        _cc_star,
-    )
-
-    p = gen(spark, n).select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).localCheckpoint()
-    t0 = time.perf_counter()
-    if method == "star":
-        labels, rounds, _conv = _cc_star(p, max_iterations)
+    if engine == "star":
+        labels, rounds = _cc_star(p, 200)
     else:
-        labels, rounds, _conv = _cc_label_prop(p, max_iterations)
-    [row] = labels.agg(
-        F.countDistinct("comp").alias("nc"), F.count(F.lit(1)).alias("nn")
-    ).collect()
-    sec = round(time.perf_counter() - t0, 2)
-    assert row["nc"] == 1, f"{method} on n={n}: {row['nc']} components"
-    assert row["nn"] == n, f"{method} on n={n}: {row['nn']} nodes labeled"
-    return rounds, sec
+        labels, rounds = _cc_union_find(p, p.collect()), 0
+    [row] = labels.agg(F.countDistinct("comp"), F.count(F.lit(1))).collect()
+    return row[0], row[1], rounds
 
 
-def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--max-chain", type=int, default=100_000)
-    args = ap.parse_args()
-
+def case(engine: str, graph: str, n: int) -> dict:
     from flink_kmeans_clustering_spark import get_spark
 
-    spark = get_spark(app_name="cc-depth-bench", shuffle_partitions=16)
-    rows = []
-    # label_prop on chains: rounds = diameter + 1 confirm round — keep n
-    # small or it runs for n rounds
-    for n in (16, 64, 256):
-        r, sec = measure(spark, chain_pairs, n, "label_prop", max_iterations=n + 2)
-        rows.append(("label_prop", "chain", n, r, sec))
-        print(f"label_prop chain n={n}: rounds={r} sec={sec}", flush=True)
-    # star on chains up to 10^5
-    n = 1000
-    while n <= args.max_chain:
-        r, sec = measure(spark, chain_pairs, n, "star")
-        rows.append(("star", "chain", n, r, sec))
-        print(f"star chain n={n}: rounds={r} sec={sec} "
-              f"(log2 d = {math.log2(n - 1):.1f})", flush=True)
-        n *= 10
-    # both on the hub star (the realistic dup-group shape)
-    for method in ("label_prop", "star"):
-        r, sec = measure(spark, star_pairs, 100_000, method)
-        rows.append((method, "hub", 100_000, r, sec))
-        print(f"{method} hub n=100000: rounds={r} sec={sec}", flush=True)
+    spark = get_spark(app_name="cc-depth-bench")
+    run_engine(pair_table(spark, graph, 100), engine)  # warm-up
+    p = pair_table(spark, graph, n)
+    rss0 = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
+    t0 = time.perf_counter()
+    nc, nn, rounds = run_engine(p, engine)
+    sec = time.perf_counter() - t0
+    rss = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
+    assert (nc, nn) == (1, n + 1), (engine, graph, n, nc, nn)
+    spark.stop()
+    return {"engine": engine, "graph": graph, "edges": n, "rounds": rounds,
+            "sec": round(sec, 2), "py_max_rss_mb": round(rss),
+            "py_rss_before_mb": round(rss0)}
 
-    docs = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "docs"
-    )
+
+def write_docs(rows: list[dict]) -> None:
+    """docs/cc_depth.json and docs/CC_DEPTH.md from the case rows."""
+    from flink_kmeans_clustering_spark.operators.dedup import _LOCAL_CC_MAX_EDGES
+
+    docs = os.path.join(ROOT, "docs")
     with open(os.path.join(docs, "cc_depth.json"), "w") as fh:
-        json.dump(
-            [dict(zip(("method", "graph", "n", "rounds", "sec"), r)) for r in rows],
-            fh, indent=1,
-        )
+        json.dump(rows, fh, indent=1)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     md = [
-        "# Connected-components depth scaling (generated)",
+        "# Connected-components engines by graph size (generated)",
         "",
-        "`python scripts/cc_depth_bench.py` on local[32].  Chains are the",
-        "adversarial case (diameter = n−1); the hub star is the realistic",
-        "LSH duplicate-group shape (diameter 2).  Rounds include the final",
-        "fixpoint-confirmation round.",
+        f"`python scripts/cc_depth_bench.py` on local[{cpus}] ({os.cpu_count()} vCPUs),",
+        "default session (`spark.driver.memory` 8g).  Chains are the",
+        "adversarial case (diameter = edges); the hub is the LSH",
+        "duplicate-group shape (diameter 2).  `sec` is one warm call from",
+        "the checkpointed pair table to materialized labels; `rounds`",
+        "includes star's fixpoint-confirmation round; `py max RSS` is the",
+        "driver Python process's high-water mark in a fresh process",
+        "(`py RSS before` is the same process just before the call).",
         "",
-        "| engine | graph | n | rounds | sec |",
-        "|---|---|---|---|---|",
+        "| engine | graph | edges | rounds | sec | py max RSS MB | py RSS before MB |",
+        "|---|---|---|---|---|---|---|",
     ]
-    for m, g, n, r, sec in rows:
-        md.append(f"| {m} | {g} | {n} | {r} | {sec} |")
+    for r in rows:
+        md.append(f"| {r['engine']} | {r['graph']} | {r['edges']} | {r['rounds']} | "
+                  f"{r['sec']} | {r['py_max_rss_mb']} | {r['py_rss_before_mb']} |")
+    sec = {(r["engine"], r["graph"], r["edges"]): r["sec"] for r in rows}
+    faster = [r["edges"] for r in rows if r["engine"] == "union_find"
+              and r["sec"] < sec["star", r["graph"], r["edges"]]]
+    top = max(faster, default=0)
+    rss = max((r["py_max_rss_mb"] for r in rows
+               if r["engine"] == "union_find" and r["edges"] == top), default=0)
     md += [
         "",
-        "label_prop rounds grow linearly with chain depth (min label moves",
-        "one hop per round); star-CC stays ~⌈log2 d⌉ + constant — use",
-        "`method=\"star\"` whenever the pair graph can chain (containment /",
-        "prefix dups), label_prop for shallow near-cliques.",
+        f"Union-find is faster than star up to {top:,} edges, the largest",
+        f"size measured, where the driver Python peaks at {rss} MB against",
+        "the 8 GB of `spark.driver.memory`; ten times the edges would need",
+        "about ten times the memory.  `connected_components` therefore",
+        f"union-finds up to `_LOCAL_CC_MAX_EDGES` = {_LOCAL_CC_MAX_EDGES:,}",
+        "pairs on the driver and runs star above that.  Star rounds on",
+        "chains stay near ⌈log2 d⌉ + a small constant",
+        f"(⌈log2 10^5⌉ = {math.ceil(math.log2(1e5))}).",
     ]
     with open(os.path.join(docs, "CC_DEPTH.md"), "w") as fh:
         fh.write("\n".join(md) + "\n")
     print("wrote docs/CC_DEPTH.md")
-    spark.stop()
-    return 0
 
+
+
+def main() -> int:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--max-edges", type=int, default=1_000_000)
+    ap.add_argument("--case", nargs=3, metavar=("ENGINE", "GRAPH", "EDGES"))
+    args = ap.parse_args()
+    if args.case:
+        engine, graph, n = args.case
+        print(json.dumps(case(engine, graph, int(n))))
+        return 0
+
+    rows = []
+    n = 10_000
+    while n <= args.max_edges:
+        for graph in ("chain", "hub"):
+            for engine in ("union_find", "star"):
+                out = subprocess.run(
+                    [sys.executable, os.path.abspath(__file__), "--case", engine, graph, str(n)],
+                    capture_output=True, text=True, check=True,
+                ).stdout
+                rows.append(json.loads(out.strip().splitlines()[-1]))
+                print(rows[-1], flush=True)
+        n *= 10
+    write_docs(rows)
+    return 0
 
 if __name__ == "__main__":
     sys.exit(main())

@@ -84,3 +84,28 @@ def assert_matches_oracle(spark_df, oracle_sql: str, sf_dir: str) -> None:
         f"value-hash mismatch despite equal values — dtype drift? "
         f"spark={got_raw.dtypes.to_dict()} oracle={want_raw.dtypes.to_dict()}"
     )
+
+
+def min_label_components(pairs) -> dict:
+    """Pure-Python connected-components reference: BFS over the
+    undirected pair graph, every node labeled with the min id of its
+    component.  A None id is its own (None) label and connects
+    nothing; a self-pair only adds its node."""
+    adj: dict = {}
+    for a, b in pairs:
+        adj.setdefault(a, set())
+        adj.setdefault(b, set())
+        if a is not None and b is not None:
+            adj[a].add(b)
+            adj[b].add(a)
+    label: dict = {}
+    for start in adj:
+        if start in label:
+            continue
+        comp, frontier = {start}, [start]
+        while frontier:
+            frontier = [n for x in frontier for n in adj[x] if n not in comp]
+            comp.update(frontier)
+        root = None if start is None else min(comp)
+        label.update(dict.fromkeys(comp, root))
+    return label

@@ -194,6 +194,66 @@ def test_connected_components_empty_pairs(spark):
     assert connected_components(pairs).collect() == []
 
 
+def _star_labels(pairs, max_iterations=50):
+    """``_cc_star`` on an (id_a, id_b) pair table: (labels, {id: comp})."""
+    from flink_kmeans_clustering_spark.operators.dedup import _cc_star
+
+    p = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    labels, _ = _cc_star(p.localCheckpoint(), max_iterations)
+    return labels, {r["id"]: r["comp"] for r in labels.collect()}
+
+
+@pytest.mark.parametrize(
+    "rows, id_type",
+    [
+        # Σid of these overflows a long under ANSI arithmetic
+        ([(2**62 + 1, 2**62 + 2), (2**62 + 3, 2**62 + 2), (2**62 + 5, 2**62 + 9)], "long"),
+        # string ids cannot be summed at all
+        ([("b", "a"), ("c", "b"), ("é", "z")], "string"),
+    ],
+    ids=["long_near_max", "string"],
+)
+def test_cc_ids_need_no_arithmetic(spark, rows, id_type):
+    """Both engines label any orderable id type — convergence never
+    sums ids — and keep the input id type in the output schema."""
+    from tests.oracle_utils import min_label_components
+
+    pairs = spark.createDataFrame(rows, f"id_a {id_type}, id_b {id_type}")
+    want = min_label_components(rows)
+    t = pairs.schema[0].dataType.simpleString()
+    comp = connected_components(pairs)
+    assert comp.schema.simpleString() == f"struct<id:{t},component_id:{t}>"
+    assert {r["id"]: r["component_id"] for r in comp.collect()} == want
+    labels, got = _star_labels(pairs)
+    assert labels.schema.simpleString() == f"struct<id:{t},comp:{t}>"
+    assert got == want
+
+
+def test_cc_star_route_equals_union_find_route(spark, monkeypatch):
+    """The engine follows the pair count, never the caller: with the
+    driver bound at 0 every non-empty graph goes to star, and its
+    labels equal the union-find route's and the pure-Python
+    reference.  A null id is one (null, null) row that connects
+    nothing; int ids stay int (long and string: the test above)."""
+    from flink_kmeans_clustering_spark.operators import dedup
+    from tests.oracle_utils import min_label_components
+
+    rows = [(1, 2), (2, None), (None, 5), (7, 8), (9, 9), (3, 9), (12, 11),
+            (11, 10), (10, 3), (20, 21)]
+    pairs = spark.createDataFrame(rows, "id_a int, id_b int")
+    uf = connected_components(pairs)
+    monkeypatch.setattr(dedup, "_LOCAL_CC_MAX_EDGES", 0)
+    star = connected_components(pairs)
+    want = min_label_components(rows)
+    pinned = {1: 1, 2: 1, 5: 5, 7: 7, 8: 7, None: None}
+    assert {k: want[k] for k in pinned} == pinned
+    for comp in (uf, star):
+        assert comp.schema.simpleString() == "struct<id:int,component_id:int>"
+        got = comp.collect()
+        assert {r["id"]: r["component_id"] for r in got} == want
+        assert len(got) == len(want)  # one row per node, one null row
+
+
 def test_drop_near_duplicates_greedy(spark, docs):
     pairs = ngram_jaccard_pairs(docs, threshold=0.3)
     kept = sorted(r["doc_id"] for r in drop_near_duplicates(docs, pairs).collect())
@@ -572,27 +632,22 @@ def test_ppjoin_length_positional_filters_cut_candidates(spark):
 
 
 def test_cc_star_fewer_rounds_on_chain_graph(spark):
-    """On a long chain (diameter = n) label propagation needs O(n)
-    rounds while the star alternation collapses it in O(log n) — the
-    adversarial-depth case the star variant exists for; both must land
-    on the single min-rooted component."""
-    from pyspark.sql import functions as F
-    from flink_kmeans_clustering_spark.operators.dedup import (
-        _cc_label_prop,
-        _cc_star,
-    )
+    """On a long chain (diameter = n) the star alternation collapses
+    the component in O(log n) rounds — the adversarial-depth case the
+    star engine exists for — and lands on the single min-rooted
+    component."""
+    import math
+    from flink_kmeans_clustering_spark.operators.dedup import _cc_star
 
     n = 64
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], "src long, dst long"
     ).localCheckpoint()
-    lp_labels, lp_rounds, _ = _cc_label_prop(chain, max_iterations=200)
-    st_labels, st_rounds, _ = _cc_star(chain, max_iterations=200)
-    lp = {(r["id"], r["comp"]) for r in lp_labels.collect()}
-    st = {(r["id"], r["comp"]) for r in st_labels.collect()}
-    assert lp == {(i, 0) for i in range(n + 1)}
-    assert st == lp
-    assert st_rounds < lp_rounds / 2, (st_rounds, lp_rounds)
+    labels, rounds = _cc_star(chain, max_iterations=200)
+    assert {(r["id"], r["comp"]) for r in labels.collect()} == {
+        (i, 0) for i in range(n + 1)
+    }
+    assert rounds <= math.ceil(math.log2(n)) + 4, rounds
 
 
 @pytest.mark.slow
@@ -610,7 +665,7 @@ def test_cc_star_rounds_logarithmic_on_deep_chain(spark):
         .select(F.col("id").alias("src"), (F.col("id") + 1).alias("dst"))
         .localCheckpoint()
     )
-    labels, rounds, _ = _cc_star(chain, max_iterations=50)
+    labels, rounds = _cc_star(chain, max_iterations=50)
     assert rounds <= math.ceil(math.log2(n - 1)) + 4, rounds
     [row] = labels.agg(
         F.countDistinct("comp").alias("nc"), F.count(F.lit(1)).alias("nn")
@@ -619,25 +674,19 @@ def test_cc_star_rounds_logarithmic_on_deep_chain(spark):
 
 
 def test_cc_raises_instead_of_silent_wrong_labels_on_deep_graph(spark):
-    """A chain deeper than the round budget must RAISE, not return
-    mid-propagation labels (docs/CC_DEPTH.md: label_prop needs diameter
-    rounds — a 120-chain under the default budget of 50 would silently
-    split the component); star converges in O(log d) and must succeed
-    under the same default."""
-    import pytest
-    from flink_kmeans_clustering_spark.operators.dedup import (
-        connected_components,
-    )
-
+    """A 120-chain gets exact labels from the public function (the
+    driver union-find needs no rounds), while the star engine under a
+    round budget too small for the chain must RAISE, not return labels
+    that split the component."""
     n = 120
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], "id_a long, id_b long"
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, method="label_prop").collect()
-    comp = connected_components(chain, method="star")
+    comp = connected_components(chain)
     rows = {(r["id"], r["component_id"]) for r in comp.collect()}
     assert rows == {(i, 0) for i in range(n + 1)}
+    with pytest.raises(RuntimeError, match="did not converge"):
+        _star_labels(chain, max_iterations=3)
 
 
 def test_keeper_drops_embedded_doc_jaccard_would_keep(spark):
@@ -678,21 +727,13 @@ def test_cc_engines_agree_on_self_pair_only_nodes(spark):
     own root from BOTH engines — the documented 'one row per node that
     appears in any pair' contract (star used to drop it at the
     src != dst pre-filter)."""
-    from flink_kmeans_clustering_spark.operators.dedup import (
-        _cc_label_prop,
-        _cc_star,
-    )
-
     pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (9, 9), (5, 5), (5, 6)], "src long, dst long"
-    ).localCheckpoint()
-    lp_labels, _, _ = _cc_label_prop(pairs, max_iterations=50)
-    st_labels, _, _ = _cc_star(pairs, max_iterations=50)
-    lp = {(r["id"], r["comp"]) for r in lp_labels.collect()}
-    st = {(r["id"], r["comp"]) for r in st_labels.collect()}
-    want = {(1, 1), (2, 1), (3, 1), (9, 9), (5, 5), (6, 5)}
-    assert lp == want
-    assert st == want
+        [(1, 2), (2, 3), (9, 9), (5, 5), (5, 6)], "id_a long, id_b long"
+    )
+    uf = {r["id"]: r["component_id"] for r in connected_components(pairs).collect()}
+    want = {1: 1, 2: 1, 3: 1, 9: 9, 5: 5, 6: 5}
+    assert uf == want
+    assert _star_labels(pairs)[1] == want
 
 
 def test_containment_catches_embedded_doc_jaccard_misses(spark):
@@ -972,23 +1013,21 @@ def test_pair_cosine_histogram_bins(spark):
 def test_cc_converging_on_last_budgeted_round_is_not_a_failure(spark):
     """Regression (ADVICE r06): a fixpoint CONFIRMED on exactly the
     last budgeted round is convergence, not failure — the old
-    ``rounds >= max_iterations`` check raised on it.  A 0-1-2 chain
-    under label_prop stabilizes on round 2 and confirms on round 3, so
-    max_iterations=3 must succeed while max_iterations=2 (budget
-    exhausted before the Σ-label probe goes stable) must still raise."""
-    import pytest
-    from flink_kmeans_clustering_spark.operators.dedup import (
-        connected_components,
-    )
+    ``rounds >= max_iterations`` check raised on it.  The star engine
+    confirms an 8-chain's fixpoint on some round r; a budget of r must
+    succeed while r - 1 (budget exhausted before the edge signature
+    goes stable) must still raise."""
+    from flink_kmeans_clustering_spark.operators.dedup import _cc_star
 
-    chain = spark.createDataFrame([(0, 1), (1, 2)], "id_a long, id_b long")
-    ok = connected_components(chain, method="label_prop", max_iterations=3)
-    assert {(r["id"], r["component_id"]) for r in ok.collect()} == {
-        (0, 0),
-        (1, 0),
-        (2, 0),
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(8)], "src long, dst long"
+    ).localCheckpoint()
+    _, r = _cc_star(chain, max_iterations=50)
+    assert r >= 2
+    labels, rounds = _cc_star(chain, max_iterations=r)
+    assert rounds == r
+    assert {(x["id"], x["comp"]) for x in labels.collect()} == {
+        (i, 0) for i in range(9)
     }
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(
-            chain, method="label_prop", max_iterations=2
-        ).collect()
+        _cc_star(chain, max_iterations=r - 1)

@@ -238,10 +238,15 @@ def test_synth_partsupp_requires_four_suppliers(spark):
 
 
 def test_cc_star_empty_pairs(spark):
-    from flink_kmeans_clustering_spark.operators.dedup import connected_components
+    from flink_kmeans_clustering_spark.operators.dedup import (
+        _cc_star,
+        connected_components,
+    )
 
-    pairs = spark.createDataFrame([], "id_a long, id_b long")
-    assert connected_components(pairs, method="star").collect() == []
+    pairs = spark.createDataFrame([], "src long, dst long")
+    labels, _ = _cc_star(pairs.localCheckpoint(), max_iterations=50)
+    assert labels.collect() == []
+    assert connected_components(pairs, id_a="src", id_b="dst").collect() == []
 
 
 def test_r05_text_ops_empty_and_degenerate_inputs(spark):

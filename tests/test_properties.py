@@ -327,23 +327,32 @@ def test_prefix_filter_join_is_exact(spark, texts, t):
     )
 )
 def test_cc_star_equals_label_propagation(spark, raw_pairs):
-    """Large-star/small-star must produce exactly the min-label
-    components of the propagation engine on arbitrary small graphs."""
+    """Large-star/small-star and the public operator (driver
+    union-find at this size) must each produce exactly the min-label
+    components of a pure-Python BFS on arbitrary small graphs."""
+    from pyspark.sql import functions as F
+
     from flink_kmeans_clustering_spark.operators.dedup import (
+        _cc_star,
         connected_components,
     )
+    from tests.oracle_utils import min_label_components
 
     rows = [(min(a, b), max(a, b)) for a, b in raw_pairs]
+    want = set(min_label_components(rows).items())
     pairs = spark.createDataFrame(rows, "id_a long, id_b long")
-    lp = {
+    public = {
         (r["id"], r["component_id"])
-        for r in connected_components(pairs, method="label_prop").collect()
+        for r in connected_components(pairs).collect()
     }
-    star = {
-        (r["id"], r["component_id"])
-        for r in connected_components(pairs, method="star").collect()
-    }
-    assert star == lp
+    labels, _ = _cc_star(
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        .localCheckpoint(),
+        max_iterations=50,
+    )
+    star = {(r["id"], r["comp"]) for r in labels.collect()}
+    assert public == want
+    assert star == want
 
 
 @SLOW
