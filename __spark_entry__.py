@@ -170,7 +170,6 @@ from flink_kmeans_clustering_spark.streaming.joins import (
 )
 from flink_kmeans_clustering_spark.operators.kmeans import (
     assign_points,
-    assign_points_join,
     lloyd,
     lloyd_nd,
     moved_centroids,
@@ -221,20 +220,21 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def q_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O1/O7 nearest-centroid assignment (narrow literal-argmin map)."""
+    """O1/O7 nearest-centroid assignment (narrow array-literal argmin map)."""
     pts = points_v(spark, sf_dir)
     cents = centroids_v(spark, sf_dir)
     return assign_points(pts, cents).select("point_id", "cluster")
 
 
 def q_assign_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O1 via the explicit broadcast-join + per-key min path
-    (operators.kmeans.assign_points_join) — the form for centroid sets
-    too large to inline as literals.  Same oracle as q_assign."""
+    """O1 with the centroid set given as a DataFrame: its k rows are
+    collected to the driver and passed to assign_points, the one
+    assignment form (k rows always fit in a plan literal, so no join
+    is needed).  Same oracle as q_assign."""
     pts = points_v(spark, sf_dir)
-    cents = centroids_v(spark, sf_dir)
-    cdf = spark.createDataFrame(cents, "id int, x double, y double")
-    return assign_points_join(pts, cdf).select("point_id", "cluster")
+    cdf = spark.createDataFrame(centroids_v(spark, sf_dir), "id int, x double, y double")
+    cents = [(int(r["id"]), float(r["x"]), float(r["y"])) for r in cdf.collect()]
+    return assign_points(pts, cents).select("point_id", "cluster")
 
 
 def q_update(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2316,7 +2316,7 @@ PQ_CODEWORDS = 16  # codewords per subspace
 def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (ADC): trainless first-k-subvector
     codebooks (the engine-replayable checked contract; production
-    trains per-subspace k-means via pq_codebooks_trained), m uint8
+    trains the subspace k-means via pq_codebooks_trained), m uint8
     codes per vector, driver-side LUT scoring as one literal — no
     join, no shuffle — exact-L2 rerank of the shortlist."""
     from flink_kmeans_clustering_spark.operators.similarity import (
@@ -2341,18 +2341,18 @@ PQ_TRAIN_ITERS = 3
 def q_ann_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ ANN over TRAINED codebooks — the production path, now
     oracle-checked: all m subspace k-means run as ONE grouped Lloyd
-    (pq_codebooks_trained_grouped — the corpus is scanned iters times
+    (pq_codebooks_trained — the corpus is scanned iters times
     total, not m·iters; the update shuffle carries m·k rows), with
     persistent codeword ids and first-k-by-vec_id init so DuckDB
     replays the training chain CTE-for-CTE
     (_ann_pq_trained_oracle_sql) before the shared ADC tail."""
     from flink_kmeans_clustering_spark.operators.similarity import (
         ann_pq,
-        pq_codebooks_trained_grouped,
+        pq_codebooks_trained,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    books = pq_codebooks_trained_grouped(
+    books = pq_codebooks_trained(
         emb, m=PQ_M, k=PQ_CODEWORDS, iters=PQ_TRAIN_ITERS
     )
     return ann_pq(
@@ -5442,7 +5442,7 @@ def _ann_pq_trained_oracle_sql(
     shortlist: int = ANN_SHORTLIST, topk: int = TOPK_K,
 ) -> str:
     """TRAINED PQ/ADC replay: the grouped per-subspace Lloyd
-    (pq_codebooks_trained_grouped — init = first-kc-by-vec_id slices,
+    (pq_codebooks_trained — init = first-kc-by-vec_id slices,
     persistent codeword ids, codewords re-ranked dense by surviving id
     at the end) chained as CTE levels, feeding the same shared ADC
     tail as the trainless oracle."""

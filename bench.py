@@ -132,8 +132,8 @@ def main() -> None:
     # only sweep entries, never the kmeans_ref block).
     from pyspark.sql import functions as _F
 
-    _c_prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    _c_prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    _c_prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    _c_prev_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
     calib_runs: list[float] = []
     try:
         spark.conf.set("spark.sql.adaptive.enabled", "false")

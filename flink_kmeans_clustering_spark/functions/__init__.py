@@ -9,7 +9,6 @@ from flink_kmeans_clustering_spark.functions.vector import (
     cosine_similarity,
     dot,
     l2_norm,
-    squared_l2_distance,
 )
 from flink_kmeans_clustering_spark.functions.text import ngram_shingles, tokenize
 from flink_kmeans_clustering_spark.functions.hashing import (
@@ -22,7 +21,6 @@ __all__ = [
     "cosine_similarity",
     "dot",
     "l2_norm",
-    "squared_l2_distance",
     "ngram_shingles",
     "tokenize",
     "minhash_signature",

@@ -134,6 +134,11 @@ def _bytes_conf(spark, key: str, default: int) -> int:
         return default
 
 
+def quote_ident(name: str) -> str:
+    """A column name as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def array_lit(nested, kind: str = "double"):
     """Nested array literal as ONE parsed SQL expression.
 

@@ -5,18 +5,12 @@ The reference implements Lloyd's algorithm as a Flink bulk iteration over
 step is an independent, composable DataFrame operator:
 
 * :func:`assign_points` — O1/O7 nearest-centroid assignment.  The k
-  centroids are embedded as a literal array-of-structs and the argmin is
-  ``array_min`` over ``(dist², id)`` structs: a *narrow* map with zero
-  shuffle and full whole-stage codegen — the Spark analogue of Flink's
-  map-with-broadcast (``KMeans.java:264-290``), and the plan that
-  survives a 100 TB scan (no N×k materialization, no exchange).
-* :func:`assign_points_param` — same semantics with the centroids as
-  three array literals read by a higher-order ``transform``: the
-  generated stage code carries no centroid values, so iterative callers
-  compile the stage once and reuse it every superstep (plan-stable
-  form).
-* :func:`assign_points_join` — same semantics via an explicit broadcast
-  join + per-key min, for when the centroid side is a DataFrame.
+  centroids enter the plan as array literals read by a higher-order
+  ``transform``, and the argmin is ``array_min`` over ``(dist², id)``
+  structs: a *narrow* map with zero shuffle — the Spark analogue of
+  Flink's map-with-broadcast (``KMeans.java:264-290``).  The generated
+  stage code carries no centroid values, so an iterative caller
+  compiles it once and reuses it every superstep.
 * :func:`update_centroids` — O3/O4 grouped partial-sum + mean
   (``KMeans.java:311-336``): one hash-partition exchange on the cluster
   id with map-side partial aggregation (Catalyst's HashAggregate
@@ -25,19 +19,21 @@ step is an independent, composable DataFrame operator:
 * :func:`moved_centroids` — O6 convergence join+filter
   (``KMeans.java:169-181``).
 * :func:`lloyd` — O5 bulk iteration as a driver loop: each superstep is
-  the plan-stable assignment plus the grouped update, the k-row
-  centroid state collects to the driver and re-enters the next round
-  as array literals (MLlib's internal collect+broadcast pattern).
+  the assignment plus the grouped update, the k-row centroid state
+  collects to the driver and re-enters the next round as array
+  literals (MLlib's internal collect+broadcast pattern).
 * :func:`assign_points_nd` / :func:`update_centroids_nd` /
   :func:`lloyd_nd` / :func:`spherical_kmeans_nd` — the same superstep
   over an ``array<double>`` vector column.
 
 Each kernel has one definition, as SQL text: :func:`_argmin_2d_sql`
-(2-D argmin), :func:`assign_points_nd_sql` (n-d argmin) and
-:func:`_nd_sum_sql` (n-d partial sums).  The public operators and the
-driver loops all build from them; a loop pastes the text into one
-``selectExpr`` / ``spark.sql`` parse per superstep, which is far
-cheaper than composing the same tree Column by Column over py4j.
+(2-D argmin), :func:`assign_points_nd_sql` (n-d argmin, built from
+:func:`~flink_kmeans_clustering_spark.functions.vector.nearest_codeword_sql`,
+the argmin the PQ paths share) and :func:`_nd_sum_sql` (n-d partial
+sums).  The public operators and the driver loops all build from
+them; a loop pastes the text into one ``selectExpr`` / ``spark.sql``
+parse per superstep, which is far cheaper than composing the same tree
+Column by Column over py4j.
 
 Semantic fine print preserved from the reference (SURVEY.md §3.4):
 
@@ -64,21 +60,22 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from flink_kmeans_clustering_spark.operators.common import array_lit_sql, session_conf
+from flink_kmeans_clustering_spark.functions.vector import nearest_codeword_sql
+from flink_kmeans_clustering_spark.operators.common import (
+    array_lit_sql,
+    quote_ident,
+    session_conf,
+)
 
 Centroid = tuple[int, float, float]  # (id, x, y)
 
 
-def _quote(name: str) -> str:
-    """A column name as a backtick-quoted SQL identifier."""
-    return "`" + name.replace("`", "``") + "`"
-
-
 def _with_argmin(
-    df: DataFrame, argmin_sql: str, cluster_col: str, dist2_col: str | None
+    df: DataFrame, argmin_sql: str | None, cluster_col: str, dist2_col: str | None
 ) -> DataFrame:
     """``df`` plus the cluster (and optionally dist²) of an argmin
-    struct given as SQL text.
+    struct given as SQL text; ``None`` (an empty centroid set) gives
+    cluster ``-1`` and a NULL dist² (``KMeans.java:277-287``).
 
     Two projections: the first evaluates the struct once into a
     temporary column, the second reads its fields.  Catalyst does not
@@ -86,10 +83,15 @@ def _with_argmin(
     non-trivial expression), so the argmin runs once per row; reading
     both fields off one inline expression would evaluate it twice.
     """
+    if argmin_sql is None:
+        return df.select(
+            "*", F.lit(-1).alias(cluster_col),
+            *([F.lit(None).cast("double").alias(dist2_col)] if dist2_col else []),
+        )
     tmp = "_argmin"
     while tmp in df.columns:
         tmp = "_" + tmp
-    cols = [F.col(_quote(c)) for c in df.columns]
+    cols = [F.col(quote_ident(c)) for c in df.columns]
     cols.append(F.col(tmp)["cluster"].alias(cluster_col))
     if dist2_col:
         cols.append(F.col(tmp)["dist2"].alias(dist2_col))
@@ -118,72 +120,23 @@ def assign_points(
 ) -> DataFrame:
     """Assign each point to its nearest centroid (O1/O7).
 
-    Centroids enter the plan as a literal array of ``(dist², id)``
-    structs; ``array_min``'s lexicographic struct ordering gives the
-    argmin with the reference's lowest-id tie-break.  Narrow map — no
-    join, no shuffle, whole-stage codegen.
-
-    An empty centroid sequence assigns cluster ``-1`` to every point
-    (``KMeans.java:277-287``).
-    """
-    out_cols = [F.col(c) for c in points.columns]
-    if not centroids:
-        out = points.select(*out_cols, F.lit(-1).alias(cluster_col))
-        if dist2_col:
-            out = out.withColumn(dist2_col, F.lit(None).cast("double"))
-        return out
-
-    candidates = F.array(
-        *[
-            F.struct(
-                squared_distance(F.col(x), F.col(y), cx, cy).alias("dist2"),
-                F.lit(int(cid)).alias("cluster"),
-            )
-            for cid, cx, cy in centroids
-        ]
-    )
-    best = F.array_min(candidates)
-    cols = [*out_cols, best["cluster"].alias(cluster_col)]
-    if dist2_col:
-        cols.append(best["dist2"].alias(dist2_col))
-    return points.select(*cols)
-
-
-def assign_points_param(
-    points: DataFrame,
-    centroids: Sequence[Centroid],
-    x: str = "x",
-    y: str = "y",
-    cluster_col: str = "cluster",
-    dist2_col: str | None = None,
-) -> DataFrame:
-    """O1/O7 assignment with a *plan-stable* parameterized centroid set.
-
-    Same semantics as :func:`assign_points`, different physics: the
-    centroid coordinates enter the plan as three **array literals**
-    (ids/xs/ys) consumed by a higher-order ``transform`` over the index
+    The centroid coordinates enter the plan as three **array literals**
+    (ids/xs/ys) read by a higher-order ``transform`` over the index
     range (:func:`_argmin_2d_sql`, the same text :func:`lloyd` runs
-    each superstep).  Array literals live in the codegen ``references``
-    table, not in the generated Java source, so the stage source is
-    byte-identical across Lloyd supersteps — Janino compiles it once
-    and every later superstep hits the codegen cache.  The
-    literal-unrolled :func:`assign_points` recompiles each superstep
-    because primitive double literals are inlined into the source
-    (~0.2 s/superstep; docs/STATUS.md round 1).
+    each superstep); ``array_min`` over ``(dist², id)`` structs gives
+    the argmin with the reference's lowest-id tie-break.  Array
+    literals live in the codegen ``references`` table, not in the
+    generated Java source, so the stage source is byte-identical
+    across Lloyd supersteps — Janino compiles it once and every later
+    superstep hits the codegen cache.  A narrow map: no join, no
+    shuffle — the Spark analogue of Flink's map-with-broadcast
+    (``KMeans.java:264-290``).
 
-    The HOF lambda evaluates interpreted (CodegenFallback), but it is k
-    struct constructions per row — measured ~25% cheaper per superstep
-    than the literal form once recompilation is gone.  Still a narrow
-    map: no join, no shuffle.  Use this in iterative loops;
-    :func:`assign_points` remains the best one-shot form (fully
-    codegen'd arithmetic).
+    An empty centroid sequence assigns cluster ``-1`` (and a NULL
+    dist²) to every point (``KMeans.java:277-287``).
     """
-    if not centroids:
-        return assign_points(points, centroids, x=x, y=y,
-                             cluster_col=cluster_col, dist2_col=dist2_col)
-    return _with_argmin(
-        points, _argmin_2d_sql(centroids, x, y), cluster_col, dist2_col
-    )
+    argmin = _argmin_2d_sql(centroids, x, y) if centroids else None
+    return _with_argmin(points, argmin, cluster_col, dist2_col)
 
 
 def _argmin_2d_sql(centroids: Sequence[Centroid], x: str, y: str) -> str:
@@ -196,56 +149,27 @@ def _argmin_2d_sql(centroids: Sequence[Centroid], x: str, y: str) -> str:
     through :func:`~.common.array_lit_sql`, which rejects NaN/±inf
     with ``ValueError("non-finite literal …")``; the column names are
     backtick-quoted.  ``centroids`` must be non-empty.
+
+    The columns are read inside the per-centroid lambda, so its
+    variable is named to differ from both: a column called ``i`` would
+    otherwise resolve to the lambda variable.  Renaming is free, where
+    let-binding (x, y) outside the lambda, as
+    :func:`~flink_kmeans_clustering_spark.functions.vector.nearest_codeword_sql`
+    does for a vector, cost ~10% per superstep (100k points, k=8, 4 vCPUs).
     """
+    i = "i"
+    while i.lower() in (x.lower(), y.lower()):
+        i += "_"
     ids = array_lit_sql([int(c[0]) for c in centroids], kind="int")
     xs = array_lit_sql([float(c[1]) for c in centroids])
     ys = array_lit_sql([float(c[2]) for c in centroids])
-    qx, qy = _quote(x), _quote(y)
+    qx, qy = quote_ident(x), quote_ident(y)
     return (
-        f"array_min(transform(sequence(0, {len(centroids) - 1}), i -> named_struct("
-        f"'dist2', ({qx} - get({xs}, i)) * ({qx} - get({xs}, i))"
-        f" + ({qy} - get({ys}, i)) * ({qy} - get({ys}, i)),"
-        f" 'cluster', get({ids}, i))))"
+        f"array_min(transform(sequence(0, {len(centroids) - 1}), {i} -> named_struct("
+        f"'dist2', ({qx} - get({xs}, {i})) * ({qx} - get({xs}, {i}))"
+        f" + ({qy} - get({ys}, {i})) * ({qy} - get({ys}, {i})),"
+        f" 'cluster', get({ids}, {i}))))"
     )
-
-
-def assign_points_join(
-    points: DataFrame,
-    centroids: DataFrame,
-    point_id: str = "point_id",
-    x: str = "x",
-    y: str = "y",
-    centroid_id: str = "id",
-    cluster_col: str = "cluster",
-    dist2_col: str | None = None,
-) -> DataFrame:
-    """O1 via explicit broadcast cross-join + per-point min-struct agg.
-
-    Same semantics as :func:`assign_points` for callers whose centroid
-    set is a DataFrame (or too large to inline as literals).  The big
-    side streams through a BroadcastNestedLoopJoin; the per-point argmin
-    is ``min(struct(dist², id))`` — a hash aggregation, no sort.
-    """
-    cdf = F.broadcast(
-        centroids.select(
-            F.col(centroid_id).alias("_cid"),
-            F.col(x).alias("_cx"),
-            F.col(y).alias("_cy"),
-        )
-    )
-    dx = F.col(x) - F.col("_cx")
-    dy = F.col(y) - F.col("_cy")
-    scored = points.crossJoin(cdf).withColumn(
-        "_cand", F.struct((dx * dx + dy * dy).alias("dist2"), F.col("_cid").alias("cluster"))
-    )
-    keep = [c for c in points.columns if c != point_id]
-    agg = scored.groupBy(point_id).agg(
-        *[F.first(c).alias(c) for c in keep], F.min("_cand").alias("_best")
-    )
-    cols = [F.col(point_id), *[F.col(c) for c in keep], F.col("_best.cluster").alias(cluster_col)]
-    if dist2_col:
-        cols.append(F.col("_best.dist2").alias(dist2_col))
-    return agg.select(*cols)
 
 
 # ---------------------------------------------------------------------------
@@ -385,9 +309,9 @@ def lloyd(
     Spark's substitute for Flink's native feedback edge; with k-row
     driver state the per-iteration cost is one job over the cached scan.
     Assignment is :func:`_argmin_2d_sql`, the argmin
-    :func:`assign_points_param` builds from, so the generated stage
-    code is identical every superstep (one Janino compile per loop, not
-    one per iteration).  The update is the groupBy k-row shuffle of
+    :func:`assign_points` builds from, so the generated stage code is
+    identical every superstep (one Janino compile per loop, not one per
+    iteration).  The update is the groupBy k-row shuffle of
     :func:`update_centroids`.
 
     For the duration of the loop the session runs with AQE disabled and
@@ -434,7 +358,7 @@ def lloyd(
     # and each executed plan left the interpreted-eval path ~2× slower
     # for the rest of the session.  The explicit selectExpr Project
     # keeps the argmin in its own codegen stage.
-    qx, qy = _quote(x), _quote(y)
+    qx, qy = quote_ident(x), quote_ident(y)
     _gid = F.col("cluster").alias("id")
     _aggs = [
         F.sum(x).alias("_sx"),
@@ -476,7 +400,7 @@ def lloyd(
             else:
                 current = new
 
-        assignments = assign_points_param(points, current, x=x, y=y, dist2_col="dist2")
+        assignments = assign_points(points, current, x=x, y=y, dist2_col="dist2")
         row = objective_from_assigned(assignments).collect()[0]
         wcss = float(row["wcss"]) if row["wcss"] is not None else 0.0
     return LloydResult(centroids=current, iterations=iterations, assignments=assignments, wcss=wcss)
@@ -556,7 +480,7 @@ def scalable_init(
     candidate set is reclustered driver-side.
 
     Distributed physics per round: one narrow assignment pass against
-    the current candidate literals (:func:`assign_points_param` — no
+    the current candidate literals (:func:`assign_points` — no
     join, no shuffle), a scalar Σd² reduce, and a Bernoulli sample
     whose uniform comes from ``xxhash64(id, round, seed)`` — hash-
     derived, so the draw is reproducible under any partitioning /
@@ -618,7 +542,7 @@ def scalable_init(
 
     for r in range(rounds):
         lits = [(i, cx, cy) for i, (cx, cy) in enumerate(cand)]
-        a = assign_points_param(points, lits, x=x, y=y, dist2_col="_d2")
+        a = assign_points(points, lits, x=x, y=y, dist2_col="_d2")
         if draw_fn == "md5":
             # associative-exact Σd²: any engine summing the same
             # DECIMAL(38,12) terms gets the same phi, in any order
@@ -672,7 +596,7 @@ def scalable_init(
     lits = [(i, cx, cy) for i, (cx, cy) in enumerate(cand)]
     counts = {
         int(r["cluster"]): int(r["n"])
-        for r in assign_points_param(points, lits, x=x, y=y)
+        for r in assign_points(points, lits, x=x, y=y)
         .groupBy("cluster")
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
@@ -897,20 +821,15 @@ def assign_points_nd(
 
     ``centroid_ids`` (default: positions) are the labels EMITTED — pass
     the surviving original ids in an iterative loop so labels stay
-    persistent when a cluster empties (the 2-D :func:`assign_points_param`
+    persistent when a cluster empties (the 2-D :func:`assign_points`
     semantics; the min-struct tie-break then runs on the original id).
     """
-    if not centroids:
-        return vectors.select(
-            "*", F.lit(-1).alias(cluster_col),
-            *([F.lit(None).cast("double").alias(dist2_col)] if dist2_col else []),
-        )
-    return _with_argmin(
-        vectors,
-        assign_points_nd_sql(centroids, vec_col=vec_col, centroid_ids=centroid_ids),
-        cluster_col,
-        dist2_col,
+    argmin = (
+        assign_points_nd_sql(centroids, vec_col=vec_col, centroid_ids=centroid_ids)
+        if centroids
+        else None
     )
+    return _with_argmin(vectors, argmin, cluster_col, dist2_col)
 
 
 def assign_points_nd_sql(
@@ -927,23 +846,18 @@ def assign_points_nd_sql(
     py4j Column composition per iteration at k=8, d=64).
 
     The vector is cast to ``array<double>`` once per row and let-bound
-    through a one-element ``transform`` — referencing the cast inside
-    the per-candidate lambda would re-inline the O(dim) cast k times
-    per row (the HOF projection-collapse pitfall).  ``vec_col`` is
-    backtick-quoted; ``centroids`` must be non-empty."""
+    outside the per-candidate lambda by
+    :func:`~flink_kmeans_clustering_spark.functions.vector.nearest_codeword_sql`
+    (no O(dim) cast re-inlined k times per row, no capture of a column
+    named like a lambda variable).  ``vec_col`` is backtick-quoted;
+    ``centroids`` must be non-empty."""
     if centroid_ids is None:
         centroid_ids = range(len(centroids))
-    mat = array_lit_sql([[float(v) for v in c] for c in centroids])
-    ids = array_lit_sql([int(i) for i in centroid_ids], kind="int")
-    k = len(centroids)
-    return (
-        f"element_at(transform(array(transform({_quote(vec_col)}, "
-        "x -> CAST(x AS DOUBLE))), "
-        f"v -> array_min(transform(sequence(0, {k - 1}), "
-        "i -> named_struct("
-        f"'dist2', aggregate(zip_with(v, element_at({mat}, i + 1), "
-        "(a, b) -> (a - b) * (a - b)), 0.0D, (acc, x) -> acc + x), "
-        f"'cluster', CAST(element_at({ids}, i + 1) AS INT))))), 1)"
+    return nearest_codeword_sql(
+        f"transform({quote_ident(vec_col)}, x -> CAST(x AS DOUBLE))",
+        array_lit_sql([[float(v) for v in c] for c in centroids]),
+        len(centroids),
+        array_lit_sql([int(i) for i in centroid_ids], kind="int"),
     )
 
 
@@ -960,7 +874,7 @@ def _nd_sum_sql(dim: int, vec_col: str, cast: str = "DOUBLE") -> list[str]:
     ``cast`` is the accumulator type: ``DOUBLE`` (raw double sums, the
     :func:`lloyd_nd` update) or e.g. ``DECIMAL(25,8)`` (order-exact
     sums, the :func:`spherical_kmeans_nd` update)."""
-    v = _quote(vec_col)
+    v = quote_ident(vec_col)
     items = []
     for j in range(dim):
         term = f"CAST(element_at({v}, {j + 1}) AS DOUBLE)"
@@ -990,7 +904,7 @@ def update_centroids_nd(
 def _nd_iteration_sql(assign: str, sums: str, vec_col: str, view: str) -> str:
     """One n-d superstep as ONE ``spark.sql`` text: assign each row of
     ``view``, then the per-cluster partial sums and count."""
-    v = _quote(vec_col)
+    v = quote_ident(vec_col)
     return (
         f"SELECT cluster AS id, {sums}, count(1) AS n "
         f"FROM (SELECT ({assign}).cluster AS cluster, {v} "

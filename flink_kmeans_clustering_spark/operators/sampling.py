@@ -14,6 +14,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from flink_kmeans_clustering_spark.functions.vector import squared_l2_sql
+from flink_kmeans_clustering_spark.operators.common import quote_ident
+
 HEX = "0123456789abcdef"
 
 
@@ -830,11 +833,9 @@ def coreset_sample(
         ).alias("mu")
     )
     n_row = df.agg(F.count(F.lit(1)).alias("_n"))
-    d2 = F.aggregate(
-        F.zip_with(vec, F.col("mu"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    d2 = F.expr(squared_l2_sql(
+        f"transform({quote_ident(vec_col)}, x -> CAST(x AS DOUBLE))", "mu"
+    ))
     with_d2 = (
         df.crossJoin(F.broadcast(mu_row))
         .select(

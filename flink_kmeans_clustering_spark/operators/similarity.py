@@ -15,8 +15,17 @@ Two paths, one semantics:
   written partitioned-by-cell, the probe filter becomes partition
   pruning — the 100 TB scan shrinks to the probed cells' files.
 
-All vector arithmetic is JVM-side (functions.vector); query vectors
-enter the plan as literal arrays.
+Product quantization has one form per step: codebooks from
+:func:`pq_codebooks_first` (trainless, the checked contract) or
+:func:`pq_codebooks_trained` (all subspaces in one grouped Lloyd);
+encoding by :func:`_pq_codes_sql`; and one ADC shortlist + exact-rerank
+tail, :func:`_adc_rerank`, shared by :func:`ann_pq` and
+:func:`ann_ivfpq`.
+
+All vector arithmetic is JVM-side (functions.vector): every squared-L2
+fold and nearest-codeword argmin here is built by its
+``squared_l2_sql`` / ``nearest_codeword_sql``.  Query vectors enter the
+plan as literal arrays.
 """
 
 from __future__ import annotations
@@ -27,14 +36,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flink_kmeans_clustering_spark.operators.common import (
-    array_lit,
     array_lit_sql,
+    quote_ident,
     session_conf,
+    spread,
 )
 from flink_kmeans_clustering_spark.functions.vector import (
     cosine_similarity,
     dot,
     l2_norm,
+    nearest_codeword_sql,
+    squared_l2_sql,
 )
 
 
@@ -494,62 +506,21 @@ def pq_codebooks_trained(
     df: DataFrame,
     m: int = 8,
     k: int = 16,
-    iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[list[float]]]:
-    """Production PQ codebooks: an independent distributed Lloyd
-    (:func:`~flink_kmeans_clustering_spark.operators.kmeans.lloyd_nd`)
-    per subspace over that subspace's subvectors.  Deterministic given
-    the data — init is the first k subvectors BY ``id_col`` (a bare
-    ``limit`` without a sort would be partition/file-order dependent),
-    but 8 k-means jobs — the checked query keeps the trainless contract
-    above."""
-    from flink_kmeans_clustering_spark.operators.kmeans import lloyd_nd
-
-    dim = len(df.select(vec_col).head()[vec_col])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    d = dim // m
-    init_rows = df.orderBy(id_col).limit(k).select(vec_col).collect()
-    books = []
-    for s in range(m):
-        sub = df.select(
-            F.slice(
-                F.transform(F.col(vec_col), lambda x: x.cast("double")),
-                s * d + 1,
-                d,
-            ).alias("embedding")
-        )
-        init = [
-            [float(v) for v in r[vec_col][s * d : s * d + d]]
-            for r in init_rows
-        ]
-        cents, _, _ = lloyd_nd(sub, init, max_iterations=iters)
-        books.append(cents)
-    return books
-
-
-def pq_codebooks_trained_grouped(
-    df: DataFrame,
-    m: int = 8,
-    k: int = 16,
     iters: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> list[list[list[float]]]:
-    """All ``m`` subspace k-means trained in ONE grouped Lloyd — the
-    scale-right PQ trainer.
+    """Trained PQ codebooks: all ``m`` subspace k-means run as ONE
+    grouped Lloyd.
 
-    :func:`pq_codebooks_trained` runs m independent lloyd_nd jobs →
-    m·iters corpus passes.  Here the corpus is exploded ONCE into
-    (subspace, subvector) rows and every iteration is a single job:
-    a narrow literal-argmin assignment (the m×k×d codebook matrix is
-    one array literal; per-row cost is the same m·k distance evals the
-    per-subspace form pays in aggregate) and ONE groupBy(s, code)
+    The corpus is exploded ONCE into (subspace, subvector) rows and
+    every iteration is a single job: a narrow literal-argmin
+    assignment (the m×k×d codebook matrix is one array literal; each
+    row runs :func:`~flink_kmeans_clustering_spark.functions.vector.nearest_codeword_sql`
+    against its own subspace's codewords) and ONE groupBy(s, code)
     per-dim mean — so the shuffle carries m·k rows and the corpus is
-    scanned iters times instead of m·iters.  Codeword ids are
-    PERSISTENT per subspace (an emptied cluster's id retires —
+    scanned iters times, not m·iters as m separate Lloyd jobs would.
+    Codeword ids are PERSISTENT per subspace (an emptied cluster's id retires —
     lloyd_nd semantics), and the returned list orders codewords by
     surviving id, matching the replaying oracle's dense re-rank.
 
@@ -567,8 +538,6 @@ def pq_codebooks_trained_grouped(
         for s in range(m)
     ]
     ids: list[list[int]] = [list(range(len(b))) for b in books]
-
-    from flink_kmeans_clustering_spark.operators.common import spread
 
     vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     # _spread before the explode+cache (r14): a single-file corpus
@@ -593,13 +562,9 @@ def pq_codebooks_trained_grouped(
         .cache()
     )
     # Per-iteration plan construction is selectExpr-authored (the
-    # Lloyd-cut pattern, VERDICT r10 item 4): the Column-by-Column
-    # assignment cost ~30 py4j round trips per iteration on top of the
-    # two array-literal parses; one f-string parses JVM-side into the
-    # SAME expression tree (zip_with/aggregate fold, struct argmin with
-    # lowest-code ties), so the trained codebooks are bit-identical —
-    # the CTE-replaying oracle's hashes are unchanged.  The
-    # value-INdependent aggregation Columns are hoisted out of the loop.
+    # Lloyd-cut pattern): one f-string parses JVM-side instead of ~30
+    # py4j round trips of Column building.  The value-INdependent
+    # aggregation Columns are hoisted out of the loop.
     sums = [
         F.sum(F.element_at("sv", j + 1)).alias(f"_s{j}") for j in range(d)
     ]
@@ -632,14 +597,10 @@ def pq_codebooks_trained_grouped(
             for _ in range(iters):
                 cb = array_lit_sql(books)
                 idl = array_lit_sql(ids, kind="int")
-                assign = (
-                    f"array_min(transform(sequence(0, size(get({cb}, s)) - 1),"
-                    " c -> named_struct('dist2',"
-                    f" aggregate(zip_with(sv, get(get({cb}, s), c),"
-                    " (a, b) -> (a - b) * (a - b)), 0.0D, (acc, v) -> acc + v),"
-                    f" 'code', CAST(get(get({idl}, s), c) AS INT)))).code AS code"
+                assign = nearest_codeword_sql(
+                    "sv", f"get({cb}, s)", f"size(get({cb}, s))", f"get({idl}, s)"
                 )
-                assigned = sub.selectExpr("s", "sv", assign)
+                assigned = sub.selectExpr("s", "sv", f"({assign}).cluster AS code")
                 rows = (
                     assigned.groupBy("s", "code")
                     .agg(*sums, n_agg)
@@ -657,65 +618,71 @@ def pq_codebooks_trained_grouped(
     return books
 
 
-def _pq_codes(vec, codebooks: list[list[list[float]]]):
-    """codes[s] = argmin_c ||subvector_s − codebook[s][c]||² (ties →
-    lowest code), folded in index order — the column expression shared
-    by encode and any future symmetric-distance scorer."""
-    m = len(codebooks)
-    d = len(codebooks[0][0])
-    cb = array_lit(codebooks)  # array<array<array<double>>> as ONE parsed expr
-
-    def _code(s: int):
-        # per-subspace codeword count: a trained codebook can lose an
-        # emptied cluster, so subspaces may be ragged
-        k = len(codebooks[s])
-        sub = F.slice(vec, s * d + 1, d)
-        cands = F.transform(
-            F.sequence(F.lit(0), F.lit(k - 1)),
-            lambda c: F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        sub,
-                        F.get(F.get(cb, F.lit(s)), c),
-                        lambda a, b: (a - b) * (a - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ).alias("d2"),
-                c.cast("int").alias("code"),
-            ),
-        )
-        return F.array_min(cands)["code"]
-
-    return F.array(*[_code(s) for s in range(m)])
-
-
 def _pq_codes_sql(vec_sql: str, codebooks: list[list[list[float]]]) -> str:
-    """SQL-text twin of :func:`_pq_codes` — same expression tree
-    (zip_with/aggregate fold, struct argmin, lowest-code ties) authored
-    as one string so a caller's whole projection parses JVM-side in a
-    single py4j call (~1.4 s of measured Column-building per ann_pq
-    call otherwise).  Value parity with the Column form is pinned by
-    tests/test_similarity.py."""
-    m = len(codebooks)
+    """PQ encoding as one SQL expression: ``codes[s]`` is the position
+    of the nearest codeword of subspace ``s`` to the s-th subvector of
+    ``vec_sql`` (an ``array<double>``), via
+    :func:`~flink_kmeans_clustering_spark.functions.vector.nearest_codeword_sql`
+    — ties go to the lowest code.  Subspaces may be ragged (a trained
+    codebook can lose an emptied cluster).  The vector is let-bound
+    once per row, outside every per-codeword lambda, and each subspace
+    embeds only its own k×d literal."""
     d = len(codebooks[0][0])
-    parts = []
-    for s in range(m):
-        k = len(codebooks[s])
-        sub = f"slice({vec_sql}, {s * d + 1}, {d})"
-        # embed only subspace s's k×d slice (r14 optimization): the old
-        # form embedded the FULL m×k×d literal in every one of the m
-        # parts — m copies of a ~15 KB text, ~1 s of parse+analyze per
-        # ann_pq call at (8,16,8).  get(cb_s, c) reads the same doubles
-        # as get(get(cb, s), c), so codes are bit-identical.
-        cb_s = array_lit_sql(codebooks[s])
-        parts.append(
-            f"array_min(transform(sequence(0, {k - 1}), c -> named_struct("
-            f"'d2', aggregate(zip_with({sub}, get({cb_s}, c),"
-            " (a, b) -> (a - b) * (a - b)), 0.0D, (acc, v) -> acc + v),"
-            " 'code', CAST(c AS INT)))).code"
-        )
-    return "array(" + ",".join(parts) + ")"
+    codes = []
+    for s, book in enumerate(codebooks):
+        sub = f"slice(w, {s * d + 1}, {d})"
+        codes.append(f"({nearest_codeword_sql(sub, array_lit_sql(book), len(book))}).cluster")
+    return f"element_at(transform(array({vec_sql}), w -> array({', '.join(codes)})), 1)"
+
+
+def _adc_lut(q: Sequence[float], codebooks: list[list[list[float]]]) -> list[list[float]]:
+    """The ADC lookup table ``lut[s][c] = ||q_s − codebooks[s][c]||²``,
+    computed driver-side and folded in subvector index order (j asc),
+    so an independent engine lands on the same doubles."""
+    d = len(codebooks[0][0])
+    return [
+        [
+            sum((q[s * d + j] - c[j]) * (q[s * d + j] - c[j]) for j in range(d))
+            for c in book
+        ]
+        for s, book in enumerate(codebooks)
+    ]
+
+
+def _adc_rerank(
+    candidates: DataFrame,
+    codes_sql: str,
+    lut_sql: str,
+    q: list[float],
+    k: int,
+    shortlist: int,
+    id_col: str,
+    vec_col: str,
+    round_to: int | None,
+) -> DataFrame:
+    """The PQ search tail :func:`ann_pq` and :func:`ann_ivfpq` share:
+    ADC-score each candidate as ``Σ_s lut[s][codes[s]]`` (an ordered
+    fold of m array lookups), keep the ``shortlist`` best, rerank them
+    by exact squared L2 to ``q``, keep the top ``k``.  Both cuts are
+    TakeOrderedAndProject with ties to the lowest id.  ``codes_sql``
+    (``array<int>``) and ``lut_sql`` (``array<array<double>>``, m rows)
+    are SQL text read outside every lambda.  Output: (id, d2)."""
+    qid, qvec = quote_ident(id_col), quote_ident(vec_col)
+    score = (
+        f"aggregate(zip_with({codes_sql}, {lut_sql}, (code, t) -> get(t, code)),"
+        " 0.0D, (acc, x) -> acc + x)"
+    )
+    short = (
+        candidates.selectExpr(qid, qvec, f"{score} AS _score")
+        .orderBy("_score", id_col)
+        .limit(shortlist)
+    )
+    vec = f"transform({qvec}, x -> CAST(x AS DOUBLE))"
+    d2 = squared_l2_sql(vec, array_lit_sql(q))
+    out = short.selectExpr(qid, f"{d2} AS d2").orderBy("d2", id_col).limit(k)
+    if round_to is not None:
+        out = out.selectExpr(qid, f"round(d2, {round_to}) AS d2")
+    return out
 
 
 def ann_pq(
@@ -744,60 +711,21 @@ def ann_pq(
     Output: (vec_id, d2) — exact squared L2 of the top-k, ties to the
     lowest id at both the shortlist and final cut.
     """
-    m = len(codebooks)
-    d = len(codebooks[0][0])
     q = [float(v) for v in query_vec]
-    # ADC lookup table, folded in subvector index order (j asc) so an
-    # independent engine lands on the same doubles
-    lut = [
-        [
-            sum((q[s * d + j] - c[j]) * (q[s * d + j] - c[j]) for j in range(d))
-            for c in codebooks[s]
-        ]
-        for s in range(m)
-    ]
-    # Whole scoring projection authored as SQL text (VERDICT r10 item
-    # 4 — the Lloyd-cut pattern): the Column-built form spent ~1.4 s
-    # per call constructing the m-subspace argmin through py4j.  Same
-    # expression trees, so d2 values and both tie-broken cuts are
-    # bit-identical — oracle hashes unchanged.
-    qid = "`" + id_col.replace("`", "``") + "`"
-    qvec = "`" + vec_col.replace("`", "``") + "`"
-    vec_sql = f"transform({qvec}, x -> CAST(x AS DOUBLE))"
-    codes = _pq_codes_sql(vec_sql, codebooks)
-    lut_sql = array_lit_sql(lut)
-    score = (
-        f"aggregate(zip_with({codes}, sequence(0, {m - 1}),"
-        f" (code, s) -> get(get({lut_sql}, s), code)),"
-        " 0.0D, (acc, v) -> acc + v)"
+    # Whole scoring projection authored as SQL text: one JVM-side parse
+    # instead of ~1.4 s of py4j Column building per call.
+    vec_sql = f"transform({quote_ident(vec_col)}, x -> CAST(x AS DOUBLE))"
+    # spread before the ADC scan: the per-row scoring is an interpreted
+    # m-subspace argmin (HOFs are not codegen'd), and a single-file
+    # corpus otherwise scores on ONE task (measured a 2.7 s single-task
+    # stage at sf0.1).  Pass-through at 100 TB where the scan has
+    # splits; the plan pin allows the one under-parallel rebalance.
+    return _adc_rerank(
+        spread(df, id_col),
+        _pq_codes_sql(vec_sql, codebooks),
+        array_lit_sql(_adc_lut(q, codebooks)),
+        q, k, shortlist, id_col, vec_col, round_to,
     )
-    # _spread before the ADC scan (r14): the per-row scoring is an
-    # interpreted m-subspace argmin (HOFs are not codegen'd), and a
-    # single-file corpus otherwise scores on ONE task (measured a
-    # 2.7 s single-task stage at sf0.1).  Pass-through at 100 TB where
-    # the scan has splits — the shuffle-free ADC story is unchanged at
-    # scale; the plan pin allows the one under-parallel rebalance.
-    from flink_kmeans_clustering_spark.operators.common import spread
-
-    short = (
-        spread(df, id_col)
-        .selectExpr(qid, qvec, f"{score} AS _score")
-        .orderBy("_score", id_col)
-        .limit(shortlist)
-    )
-    qlit = array_lit_sql(q)
-    d2 = (
-        f"aggregate(zip_with({vec_sql}, {qlit},"
-        " (a, b) -> (a - b) * (a - b)), 0.0D, (acc, v) -> acc + v)"
-    )
-    out = (
-        short.selectExpr(qid, f"{d2} AS d2")
-        .orderBy("d2", id_col)
-        .limit(k)
-    )
-    if round_to is not None:
-        out = out.selectExpr(qid, f"round(d2, {round_to}) AS d2")
-    return out
 
 
 def ivf_knn_join(
@@ -1240,10 +1168,7 @@ def quantization_error(
     v = f"CAST({vec_col} AS array<double>)"
     scale = f"(127.0D / array_max(transform({v}, x -> abs(x))))"
     xhat = f"transform({v}, x -> round(x * {scale}) / {scale})"
-    num = (
-        f"aggregate(zip_with({v}, {xhat}, (a, b) -> (a - b) * (a - b)), "
-        "0.0D, (acc, e) -> acc + e)"
-    )
+    num = squared_l2_sql(v, xhat)
     den = f"aggregate(transform({v}, x -> x * x), 0.0D, (acc, e) -> acc + e)"
     per_vec = df.filter(
         F.expr(f"array_max(transform({v}, x -> abs(x)))") > 0
@@ -1281,7 +1206,7 @@ def ivfpq_residual_codebooks(
     The residual twin of :func:`pq_codebooks_first` — the same
     deterministic, any-engine-replayable contract (production would
     train per-subspace k-means over residuals with
-    :func:`pq_codebooks_trained_grouped`; the encode/ADC plumbing in
+    :func:`pq_codebooks_trained`; the encode/ADC plumbing in
     :func:`ann_ivfpq` is identical either way).
     """
     cmap = {int(cell): [float(x) for x in cent] for cell, cent in centroids}
@@ -1326,7 +1251,7 @@ def ann_ivfpq(
        corpus shrinks to the probed cells' files.
     2. **ADC over residuals** — within probed cells each vector's
        residual (v − centroid(cell)) is encoded as m codes
-       (:func:`_pq_codes`); the query side is a PER-CELL lookup table
+       (:func:`_pq_codes_sql`); the query side is a PER-CELL lookup table
        (residual q − centroid(cell) against every codeword) computed
        driver-side and shipped as ONE map literal keyed by cell —
        scoring is m array lookups + an ordered fold, no join, no
@@ -1343,8 +1268,6 @@ def ann_ivfpq(
     import math
 
     q = [float(v) for v in query_vec]
-    m = len(codebooks)
-    d = len(codebooks[0][0])
 
     def cos(a: Sequence[float], b: Sequence[float]) -> float:
         num = sum(x * y for x, y in zip(a, b))
@@ -1357,66 +1280,24 @@ def ann_ivfpq(
     probed = [(int(c), [float(x) for x in v]) for c, v in ranked[:n_probe]]
     probed_cells = [c for c, _ in probed]
 
-    # Per-cell ADC lookup tables from the query's per-cell residual,
-    # folded in (s asc, j asc) order so an independent engine lands on
-    # the same doubles (same contract as ann_pq's single LUT).
-    luts = []
-    for _, cent in probed:
-        rq = [q[i] - cent[i] for i in range(len(q))]
-        luts.append(
-            [
-                [
-                    sum(
-                        (rq[s * d + j] - cw[j]) * (rq[s * d + j] - cw[j])
-                        for j in range(d)
-                    )
-                    for cw in codebooks[s]
-                ]
-                for s in range(m)
-            ]
-        )
+    # Per-cell ADC lookup tables from the query's per-cell residual
+    # (the same fold contract as ann_pq's single LUT); both maps are
+    # keyed by cell and read outside every lambda.
+    luts = [
+        _adc_lut([qi - ci for qi, ci in zip(q, cent)], codebooks)
+        for _, cent in probed
+    ]
+    cells = array_lit_sql(probed_cells, kind="int")
+    cell = f"CAST({quote_ident(cell_col)} AS INT)"
 
-    cell = F.col(cell_col).cast("int")
-    vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    cent_lit = F.element_at(
-        F.map_from_arrays(
-            array_lit(probed_cells, kind="int"),
-            array_lit([cent for _, cent in probed]),
-        ),
-        cell,
+    def by_cell(values) -> str:
+        return f"element_at(map_from_arrays({cells}, {array_lit_sql(values)}), {cell})"
+
+    vec = f"transform({quote_ident(vec_col)}, x -> CAST(x AS DOUBLE))"
+    residual = f"zip_with({vec}, {by_cell([c for _, c in probed])}, (a, b) -> a - b)"
+    return _adc_rerank(
+        df.filter(F.col(cell_col).cast("int").isin(probed_cells)),
+        _pq_codes_sql(residual, codebooks),
+        by_cell(luts),
+        q, k, shortlist, id_col, vec_col, round_to,
     )
-    residual = F.zip_with(vec, cent_lit, lambda a, b: a - b)
-    codes = _pq_codes(residual, codebooks)
-    lut_cell = F.element_at(
-        F.map_from_arrays(array_lit(probed_cells, kind="int"), array_lit(luts)),
-        cell,
-    )
-    score = F.aggregate(
-        F.zip_with(
-            codes,
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda code, s: F.get(F.get(lut_cell, s), code),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    short = (
-        df.filter(cell.isin(probed_cells))
-        .select(F.col(id_col), F.col(vec_col), score.alias("_score"))
-        .orderBy("_score", id_col)
-        .limit(shortlist)
-    )
-    qlit = array_lit(q)
-    d2 = F.aggregate(
-        F.zip_with(vec, qlit, lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    out = (
-        short.select(F.col(id_col), d2.alias("d2"))
-        .orderBy("d2", id_col)
-        .limit(k)
-    )
-    if round_to is not None:
-        out = out.select(id_col, F.round("d2", round_to).alias("d2"))
-    return out

@@ -1958,7 +1958,7 @@ def quality_fit_weights(
     w = [0.0] * k
     n = 0
     # The Lloyd conf pattern (r14 optimization, kmeans.lloyd /
-    # pq_codebooks_trained_grouped precedent): each round's exchange
+    # pq_codebooks_trained precedent): each round's exchange
     # carries ONE 8-column partial-aggregate row per map partition, so
     # adaptive re-planning is pure per-job overhead and one reducer is
     # enough at any input scale — AQE off + shuffle.partitions=1 for

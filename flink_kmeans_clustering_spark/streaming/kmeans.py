@@ -14,9 +14,9 @@ sums and ``α`` is the decay factor (1.0 = every batch weighs equally —
 the running exact weighted mean; < 1 exponentially forgets old data,
 the continuous-drift deployment setting).
 
-Scale physics per batch: the assignment is the same literal-centroid
-narrow map as the batch path (:func:`..operators.kmeans.assign_points_param`
-— no join, no shuffle of the stream), followed by one k-row partial
+Scale physics per batch: the assignment is the same narrow map as the
+batch path (:func:`..operators.kmeans.assign_points` — no join, no
+shuffle of the stream), followed by one k-row partial
 aggregate; only k rows reach the driver per batch.  State is k
 ``(Σx, Σy, w)`` triples held driver-side — the exact analogue of the
 reference's k-row broadcast state.
@@ -32,10 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from flink_kmeans_clustering_spark.operators.kmeans import (
-    Centroid,
-    assign_points_param,
-)
+from flink_kmeans_clustering_spark.operators.kmeans import Centroid, assign_points
 from flink_kmeans_clustering_spark.streaming.run import run_foreach_batch
 
 
@@ -71,7 +68,7 @@ def streaming_kmeans(
 
     def _update(batch: DataFrame, epoch_id: int) -> None:
         rows = (
-            assign_points_param(batch, _current(), x=x, y=y)
+            assign_points(batch, _current(), x=x, y=y)
             .groupBy("cluster")
             .agg(
                 F.sum(x).alias("sx"),

@@ -91,7 +91,7 @@ def measure_recalls(spark, sf_dir, n_queries=16, k=10):
         ann_search,
         cell_centroids,
         pq_codebooks_first,
-        pq_codebooks_trained_grouped,
+        pq_codebooks_trained,
         random_hyperplanes,
     )
 
@@ -128,7 +128,7 @@ def measure_recalls(spark, sf_dir, n_queries=16, k=10):
         for r in assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
     }
     books_first = pq_codebooks_first(emb, m=8, k=16)
-    books_trained = pq_codebooks_trained_grouped(emb, m=8, k=16, iters=3)
+    books_trained = pq_codebooks_trained(emb, m=8, k=16, iters=3)
 
     # LSH bucket sizes, replayed driver-side from the same hyperplanes
     planes = np.array(random_hyperplanes(4, mat.shape[1], seed=7))
@@ -229,7 +229,7 @@ def measure_recall_curve(spark, sf_dir, n_queries=16, k=10):
         ann_binary,
         ann_pq,
         ann_search,
-        pq_codebooks_trained_grouped,
+        pq_codebooks_trained,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
@@ -249,7 +249,7 @@ def measure_recall_curve(spark, sf_dir, n_queries=16, k=10):
         emb, tr_cents, centroid_ids=tr_ids, cluster_col="cell"
     ).cache()
     assigned.count()
-    books = pq_codebooks_trained_grouped(emb, m=8, k=16, iters=3)
+    books = pq_codebooks_trained(emb, m=8, k=16, iters=3)
 
     sweeps = {
         "ivf_trained": (

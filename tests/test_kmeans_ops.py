@@ -13,8 +13,6 @@ import pytest
 
 from flink_kmeans_clustering_spark.operators.kmeans import (
     assign_points,
-    assign_points_join,
-    assign_points_param,
     lloyd,
     moved_centroids,
     objective,
@@ -60,30 +58,45 @@ def test_assign_empty_centroids_gives_minus_one(spark, points):
     assert all(r["dist2"] is None for r in rows)
 
 
-def test_assign_param_matches_literal_path(spark, points):
-    """Plan-stable variant: same assignments, ties, dist2, empty-set -1."""
-    lit = sorted(assign_points(points, CENTROIDS, dist2_col="dist2").collect())
-    par = sorted(assign_points_param(points, CENTROIDS, dist2_col="dist2").collect())
-    assert lit == par
-    # lowest-id tie-break independent of centroid input order
-    tie = spark.createDataFrame([(0, 5.0, 5.0)], "point_id long, x double, y double")
-    [r] = assign_points_param(tie, [(1, 10.0, 10.0), (0, 0.0, 0.0)]).collect()
-    assert r["cluster"] == 0
-    rows = assign_points_param(points, [], dist2_col="dist2").collect()
-    assert {r["cluster"] for r in rows} == {-1}
+def _nearest_2d(px, py, cents):
+    """Pure-Python 2-D argmin: dist² is (x−cx)·(x−cx) + (y−cy)·(y−cy),
+    the smallest (dist², id) wins — lowest id on ties; (-1, None) for
+    an empty centroid set."""
+    best = None
+    for cid, cx, cy in cents:
+        d2 = (px - cx) * (px - cx) + (py - cy) * (py - cy)
+        if best is None or (d2, cid) < best:
+            best = (d2, cid)
+    return (-1, None) if best is None else (best[1], best[0])
 
 
-def test_assign_join_path_matches_expr_path(spark, points):
-    cdf = spark.createDataFrame(CENTROIDS, "id int, x double, y double")
-    via_join = {
-        r["point_id"]: r["cluster"]
-        for r in assign_points_join(points, cdf).collect()
-    }
-    via_expr = {
-        r["point_id"]: r["cluster"]
-        for r in assign_points(points, CENTROIDS).collect()
-    }
-    assert via_join == via_expr
+def test_assign_matches_python_argmin(spark, points):
+    """assign_points == a pure-Python argmin on every row, cluster AND
+    dist² bit-for-bit: hand-checked points, lowest-id ties independent
+    of centroid input order, real data, and the empty set (−1 with a
+    NULL dist²)."""
+    from flink_kmeans_clustering_spark.views import centroids_v, points_v
+    from tests.conftest import SF_CORRECTNESS
+
+    ties = spark.createDataFrame(
+        [(0, 5.0, 5.0), (1, 5.0, 0.0), (2, -2.5, 7.5)],
+        "point_id long, x double, y double",
+    )
+    real = points_v(spark, SF_CORRECTNESS)
+    cases = [
+        (points, CENTROIDS),
+        (ties, [(1, 10.0, 10.0), (0, 0.0, 0.0)]),
+        (ties, [(7, 10.0, 0.0), (3, 0.0, 0.0), (5, 5.0, 10.0), (4, 5.0, 10.0)]),
+        (real, centroids_v(spark, SF_CORRECTNESS)),
+        (points, []),
+    ]
+    for df, cents in cases:
+        got = {
+            r["point_id"]: (r["cluster"], r["dist2"])
+            for r in assign_points(df, cents, dist2_col="dist2").collect()
+        }
+        want = {r["point_id"]: _nearest_2d(r["x"], r["y"], cents) for r in df.collect()}
+        assert got == want, cents
 
 
 def test_update_means_and_drop_semantics(spark, points):
@@ -404,11 +417,12 @@ def test_assign_nd_empty_centroids_is_minus_one(spark):
 
 
 def test_lloyd_selectexpr_superstep_equals_column_form(spark):
-    """The loop's selectExpr-authored superstep must equal the
-    Column-composed literal assign_points + update_centroids
-    composition value-for-value (same arithmetic term order, same
-    struct-argmin tie-break) — the contract that lets the loop keep the
-    cheap JVM-parsed plan construction."""
+    """The loop's selectExpr-authored superstep (hoisted aggregation
+    Columns, one parse per superstep) must equal the public
+    assign_points + update_centroids composition value-for-value — the
+    contract that lets the loop keep the cheap JVM-parsed plan
+    construction.  assign_points itself is pinned to a pure-Python
+    argmin by test_assign_matches_python_argmin."""
     from flink_kmeans_clustering_spark.operators.kmeans import (
         assign_points,
         lloyd,

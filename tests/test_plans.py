@@ -84,9 +84,7 @@ def test_assignment_is_shuffle_free(spark):
 
 
 def test_param_assignment_is_shuffle_free(spark):
-    from flink_kmeans_clustering_spark.operators.kmeans import assign_points_param
-
-    df = assign_points_param(points_v(spark, SF), centroids_v(spark, SF))
+    df = assign_points(points_v(spark, SF), centroids_v(spark, SF))
     assert shuffle_count(df) == 0, "plan-stable assignment must stay narrow"
     assert "Join" not in explain_str(df), "centroids must not enter via a join"
 
@@ -119,11 +117,9 @@ def _codegen_body(df) -> str:
 
 
 def test_param_assignment_codegen_is_value_independent(spark):
-    """The whole point of assign_points_param: two different centroid
-    sets must generate byte-identical stage code (Janino cache hit per
-    Lloyd superstep), where the literal form embeds the coordinates in
-    the source and recompiles."""
-    from flink_kmeans_clustering_spark.operators.kmeans import assign_points_param
+    """The whole point of assign_points' array-literal centroids: two
+    different centroid sets must generate byte-identical stage code
+    (Janino cache hit per Lloyd superstep)."""
     from flink_kmeans_clustering_spark.operators.kmeans import update_centroids as upd
 
     pts = points_v(spark, SF)
@@ -134,13 +130,10 @@ def test_param_assignment_codegen_is_value_independent(spark):
     prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        body_a = _codegen_body(upd(assign_points_param(pts, c1)))
-        body_b = _codegen_body(upd(assign_points_param(pts, c2)))
+        body_a = _codegen_body(upd(assign_points(pts, c1)))
+        body_b = _codegen_body(upd(assign_points(pts, c2)))
         assert "WholeStageCodegen" in body_a or len(body_a.splitlines()) > 10
-        assert body_a == body_b, "param assignment stage code must not embed centroid values"
-        lit_a = _codegen_body(upd(assign_points(pts, c1)))
-        lit_b = _codegen_body(upd(assign_points(pts, c2)))
-        assert lit_a != lit_b, "literal form should embed values (else test is vacuous)"
+        assert body_a == body_b, "assignment stage code must not embed centroid values"
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
 
@@ -940,19 +933,16 @@ def test_nd_assignment_narrow_and_update_single_shuffle(spark):
 
 def test_assignment_with_dist2_evaluates_argmin_once(spark):
     """Reading both cluster and dist² must not duplicate the argmin: the
-    plan-stable 2-D and the n-d assignment each carry exactly one
+    2-D and the n-d assignment each carry exactly one
     array_min in the optimized plan (two fields read off one inline
     expression would evaluate the k-candidate scan twice per row)."""
-    from flink_kmeans_clustering_spark.operators.kmeans import (
-        assign_points_nd,
-        assign_points_param,
-    )
+    from flink_kmeans_clustering_spark.operators.kmeans import assign_points_nd
 
     def n_argmin(df) -> int:
         return df._jdf.queryExecution().optimizedPlan().toString().count("array_min(")
 
     pts = points_v(spark, SF)
-    a2 = assign_points_param(pts, [(0, 0.0, 0.0), (1, 10.0, 10.0)], dist2_col="d2")
+    a2 = assign_points(pts, [(0, 0.0, 0.0), (1, 10.0, 10.0)], dist2_col="d2")
     assert n_argmin(a2) == 1, explain_str(a2)
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")

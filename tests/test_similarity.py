@@ -308,24 +308,37 @@ def test_pq_trained_codebooks_same_plumbing(spark):
 
 
 def test_pq_grouped_trainer_equals_per_subspace_lloyd(spark):
-    """The grouped one-job-per-iteration PQ trainer must land on the
-    same codebooks as m independent lloyd_nd runs (same init, same
-    iteration count) — the scale path may not change the math.  Equal
-    up to distributed-sum rounding (~1 ulp), hence allclose."""
+    """pq_codebooks_trained (all m subspace k-means in ONE grouped
+    Lloyd) must land on the codebooks of m independent per-subspace
+    Lloyd runs, replayed in numpy: same init (the first k vectors by
+    id, sliced), same iteration count, persistent codeword ids with
+    emptied clusters dropped, lowest-id ties, dist² folded in index
+    order.  Equal up to distributed-sum rounding (~1 ulp), hence
+    allclose."""
     import numpy as np
 
     from flink_kmeans_clustering_spark.operators.similarity import (
         pq_codebooks_trained,
-        pq_codebooks_trained_grouped,
     )
 
+    m, k, iters = 8, 8, 2
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    a = pq_codebooks_trained(emb, m=8, k=8, iters=2)
-    b = pq_codebooks_trained_grouped(emb, m=8, k=8, iters=2)
-    assert len(a) == len(b) == 8
-    for s in range(8):
-        assert len(a[s]) == len(b[s]), f"subspace {s} codeword count"
-        assert np.allclose(np.array(a[s]), np.array(b[s]), atol=1e-9), s
+    rows = sorted(emb.select("vec_id", "embedding").collect(), key=lambda r: r["vec_id"])
+    mat = np.array([[float(v) for v in r["embedding"]] for r in rows])
+    d = mat.shape[1] // m
+    got = pq_codebooks_trained(emb, m=m, k=k, iters=iters)
+    assert len(got) == m
+    for s in range(m):
+        sub = mat[:, s * d:(s + 1) * d]
+        cents, ids = sub[:k], list(range(k))
+        for _ in range(iters):
+            d2 = sum((sub[:, j, None] - cents[None, :, j]) ** 2 for j in range(d))
+            near = np.argmin(d2, axis=1)  # first minimum = lowest id
+            keep = [p for p in range(len(ids)) if (near == p).any()]
+            cents = np.array([sub[near == p].mean(axis=0) for p in keep])
+            ids = [ids[p] for p in keep]
+        assert len(got[s]) == len(ids), f"subspace {s} codeword count"
+        assert np.allclose(np.array(got[s]), cents, atol=1e-9), s
 
 
 def _synth64(spark, n=24):
@@ -467,33 +480,27 @@ def test_filtered_knn_join_prefilters(spark):
     )
 
 
-def test_pq_codes_sql_equals_column_form(spark):
-    """_pq_codes_sql (the selectExpr-authored twin) must produce the
-    same codes as the Column-built _pq_codes for a ragged codebook —
-    the contract that let ann_pq move to one-py4j-call plan
-    construction (VERDICT r10 item 4)."""
-    from pyspark.sql import functions as F
-
-    from flink_kmeans_clustering_spark.operators.similarity import (
-        _pq_codes,
-        _pq_codes_sql,
-    )
+def test_pq_codes_sql_equals_python_argmin(spark):
+    """_pq_codes_sql must produce, for a ragged codebook, the codes of
+    a pure-Python argmin: dist² folded in index order, lowest code on
+    ties (row 3 sits exactly between two codewords of subspace 0)."""
+    from flink_kmeans_clustering_spark.operators.similarity import _pq_codes_sql
 
     books = [
         [[0.0, 0.0], [1.0, 1.0], [2.5, -1.0]],
         [[5.0, 5.0], [-3.25, 0.5]],  # ragged: 3 vs 2 codewords
     ]
-    df = spark.createDataFrame(
-        [([0.1, 0.2, 4.9, 5.2],), ([2.4, -0.8, -3.0, 0.0],),
-         ([1.0, 1.0, 5.0, 5.0],), ([9.0, -9.0, 9.0, -9.0],)],
-        "embedding array<double>",
-    )
-    vec = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    col_form = df.select(_pq_codes(vec, books).alias("codes")).collect()
-    sql_form = df.selectExpr(
-        _pq_codes_sql(
-            "transform(embedding, x -> CAST(x AS DOUBLE))", books
-        )
+    vecs = [[0.1, 0.2, 4.9, 5.2], [2.4, -0.8, -3.0, 0.0],
+            [1.0, 1.0, 5.0, 5.0], [0.5, 0.5, 9.0, -9.0]]
+    df = spark.createDataFrame([(v,) for v in vecs], "embedding array<double>")
+
+    def nearest(sub, book):
+        d2 = [sum((a - b) * (a - b) for a, b in zip(sub, c)) for c in book]
+        return min(range(len(book)), key=lambda c: (d2[c], c))
+
+    want = [[nearest(v[2 * s:2 * s + 2], book) for s, book in enumerate(books)] for v in vecs]
+    got = df.selectExpr(
+        _pq_codes_sql("transform(embedding, x -> CAST(x AS DOUBLE))", books)
         + " AS codes"
     ).collect()
-    assert [r["codes"] for r in col_form] == [r["codes"] for r in sql_form]
+    assert [r["codes"] for r in got] == want
