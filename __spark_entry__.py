@@ -24,7 +24,6 @@ from flink_kmeans_clustering_spark.operators.dedup import (
     benchmark_overlap,
     connected_components,
     embedding_cosine_pairs,
-    embedding_cosine_pairs_gemm,
     dedup_corpus,
     exact_duplicate_groups,
     fuzzy_name_pairs,
@@ -316,9 +315,10 @@ def q_dedup_ngram_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup embeddings: cosine ≥ t within label blocks (IVF-style);
-    fixed-width corpus → wide-column codegen dot (bit-identical to the
-    array form and the oracle)."""
+    """Near-dup embeddings: cosine ≥ t within label blocks (IVF-style),
+    through the one blocked cosine kernel with its width filter set
+    (``dim``); per-block BLAS shortlist, index-ordered fold values
+    (bit-identical to the oracle)."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     pairs = embedding_cosine_pairs(
         emb,
@@ -330,14 +330,12 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GEMM-blocked cosine near-dup: per-block BLAS matrix multiply via
-    applyInPandas (rows-only: float summation order differs from the
-    oracle by ~1 ulp; pair-set parity with the exact expression variant
-    is asserted in tests/test_dedup.py)."""
+    """GEMM-blocked cosine near-dup without a declared width: the same
+    kernel as q_dedup_embedding (per-block BLAS shortlist, exact
+    index-ordered fold values), pairing every equal-width vector in a
+    block — checked against the same oracle."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    pairs = embedding_cosine_pairs_gemm(
-        emb, threshold=EMBEDDING_COSINE_THRESHOLD
-    )
+    pairs = embedding_cosine_pairs(emb, threshold=EMBEDDING_COSINE_THRESHOLD)
     return pairs.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
 
 
@@ -2365,9 +2363,10 @@ def q_ann_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_twostage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-stage dedup: blocked embedding-cosine candidates verified by
-    exact shingle Jaccard on the text — the corpus is never shuffled
-    (candidates broadcast into both text lookups)."""
+    """Two-stage dedup: blocked embedding-cosine candidates (one call
+    to the blocked cosine kernel) verified by exact shingle Jaccard on
+    the text — the corpus is never shuffled (candidates broadcast into
+    both text lookups)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return two_stage_dedup_pairs(
@@ -2389,10 +2388,10 @@ def q_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic dedup pipeline composition: nearest-seed cosine blocking
-    (the k-means assignment shape) confines the pair join to computed
-    blocks, then exact cosine inside each block.  Seed count is derived
-    from corpus size (k = max(8, ceil(N/4096))) so blocks stay bounded
-    as the corpus grows."""
+    (the k-means assignment shape) confines the pair work to computed
+    blocks, then the blocked cosine kernel runs inside each block.
+    Seed count is derived from corpus size (k = max(8, ceil(N/4096)))
+    so blocks stay bounded as the corpus grows."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return semantic_dedup_pairs(
         emb,
@@ -3879,11 +3878,11 @@ def q_dedup_keepset_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2.
 
-    238 queries; 234 carry DuckDB oracles, 4 are rows-only by design
-    (MLlib placement RNG, HLL/GK sketch internals, GEMM ulp twin —
-    each has a DETERMINISTIC full-oracle twin registered beside it:
-    lloyd_nd/kmv/sampled-quantiles/expression-cosine, plus an sf0.1
-    numeric cross-check in tests/test_sketch_crosschecks.py).  Counts
+    238 queries; 235 carry DuckDB oracles, 3 are rows-only by design
+    (MLlib placement RNG, HLL/GK sketch internals — each has a
+    DETERMINISTIC full-oracle twin registered beside it:
+    lloyd_nd/kmv/sampled-quantiles, plus an sf0.1 numeric cross-check
+    in tests/test_sketch_crosschecks.py).  Counts
     are asserted programmatically in tests/test_entry.py, so this
     header cannot go stale again (ADVICE r06).
 
@@ -9736,6 +9735,7 @@ SELECT event_type, event_id, ROUND(value, 6) AS value FROM (
         "q_text_zipf": text_zipf_sql,
         "q_sink_bucketed": sink_bucketed_sql,
         "q_dedup_embedding": dedup_embedding_sql,
+        "q_dedup_gemm": dedup_embedding_sql,
         "q_dedup_minhash": dedup_minhash_sql,
         "q_dedup_simhash": dedup_simhash_sql,
         "q_rel_pricing": rel_pricing_sql,

@@ -14,15 +14,18 @@ Everything is DataFrame-composed and shuffle-conscious:
 * Signatures/hashes are computed inside codegen during the scan
   (functions.hashing); the only shuffles are the candidate-pair joins
   and the per-pair aggregation.
+* Embedding cosine pairs have one kernel, :func:`embedding_cosine_pairs`
+  (per-block BLAS shortlist, exact index-ordered fold values); semantic
+  and two-stage dedup and the threshold histogram build on it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import DoubleType, StructField, StructType
 
-from flink_kmeans_clustering_spark.operators.common import array_lit, spread as _spread
+from flink_kmeans_clustering_spark.operators.common import array_lit_sql, spread as _spread
 from flink_kmeans_clustering_spark.functions.hashing import (
     band_hashes,
     hamming64,
@@ -34,7 +37,6 @@ from flink_kmeans_clustering_spark.functions.text import (
     ngram_shingles,
     tokenize,
 )
-from flink_kmeans_clustering_spark.functions.vector import dot, l2_norm
 
 
 # ---------------------------------------------------------------------------
@@ -520,6 +522,12 @@ def simhash_pairs(
 # ---------------------------------------------------------------------------
 
 
+#: Cells of one block's similarity matrix held at once (32 MiB of
+#: doubles): the per-block GEMM runs in row ranges of at most this many
+#: cells, so no task materializes a block's full n×n matrix.
+_COSINE_TILE_CELLS = 1 << 22
+
+
 def embedding_cosine_pairs(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -530,77 +538,106 @@ def embedding_cosine_pairs(
 ) -> DataFrame:
     """Pairs of near-identical embeddings: cosine ≥ threshold.
 
-    Vectors are L2-normalized once per row during the scan, so the
-    per-pair work is a single dot product.  The self-join is blocked
-    on ``block_col`` (a cluster/partition id — at corpus scale this is
-    the coarse IVF cell from k-means); ``block_col=None`` is the exact
-    quadratic fallback for small inputs only.
+    The one blocked cosine-pair kernel of the engine; semantic and
+    two-stage dedup and the threshold histogram all build on it.  Rows
+    are grouped on ``block_col`` (a cluster/partition id — at corpus
+    scale the coarse IVF cell from k-means) and each block is paired
+    in one pandas task; ``block_col=None`` puts every row in one block,
+    the exact quadratic form for small inputs only.
 
-    ``dim``: when the corpus has a FIXED vector width (the normal
-    production layout), pass it — the normalized components become
-    ``dim`` scalar columns and the per-pair dot a chained ``+`` of
-    products, all whole-stage codegen (3.5× vs the array form at
-    sf0.1, measured).  The chained sum folds left-to-right like
-    ``F.aggregate`` and DuckDB's ``list_sum``, so values stay
-    bit-identical to the array form and the oracle.  Rows whose vector
-    width differs from ``dim`` (shorter OR longer) are filtered out of
-    the pair space — a longer vector would otherwise dot only its first
-    ``dim`` components against a full-width norm and silently understate
-    the cosine.  ``dim=None`` keeps the array form, whose zip_with
-    null-padding handles ragged widths.
+    Inside a block a BLAS matrix product of the normalized vectors
+    shortlists the pairs at ``threshold − 1e-9`` (far above BLAS
+    rounding error at any practical width), taken in row tiles of at
+    most ``_COSINE_TILE_CELLS`` cells.  Each survivor's cosine is then
+    recomputed exactly and filtered at ``threshold``, with every sum
+    folded from 0.0 in index order, as the engine's SQL folds and
+    DuckDB's ``list_sum`` do:
 
-    Output: (id_a, id_b, cosine) with id_a < id_b.
+    * ‖x‖² = Σ xⱼ², and nv = x / ‖x‖ (float32 input is widened first);
+    * cos = Σ nv_aⱼ · nv_bⱼ.
+
+    So each emitted double is bit-identical to the SQL fold's.
+
+    Only vectors of equal width pair (the ``zip_with`` null-pad rule).
+    ``dim`` narrows the pair space to vectors of exactly that width.
+    A null, empty, null-element, NaN or zero-norm vector (one whose
+    squared norm is not a positive finite double) never pairs.
+
+    Output: (id_a, id_b, cosine) with id_a < id_b, ids of the input's
+    id type.
     """
-    v = F.col(vec_col).cast("array<double>")
-    if dim is not None:
-        head = [F.col(id_col).alias("id")]
-        if block_col is not None:
-            head.append(F.col(block_col).alias("blk"))
-        pre = df.select(*head, v.alias("_v"), l2_norm(v).alias("_n")).filter(
-            F.size("_v") == dim
-        )
-        keep = ["id"] + (["blk"] if block_col is not None else [])
-        base = pre.select(
-            *keep,
-            *[
-                (F.element_at("_v", i + 1) / F.col("_n")).alias(f"_c{i}")
-                for i in range(dim)
-            ],
-        )
-        a, b = base.alias("a"), base.alias("b")
-        cond = F.col("a.id") < F.col("b.id")
-        if block_col is not None:
-            cond = (F.col("a.blk") == F.col("b.blk")) & cond
-        cos = F.col("a._c0") * F.col("b._c0")
-        for i in range(1, dim):
-            cos = cos + F.col(f"a._c{i}") * F.col(f"b._c{i}")
-        return (
-            a.join(b, cond)
-            .select(
-                F.col("a.id").alias("id_a"),
-                F.col("b.id").alias("id_b"),
-                cos.alias("cosine"),
-            )
-            .filter(F.col("cosine") >= threshold)
-        )
-    norm = l2_norm(v)
-    cols = [
-        F.col(id_col).alias("id"),
-        F.transform(v, lambda x: x / norm).alias("nv"),
-    ]
-    if block_col is not None:
-        cols.append(F.col(block_col).alias("blk"))
-    base = df.select(*cols).filter(F.size("nv") > 0)
-    a, b = base.alias("a"), base.alias("b")
-    cond = F.col("a.id") < F.col("b.id")
-    if block_col is not None:
-        cond = (F.col("a.blk") == F.col("b.blk")) & cond
-    cos = dot(F.col("a.nv"), F.col("b.nv"))
-    return a.join(b, cond).select(
-        F.col("a.id").alias("id_a"),
-        F.col("b.id").alias("id_b"),
-        cos.alias("cosine"),
-    ).filter(F.col("cosine") >= threshold)
+    return _cosine_pairs(df, id_col, vec_col, block_col, threshold, dim, None)
+
+
+def _cosine_pairs(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    block_col: str | None,
+    threshold: float,
+    dim: int | None,
+    block_out: str | None,
+) -> DataFrame:
+    """:func:`embedding_cosine_pairs`, with the block id also emitted
+    as column ``block_out`` (before ``cosine``) unless it is None."""
+    import numpy as np
+    import pandas as pd
+
+    blk = F.col(block_col) if block_col is not None else F.lit(0)
+    base = df.select(
+        F.col(id_col).alias("id"), blk.alias("blk"), F.col(vec_col).alias("v")
+    ).where("id IS NOT NULL AND blk IS NOT NULL")
+    shortlist = threshold - 1e-9
+
+    def block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+        all_ids, vs = pdf["id"].to_numpy(), pdf["v"].to_numpy()
+        widths = np.array([-1 if v is None else len(v) for v in vs])
+        id_a, id_b, cos = [all_ids[:0]], [all_ids[:0]], [np.zeros(0)]
+        for w in np.unique(widths):
+            if w < 1 or (dim is not None and w != dim):
+                continue
+            sel = widths == w
+            ids = all_ids[sel]
+            order = np.argsort(ids, kind="stable")
+            ids = ids[order]
+            m = np.stack(vs[sel][order]).astype(np.float64)
+            # folds run column by column from 0.0 (np.sum and BLAS sum
+            # in other orders); a null element arrives as NaN
+            sq = np.zeros(len(ids))
+            for j in range(w):
+                sq = sq + m[:, j] * m[:, j]
+            nrm = np.sqrt(sq)
+            ok = np.isfinite(nrm) & (nrm > 0.0)
+            ids, nv = ids[ok], m[ok] / nrm[ok, None]
+            cols = nv.T.copy()
+            n = len(ids)
+            step = max(1, _COSINE_TILE_CELLS // max(n, 1))
+            for r0 in range(0, n - 1, step):
+                r1 = min(n, r0 + step)
+                upper = np.arange(r0, r1)[:, None] < np.arange(r0, n)[None, :]
+                ia, ib = np.nonzero((nv[r0:r1] @ nv[r0:].T >= shortlist) & upper)
+                ia, ib = ia + r0, ib + r0
+                distinct = ids[ia] != ids[ib]
+                ia, ib = ia[distinct], ib[distinct]
+                c = np.zeros(len(ia))
+                for j in range(w):
+                    c = c + cols[j][ia] * cols[j][ib]
+                hit = c >= threshold
+                id_a.append(ids[ia[hit]])
+                id_b.append(ids[ib[hit]])
+                cos.append(c[hit])
+        out = {"id_a": np.concatenate(id_a), "id_b": np.concatenate(id_b)}
+        if block_out is not None:
+            out[block_out] = pdf["blk"].iloc[0]
+        out["cosine"] = np.concatenate(cos)
+        return pd.DataFrame(out)
+
+    types = {f.name: f.dataType for f in base.schema}
+    fields = [StructField("id_a", types["id"]), StructField("id_b", types["id"])]
+    if block_out is not None:
+        fields.append(StructField(block_out, types["blk"]))
+    fields.append(StructField("cosine", DoubleType()))
+    return base.groupBy("blk").applyInPandas(block_pairs, StructType(fields))
 
 
 def drop_near_duplicates(
@@ -783,53 +820,6 @@ def _cc_star(p: DataFrame, max_iterations: int) -> tuple[DataFrame, int]:
     )
     labels = labels.union(iso.select("id", F.col("id").alias("comp")))
     return labels, rounds
-
-
-def embedding_cosine_pairs_gemm(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_col: str = "label",
-    threshold: float = 0.95,
-) -> DataFrame:
-    """Blocked cosine pairs via per-block matrix multiply (scale path).
-
-    Same semantics as :func:`embedding_cosine_pairs`, different physics:
-    each block's vectors are gathered into one numpy matrix and the full
-    pairwise similarity computed as a single normalized GEMM —
-    O(n²·d) in BLAS instead of per-pair interpreted expressions.  This
-    is the right shape when blocks are IVF cells of ~10³-10⁴ vectors;
-    the expression-based variant remains the oracle-exact reference
-    (float summation order differs here by ~1 ulp).
-
-    Arrow moves each block once; output is only the above-threshold
-    pairs, so the quadratic intermediate never leaves the worker.
-    """
-    import pandas as pd  # local: keep module import-light
-
-    def block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        if len(pdf) < 2:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []}).astype(
-                {"id_a": "int64", "id_b": "int64", "cosine": "float64"}
-            )
-        ids = pdf[id_col].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        m = np.stack(pdf[vec_col].to_numpy()[order]).astype("float64")
-        norms = np.linalg.norm(m, axis=1, keepdims=True)
-        norms[norms == 0.0] = 1.0
-        sims = (m / norms) @ (m / norms).T
-        ia, ib = np.triu_indices(len(ids), k=1)
-        keep = sims[ia, ib] >= threshold
-        return pd.DataFrame(
-            {"id_a": ids[ia[keep]], "id_b": ids[ib[keep]], "cosine": sims[ia, ib][keep]}
-        )
-
-    return df.groupBy(block_col).applyInPandas(
-        block_pairs, schema="id_a long, id_b long, cosine double"
-    )
 
 
 def benchmark_overlap(
@@ -1281,10 +1271,10 @@ def semantic_blocks(
     corpus size — the property that keeps the downstream quadratic
     stage flat at 100 TB (a fixed small k would leave blocks growing
     as N/k and the pair stage as N²/k).  The sizing count is one
-    columnar metadata-cheap scan.  At real corpus scale the seeds
+    scan.  At real corpus scale the seeds
     would come from a trained k-means model (``ivf_index``); the
-    assignment plan is identical either way — a broadcast of k rows
-    against the scan, one argmax per row, no shuffle of the corpus.
+    assignment plan is identical either way — k seed rows against the
+    scan, one argmax per row, no shuffle of the corpus.
 
     The seeds are the vectors with the ``k`` smallest ids — selected
     by ``orderBy(id).limit(k)`` (a TakeOrdered, k rows), which is
@@ -1295,63 +1285,84 @@ def semantic_blocks(
     Ties break to the lowest seed id on the ROUNDED cosine (the
     struct-max trick: max over (cos, -seed_id) lexicographic), so an
     oracle recomputing the same rounded values assigns identically.
+    Every norm and dot is a fold from 0.0 in index order.  Null, empty,
+    null-element, NaN and zero-norm vectors are dropped before seeding
+    (the same rule as :func:`embedding_cosine_pairs`).
 
     Output: (id, nv, blk) — id, L2-normalized vector, block id.
     """
-    v = F.col(vec_col).cast("array<double>")
-    norm = l2_norm(v)
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.transform(v, lambda x: x / norm).alias("nv"),
-    ).filter(F.size("nv") > 0)
+    return _semantic_blocks(
+        df, k, id_col, vec_col, round_to, target_block_size
+    ).drop("v")
+
+
+def _semantic_blocks(
+    df: DataFrame,
+    k: int | None,
+    id_col: str,
+    vec_col: str,
+    round_to: int,
+    target_block_size: int,
+) -> DataFrame:
+    """:func:`semantic_blocks` with the raw vector kept: (id, v, nv, blk)."""
+
+    def sq_then(finish: str) -> str:
+        return f"aggregate(v, 0.0D, (acc, x) -> acc + x * x, acc -> {finish})"
+
+    # ‖v‖² is folded once per row and handed to the division by the
+    # finish lambda: a norm column read inside ``transform`` would be
+    # inlined into the lambda and refolded per element.  NaN sorts
+    # above every double in Spark, so ``< Infinity`` also rejects a NaN
+    # ‖v‖²; a null one fails both comparisons.
+    base = (
+        df.select(
+            F.col(id_col).alias("id"),
+            F.col(vec_col).cast("array<double>").alias("v"),
+        )
+        .where(sq_then("acc > 0.0D AND acc < CAST('Infinity' AS DOUBLE)"))
+        .selectExpr("id", "v", sq_then("transform(v, x -> x / sqrt(acc))") + " AS nv")
+    )
     if k is None:
         n = base.count()
         k = max(8, -(-n // target_block_size))
+
+    def seed_cos(a: str, b: str) -> str:
+        return (
+            f"round(aggregate(zip_with({a}, {b}, (p, q) -> p * q), 0.0D,"
+            f" (acc, x) -> acc + x), {round_to})"
+        )
+
     if k <= SEMANTIC_LITERAL_SEED_MAX:
         # Small seed set → the k-means-assignment shape (see
         # kmeans.assign_points): seeds are collected once (TakeOrdered,
         # k rows) and entered as LITERAL vectors, so assignment is a
         # single narrow projection — argmax over k fold-dots per row,
-        # zero joins, zero shuffles, and the downstream self-join reads
-        # a plain scan instead of re-running a 3-stage blocking DAG on
-        # each reference.  The collected nv values are the engine's own
-        # fold results, so every cosine is bit-identical to the join
-        # form (driver-side re-normalization would risk a ulp).
-        seed_rows = base.orderBy("id").limit(k).collect()
-        cands = F.array(
-            *[
-                F.struct(
-                    F.round(
-                        dot(F.col("nv"), array_lit([float(x) for x in r["nv"]])),
-                        round_to,
-                    ).alias("c"),
-                    F.lit(-int(r["id"])).cast("long").alias("neg"),
-                )
-                for r in seed_rows
-            ]
+        # zero joins, zero shuffles.  The collected nv values are the
+        # engine's own fold results and repr() round-trips each double,
+        # so every cosine is bit-identical to the join form.  The
+        # expression is one SQL string: built Column by Column it is
+        # ~1,500 py4j calls at d=64, k=8.
+        seed_rows = base.orderBy("id").limit(k).select("id", "nv").collect()
+        cands = ", ".join(
+            f"named_struct('c', {seed_cos('nv', array_lit_sql(r['nv']))},"
+            f" 'neg', CAST({-int(r['id'])} AS BIGINT))"
+            for r in seed_rows
         )
-        best = F.array_max(cands)
-        return base.select(
-            "id", "nv", (-best["neg"]).cast("int").alias("blk")
+        return base.selectExpr(
+            "id", "v", "nv", f"CAST(-(array_max(array({cands})).neg) AS INT) AS blk"
         )
     # Large-k scale path (trained-cell regimes): seeds stay distributed,
     # broadcast-joined against the scan; argmax via struct-max groupBy.
-    seeds = base.orderBy("id").limit(k).select(
-        F.col("id").alias("seed_id"), F.col("nv").alias("sv")
-    )
-    scored = base.join(F.broadcast(seeds)).select(
-        "id",
-        "nv",
-        "seed_id",
-        F.round(dot(F.col("nv"), F.col("sv")), round_to).alias("cos"),
-    )
-    best = scored.groupBy("id").agg(
-        F.max(
-            F.struct(
-                F.col("cos").alias("c"),
-                (-F.col("seed_id")).cast("long").alias("neg"),
-            )
-        ).alias("m")
+    seeds = base.orderBy("id").limit(k).selectExpr("id AS seed_id", "nv AS sv")
+    best = (
+        base.join(F.broadcast(seeds))
+        .selectExpr(
+            "id",
+            f"named_struct('c', {seed_cos('nv', 'sv')},"
+            " 'neg', CAST(-seed_id AS BIGINT)) AS s",
+        )
+        .groupBy("id")
+        .agg(F.max("s").alias("m"))
     )
     assigned = best.select("id", (-F.col("m.neg")).cast("int").alias("blk"))
     return base.join(assigned, "id")
@@ -1373,150 +1384,22 @@ def semantic_dedup_pairs(
     (expected block ≤ ``target_block_size`` under the default
     ``k=None`` sizing — see :func:`semantic_blocks` — so per-block
     pair work stays bounded as the corpus grows), then the exact
-    cosine test runs only inside blocks.  Contrast with
-    :func:`embedding_cosine_pairs`, which blocks on a pre-existing
-    label column — here the blocking itself is derived from the data.
+    cosine test runs only inside blocks, through the one blocked
+    kernel :func:`embedding_cosine_pairs`.  Contrast with calling that
+    kernel directly on a pre-existing label column — here the blocking
+    itself is derived from the data.
 
-    ``dim``: fixed vector width → wide-column codegen dot for the pair
-    stage (see :func:`embedding_cosine_pairs`; values bit-identical).
+    ``dim``: only vectors of exactly this width are seeded, blocked and
+    paired.
 
-    Output: (id_a, id_b, block, cosine) with id_a < id_b.
+    Output: (id_a, id_b, block, cosine) with id_a < id_b, cosine
+    rounded to 6 places.
     """
-    if dim is not None and (
-        k is None or k <= SEMANTIC_LITERAL_SEED_MAX
-    ):
-        # Fully-codegen'd fast path for a declared fixed width: the
-        # normalized components become ``dim`` plain double columns ONCE,
-        # the seed assignment is an array_max over k literal-seed sums of
-        # those columns (no HOF, no join — the same literal-centroid
-        # argmax as kmeans.assign_points), and the pair cosine reuses the
-        # identical columns.  Every sum is the same left-to-right
-        # multiply-add order as the fold form, so values (and the
-        # rounded oracle grid) are bit-identical.  Vectors whose width
-        # differs from ``dim`` are EXCLUDED outright (both stages) —
-        # same contract as embedding_cosine_pairs(dim=...).
-        # Expressions are authored as SQL STRINGS, not Column-by-Column:
-        # a dim=64 × k=8 expression tree built through per-operator
-        # Column calls is ~1500 py4j round trips (~2-3 s of driver
-        # latency before any work runs); selectExpr/expr parse the same
-        # AST JVM-side in a handful of calls.  Numeric semantics are
-        # unchanged — the '+' chains parse left-associated, identical to
-        # the fold order, and seed components are re-literalized via
-        # repr() (shortest round-trip decimal → the exact same double).
-        v_sql = f"CAST({vec_col} AS ARRAY<DOUBLE>)"
-        nrm_sql = (
-            f"sqrt(aggregate({v_sql}, CAST(0 AS DOUBLE),"
-            " (acc, x) -> acc + x * x))"
-        )
-        # _spread first (r14): a single-file corpus otherwise
-        # normalizes and seed-assigns on ONE task (measured ~1.0 s and
-        # ~0.35 s single-task stages at sf0.1); no-op at scale
-        wide = _spread(df, id_col).selectExpr(
-            f"{id_col} AS id",
-            *[
-                f"element_at({v_sql}, {i + 1}) / {nrm_sql} AS _c{i}"
-                for i in range(dim)
-            ],
-        ).where(f"size({v_sql}) = {dim}")
-        if k is None:
-            n = df.where(f"size({v_sql}) > 0").count()
-            k = max(8, -(-n // target_block_size))
-        if k > SEMANTIC_LITERAL_SEED_MAX:  # sizing crossed the cutoff
-            return _semantic_pairs_generic(
-                df, k, threshold, id_col, vec_col, dim, target_block_size
-            )
-        seed_rows = wide.orderBy("id").limit(k).collect()
-        cand_sql = "array(" + ", ".join(
-            "named_struct('c', round("
-            + " + ".join(
-                f"_c{i} * {float(r[f'_c{i}'])!r}D" for i in range(dim)
-            )
-            + ", 6), 'neg', CAST({} AS BIGINT))".format(-int(r["id"]))
-            for r in seed_rows
-        ) + ")"
-        blocks = wide.select(
-            "id",
-            F.expr(f"CAST(-(array_max({cand_sql}).neg) AS INT)").alias("blk"),
-            *[F.col(f"_c{i}") for i in range(dim)],
-        )
-        # Pin the pair join's partitioning explicitly (r14): the join
-        # shuffles on blk either way, but AQE's byte-based coalescing
-        # sees a tiny exchange and merges the quadratic per-block pair
-        # work onto ONE task (measured a 1.1 s single-task stage at
-        # sf0.1) — compute-heavy, byte-light.  An explicit
-        # repartition-by-key is exempt from AQE coalescing and both
-        # sides share it, so the join adds no new exchange; parallelism
-        # = the block count, the honest maximum.
-        blocks = blocks.repartition(
-            df.sparkSession.sparkContext.defaultParallelism, F.col("blk")
-        )
-        a, b = blocks.alias("a"), blocks.alias("b")
-        cos = F.expr(
-            " + ".join(f"a._c{i} * b._c{i}" for i in range(dim))
-        )
-    else:
-        return _semantic_pairs_generic(
-            df, k, threshold, id_col, vec_col, dim, target_block_size
-        )
-    return (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk")) & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.blk").alias("block"),
-            cos.alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "block", F.round("cosine", 6).alias("cosine"))
-    )
-
-
-def _semantic_pairs_generic(
-    df: DataFrame,
-    k: int | None,
-    threshold: float,
-    id_col: str,
-    vec_col: str,
-    dim: int | None,
-    target_block_size: int,
-) -> DataFrame:
-    """Array-form fallback for :func:`semantic_dedup_pairs`: unknown
-    vector width, or a seed count past the literal-plan cutoff.  Blocks
-    come from :func:`semantic_blocks` (HOF fold dots); the pair cosine
-    is the wide-column sum when ``dim`` is declared, else the fold."""
-    blocks = semantic_blocks(
-        df, k=k, id_col=id_col, vec_col=vec_col,
-        target_block_size=target_block_size,
-    )
     if dim is not None:
-        blocks = blocks.select(
-            "id",
-            "blk",
-            *[F.element_at("nv", i + 1).alias(f"_c{i}") for i in range(dim)],
-        )
-        a, b = blocks.alias("a"), blocks.alias("b")
-        cos = F.col("a._c0") * F.col("b._c0")
-        for i in range(1, dim):
-            cos = cos + F.col(f"a._c{i}") * F.col(f"b._c{i}")
-    else:
-        a, b = blocks.alias("a"), blocks.alias("b")
-        cos = dot(F.col("a.nv"), F.col("b.nv"))
-    return (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk")) & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.blk").alias("block"),
-            cos.alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "block", F.round("cosine", 6).alias("cosine"))
+        df = df.where(F.size(F.col(vec_col)) == dim)
+    blocks = _semantic_blocks(df, k, id_col, vec_col, 6, target_block_size)
+    return _cosine_pairs(blocks, "id", "v", "blk", threshold, None, "block").select(
+        "id_a", "id_b", "block", F.round("cosine", 6).alias("cosine")
     )
 
 
@@ -1532,13 +1415,13 @@ def two_stage_dedup_pairs(
     vec_id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int | None = None,
-    candidates: str = "gemm",
 ) -> DataFrame:
     """Cheap-filter → expensive-verify dedup: embedding-cosine candidate
     pairs confirmed by exact n-gram Jaccard on the documents' text.
 
-    The production two-stage shape: stage 1 (blocked vector cosine) is
-    a narrow arithmetic scan that prunes the O(n²) space down to a
+    The production two-stage shape: stage 1 (blocked vector cosine,
+    one call to :func:`embedding_cosine_pairs` on ``block_col``, or
+    unblocked when it is None) prunes the O(n²) space down to a
     candidate list orders of magnitude smaller than the corpus; stage 2
     re-joins only those pairs to the text — the candidate side is
     BROADCAST into both text lookups, so the corpus-sized ``docs``
@@ -1546,84 +1429,27 @@ def two_stage_dedup_pairs(
     word shingles (``array_intersect`` / ``array_union`` — integer
     sizes, engine-exact division).
 
-    ``candidates`` picks the stage-1 physics:
-
-    * ``"gemm"`` (production default) — per-block BLAS matmul
-      (:func:`embedding_cosine_pairs_gemm`) generates the pair SET with
-      a tiny threshold margin (1e-9, far above BLAS-vs-fold ulp error
-      at any practical ``dim``), then the cosine VALUE is recomputed
-      for the shortlist only with the oracle's exact left-to-right fold
-      and re-filtered at the unmargined threshold.  Shortlist-sized
-      exact work, block-sized GEMM work, corpus never pays interpreted
-      per-pair expressions — and the emitted values are bit-identical
-      to the ``"exact"`` variant.
-    * ``"exact"`` — the expression-cosine candidate stage
-      (:func:`embedding_cosine_pairs`) end to end; the oracle-shaped
-      reference variant, quadratic in interpreted expressions.
-
     Output: (id_a, id_b, cosine, jaccard) for pairs passing BOTH
-    thresholds, id_a < id_b.
+    thresholds, id_a < id_b, both rounded to 6 places.
     """
     from flink_kmeans_clustering_spark.functions.text import (
         ngram_shingles,
         tokenize,
     )
 
-    if candidates == "gemm":
-        shortlist = embedding_cosine_pairs_gemm(
-            emb,
-            id_col=vec_id_col,
-            vec_col=vec_col,
-            block_col=block_col if block_col is not None else "label",
-            threshold=cosine_threshold - 1e-9,
-        ).select("id_a", "id_b")
-        # Exact-value recompute in ARRAY-fold form: the cosine here only
-        # ever evaluates on shortlist-joined rows (candidates << corpus),
-        # so the wide-column codegen dot's big Janino compile buys
-        # nothing — the fold is the same left-to-right multiply-add
-        # order, so emitted values stay bit-identical to the "exact"
-        # variant and the oracle.  ``dim`` still gates width-mismatched
-        # vectors out (same contract as embedding_cosine_pairs).
-        v = F.col(vec_col).cast("array<double>")
-        nrm = l2_norm(v)
-        base = emb.select(
-            F.col(vec_id_col).alias("_rid"),
-            F.transform(v, lambda x: x / nrm).alias("_nv"),
-        )
-        base = (
-            base.filter(F.size(v) == dim)
-            if dim is not None
-            else base.filter(F.size("_nv") > 0)
-        )
-        exact = dot(F.col("a._nv"), F.col("b._nv"))
-        ba, bb = base.alias("a"), base.alias("b")
-        # both lookups keep the corpus-sized side un-shuffled: the
-        # shortlist is broadcast into the a-side scan, and that
-        # (still shortlist-sized) result is broadcast into the b-side
-        with_a = ba.join(
-            F.broadcast(shortlist), F.col("a._rid") == F.col("id_a")
-        )
-        cand = (
-            bb.join(F.broadcast(with_a), F.col("b._rid") == F.col("id_b"))
-            .select("id_a", "id_b", exact.alias("cosine"))
-            .filter(F.col("cosine") >= cosine_threshold)
-            .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-        )
-    elif candidates == "exact":
-        cand = embedding_cosine_pairs(
-            emb,
-            id_col=vec_id_col,
-            vec_col=vec_col,
-            block_col=block_col,
-            threshold=cosine_threshold,
-            dim=dim,
-        ).select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-    else:
-        raise ValueError(f"candidates must be 'gemm' or 'exact', got {candidates!r}")
+    cand = embedding_cosine_pairs(
+        emb,
+        id_col=vec_id_col,
+        vec_col=vec_col,
+        block_col=block_col,
+        threshold=cosine_threshold,
+        dim=dim,
+    ).select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
+
     # The shortlist feeds FOUR downstream references (two id-projection
     # union branches and the broadcast into the pair join); without a
     # materialization each reference re-executes the whole candidate
-    # DAG — Arrow GEMM stage included.  localCheckpoint computes it
+    # DAG — Arrow pair stage included.  localCheckpoint computes it
     # once and truncates lineage; the shortlist is candidate-sized
     # (<< corpus) by construction, so executor-local storage is cheap
     # at any scale.

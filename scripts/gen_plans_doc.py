@@ -15,7 +15,12 @@ from flink_kmeans_clustering_spark.plans import explain_str, shuffle_count  # no
 from flink_kmeans_clustering_spark.session import get_spark  # noqa: E402
 
 PICKS = [
-    ("q_assign", "Narrow literal-argmin assignment — zero shuffles, one codegen span"),
+    (
+        "q_assign",
+        "Narrow array-literal argmin assignment — zero shuffles, scan and "
+        "argmin in one stage (the argmin's transform runs interpreted, "
+        "outside whole-stage codegen)",
+    ),
     (
         "q_rel_pricing",
         "TPC-H Q1 shape — pushed shipdate filter, pruned 7-column scan, "
@@ -33,8 +38,9 @@ PICKS = [
     ),
     (
         "q_assign_join",
-        "Assignment via explicit broadcast join — BroadcastNestedLoopJoin + "
-        "per-point min-struct hash agg (large-centroid-set path)",
+        "Assignment with the centroids given as a DataFrame — its k rows "
+        "are collected on the driver and fed to the same narrow "
+        "array-literal argmin as q_assign; no join, zero shuffles",
     ),
     (
         "q_rel_tradevolume",
@@ -89,15 +95,17 @@ PICKS = [
     ),
     (
         "q_dedup_twostage",
-        "Two-stage dedup — cosine candidates broadcast into both text "
-        "lookups; the corpus is never shuffled (candidate + shingle "
+        "Two-stage dedup — blocked cosine-kernel candidates broadcast into "
+        "both text lookups; the corpus is never shuffled (candidate + shingle "
         "stages materialize via localCheckpoint, so this final DAG "
         "reads their checkpointed results)",
     ),
     (
         "q_dedup_semantic",
-        "Semantic dedup — nearest-seed blocking (broadcast k seeds, argmax "
-        "per row) confines the pair join to computed blocks",
+        "Semantic dedup — literal-seed nearest-seed blocking (one narrow "
+        "projection, argmax per row), then the blocked cosine kernel: one "
+        "block-key exchange into a per-block pandas GEMM "
+        "(FlatMapGroupsInPandas)",
     ),
     (
         "q_text_lmscore",
@@ -331,7 +339,8 @@ def main() -> int:
     spark = get_spark(app_name="plans-doc", shuffle_partitions=32)
     sf_dir = "/root/testdata/sf0.01"
     out = [
-        "# Physical plans of headline queries (generated; sf0.01, local[32], AQE on)",
+        "# Physical plans of headline queries (generated; sf0.01, "
+        f"{spark.sparkContext.master}, AQE on)",
         "",
         "Regenerate with `python scripts/gen_plans_doc.py`.  The shapes below are",
         "pinned by `tests/test_plans.py`; this file is the human-readable evidence.",

@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import math
+import re
+from decimal import ROUND_HALF_UP, Decimal
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,6 +19,71 @@ from flink_kmeans_clustering_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_pairs,
 )
+
+def _fold_nv(v):
+    """x / ‖x‖ with ‖x‖² folded from 0.0 in index order; None for a
+    vector that must never pair (null, empty, null-element, NaN, zero)."""
+    if not v or any(x is None for x in v):
+        return None
+    sq = 0.0
+    for x in v:
+        sq = sq + x * x
+    if not (0.0 < sq < math.inf):
+        return None
+    n = math.sqrt(sq)
+    return [x / n for x in v]
+
+
+def _fold_dot(a, b):
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + x * y
+    return acc
+
+
+def _round6(x):
+    """Spark's round(double, 6): HALF_UP on the shortest decimal form."""
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
+def _py_block_pairs(rows, threshold):
+    """{(id_a, id_b): cosine} over (id, vector, block) rows: equal-width
+    vectors in one block, id_a < id_b, fold cosine ≥ threshold."""
+    nv = [(i, _fold_nv(v), b) for i, v, b in rows]
+    nv = sorted((i, x, b) for i, x, b in nv if x is not None)
+    out = {}
+    for ia, (i, x, bx) in enumerate(nv):
+        for j, y, by in nv[ia + 1:]:
+            if bx == by and i < j and len(x) == len(y):
+                c = _fold_dot(x, y)
+                if c >= threshold:
+                    out[(i, j)] = c
+    return out
+
+
+def _py_semantic(rows, k, threshold, target_block_size=4096):
+    """semantic_dedup_pairs over (id, vector) rows: the k lowest-id clean
+    vectors seed, each vector joins the seed of highest rounded cosine
+    (ties to the lowest seed id), then fold cosines pair inside blocks.
+    Output {(id_a, id_b, block, round6(cosine))}."""
+    nv = {i: x for i, x in ((i, _fold_nv(v)) for i, v in rows) if x is not None}
+    if k is None:
+        k = max(8, -(-len(nv) // target_block_size))
+    seeds = sorted(nv)[:k]
+    blk = {
+        i: max(seeds, key=lambda s: (_round6(_fold_dot(x, nv[s])), -s))
+        for i, x in nv.items()
+    }
+    pairs = _py_block_pairs([(i, nv[i], blk[i]) for i in nv], threshold)
+    return {(a, b, blk[a], _round6(c)) for (a, b), c in pairs.items()}
+
+
+def _read_pylist(path, cols):
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(path, columns=cols)
+    return list(zip(*(t.column(c).to_pylist() for c in cols)))
+
 
 BASE = "the quick brown fox jumps over the lazy dog and runs far away home"
 NEAR = BASE.replace("lazy", "sleepy")  # one token differs
@@ -168,6 +237,12 @@ def test_embedding_cosine_pairs(spark):
     }
     assert (0, 3) in unblocked
 
+    # the output keeps the input id type
+    named = emb.withColumn("vec_id", F.concat(F.lit("d"), "vec_id"))
+    out = embedding_cosine_pairs(named, threshold=0.9)
+    assert out.schema["id_a"].dataType.simpleString() == "string"
+    assert {(r["id_a"], r["id_b"]) for r in out.collect()} == {("d0", "d1")}
+
 
 def test_connected_components_chain_transitivity(spark):
     """A~B, B~C, C~D is one duplicate group even though A~D never met."""
@@ -262,23 +337,25 @@ def test_drop_near_duplicates_greedy(spark, docs):
 
 
 def test_gemm_cosine_matches_exact_variant(spark):
-    from flink_kmeans_clustering_spark.operators.dedup import (
-        embedding_cosine_pairs,
-        embedding_cosine_pairs_gemm,
-    )
+    """The BLAS-shortlisted kernel emits exactly the pure-Python
+    index-ordered fold: every in-block pair at t=-1 and the t=0.3 subset,
+    cosines compared bit for bit."""
+    from tests.conftest import SF_CORRECTNESS
 
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    exact = {
-        (r["id_a"], r["id_b"]): r["cosine"]
-        for r in embedding_cosine_pairs(emb, threshold=0.3).collect()
-    }
-    gemm = {
-        (r["id_a"], r["id_b"]): r["cosine"]
-        for r in embedding_cosine_pairs_gemm(emb, threshold=0.3).collect()
-    }
-    assert set(exact) == set(gemm)
-    for k in exact:
-        assert abs(exact[k] - gemm[k]) < 1e-9
+    path = f"{SF_CORRECTNESS}/embeddings.parquet"
+    emb = spark.read.parquet(path)
+    ref = _py_block_pairs(
+        _read_pylist(path, ["vec_id", "embedding", "label"]), -1.0
+    )
+    assert len(ref) > 10_000
+    for t in (-1.0, 0.3):
+        got = {
+            (r["id_a"], r["id_b"]): r["cosine"]
+            for r in embedding_cosine_pairs(emb, threshold=t, dim=64).collect()
+        }
+        want = {k: c for k, c in ref.items() if c >= t}
+        assert len(want) > 100
+        assert got == want
 
 
 def test_benchmark_overlap_counts_shared_ngrams(spark):
@@ -435,22 +512,55 @@ def test_semantic_blocks_sparse_ids_get_full_seed_count(spark):
 
 
 def test_two_stage_gemm_candidates_match_exact(spark):
-    """The production GEMM candidate stage emits the same pairs AND the
-    same (exact-fold, round-6) cosine values as the exact expression
-    variant — the shortlist recompute makes them bit-identical."""
+    """The GEMM-shortlisted candidate stage plus the Jaccard verify emit
+    the same pairs AND the same (fold, round-6) cosine and Jaccard
+    values as an independent pure-Python reference."""
+    from flink_kmeans_clustering_spark.operators.dedup import two_stage_dedup_pairs
+    from tests.conftest import SF_CORRECTNESS
+
+    docs = spark.read.parquet(f"{SF_CORRECTNESS}/documents.parquet")
+    emb = spark.read.parquet(f"{SF_CORRECTNESS}/embeddings.parquet")
+    kw = dict(cosine_threshold=0.3, jaccard_threshold=0.01, dim=64)
+    got = two_stage_dedup_pairs(docs, emb, **kw).collect()
+
+    cand = _py_block_pairs(
+        _read_pylist(
+            f"{SF_CORRECTNESS}/embeddings.parquet",
+            ["vec_id", "embedding", "label"],
+        ),
+        kw["cosine_threshold"],
+    )
+    text = dict(
+        _read_pylist(f"{SF_CORRECTNESS}/documents.parquet", ["doc_id", "text"])
+    )
+
+    def shingles(t):
+        toks = [x for x in re.split("[^a-z0-9]+", t.lower()) if x]
+        return {" ".join(toks[i:i + 3]) for i in range(max(len(toks) - 2, 1))} if toks else set()
+
+    want = set()
+    for (a, b), c in cand.items():
+        sa, sb = shingles(text[a]), shingles(text[b])
+        if sa | sb and len(sa & sb) / len(sa | sb) >= kw["jaccard_threshold"]:
+            want.add((a, b, _round6(c), _round6(len(sa & sb) / len(sa | sb))))
+    assert len(want) > 0
+    assert {(r["id_a"], r["id_b"], r["cosine"], r["jaccard"]) for r in got} == want
+
+
+def test_two_stage_unblocked_finds_cross_label_pair(spark):
+    """block_col=None pairs across labels; the default still blocks."""
     from flink_kmeans_clustering_spark.operators.dedup import two_stage_dedup_pairs
 
-    sf = "/root/testdata/sf0.01"
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    kw = dict(cosine_threshold=0.3, jaccard_threshold=0.01, dim=64)
-    gemm = two_stage_dedup_pairs(docs, emb, candidates="gemm", **kw).collect()
-    exact = two_stage_dedup_pairs(docs, emb, candidates="exact", **kw).collect()
-    as_set = lambda rows: {
-        (r["id_a"], r["id_b"], r["cosine"], r["jaccard"]) for r in rows
-    }
-    assert len(gemm) > 0
-    assert as_set(gemm) == as_set(exact)
+    text = "the quick brown fox jumps over the lazy dog"
+    docs = spark.createDataFrame([(0, text), (1, text)], "doc_id long, text string")
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0], 0), (1, [0.99, 0.05], 1)],
+        "vec_id long, embedding array<double>, label int",
+    )
+    kw = dict(cosine_threshold=0.9, jaccard_threshold=0.3)
+    rows = two_stage_dedup_pairs(docs, emb, block_col=None, **kw).collect()
+    assert {(r["id_a"], r["id_b"]) for r in rows} == {(0, 1)}
+    assert two_stage_dedup_pairs(docs, emb, **kw).count() == 0
 
 
 def test_embedding_pairs_dim_mismatch_rows_excluded(spark):
@@ -494,24 +604,80 @@ def test_fuzzy_name_pairs_distinct_domain(spark):
     assert r["distance"] == 1
 
 
-def test_semantic_literal_path_matches_generic(spark):
+@pytest.mark.parametrize("k", [None, "broadcast"])
+def test_semantic_dedup_pairs_matches_python_reference(spark, k):
+    """Both seed-assignment forms (literal seeds at k=None, the
+    broadcast join past SEMANTIC_LITERAL_SEED_MAX) against a pure-Python
+    reference: lowest-id seeds, rounded-cosine argmax with ties to the
+    lowest id, fold cosines — rows compared bit for bit."""
     from flink_kmeans_clustering_spark.operators.dedup import (
-        _semantic_pairs_generic,
+        SEMANTIC_LITERAL_SEED_MAX,
         semantic_dedup_pairs,
     )
     from tests.conftest import SF_CORRECTNESS
 
-    emb = spark.read.parquet(f"{SF_CORRECTNESS}/embeddings.parquet")
-    fast = semantic_dedup_pairs(emb, k=None, threshold=0.3, dim=64).collect()
-    slow = _semantic_pairs_generic(
-        emb, None, 0.3, "vec_id", "embedding", 64, 4096
+    path = f"{SF_CORRECTNESS}/embeddings.parquet"
+    k = None if k is None else SEMANTIC_LITERAL_SEED_MAX + 1
+    got = semantic_dedup_pairs(
+        spark.read.parquet(path), k=k, threshold=0.3, dim=64
     ).collect()
-    key = lambda r: (r["id_a"], r["id_b"])
-    assert sorted(map(key, fast)) == sorted(map(key, slow))
-    # cosines bit-identical (same multiply-add order by construction)
-    fc = {key(r): r["cosine"] for r in fast}
-    for r in slow:
-        assert fc[key(r)] == r["cosine"]
+    want = _py_semantic(_read_pylist(path, ["vec_id", "embedding"]), k, 0.3)
+    assert len(want) > 50
+    assert {(r["id_a"], r["id_b"], r["block"], r["cosine"]) for r in got} == want
+
+
+_DEGENERATE = {
+    "null": None,
+    "empty": [],
+    "null_element": [1.0, None],
+    "zero_norm": [0.0, 0.0],
+    "nan": [float("nan"), 1.0],
+}
+_CLEAN = [(1, [1.0, 0.0]), (2, [0.6, 0.8]), (3, [0.0, 1.0]), (4, [0.8, 0.6])]
+
+
+@pytest.mark.parametrize(
+    "fn", ["embedding_cosine_pairs", "pair_cosine_histogram",
+           "semantic_dedup_pairs", "two_stage_dedup_pairs"],
+)
+@pytest.mark.parametrize("row", sorted(_DEGENERATE))
+def test_degenerate_vectors_never_pair(spark, fn, row):
+    """A null, empty, null-element, zero-norm or NaN vector (id 0, the
+    lowest, so it would also seed a semantic block) never pairs, under
+    ANSI on and off, and the clean rows' pairs are unchanged."""
+    from flink_kmeans_clustering_spark.operators import dedup
+    from flink_kmeans_clustering_spark.operators.common import session_conf
+
+    rows = [(0, _DEGENERATE[row])] + _CLEAN
+    emb = spark.createDataFrame(
+        [(i, v, 0) for i, v in rows],
+        "vec_id long, embedding array<double>, label int",
+    )
+    clean = _py_block_pairs([(i, v, 0) for i, v in _CLEAN], -1.0)
+    for ansi in ("true", "false"):
+        with session_conf(spark, {"spark.sql.ansi.enabled": ansi}):
+            if fn == "embedding_cosine_pairs":
+                out = dedup.embedding_cosine_pairs(emb, threshold=-1.0).collect()
+                got = {(r["id_a"], r["id_b"]): r["cosine"] for r in out}
+                assert got == clean
+            elif fn == "pair_cosine_histogram":
+                out = dedup.pair_cosine_histogram(emb).collect()
+                assert sum(r["n_pairs"] for r in out) == len(clean)
+                assert not any(math.isnan(r["max_cos"]) for r in out)
+            elif fn == "semantic_dedup_pairs":
+                out = dedup.semantic_dedup_pairs(emb, k=2, threshold=-1.0).collect()
+                got = {(r["id_a"], r["id_b"], r["block"], r["cosine"]) for r in out}
+                assert got == _py_semantic(_CLEAN, 2, -1.0)
+            else:
+                docs = spark.createDataFrame(
+                    [(i, "the quick brown fox jumps") for i, _ in rows],
+                    "doc_id long, text string",
+                )
+                out = dedup.two_stage_dedup_pairs(
+                    docs, emb, cosine_threshold=-1.0, jaccard_threshold=0.0
+                ).collect()
+                got = {(r["id_a"], r["id_b"], r["cosine"]) for r in out}
+                assert got == {(a, b, _round6(c)) for (a, b), c in clean.items()}
 
 
 def test_dedup_corpus_keeps_reps_and_untouched(spark):

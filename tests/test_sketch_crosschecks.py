@@ -1,7 +1,7 @@
 """Scale-level numeric cross-checks for the rows-only sketch queries
 (VERDICT r06 item 8).
 
-The four rows-only registry entries are sketch/RNG internals no SQL
+The three rows-only registry entries are sketch/RNG internals no SQL
 oracle can replay (HLL++ registers, GK summaries).  Each already has a
 deterministic full-oracle TWIN; these tests close the remaining gap by
 asserting the sketch and its twin agree NUMERICALLY at sf0.1 within
