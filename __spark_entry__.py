@@ -6907,7 +6907,7 @@ scored AS (
   FROM n CROSS JOIN seeds
 ),
 best AS (
-  SELECT id, CAST(seed_id AS INT) AS blk FROM (
+  SELECT id, seed_id AS blk FROM (
     SELECT id, seed_id,
            row_number() OVER (PARTITION BY id ORDER BY cos DESC, seed_id) AS rn
     FROM scored

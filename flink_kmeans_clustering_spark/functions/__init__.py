@@ -1,8 +1,10 @@
-"""Scalar/array function library — JVM-side column expressions only.
+"""Scalar/array function library.
 
-Everything here stays inside whole-stage codegen (built-in
-``pyspark.sql.functions`` compositions, higher-order array functions);
-no Python UDFs in any hot path.
+Column expressions stay JVM-side, inside whole-stage codegen where they
+can (built-in ``pyspark.sql.functions`` compositions, higher-order array
+functions).  The one Python stage is the n-d nearest-codeword kernel in
+``vector`` (numpy over Arrow batches in ``mapInArrow``), which replaced
+an interpreted k·d higher-order argmin.
 """
 
 from flink_kmeans_clustering_spark.functions.vector import (

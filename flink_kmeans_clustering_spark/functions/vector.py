@@ -1,23 +1,52 @@
-"""Vector math over ``array<numeric>`` columns, all JVM-side.
+"""Vector math over ``array<numeric>`` columns.
 
-``zip_with`` + ``aggregate`` keep the arithmetic in Tungsten (SURVEY.md
-§7 hard part d): no Arrow transfer, no Python, codegen-friendly — this
-is what makes 64-dim cosine over 100 TB of embeddings a scan-bound
-problem instead of a serialization-bound one.
+Two homes, picked by what the caller's rows need:
 
-Two of the kernels are SQL-text builders rather than Columns, because
-their callers author whole projections as one string (one JVM-side
-parse instead of a py4j round trip per node): :func:`squared_l2_sql`
-is the one squared-L2 fold and :func:`nearest_codeword_sql` the one
-n-d nearest-codeword argmin.  K-Means assignment, the PQ trainer, PQ
-encoding, the PQ rerank, the quantization-error report and the coreset
-sensitivities all build from them.
+* JVM-side SQL, for light per-row arithmetic.  ``zip_with`` +
+  ``aggregate`` keep it in Tungsten (SURVEY.md §7 hard part d): no
+  Arrow transfer and no Python.  :func:`squared_l2_sql` is the one
+  squared-L2 fold, and :func:`nearest_codeword_sql` the SQL-text
+  nearest-codeword argmin that PQ training, PQ encoding, the PQ rerank,
+  the quantization-error report and the coreset sensitivities build
+  from.  Both are SQL text rather than Columns, because their callers
+  author whole projections as one string (one JVM-side parse instead of
+  a py4j round trip per node).
+* One numpy kernel over Arrow record batches, for the n-d K-Means
+  argmin and partial sums: :func:`assign_nearest` (``mapInArrow``,
+  appends the cluster and dist²), :func:`label_sums` (per-label sums,
+  folded per partition and added on the driver in partition order) and
+  :func:`nearest_dist2_sum` (WCSS).  Spark runs the SQL argmin as an
+  interpreted higher-order function, k·d terms per row; the kernel does
+  the same arithmetic vectorized, bit for bit (docs/TUNING.md).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+import sys
+from collections.abc import Hashable, Sequence
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark import cloudpickle
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
+
+from flink_kmeans_clustering_spark.operators.common import quote_ident
+
+# The Python workers import numpy and pyarrow but not always this
+# package (it need not be on their path), so the kernels below travel
+# to them by value.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -87,3 +116,250 @@ def nearest_codeword_sql(
         f"v -> array_min(transform(sequence(0, {last}), "
         f"i -> named_struct('dist2', {dist2}, 'cluster', {label})))), 1)"
     )
+
+
+# ---------------------------------------------------------------------------
+# The Arrow kernel: n-d nearest codeword and per-label partial sums
+# ---------------------------------------------------------------------------
+
+
+def vector_block(col: pa.Array, dim: int | None) -> tuple:
+    """A list column of one record batch as numpy arrays
+    ``(values, present, whole, lens)``.
+
+    ``values`` is n × dim float64 (float32 widens exactly): each element
+    that is present and non-null at an index below ``dim``, 0.0
+    elsewhere.  ``present`` marks those elements.  ``whole`` marks the
+    rows with exactly ``dim`` elements and no null element, the only
+    rows with a dist².  ``lens`` is each row's length, -1 when the
+    vector is NULL.  ``dim=None`` takes the longest row's length."""
+    n = len(col)
+    lens = pc.list_value_length(col).fill_null(-1).to_numpy().astype(np.int64)
+    flat = pc.list_flatten(col)
+    vals = np.asarray(flat.to_numpy(zero_copy_only=False), dtype=np.float64)
+    if dim is None:
+        dim = int(lens.max(initial=0))
+    if flat.null_count == 0 and (lens == dim).all():
+        return vals.reshape(n, dim), np.ones((n, dim), bool), np.ones(n, bool), lens
+    rows = pc.list_parent_indices(col).to_numpy().astype(np.int64)
+    sizes = np.maximum(lens, 0)
+    pos = np.arange(len(vals)) - (np.cumsum(sizes) - sizes)[rows]
+    valid = np.asarray(flat.is_valid().to_numpy(zero_copy_only=False), bool)
+    keep = valid & (pos < dim)
+    values = np.zeros((n, dim))
+    present = np.zeros((n, dim), bool)
+    values[rows[keep], pos[keep]] = vals[keep]
+    present[rows[keep], pos[keep]] = True
+    has_null = np.zeros(n, bool)
+    has_null[rows[~valid]] = True
+    return values, present, (lens == dim) & ~has_null, lens
+
+
+def nearest_codeword(
+    values: np.ndarray, whole: np.ndarray, book: np.ndarray, ids: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """``(cluster, dist2)`` of each row of :func:`vector_block`: the
+    argmin of the dist² fold over the codewords ``book`` (k × d),
+    labelled by ``ids``.
+
+    dist² folds ``acc + t * t`` with ``t = v_j - c_j`` from 0.0 over j
+    in index order, the order :func:`squared_l2_sql` folds in, so each
+    double equals the SQL form's (never ``np.sum``: it sums pairwise).
+    The scan visits the codewords by ascending id with a strict ``<``,
+    so ties go to the lowest id, and it orders NaN above +inf as Spark
+    does (``np.argmin`` would pick the NaN).  A row that is not
+    ``whole`` has a NULL dist² for every codeword, so it takes the
+    lowest id; its dist² comes back NaN for the caller to mask."""
+    acc = np.zeros((len(values), len(book)))
+    cols, book_cols = values.T, book.T
+    for j in range(book.shape[1]):
+        t = cols[j][:, None] - book_cols[j][None, :]
+        acc = acc + t * t
+    order = np.argsort(ids, kind="stable")
+    best = np.full(len(values), order[0])
+    best_d2 = acc[:, order[0]]
+    for p in order[1:]:
+        d2 = acc[:, p]
+        take = (d2 < best_d2) | (np.isnan(best_d2) & ~np.isnan(d2))
+        best = np.where(take, p, best)
+        best_d2 = np.where(take, d2, best_d2)
+    best[~whole] = order[0]
+    return ids[best], np.where(whole, best_d2, np.nan)
+
+
+def _codebook(
+    codebook: Sequence[Sequence[float]], ids: Sequence[int] | None
+) -> tuple[np.ndarray, np.ndarray]:
+    """The codewords as a k × d float64 array and their int32 ids
+    (default: positions); a non-finite value raises ``ValueError``."""
+    book = np.asarray([[float(v) for v in c] for c in codebook], dtype=np.float64)
+    if not np.isfinite(book).all():
+        raise ValueError(f"non-finite codeword value {book[~np.isfinite(book)][0]!r}")
+    ids = range(len(book)) if ids is None else ids
+    return book, np.asarray([int(i) for i in ids], dtype=np.int32)
+
+
+def _vector_input(df: DataFrame, vec_col: str) -> Column:
+    """The vector column as the kernel reads it: as it is when its
+    elements are float or double (the kernel widens float32 itself),
+    else cast to ``array<double>`` by Spark."""
+    elem = df.select(quote_ident(vec_col)).schema[0].dataType.elementType
+    col = F.col(quote_ident(vec_col))
+    return col if isinstance(elem, (FloatType, DoubleType)) else col.cast("array<double>")
+
+
+def assign_nearest(
+    df: DataFrame,
+    vec_col: str,
+    codebook: Sequence[Sequence[float]],
+    ids: Sequence[int] | None = None,
+    cluster_col: str = "cluster",
+    dist2_col: str | None = None,
+) -> DataFrame:
+    """``df`` plus the int ``cluster_col`` of each row's nearest codeword
+    (:func:`nearest_codeword`) and, if named, its double ``dist2_col``
+    (NULL for a row that is not whole).  One ``mapInArrow``: a narrow
+    map, no join and no shuffle.  ``ids`` labels the codewords (default:
+    positions); a non-finite codeword raises ``ValueError``."""
+    book, ids_np = _codebook(codebook, ids)
+    dim = book.shape[1]
+    keep = len(df.columns)
+    # positional names: mapInArrow re-resolves its input by name
+    src = df.select("*", _vector_input(df, vec_col)).toDF(
+        *[f"_{i}" for i in range(keep + 1)]
+    )
+    fields = list(df.schema.fields) + [StructField(cluster_col, IntegerType())]
+    if dist2_col:
+        fields.append(StructField(dist2_col, DoubleType()))
+    names = [f.name for f in fields]
+
+    def assign(batches):
+        for b in batches:
+            values, _, whole, _ = vector_block(b.column(keep), dim)
+            cluster, d2 = nearest_codeword(values, whole, book, ids_np)
+            cols = b.columns[:keep] + [pa.array(cluster, pa.int32())]
+            if dist2_col:
+                cols.append(pa.array(d2, pa.float64(), mask=~whole))
+            yield pa.RecordBatch.from_arrays(cols, names=names)
+
+    return src.mapInArrow(assign, StructType(fields))
+
+
+def label_sums(
+    df: DataFrame,
+    vec_col: str,
+    dim: int | None = None,
+    label_col: str | None = None,
+    codebook: Sequence[Sequence[float]] | None = None,
+    ids: Sequence[int] | None = None,
+) -> dict[Hashable, tuple[int, np.ndarray, np.ndarray, int]]:
+    """Per-label partial sums of a vector column, in one Spark job with
+    no exchange: ``{label: (n, sums, counts, width)}``.
+
+    The label is ``label_col`` (rows with a NULL label add to nothing)
+    or, given a ``codebook``, each row's nearest codeword id
+    (:func:`nearest_codeword`).  ``n`` counts the label's rows;
+    ``sums[j]`` adds the elements present and non-null at index j and
+    ``counts[j]`` counts them, for j below ``dim`` (``None``: the
+    longest vector); ``width`` is the label's longest vector.
+
+    Each partition folds its rows in row order, ``acc + v`` from 0.0
+    (``np.add.accumulate``, a sequential scan), and emits one row per
+    label; the driver adds the partitions in partition order.  The sums
+    do not depend on scheduling: the same input gives the same doubles
+    on every run."""
+    if codebook is not None:
+        book, ids_np = _codebook(codebook, ids)
+        dim = book.shape[1]
+        src = df.select(_vector_input(df, vec_col).alias("v"))
+        label_type = IntegerType()
+    else:
+        lab = F.col(quote_ident(label_col))
+        src = df.where(lab.isNotNull()).select(
+            lab.alias("l"), _vector_input(df, vec_col).alias("v")
+        )
+        label_type = src.schema[0].dataType
+
+    def fold(batches):
+        acc: dict = {}
+        label_arrow = pa.int32()
+        for b in batches:
+            values, present, whole, lens = vector_block(b.column(b.num_columns - 1), dim)
+            if codebook is not None:
+                labels, _ = nearest_codeword(values, whole, book, ids_np)
+            else:
+                label_arrow = b.column(0).type
+                labels = b.column(0).to_numpy(zero_copy_only=False)
+            order = np.argsort(labels, kind="stable")
+            uniq, starts = np.unique(labels[order], return_index=True)
+            for lab, seg in zip(uniq.tolist(), np.split(order, starts[1:])):
+                n, s, c, w = acc.get(lab, (0, np.zeros(0), np.zeros(0, np.int64), 0))
+                width = max(len(s), values.shape[1])
+                rows = np.vstack([_pad(s, width)[None], _pad(values[seg], width)])
+                s = np.add.accumulate(rows, axis=0)[-1]
+                c = _pad(c, width) + _pad(present[seg], width).sum(axis=0)
+                acc[lab] = (n + len(seg), s, c, max(w, int(lens[seg].max())))
+        if acc:
+            labs = list(acc)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(labs, label_arrow),
+                    pa.array([acc[k][0] for k in labs], pa.int64()),
+                    pa.array([acc[k][1].tolist() for k in labs], pa.list_(pa.float64())),
+                    pa.array([acc[k][2].tolist() for k in labs], pa.list_(pa.int64())),
+                    pa.array([acc[k][3] for k in labs], pa.int32()),
+                ],
+                names=["l", "n", "s", "c", "w"],
+            )
+
+    schema = StructType([
+        StructField("l", label_type),
+        StructField("n", LongType()),
+        StructField("s", ArrayType(DoubleType())),
+        StructField("c", ArrayType(LongType())),
+        StructField("w", IntegerType()),
+    ])
+    out: dict = {}
+    for r in src.mapInArrow(fold, schema).collect():  # in partition order
+        n, s, c, w = out.get(r["l"], (0, np.zeros(0), np.zeros(0, np.int64), 0))
+        width = max(len(s), len(r["s"]))
+        out[r["l"]] = (
+            n + r["n"],
+            _pad(s, width) + _pad(np.asarray(r["s"], np.float64), width),
+            _pad(c, width) + _pad(np.asarray(r["c"], np.int64), width),
+            max(w, r["w"]),
+        )
+    return out
+
+
+def _pad(a: np.ndarray, width: int) -> np.ndarray:
+    """``a`` with zeros appended along its last axis up to ``width``."""
+    short = width - a.shape[-1]
+    return a if short <= 0 else np.pad(a, [(0, 0)] * (a.ndim - 1) + [(0, short)])
+
+
+def nearest_dist2_sum(
+    df: DataFrame,
+    vec_col: str,
+    codebook: Sequence[Sequence[float]],
+    ids: Sequence[int] | None = None,
+) -> float:
+    """Σ dist² to the nearest codeword (the WCSS), NULL dist²s skipped:
+    each partition folds its rows in row order from 0.0 and the driver
+    adds the partitions in partition order.  One Spark job, no
+    exchange."""
+    book, ids_np = _codebook(codebook, ids)
+    src = df.select(_vector_input(df, vec_col).alias("v"))
+
+    def fold(batches):
+        acc = 0.0
+        for b in batches:
+            values, _, whole, _ = vector_block(b.column(0), book.shape[1])
+            _, d2 = nearest_codeword(values, whole, book, ids_np)
+            acc = float(np.add.accumulate(np.concatenate([[acc], d2[whole]]))[-1])
+        yield pa.RecordBatch.from_arrays([pa.array([acc], pa.float64())], names=["d2"])
+
+    total = 0.0
+    for r in src.mapInArrow(fold, "d2 double").collect():  # in partition order
+        total = total + r["d2"]
+    return total

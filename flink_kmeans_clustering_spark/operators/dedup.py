@@ -1289,7 +1289,8 @@ def semantic_blocks(
     null-element, NaN and zero-norm vectors are dropped before seeding
     (the same rule as :func:`embedding_cosine_pairs`).
 
-    Output: (id, nv, blk) — id, L2-normalized vector, block id.
+    Output: (id, nv, blk) — id, L2-normalized vector, block id (the
+    seed's id, in the id column's type).
     """
     return _semantic_blocks(
         df, k, id_col, vec_col, round_to, target_block_size
@@ -1325,6 +1326,9 @@ def _semantic_blocks(
     if k is None:
         n = base.count()
         k = max(8, -(-n // target_block_size))
+    # a block id is its seed's id, in the id's own type: a narrower
+    # cast would overflow (or, with ANSI off, merge seeds 2^32 apart)
+    id_type = base.schema["id"].dataType.simpleString()
 
     def seed_cos(a: str, b: str) -> str:
         return (
@@ -1349,7 +1353,7 @@ def _semantic_blocks(
             for r in seed_rows
         )
         return base.selectExpr(
-            "id", "v", "nv", f"CAST(-(array_max(array({cands})).neg) AS INT) AS blk"
+            "id", "v", "nv", f"CAST(-(array_max(array({cands})).neg) AS {id_type}) AS blk"
         )
     # Large-k scale path (trained-cell regimes): seeds stay distributed,
     # broadcast-joined against the scan; argmax via struct-max groupBy.
@@ -1364,7 +1368,7 @@ def _semantic_blocks(
         .groupBy("id")
         .agg(F.max("s").alias("m"))
     )
-    assigned = best.select("id", (-F.col("m.neg")).cast("int").alias("blk"))
+    assigned = best.select("id", (-F.col("m.neg")).cast(id_type).alias("blk"))
     return base.join(assigned, "id")
 
 

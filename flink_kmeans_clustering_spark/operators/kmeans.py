@@ -26,14 +26,14 @@ step is an independent, composable DataFrame operator:
   :func:`lloyd_nd` / :func:`spherical_kmeans_nd` — the same superstep
   over an ``array<double>`` vector column.
 
-Each kernel has one definition, as SQL text: :func:`_argmin_2d_sql`
-(2-D argmin), :func:`assign_points_nd_sql` (n-d argmin, built from
-:func:`~flink_kmeans_clustering_spark.functions.vector.nearest_codeword_sql`,
-the argmin the PQ paths share) and :func:`_nd_sum_sql` (n-d partial
-sums).  The public operators and the driver loops all build from
-them; a loop pastes the text into one ``selectExpr`` / ``spark.sql``
+Each kernel has one definition.  The 2-D argmin is SQL text,
+:func:`_argmin_2d_sql`; :func:`lloyd` pastes it into one ``selectExpr``
 parse per superstep, which is far cheaper than composing the same tree
-Column by Column over py4j.
+Column by Column over py4j.  The n-d argmin and partial sums are the
+numpy kernel over Arrow batches in
+:mod:`~flink_kmeans_clustering_spark.functions.vector`
+(``assign_nearest``, ``label_sums``, ``nearest_dist2_sum``); the n-d
+operators all build from it.
 
 Semantic fine print preserved from the reference (SURVEY.md §3.4):
 
@@ -53,14 +53,17 @@ from __future__ import annotations
 
 import math
 import random
-import uuid
 from collections.abc import Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from flink_kmeans_clustering_spark.functions.vector import nearest_codeword_sql
+from flink_kmeans_clustering_spark.functions.vector import (
+    assign_nearest,
+    label_sums,
+    nearest_dist2_sum,
+)
 from flink_kmeans_clustering_spark.operators.common import (
     array_lit_sql,
     quote_ident,
@@ -810,78 +813,27 @@ def assign_points_nd(
 ) -> DataFrame:
     """O1/O7 assignment generalized from (x, y) to a vector column —
     the reference hardcodes 2-D; the Spark-native data model is
-    ``array<double>`` (SURVEY §1.3), and the same literal-argmin shape
-    carries over (:func:`assign_points_nd_sql`): the k×d centroid
-    matrix enters the plan as ONE array-of-arrays literal, dist² folds
-    ``zip_with`` squared diffs left-to-right (index order — an
-    independent engine summing the same doubles in the same order
-    lands on the same double), and ``array_min`` over (dist², id)
-    structs keeps the strict-< lowest-id tie-break.  A narrow map: no
-    join, no shuffle, any dim.
+    ``array<double>`` (SURVEY §1.3).  One ``mapInArrow`` runs the numpy
+    nearest-codeword kernel
+    (:func:`~flink_kmeans_clustering_spark.functions.vector.assign_nearest`)
+    over each Arrow batch: dist² folds the squared differences in index
+    order from 0.0, so an independent engine summing the same doubles in
+    the same order lands on the same double, and the scan keeps the
+    strict-< lowest-id tie-break.  A narrow map: no join, no shuffle,
+    any dim.  A row whose vector is NULL, of another length or holds a
+    NULL element has a NULL dist² and takes the lowest id.
 
     ``centroid_ids`` (default: positions) are the labels EMITTED — pass
     the surviving original ids in an iterative loop so labels stay
     persistent when a cluster empties (the 2-D :func:`assign_points`
-    semantics; the min-struct tie-break then runs on the original id).
+    semantics; the tie-break then runs on the original id).  A
+    non-finite centroid raises ``ValueError``.
     """
-    argmin = (
-        assign_points_nd_sql(centroids, vec_col=vec_col, centroid_ids=centroid_ids)
-        if centroids
-        else None
+    if not centroids:
+        return _with_argmin(vectors, None, cluster_col, dist2_col)
+    return assign_nearest(
+        vectors, vec_col, centroids, centroid_ids, cluster_col, dist2_col
     )
-    return _with_argmin(vectors, argmin, cluster_col, dist2_col)
-
-
-def assign_points_nd_sql(
-    centroids: Sequence[Sequence[float]],
-    vec_col: str = "embedding",
-    centroid_ids: Sequence[int] | None = None,
-) -> str:
-    """The n-d nearest-centroid argmin as one SQL expression: a
-    ``(dist2, cluster)`` struct, read as ``(expr).cluster`` /
-    ``(expr).dist2``.  :func:`assign_points_nd` and the
-    :func:`lloyd_nd` / :func:`spherical_kmeans_nd` iterations all build
-    from this text; an iterative caller pastes it into its
-    per-iteration ``spark.sql`` (one ~2 ms parse instead of ~0.25 s of
-    py4j Column composition per iteration at k=8, d=64).
-
-    The vector is cast to ``array<double>`` once per row and let-bound
-    outside the per-candidate lambda by
-    :func:`~flink_kmeans_clustering_spark.functions.vector.nearest_codeword_sql`
-    (no O(dim) cast re-inlined k times per row, no capture of a column
-    named like a lambda variable).  ``vec_col`` is backtick-quoted;
-    ``centroids`` must be non-empty."""
-    if centroid_ids is None:
-        centroid_ids = range(len(centroids))
-    return nearest_codeword_sql(
-        f"transform({quote_ident(vec_col)}, x -> CAST(x AS DOUBLE))",
-        array_lit_sql([[float(v) for v in c] for c in centroids]),
-        len(centroids),
-        array_lit_sql([int(i) for i in centroid_ids], kind="int"),
-    )
-
-
-def _nd_sum_sql(dim: int, vec_col: str, cast: str = "DOUBLE") -> list[str]:
-    """The per-dim partial sums of the n-d mean update, as SQL
-    aggregate items ``sum(...) AS _s{j}``: each component is its own
-    SUM in one HashAggregate, so the shuffle carries k rows × (dim+1)
-    values — not the N×dim row blowup a posexplode would ship.
-
-    Each SUM input casts the ELEMENT, not the array: a whole-array
-    ``transform`` cast here would be re-inlined into all ``dim``
-    aggregate inputs (O(dim²) interpreted work per row and a dim×
-    bigger codegen unit); the per-element float→double cast is exact.
-    ``cast`` is the accumulator type: ``DOUBLE`` (raw double sums, the
-    :func:`lloyd_nd` update) or e.g. ``DECIMAL(25,8)`` (order-exact
-    sums, the :func:`spherical_kmeans_nd` update)."""
-    v = quote_ident(vec_col)
-    items = []
-    for j in range(dim):
-        term = f"CAST(element_at({v}, {j + 1}) AS DOUBLE)"
-        if cast != "DOUBLE":
-            term = f"CAST({term} AS {cast})"
-        items.append(f"sum({term}) AS _s{j}")
-    return items
 
 
 def update_centroids_nd(
@@ -891,24 +843,15 @@ def update_centroids_nd(
     cluster_col: str = "cluster",
 ) -> DataFrame:
     """O3/O4 mean update for vector columns WITHOUT exploding: the
-    :func:`_nd_sum_sql` partial sums grouped by cluster, then the mean
-    array ``Σ/n``.  Returns (id, centroid array<double>, n)."""
-    agg = assigned.groupBy(F.col(cluster_col).alias("id")).agg(
-        *[F.expr(s) for s in _nd_sum_sql(dim, vec_col)],
-        F.count(F.lit(1)).alias("n"),
-    )
-    mean = ", ".join(f"_s{j} / n" for j in range(dim))
-    return agg.selectExpr("id", f"array({mean}) AS centroid", "n")
-
-
-def _nd_iteration_sql(assign: str, sums: str, vec_col: str, view: str) -> str:
-    """One n-d superstep as ONE ``spark.sql`` text: assign each row of
-    ``view``, then the per-cluster partial sums and count."""
-    v = quote_ident(vec_col)
-    return (
-        f"SELECT cluster AS id, {sums}, count(1) AS n "
-        f"FROM (SELECT ({assign}).cluster AS cluster, {v} "
-        f"FROM {view}) GROUP BY cluster"
+    kernel's per-partition sums
+    (:func:`~flink_kmeans_clustering_spark.functions.vector.label_sums`,
+    one job, no exchange), added on the driver, then the mean ``Σ/n``.
+    Returns (id, centroid array<double>, n) as a driver-side frame."""
+    sums = label_sums(assigned, vec_col, dim, label_col=cluster_col)
+    rows = [(i, (s / n).tolist(), n) for i, (n, s, _, _) in sorted(sums.items())]
+    id_type = assigned.select(quote_ident(cluster_col)).schema[0].dataType.simpleString()
+    return assigned.sparkSession.createDataFrame(
+        rows, f"id {id_type}, centroid array<double>, n bigint"
     )
 
 
@@ -927,56 +870,48 @@ def lloyd_nd(
     not recycled by position), matching the 2-D :func:`lloyd` and the
     DuckDB oracle's id-carrying CTE chain.
 
-    Each iteration is ONE ``spark.sql`` parse over a temp view of the
-    input (:func:`assign_points_nd_sql` + :func:`_nd_sum_sql`); the
-    view resolves to the same analyzed plan every round, so the
-    ``cache()`` serves every scan.  AQE is off and
-    ``spark.sql.shuffle.partitions`` is k for the loop (restored
-    afterwards): the per-iteration exchange carries ≤k rows, so 32
-    reduce tasks for 8 rows would be pure job-floor, and map-side width
-    is unaffected."""
+    Each superstep is ONE ``mapInArrow`` stage with no exchange
+    (:func:`~flink_kmeans_clustering_spark.functions.vector.label_sums`
+    with the current centroids as the codebook): every partition
+    assigns its rows with the numpy kernel and emits its k×(d+1) sums
+    and counts, folded in row order; the driver adds them in partition
+    order and divides, so the centroids do not depend on scheduling.
+    The final WCSS is a row-order fold per partition, added in
+    partition order
+    (:func:`~flink_kmeans_clustering_spark.functions.vector.nearest_dist2_sum`).
+    No session conf is touched.  With ``cache`` the input is cached for
+    the loop and released afterwards, unless the caller had cached it."""
+    cache = cache and not vectors.is_cached
     if cache:
         vectors = vectors.cache()
-    spark = vectors.sparkSession
     dim = len(init_centroids[0])
     current = [list(map(float, c)) for c in init_centroids]
     ids = list(range(len(current)))
-    # raw double sums of float32-exact values
-    sums = ", ".join(_nd_sum_sql(dim, vec_col))
-    view = f"_lloyd_nd_{uuid.uuid4().hex[:12]}"
-    vectors.createOrReplaceTempView(view)
-    loop_conf = {
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.shuffle.partitions": str(max(1, len(current))),
-    }
     try:
-        with session_conf(spark, loop_conf):
-            for _ in range(max_iterations):
-                assign = assign_points_nd_sql(
-                    current, vec_col=vec_col, centroid_ids=ids
-                )
-                rows = spark.sql(
-                    _nd_iteration_sql(assign, sums, vec_col, view)
-                ).collect()
-                rows.sort(key=lambda r: r["id"])
-                ids = [int(r["id"]) for r in rows]
-                # driver-side mean: float(_sj) / n, one IEEE double
-                # division per component
-                current = [
-                    [float(r[f"_s{j}"]) / r["n"] for j in range(dim)]
-                    for r in rows
-                ]
-            assign = assign_points_nd_sql(
-                current, vec_col=vec_col, centroid_ids=ids
-            )
-            [row] = spark.sql(
-                f"SELECT sum(({assign}).dist2) AS wcss FROM {view}"
-            ).collect()
+        for _ in range(max_iterations):
+            sums = label_sums(vectors, vec_col, dim, codebook=current, ids=ids)
+            ids = sorted(sums)
+            # one IEEE double division per component
+            current = [(sums[i][1] / sums[i][0]).tolist() for i in ids]
+        wcss = nearest_dist2_sum(vectors, vec_col, current, ids)
     finally:
-        spark.catalog.dropTempView(view)
         if cache:
             vectors.unpersist()
-    return current, float(row["wcss"] or 0.0), ids
+    return current, wcss, ids
+
+
+def _decimal_sums_sql(dim: int, vec_col: str) -> list[str]:
+    """The per-dim DECIMAL(25,8) sums of the spherical mean update, as
+    SQL aggregate items ``sum(...) AS _s{j}``: each component is its own
+    SUM in one HashAggregate, so the shuffle carries k rows × (dim+1)
+    values — not the N×dim row blowup a posexplode would ship.  Each
+    SUM input casts the ELEMENT, not the array: a whole-array
+    ``transform`` cast would be re-inlined into all ``dim`` inputs."""
+    v = quote_ident(vec_col)
+    return [
+        f"sum(CAST(CAST(element_at({v}, {j + 1}) AS DOUBLE) AS DECIMAL(25,8))) AS _s{j}"
+        for j in range(dim)
+    ]
 
 
 def normalize_unit_nd(
@@ -1031,21 +966,25 @@ def spherical_kmeans_nd(
     would drag centroids off the shell and cosine cells skew.
 
     Engine-replayable by construction: assignment is
-    :func:`assign_points_nd_sql` (argmin of index-ordered dist² folds on
+    :func:`assign_points_nd` (argmin of index-ordered dist² folds on
     unit vectors — monotone in cosine); per-dim mean sums accumulate in
-    DECIMAL(25,8) (normalized components are full-mantissa doubles, so
-    plain double SUMs would be partition-order-dependent — the float32
-    exactness that lets :func:`lloyd_nd` use raw sums does NOT carry
-    over); renormalization happens driver-side on the k collected
-    means with a sequential left-fold, matching an oracle's list_sum.
-    Clusters that empty OR whose mean is exactly zero drop (reference
-    drop-semantics extended with the spherical degeneracy).
+    DECIMAL(25,8) SQL sums over those labels (normalized components are
+    full-mantissa doubles, so plain double sums would depend on the
+    partition order — the float32 exactness behind :func:`lloyd_nd`'s
+    double sums does NOT carry over, and a numpy decimal sum would have
+    to reproduce Spark's double-to-decimal cast exactly);
+    renormalization happens driver-side on the k collected means with a
+    sequential left-fold, matching an oracle's list_sum.  Clusters that
+    empty OR whose mean is exactly zero drop (reference drop-semantics
+    extended with the spherical degeneracy).  For the loop AQE is off
+    and ``spark.sql.shuffle.partitions`` is k (restored afterwards):
+    each superstep's exchange carries at most k rows per partition.
 
     Returns (unit centroids ordered by id, surviving centroid ids).
     """
     unit = normalize_unit_nd(
         vectors.select("*"), vec_col=vec_col
-    )
+    ).select(quote_ident(vec_col))
     if cache:
         unit = unit.cache()
     dim = len(init_centroids[0])
@@ -1062,12 +1001,8 @@ def spherical_kmeans_nd(
     current = [u for u in (_unitize(c) for c in init_centroids) if u]
     ids = list(range(len(current)))
     spark = vectors.sparkSession
-    # order-exact decimal sums; vec_col is already array<double> after
-    # normalize_unit_nd, so the element cast to DOUBLE is a no-op
-    sums = ", ".join(_nd_sum_sql(dim, vec_col, cast="DECIMAL(25,8)"))
-    # one temp view + one spark.sql parse per iteration — see lloyd_nd
-    view = f"_spherical_{uuid.uuid4().hex[:12]}"
-    unit.createOrReplaceTempView(view)
+    # order-exact decimal sums, built once for every superstep
+    sums = [F.expr(item) for item in _decimal_sums_sql(dim, vec_col)]
     loop_conf = {
         "spark.sql.adaptive.enabled": "false",
         "spark.sql.shuffle.partitions": str(max(1, len(current))),
@@ -1075,12 +1010,15 @@ def spherical_kmeans_nd(
     try:
         with session_conf(spark, loop_conf):
             for _ in range(max_iterations):
-                assign = assign_points_nd_sql(
-                    current, vec_col=vec_col, centroid_ids=ids
+                rows = (
+                    assign_points_nd(
+                        unit, current, vec_col=vec_col,
+                        cluster_col="_cluster", centroid_ids=ids,
+                    )
+                    .groupBy(F.col("_cluster").alias("id"))
+                    .agg(*sums, F.count(F.lit(1)).alias("n"))
+                    .collect()
                 )
-                rows = spark.sql(
-                    _nd_iteration_sql(assign, sums, vec_col, view)
-                ).collect()
                 rows.sort(key=lambda r: r["id"])
                 nxt_ids, nxt = [], []
                 for r in rows:
@@ -1091,7 +1029,6 @@ def spherical_kmeans_nd(
                         nxt.append(u)
                 ids, current = nxt_ids, nxt
     finally:
-        spark.catalog.dropTempView(view)
         if cache:
             unit.unpersist()
     return current, ids

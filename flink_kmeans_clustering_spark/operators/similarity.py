@@ -22,17 +22,19 @@ encoding by :func:`_pq_codes_sql`; and one ADC shortlist + exact-rerank
 tail, :func:`_adc_rerank`, shared by :func:`ann_pq` and
 :func:`ann_ivfpq`.
 
-All vector arithmetic is JVM-side (functions.vector): every squared-L2
-fold and nearest-codeword argmin here is built by its
+The per-row vector arithmetic is JVM-side (functions.vector): every
+squared-L2 fold and nearest-codeword argmin here is built by its
 ``squared_l2_sql`` / ``nearest_codeword_sql``.  Query vectors enter the
-plan as literal arrays.
+plan as literal arrays.  Cell means (:func:`cell_centroids`) are the
+numpy kernel's per-partition sums (``label_sums``), added on the
+driver.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from flink_kmeans_clustering_spark.operators.common import (
@@ -45,6 +47,7 @@ from flink_kmeans_clustering_spark.functions.vector import (
     cosine_similarity,
     dot,
     l2_norm,
+    label_sums,
     nearest_codeword_sql,
     squared_l2_sql,
 )
@@ -88,23 +91,24 @@ def cell_centroids(
 ) -> DataFrame:
     """Per-cell mean vector: (cell, centroid array<double>, n).
 
-    posexplode → (cell, dim) partial-sum aggregation → re-assemble via
-    sorted collect_list.  The exploded shuffle is (rows × dim) but
-    map-side combine collapses it to (cells × dim) before the exchange.
+    The cell sums are the numpy kernel's per-partition sums
+    (:func:`~flink_kmeans_clustering_spark.functions.vector.label_sums`:
+    one job, no exchange), added on the driver in partition order, and
+    the result is a driver-side frame.  ``centroid[j]`` is the mean of
+    the cell's non-null elements at index j, as long as the cell's
+    longest vector (NULL where it has none); ``n`` counts the cell's
+    rows.  Rows with a NULL cell and cells with no element are left
+    out.
     """
-    ex = df.select(
-        F.col(cell_col).alias("cell"),
-        F.posexplode(F.col(vec_col).cast("array<double>")).alias("pos", "v"),
-    )
-    per_dim = ex.groupBy("cell", "pos").agg(
-        F.avg("v").alias("mean_v"), F.count(F.lit(1)).alias("n")
-    )
-    return per_dim.groupBy("cell").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "mean_v"))),
-            lambda s: s["mean_v"],
-        ).alias("centroid"),
-        F.first("n").alias("n"),
+    sums = label_sums(df, vec_col, label_col=cell_col)
+    rows = [
+        (cell, [float(s[j] / c[j]) if c[j] else None for j in range(w)], n)
+        for cell, (n, s, c, w) in sorted(sums.items())
+        if w > 0
+    ]
+    cell_type = df.select(quote_ident(cell_col)).schema[0].dataType.simpleString()
+    return df.sparkSession.createDataFrame(
+        rows, f"cell {cell_type}, centroid array<double>, n bigint"
     )
 
 
@@ -173,29 +177,34 @@ def knn_join(
 
     Output: (query_id, neighbor_id, cosine, rnk), rnk in 1..k.
     """
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).cast("array<double>").alias("_qv"),
-    )
+    q = _query_batch(queries, query_id_col, query_vec_col)
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("_v"),
     )
+    return _top_k_per_query(c.join(F.broadcast(q)), k, round_to)
+
+
+def _query_batch(queries: DataFrame, query_id_col: str, query_vec_col: str) -> DataFrame:
+    return queries.select(
+        F.col(query_id_col).alias("query_id"),
+        F.col(query_vec_col).cast("array<double>").alias("_qv"),
+    )
+
+
+def _top_k_per_query(pairs: DataFrame, k: int, round_to: int | None) -> DataFrame:
+    """The tail :func:`knn_join` and :func:`ivf_knn_join` share: the
+    cosine of each (``_v``, ``_qv``) pair, rounded, NULLs dropped, then
+    the top k per query by (cosine desc, neighbor_id asc) through a
+    ``row_number() ≤ k`` window (``WindowGroupLimit``)."""
     sim = cosine_similarity(F.col("_v"), F.col("_qv"))
     if round_to is not None:
         sim = F.round(sim, round_to)
-    scored = (
-        c.join(F.broadcast(q))
-        .select("query_id", "neighbor_id", sim.alias("cosine"))
-        .filter(F.col("cosine").isNotNull())
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.col("neighbor_id")
-    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
     return (
-        scored.withColumn("rnk", F.row_number().over(w))
+        pairs.select("query_id", "neighbor_id", sim.alias("cosine"))
+        .filter(F.col("cosine").isNotNull())
+        .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select("query_id", "neighbor_id", "cosine", "rnk")
     )
@@ -208,10 +217,17 @@ def normalize_vectors(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     product — the standard preparation pass for a similarity corpus.
     """
     v = F.col(vec_col).cast("array<double>")
-    nrm = l2_norm(v)
+    # ‖v‖² folds once per row and reaches the division through the
+    # finish lambda; a norm column read inside ``transform`` would be
+    # refolded for every element (docs/TUNING.md, third corollary)
     return df.withColumn(
         f"{vec_col}_norm",
-        F.when(nrm != 0.0, F.transform(v, lambda x: x / nrm)),
+        F.aggregate(
+            v,
+            F.lit(0.0),
+            lambda acc, x: acc + x * x,
+            lambda sq: F.when(sq != 0.0, F.transform(v, lambda x: x / F.sqrt(sq))),
+        ),
     )
 
 
@@ -742,9 +758,13 @@ def ivf_knn_join(
 ) -> DataFrame:
     """Batch IVF ANN: per-query probed-cell top-k, fully distributed —
     the batch twin of :func:`ann_search` (which ranks cells driver-side
-    for ONE query literal).  No driver loop anywhere: cell centroids,
-    per-query cell ranking, the probe join, and the per-query top-k are
-    all DataFrame ops, so the whole thing is one SQL-expressible plan.
+    for ONE query literal).  The cell means come first, from one job
+    over the corpus: the numpy kernel's per-partition sums
+    (:func:`cell_centroids`, no exchange), added on the driver.  The
+    per-query cell ranking, the probe join and the per-query top-k are
+    then one lazy DataFrame plan; collecting it reads ``corpus`` a
+    second time (a lazy corpus, such as an ``assign_points_nd`` output,
+    recomputes its cells then).
 
     Execution shape at 100 TB: centroids are |cells| rows, the ranked
     (query, cell) probe list is |queries|·n_probe rows — both broadcast;
@@ -763,13 +783,8 @@ def ivf_knn_join(
 
     Output: (query_id, neighbor_id, cosine, rnk), rnk in 1..k.
     """
-    from pyspark.sql import Window
-
     cents = cell_centroids(corpus, cell_col, vec_col).select("cell", "centroid")
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).cast("array<double>").alias("_qv"),
-    )
+    q = _query_batch(queries, query_id_col, query_vec_col)
     csim = cosine_similarity(F.col("centroid"), F.col("_qv"))
     wq = Window.partitionBy("query_id").orderBy(F.desc("_csim"), F.col("cell"))
     probes = (
@@ -784,21 +799,8 @@ def ivf_knn_join(
         F.col(cell_col).alias("_cell"),
         F.col(vec_col).cast("array<double>").alias("_v"),
     )
-    sim = cosine_similarity(F.col("_v"), F.col("_qv"))
-    if round_to is not None:
-        sim = F.round(sim, round_to)
-    cand = (
-        c.join(F.broadcast(probes), F.col("_cell") == F.col("cell"))
-        .select("query_id", "neighbor_id", sim.alias("cosine"))
-        .filter(F.col("cosine").isNotNull())
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.col("neighbor_id")
-    )
-    return (
-        cand.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
+    return _top_k_per_query(
+        c.join(F.broadcast(probes), F.col("_cell") == F.col("cell")), k, round_to
     )
 
 
@@ -936,8 +938,6 @@ def matryoshka_recall(
         )
         .filter(F.col("cosine").isNotNull())
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("query_id", "_lvl").orderBy(
         F.desc("cosine"), F.col("neighbor_id")
     )
@@ -1106,8 +1106,6 @@ def ann_mrr(
     Output: (query_id, truth_rank, rr) — truth_rank 0 and rr 0.0 when
     the exact top-1 is outside the approximate top-k.
     """
-    from pyspark.sql import Window
-
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.col("neighbor_id")
     )

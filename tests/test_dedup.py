@@ -511,6 +511,34 @@ def test_semantic_blocks_sparse_ids_get_full_seed_count(spark):
     assert got == {100: 100, 200: 200, 300: 100, 400: 200}
 
 
+@pytest.mark.parametrize(
+    "k,ansi", [(2, "false"), (129, "true")], ids=["literal", "broadcast"]
+)
+def test_semantic_blocks_keep_64bit_ids(spark, k, ansi):
+    """A block id is its seed's 64-bit id, in the id's own type: an INT
+    cast raised CAST_OVERFLOW under ANSI and, with ANSI off, gave seeds
+    2^32 apart the same truncated block id."""
+    from pyspark.sql.types import LongType
+
+    from flink_kmeans_clustering_spark.operators.common import session_conf
+    from flink_kmeans_clustering_spark.operators.dedup import semantic_blocks
+
+    base = 1 << 40
+    a, b = base + 1, base + 1 + (1 << 32)  # equal in their low 32 bits
+    df = spark.createDataFrame(
+        [(a, [1.0, 0.0]), (b, [0.0, 1.0]), (b + 1, [0.95, 0.05]), (b + 2, [0.05, 0.95])],
+        "vec_id long, embedding array<double>",
+    )
+    with session_conf(spark, {"spark.sql.ansi.enabled": ansi}):
+        out = semantic_blocks(df, k=k)
+        got = {r["id"]: r["blk"] for r in out.collect()}
+    assert out.schema["blk"].dataType == LongType()
+    if k == 2:
+        assert got == {a: a, b: b, b + 1: a, b + 2: b}
+    else:  # every row seeds its own block
+        assert got == {i: i for i in (a, b, b + 1, b + 2)}
+
+
 def test_two_stage_gemm_candidates_match_exact(spark):
     """The GEMM-shortlisted candidate stage plus the Jaccard verify emit
     the same pairs AND the same (fold, round-6) cosine and Jaccard

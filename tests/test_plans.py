@@ -931,11 +931,46 @@ def test_nd_assignment_narrow_and_update_single_shuffle(spark):
     assert "Generate" not in explain_str(upd), "vector must not explode"
 
 
+def _lambda_bodies(plan: str) -> list[str]:
+    """The text of every ``lambdafunction(...)`` in a plan string."""
+    bodies, start = [], plan.find("lambdafunction(")
+    while start >= 0:
+        i, depth = start + len("lambdafunction("), 1
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        bodies.append(plan[start:i])
+        start = plan.find("lambdafunction(", start + 1)
+    return bodies
+
+
+def test_normalize_vectors_folds_the_norm_once_per_row(spark):
+    """normalize_vectors folds the norm once per row: no lambda of the
+    optimized plan holds an ``aggregate`` (a norm read inside the
+    per-element ``transform`` lambda is refolded for every element, d²
+    work per row), and the values are unchanged."""
+    from flink_kmeans_clustering_spark.operators.similarity import normalize_vectors
+
+    df = spark.createDataFrame(
+        [(0, [3.0, 4.0]), (1, [0.0, 0.0]), (2, None)],
+        "vec_id long, embedding array<double>",
+    )
+    out = normalize_vectors(df)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "aggregate(" in plan and "transform(" in plan, plan
+    for body in _lambda_bodies(plan):
+        assert "aggregate(" not in body, plan
+    got = {r["vec_id"]: r["embedding_norm"] for r in out.collect()}
+    assert got == {0: [0.6, 0.8], 1: None, 2: None}
+
+
 def test_assignment_with_dist2_evaluates_argmin_once(spark):
     """Reading both cluster and dist² must not duplicate the argmin: the
-    2-D and the n-d assignment each carry exactly one
-    array_min in the optimized plan (two fields read off one inline
-    expression would evaluate the k-candidate scan twice per row)."""
+    2-D assignment carries exactly one array_min in the optimized plan
+    (two fields read off one inline expression would evaluate the
+    k-candidate scan twice per row), and the n-d assignment exactly one
+    MapInArrow node (the numpy kernel emits both columns in one pass)
+    and no array_min."""
     from flink_kmeans_clustering_spark.operators.kmeans import assign_points_nd
 
     def n_argmin(df) -> int:
@@ -951,7 +986,8 @@ def test_assignment_with_dist2_evaluates_argmin_once(spark):
         for r in emb.orderBy("vec_id").limit(4).collect()
     ]
     an = assign_points_nd(emb, init, dist2_col="d2")
-    assert n_argmin(an) == 1, explain_str(an)
+    opt = an._jdf.queryExecution().optimizedPlan().toString()
+    assert n_argmin(an) == 0 and opt.count("MapInArrow") == 1, opt
 
 
 def test_pq_scoring_is_narrow_takeordered(spark):

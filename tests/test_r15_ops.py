@@ -1,10 +1,11 @@
-"""Equality pins for the SQL-text n-d K-Means kernels.
+"""Equality pins for the n-d K-Means kernels.
 
-The n-d argmin (assign_points_nd_sql) and the lloyd_nd / spherical
-iterations are authored as SQL text (one parse per iteration instead of
-~0.25 s of py4j Column composition).  These tests pin them, on real
-data, against independent references: a pure-Python argmin, and
-Column-composed replays of the update step.
+The n-d argmin and the lloyd_nd partial sums are one numpy kernel over
+Arrow batches (functions.vector: nearest_codeword, label_sums); the
+spherical iteration's DECIMAL sums are SQL text over its labels.  These
+tests pin them, on real data, against independent references: a
+pure-Python argmin, a pure-Python replay of the sums in the kernel's
+fold order, and Column-composed replays of the update step.
 """
 
 import pytest
@@ -31,15 +32,19 @@ def _nearest_python(vec, cents, ids):
 
 
 def test_assign_nd_sql_matches_python_reference(spark, emb):
-    """assign_points_nd and its SQL text (assign_points_nd_sql, as the
-    nd loops paste it into spark.sql) == a pure-Python reference,
-    bit-for-bit: same cluster AND same dist² double for every row (the
-    fold order and the strict-< struct argmin must survive the SQL
-    authoring)."""
-    from flink_kmeans_clustering_spark.operators.kmeans import (
-        assign_points_nd,
-        assign_points_nd_sql,
+    """assign_points_nd (the kernel in mapInArrow) and the kernel called
+    directly on an Arrow batch of the same rows == a pure-Python
+    reference, bit-for-bit: same cluster AND same dist² double for every
+    row (the fold order and the strict-< lowest-id argmin must survive
+    the vectorization)."""
+    import numpy as np
+    import pyarrow as pa
+
+    from flink_kmeans_clustering_spark.functions.vector import (
+        nearest_codeword,
+        vector_block,
     )
+    from flink_kmeans_clustering_spark.operators.kmeans import assign_points_nd
 
     vec = emb.select("vec_id", "embedding")
     data = vec.collect()
@@ -56,28 +61,28 @@ def test_assign_nd_sql_matches_python_reference(spark, emb):
     op_form = assign_points_nd(
         vec, cents, dist2_col="_d2", centroid_ids=ids
     ).select("vec_id", "cluster", "_d2")
-    sql = assign_points_nd_sql(cents, centroid_ids=ids)
-    view = "_t_assign_pin"
-    vec.createOrReplaceTempView(view)
-    try:
-        sql_form = spark.sql(
-            f"SELECT vec_id, ({sql}).cluster AS cluster, "
-            f"({sql}).dist2 AS _d2 FROM {view}"
-        )
-        for df in (op_form, sql_form):
-            got = {
-                r["vec_id"]: (r["cluster"], r["_d2"]) for r in df.collect()
-            }
-            assert got == ref  # exact equality, doubles included
-    finally:
-        spark.catalog.dropTempView(view)
+    got = {r["vec_id"]: (r["cluster"], r["_d2"]) for r in op_form.collect()}
+    assert got == ref  # exact equality, doubles included
+
+    col = pa.array([r["embedding"] for r in data], pa.list_(pa.float32()))
+    values, _, whole, _ = vector_block(col, 64)
+    cluster, d2 = nearest_codeword(
+        values, whole, np.asarray(cents), np.asarray(ids, np.int32)
+    )
+    direct = {
+        r["vec_id"]: (int(c), float(d)) for r, c, d in zip(data, cluster, d2)
+    }
+    assert direct == ref
 
 
 def test_lloyd_nd_sql_iteration_matches_column_replay(spark, emb):
-    """One lloyd_nd SQL iteration == a replay through assign_points_nd
-    (pinned against Python above) and Column-composed per-dim sums:
-    same surviving ids, bit-identical per-dim sums and driver-side
-    means."""
+    """One lloyd_nd iteration (one mapInArrow stage: the kernel's
+    per-partition sums, added on the driver) == (a) a pure-Python replay
+    in the kernel's fold order — each partition's rows folded in row
+    order from 0.0, partitions added in partition order — and (b) a
+    replay through assign_points_nd (pinned against Python above) and
+    Column-composed per-dim Spark SUMs: same surviving ids,
+    bit-identical per-dim sums, driver-side means and WCSS."""
     from pyspark.sql import functions as F
 
     from flink_kmeans_clustering_spark.operators.kmeans import (
@@ -89,13 +94,41 @@ def test_lloyd_nd_sql_iteration_matches_column_replay(spark, emb):
     init = [[float(v) for v in r["embedding"]] for r in init_rows]
     vec = emb.select("vec_id", "embedding")
 
-    # the shipped (SQL-text) loop, one iteration
+    # the shipped (kernel) loop, one iteration
     cents_new, wcss_new, ids_new = lloyd_nd(
         vec, init, max_iterations=1, cache=False
     )
 
-    # Column-form replay of the same iteration: per-dim double SUMs of
-    # the element-wise cast, then the mean array
+    # (a) pure-Python replay in the kernel's fold order
+    rows = vec.select(F.spark_partition_id().alias("p"), "embedding").collect()
+    parts: dict = {}
+    for r in rows:  # collect order: partition order, then row order
+        parts.setdefault(r["p"], []).append([float(v) for v in r["embedding"]])
+    ids8 = list(range(8))
+    total: dict = {}
+    for p in sorted(parts):
+        acc: dict = {}
+        for v in parts[p]:
+            cid, _ = _nearest_python(v, init, ids8)
+            n, s = acc.get(cid, (0, [0.0] * 64))
+            acc[cid] = (n + 1, [a + x for a, x in zip(s, v)])
+        for cid, (n, s) in acc.items():
+            n0, s0 = total.get(cid, (0, None))
+            total[cid] = (n0 + n, s if s0 is None else [a + b for a, b in zip(s0, s)])
+    ids_py = sorted(total)
+    cents_py = [[x / total[i][0] for x in total[i][1]] for i in ids_py]
+    wcss_py = 0.0
+    for p in sorted(parts):
+        wp = 0.0
+        for v in parts[p]:
+            wp = wp + _nearest_python(v, cents_py, ids_py)[1]
+        wcss_py = wcss_py + wp
+    assert ids_new == ids_py
+    assert cents_new == cents_py  # bit-identical doubles
+    assert wcss_new == wcss_py
+
+    # (b) Column-form replay of the same iteration: per-dim double SUMs
+    # of the element-wise cast, then the mean array
     sums = [
         F.sum(F.element_at(F.col("embedding"), j + 1).cast("double")).alias(
             f"_s{j}"
@@ -124,8 +157,9 @@ def test_lloyd_nd_sql_iteration_matches_column_replay(spark, emb):
 
 
 def test_spherical_sql_iteration_matches_column_replay(spark, emb):
-    """One spherical iteration through the SQL text == the Column-form
-    decimal-sum replay (unitization happens driver-side in both)."""
+    """One spherical iteration (kernel labels, SQL-text DECIMAL sums) ==
+    the Column-form decimal-sum replay (unitization happens driver-side
+    in both)."""
     from pyspark.sql import functions as F
 
     from flink_kmeans_clustering_spark.operators.kmeans import (
