@@ -2,9 +2,10 @@
 
 Column expressions stay JVM-side, inside whole-stage codegen where they
 can (built-in ``pyspark.sql.functions`` compositions, higher-order array
-functions).  The one Python stage is the n-d nearest-codeword kernel in
-``vector`` (numpy over Arrow batches in ``mapInArrow``), which replaced
-an interpreted k·d higher-order argmin.
+functions).  The one Python stage is the nearest-codeword kernel in
+``vector`` (numpy over Arrow batches in ``mapInArrow``) behind n-d
+K-Means, the IVF cell means and product quantization, which replaced an
+interpreted k·d higher-order argmin.
 """
 
 from flink_kmeans_clustering_spark.functions.vector import (
@@ -13,11 +14,7 @@ from flink_kmeans_clustering_spark.functions.vector import (
     l2_norm,
 )
 from flink_kmeans_clustering_spark.functions.text import ngram_shingles, tokenize
-from flink_kmeans_clustering_spark.functions.hashing import (
-    minhash_signature,
-    signature_similarity,
-    simhash64,
-)
+from flink_kmeans_clustering_spark.functions.hashing import signature_similarity
 
 __all__ = [
     "cosine_similarity",
@@ -25,7 +22,5 @@ __all__ = [
     "l2_norm",
     "ngram_shingles",
     "tokenize",
-    "minhash_signature",
     "signature_similarity",
-    "simhash64",
 ]

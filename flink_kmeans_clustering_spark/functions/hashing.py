@@ -1,4 +1,7 @@
-"""Deterministic hashing primitives: MinHash signatures and SimHash.
+"""Deterministic hashing primitives over MinHash signatures and SimHash
+values: signature similarity, LSH band digests, Hamming distance and
+SimHash chunks.  The signatures themselves are built by the dedup
+operators (explode + per-lane MIN aggregates, ``operators.dedup``).
 
 All hashing runs JVM-side on ``xxhash64`` (a Catalyst expression), so
 signatures are computed inside codegen during the scan — the shape that
@@ -30,23 +33,6 @@ from pyspark.sql import functions as F
 # not the production default.
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature (array<bigint>, length ``num_hashes``).
-
-    sig[i] = min over shingles s of xxhash64(i, s).  Empty shingle sets
-    get NULL entries (array_min of empty) — callers should filter empty
-    documents first.
-    """
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(shingles, lambda s, i=i: F.xxhash64(F.lit(i), s))
-            )
-            for i in range(num_hashes)
-        ]
-    )
-
-
 def signature_similarity(sig_a: Column, sig_b: Column) -> Column:
     """Estimated Jaccard: fraction of equal MinHash signature positions."""
     eq = F.zip_with(sig_a, sig_b, lambda a, b: F.when(a == b, 1).otherwise(0))
@@ -71,47 +57,6 @@ def band_hashes(sig: Column, bands: int, rows_per_band: int) -> Column:
             for j in range(bands)
         ]
     )
-
-
-def _token_bit_votes(t: Column) -> Column:
-    """±1 vote per bit lane from one token's xxhash64 (array<int>, len 64)."""
-    h = F.xxhash64(t)
-    return F.array(
-        *[
-            F.shiftright(h, b).bitwiseAND(F.lit(1)).cast("int") * 2 - 1
-            for b in range(64)
-        ]
-    )
-
-
-def simhash64(tokens: Column) -> Column:
-    """64-bit SimHash of a token array, as bigint.
-
-    Per token, xxhash64 supplies 64 bits; each bit votes ±1 into its
-    lane; the final bit is the vote's sign.  Everything is a
-    higher-order expression over (token × bit-lane) — JVM-side only.
-    """
-    votes = F.aggregate(
-        tokens,
-        F.array_repeat(F.lit(0), 64),
-        lambda acc, t: F.zip_with(acc, _token_bit_votes(t), lambda a, v: a + v),
-    )
-    terms = [
-        F.when(F.element_at(votes, b + 1) > 0, F.lit(1 << b).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        for b in range(63)
-    ]
-    # bit 63 would overflow 1<<63 as a positive long; use the sign bit value
-    terms.append(
-        F.when(
-            F.element_at(votes, 64) > 0, F.lit(-(1 << 63)).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-    )
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
 
 
 def hamming64(a: Column, b: Column) -> Column:

@@ -5,19 +5,21 @@ Two homes, picked by what the caller's rows need:
 * JVM-side SQL, for light per-row arithmetic.  ``zip_with`` +
   ``aggregate`` keep it in Tungsten (SURVEY.md §7 hard part d): no
   Arrow transfer and no Python.  :func:`squared_l2_sql` is the one
-  squared-L2 fold, and :func:`nearest_codeword_sql` the SQL-text
-  nearest-codeword argmin that PQ training, PQ encoding, the PQ rerank,
-  the quantization-error report and the coreset sensitivities build
-  from.  Both are SQL text rather than Columns, because their callers
-  author whole projections as one string (one JVM-side parse instead of
-  a py4j round trip per node).
-* One numpy kernel over Arrow record batches, for the n-d K-Means
-  argmin and partial sums: :func:`assign_nearest` (``mapInArrow``,
-  appends the cluster and dist²), :func:`label_sums` (per-label sums,
-  folded per partition and added on the driver in partition order) and
-  :func:`nearest_dist2_sum` (WCSS).  Spark runs the SQL argmin as an
-  interpreted higher-order function, k·d terms per row; the kernel does
-  the same arithmetic vectorized, bit for bit (docs/TUNING.md).
+  squared-L2 fold, which the PQ rerank, the quantization-error report
+  and the coreset sensitivities build from.  It is SQL text rather than
+  a Column, because its callers author whole projections as one string
+  (one JVM-side parse instead of a py4j round trip per node).
+* One numpy kernel over Arrow record batches for every nearest-codeword
+  argmin: :func:`nearest_codeword` over one codebook, and
+  :func:`_nearest_codes` over either one codebook spanning the vector
+  (K-Means) or m codebooks over m equal slices (product quantization).
+  :func:`assign_nearest` (``mapInArrow``) appends the cluster and dist²
+  or the m PQ codes; :func:`label_sums` folds per-label sums per
+  partition, added on the driver in partition order (the n-d Lloyd
+  superstep, the PQ trainer and the IVF cell means); and
+  :func:`nearest_dist2_sum` is the WCSS.  The kernel does the arithmetic
+  of the old SQL argmin, an interpreted higher-order function of k·d
+  terms per row, vectorized and bit for bit (docs/TUNING.md).
 """
 
 from __future__ import annotations
@@ -82,39 +84,6 @@ def squared_l2_sql(a: str, b: str) -> str:
     return (
         f"aggregate(zip_with({a}, {b}, (a, b) -> (a - b) * (a - b)), "
         "0.0D, (acc, x) -> acc + x)"
-    )
-
-
-def nearest_codeword_sql(
-    vec: str, codebook: str, n: int | str, ids: str | None = None
-) -> str:
-    """The nearest of ``n`` codewords to ``vec`` as one SQL expression:
-    a ``(dist2, cluster)`` struct, read as ``(expr).cluster`` /
-    ``(expr).dist2``.
-
-    * ``vec`` — the row's ``array<double>``.  It is evaluated once per
-      row and let-bound through a one-element ``transform`` outside
-      the per-codeword lambda, so an O(dim) cast in it is not
-      re-inlined n times and no column it reads can be captured by a
-      lambda variable of the same name.
-    * ``codebook`` — an ``array<array<double>>`` (usually a literal),
-      read 1-based by ``element_at``.
-    * ``n`` — the codeword count: an int, or SQL text for a per-row
-      count (a ragged codebook).
-    * ``ids`` — the ``array<int>`` of labels emitted per position;
-      ``None`` emits the 0-based position.
-
-    ``codebook``, ``n`` and ``ids`` are read inside the lambdas: pass
-    literals, or columns whose names the caller picked itself.  dist² is :func:`squared_l2_sql`; ``array_min`` over the structs
-    keeps the reference's strict-< lowest-id tie-break
-    (``KMeans.java:281``)."""
-    last = n - 1 if isinstance(n, int) else f"{n} - 1"
-    dist2 = squared_l2_sql("v", f"element_at({codebook}, i + 1)")
-    label = "i" if ids is None else f"CAST(element_at({ids}, i + 1) AS INT)"
-    return (
-        f"element_at(transform(array({vec}), "
-        f"v -> array_min(transform(sequence(0, {last}), "
-        f"i -> named_struct('dist2', {dist2}, 'cluster', {label})))), 1)"
     )
 
 
@@ -199,6 +168,41 @@ def _codebook(
     return book, np.asarray([int(i) for i in ids], dtype=np.int32)
 
 
+def _codebooks(
+    codebooks: Sequence[Sequence[Sequence[float]]],
+    ids: Sequence[Sequence[int] | None] | None,
+) -> list[tuple[np.ndarray, np.ndarray]]:
+    """:func:`_codebook` of each book; ``ids`` holds one id list (or
+    ``None``: positions) per book, or is ``None`` for positions in all."""
+    ids = [None] * len(codebooks) if ids is None else ids
+    return [_codebook(book, i) for book, i in zip(codebooks, ids)]
+
+
+def _nearest_codes(
+    values: np.ndarray,
+    present: np.ndarray,
+    whole: np.ndarray,
+    books: list[tuple[np.ndarray, np.ndarray]],
+    sliced: bool,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``(codes, dist2, whole)``, each n × m, of one :func:`vector_block`:
+    book s is searched with :func:`nearest_codeword` over the s-th
+    d-element slice of each row.
+
+    K-Means passes one book over the whole vector (``sliced=False``): a
+    row has a dist² only when it is whole.  Product quantization passes
+    m books over m equal slices (``sliced=True``): a slice has a dist²
+    when its d elements are present and non-null, whatever the row's
+    length, so a long vector's extra elements are ignored."""
+    n, m, d = len(values), len(books), books[0][0].shape[1]
+    whole = present.reshape(n, m, d).all(axis=2) if sliced else whole[:, None]
+    codes, dist2 = zip(*(
+        nearest_codeword(values[:, s * d:(s + 1) * d], whole[:, s], book, ids)
+        for s, (book, ids) in enumerate(books)
+    ))
+    return np.stack(codes, axis=1), np.stack(dist2, axis=1), whole
+
+
 def _vector_input(df: DataFrame, vec_col: str) -> Column:
     """The vector column as the kernel reads it: as it is when its
     elements are float or double (the kernel widens float32 itself),
@@ -211,35 +215,47 @@ def _vector_input(df: DataFrame, vec_col: str) -> Column:
 def assign_nearest(
     df: DataFrame,
     vec_col: str,
-    codebook: Sequence[Sequence[float]],
-    ids: Sequence[int] | None = None,
-    cluster_col: str = "cluster",
+    codebooks: Sequence[Sequence[Sequence[float]]],
+    ids: Sequence[Sequence[int] | None] | None = None,
+    out_col: str = "cluster",
     dist2_col: str | None = None,
+    sliced: bool = False,
 ) -> DataFrame:
-    """``df`` plus the int ``cluster_col`` of each row's nearest codeword
-    (:func:`nearest_codeword`) and, if named, its double ``dist2_col``
-    (NULL for a row that is not whole).  One ``mapInArrow``: a narrow
-    map, no join and no shuffle.  ``ids`` labels the codewords (default:
+    """``df`` plus each row's nearest codeword (:func:`_nearest_codes`),
+    in one ``mapInArrow``: a narrow map, no join and no shuffle.
+
+    With one codebook over the whole vector, ``out_col`` is the int id
+    of the nearest codeword and ``dist2_col``, if named, its double
+    dist² (NULL for a row that is not whole).  With ``sliced`` (m
+    codebooks over m equal slices), ``out_col`` is the ``array<int>`` of
+    the m codes.  ``ids`` labels the codewords of each book (default:
     positions); a non-finite codeword raises ``ValueError``."""
-    book, ids_np = _codebook(codebook, ids)
-    dim = book.shape[1]
+    books = _codebooks(codebooks, ids)
+    dim = books[0][0].shape[1] * len(books)
     keep = len(df.columns)
     # positional names: mapInArrow re-resolves its input by name
     src = df.select("*", _vector_input(df, vec_col)).toDF(
         *[f"_{i}" for i in range(keep + 1)]
     )
-    fields = list(df.schema.fields) + [StructField(cluster_col, IntegerType())]
+    out_type = ArrayType(IntegerType()) if sliced else IntegerType()
+    fields = list(df.schema.fields) + [StructField(out_col, out_type)]
     if dist2_col:
         fields.append(StructField(dist2_col, DoubleType()))
     names = [f.name for f in fields]
 
     def assign(batches):
         for b in batches:
-            values, _, whole, _ = vector_block(b.column(keep), dim)
-            cluster, d2 = nearest_codeword(values, whole, book, ids_np)
-            cols = b.columns[:keep] + [pa.array(cluster, pa.int32())]
+            values, present, whole, _ = vector_block(b.column(keep), dim)
+            codes, d2, whole = _nearest_codes(values, present, whole, books, sliced)
+            cols = b.columns[:keep]
+            if sliced:
+                offsets = np.arange(0, codes.size + 1, codes.shape[1], dtype=np.int32)
+                flat = pa.array(codes.ravel(), pa.int32())
+                cols.append(pa.ListArray.from_arrays(offsets, flat))
+            else:
+                cols.append(pa.array(codes[:, 0], pa.int32()))
             if dist2_col:
-                cols.append(pa.array(d2, pa.float64(), mask=~whole))
+                cols.append(pa.array(d2[:, 0], pa.float64(), mask=~whole[:, 0]))
             yield pa.RecordBatch.from_arrays(cols, names=names)
 
     return src.mapInArrow(assign, StructType(fields))
@@ -250,30 +266,34 @@ def label_sums(
     vec_col: str,
     dim: int | None = None,
     label_col: str | None = None,
-    codebook: Sequence[Sequence[float]] | None = None,
-    ids: Sequence[int] | None = None,
-) -> dict[Hashable, tuple[int, np.ndarray, np.ndarray, int]]:
+    codebooks: Sequence[Sequence[Sequence[float]]] | None = None,
+    ids: Sequence[Sequence[int] | None] | None = None,
+    sliced: bool = False,
+) -> list[dict[Hashable, tuple[int, np.ndarray, np.ndarray, int]]]:
     """Per-label partial sums of a vector column, in one Spark job with
-    no exchange: ``{label: (n, sums, counts, width)}``.
+    no exchange: one ``{label: (n, sums, counts, width)}`` per codebook
+    (a one-element list for ``label_col``).
 
     The label is ``label_col`` (rows with a NULL label add to nothing)
-    or, given a ``codebook``, each row's nearest codeword id
-    (:func:`nearest_codeword`).  ``n`` counts the label's rows;
-    ``sums[j]`` adds the elements present and non-null at index j and
-    ``counts[j]`` counts them, for j below ``dim`` (``None``: the
-    longest vector); ``width`` is the label's longest vector.
+    or, given ``codebooks``, each row's nearest codeword id in each book
+    (:func:`_nearest_codes`; ``sliced`` as there).  ``n`` counts the
+    label's rows; ``sums[j]`` adds the elements present and non-null at
+    index j of the book's slice and ``counts[j]`` counts them, for j
+    below ``dim`` (``None``: the longest vector); ``width`` is the
+    label's longest vector.
 
     Each partition folds its rows in row order, ``acc + v`` from 0.0
     (``np.add.accumulate``, a sequential scan), and emits one row per
-    label; the driver adds the partitions in partition order.  The sums
-    do not depend on scheduling: the same input gives the same doubles
-    on every run."""
-    if codebook is not None:
-        book, ids_np = _codebook(codebook, ids)
-        dim = book.shape[1]
+    (book, label); the driver adds the partitions in partition order.
+    The sums do not depend on scheduling: the same input gives the same
+    doubles on every run."""
+    if codebooks is not None:
+        books = _codebooks(codebooks, ids)
+        dim = books[0][0].shape[1] * len(books)
         src = df.select(_vector_input(df, vec_col).alias("v"))
         label_type = IntegerType()
     else:
+        books = []
         lab = F.col(quote_ident(label_col))
         src = df.where(lab.isNotNull()).select(
             lab.alias("l"), _vector_input(df, vec_col).alias("v")
@@ -285,45 +305,50 @@ def label_sums(
         label_arrow = pa.int32()
         for b in batches:
             values, present, whole, lens = vector_block(b.column(b.num_columns - 1), dim)
-            if codebook is not None:
-                labels, _ = nearest_codeword(values, whole, book, ids_np)
+            if books:
+                labels, _, _ = _nearest_codes(values, present, whole, books, sliced)
             else:
                 label_arrow = b.column(0).type
-                labels = b.column(0).to_numpy(zero_copy_only=False)
-            order = np.argsort(labels, kind="stable")
-            uniq, starts = np.unique(labels[order], return_index=True)
-            for lab, seg in zip(uniq.tolist(), np.split(order, starts[1:])):
-                n, s, c, w = acc.get(lab, (0, np.zeros(0), np.zeros(0, np.int64), 0))
-                width = max(len(s), values.shape[1])
-                rows = np.vstack([_pad(s, width)[None], _pad(values[seg], width)])
-                s = np.add.accumulate(rows, axis=0)[-1]
-                c = _pad(c, width) + _pad(present[seg], width).sum(axis=0)
-                acc[lab] = (n + len(seg), s, c, max(w, int(lens[seg].max())))
+                labels = b.column(0).to_numpy(zero_copy_only=False)[:, None]
+            d = values.shape[1] // labels.shape[1]
+            for p in range(labels.shape[1]):
+                vals, pres = values[:, p * d:(p + 1) * d], present[:, p * d:(p + 1) * d]
+                order = np.argsort(labels[:, p], kind="stable")
+                uniq, starts = np.unique(labels[order, p], return_index=True)
+                for lab, seg in zip(uniq.tolist(), np.split(order, starts[1:])):
+                    n, s, c, w = acc.get((p, lab), (0, np.zeros(0), np.zeros(0, np.int64), 0))
+                    width = max(len(s), d)
+                    rows = np.vstack([_pad(s, width)[None], _pad(vals[seg], width)])
+                    s = np.add.accumulate(rows, axis=0)[-1]
+                    c = _pad(c, width) + _pad(pres[seg], width).sum(axis=0)
+                    acc[(p, lab)] = (n + len(seg), s, c, max(w, int(lens[seg].max())))
         if acc:
-            labs = list(acc)
+            keys = list(acc)
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(labs, label_arrow),
-                    pa.array([acc[k][0] for k in labs], pa.int64()),
-                    pa.array([acc[k][1].tolist() for k in labs], pa.list_(pa.float64())),
-                    pa.array([acc[k][2].tolist() for k in labs], pa.list_(pa.int64())),
-                    pa.array([acc[k][3] for k in labs], pa.int32()),
+                    pa.array([p for p, _ in keys], pa.int32()),
+                    pa.array([lab for _, lab in keys], label_arrow),
+                    pa.array([acc[k][0] for k in keys], pa.int64()),
+                    pa.array([acc[k][1].tolist() for k in keys], pa.list_(pa.float64())),
+                    pa.array([acc[k][2].tolist() for k in keys], pa.list_(pa.int64())),
+                    pa.array([acc[k][3] for k in keys], pa.int32()),
                 ],
-                names=["l", "n", "s", "c", "w"],
+                names=["p", "l", "n", "s", "c", "w"],
             )
 
     schema = StructType([
+        StructField("p", IntegerType()),
         StructField("l", label_type),
         StructField("n", LongType()),
         StructField("s", ArrayType(DoubleType())),
         StructField("c", ArrayType(LongType())),
         StructField("w", IntegerType()),
     ])
-    out: dict = {}
+    out: list[dict] = [{} for _ in range(max(len(books), 1))]
     for r in src.mapInArrow(fold, schema).collect():  # in partition order
-        n, s, c, w = out.get(r["l"], (0, np.zeros(0), np.zeros(0, np.int64), 0))
+        n, s, c, w = out[r["p"]].get(r["l"], (0, np.zeros(0), np.zeros(0, np.int64), 0))
         width = max(len(s), len(r["s"]))
-        out[r["l"]] = (
+        out[r["p"]][r["l"]] = (
             n + r["n"],
             _pad(s, width) + _pad(np.asarray(r["s"], np.float64), width),
             _pad(c, width) + _pad(np.asarray(r["c"], np.int64), width),

@@ -3,7 +3,7 @@
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator, Mapping
+from collections.abc import Iterator, Mapping, Sequence
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -132,6 +132,15 @@ def _bytes_conf(spark, key: str, default: int) -> int:
         return int(raw) * mult
     except ValueError:
         return default
+
+
+def fresh_name(name: str, taken: Sequence[str]) -> str:
+    """``name``, underscore-prefixed until no column of ``taken`` has it
+    (Spark resolves column names case-insensitively)."""
+    lowered = {c.lower() for c in taken}
+    while name.lower() in lowered:
+        name = "_" + name
+    return name
 
 
 def quote_ident(name: str) -> str:

@@ -321,8 +321,8 @@ def _minhash_lsh_sig_pairs(
     if hash_fn not in ("xxhash64", "md5"):
         raise ValueError(f"unknown hash_fn: {hash_fn!r}")
     r = num_hashes // bands
-    # Signature via explode + per-lane MIN aggregates instead of the
-    # higher-order minhash_signature expression: HOF lambdas evaluate
+    # Signature via explode + per-lane MIN aggregates instead of a
+    # higher-order per-row signature expression: HOF lambdas evaluate
     # interpreted per element, while agg-input expressions and hash
     # aggregation stay in whole-stage codegen (~5× at bench scale).
     # Values are identical: lane i is min over shingles of

@@ -66,6 +66,7 @@ from flink_kmeans_clustering_spark.functions.vector import (
 )
 from flink_kmeans_clustering_spark.operators.common import (
     array_lit_sql,
+    fresh_name,
     quote_ident,
     session_conf,
 )
@@ -91,9 +92,7 @@ def _with_argmin(
             "*", F.lit(-1).alias(cluster_col),
             *([F.lit(None).cast("double").alias(dist2_col)] if dist2_col else []),
         )
-    tmp = "_argmin"
-    while tmp in df.columns:
-        tmp = "_" + tmp
+    tmp = fresh_name("_argmin", df.columns)
     cols = [F.col(quote_ident(c)) for c in df.columns]
     cols.append(F.col(tmp)["cluster"].alias(cluster_col))
     if dist2_col:
@@ -156,9 +155,8 @@ def _argmin_2d_sql(centroids: Sequence[Centroid], x: str, y: str) -> str:
     The columns are read inside the per-centroid lambda, so its
     variable is named to differ from both: a column called ``i`` would
     otherwise resolve to the lambda variable.  Renaming is free, where
-    let-binding (x, y) outside the lambda, as
-    :func:`~flink_kmeans_clustering_spark.functions.vector.nearest_codeword_sql`
-    does for a vector, cost ~10% per superstep (100k points, k=8, 4 vCPUs).
+    let-binding (x, y) through a one-element ``transform`` outside the
+    lambda cost ~10% per superstep (100k points, k=8, 4 vCPUs).
     """
     i = "i"
     while i.lower() in (x.lower(), y.lower()):
@@ -832,7 +830,7 @@ def assign_points_nd(
     if not centroids:
         return _with_argmin(vectors, None, cluster_col, dist2_col)
     return assign_nearest(
-        vectors, vec_col, centroids, centroid_ids, cluster_col, dist2_col
+        vectors, vec_col, [centroids], [centroid_ids], cluster_col, dist2_col
     )
 
 
@@ -847,7 +845,7 @@ def update_centroids_nd(
     (:func:`~flink_kmeans_clustering_spark.functions.vector.label_sums`,
     one job, no exchange), added on the driver, then the mean ``Σ/n``.
     Returns (id, centroid array<double>, n) as a driver-side frame."""
-    sums = label_sums(assigned, vec_col, dim, label_col=cluster_col)
+    [sums] = label_sums(assigned, vec_col, dim, label_col=cluster_col)
     rows = [(i, (s / n).tolist(), n) for i, (n, s, _, _) in sorted(sums.items())]
     id_type = assigned.select(quote_ident(cluster_col)).schema[0].dataType.simpleString()
     return assigned.sparkSession.createDataFrame(
@@ -889,7 +887,7 @@ def lloyd_nd(
     ids = list(range(len(current)))
     try:
         for _ in range(max_iterations):
-            sums = label_sums(vectors, vec_col, dim, codebook=current, ids=ids)
+            [sums] = label_sums(vectors, vec_col, dim, codebooks=[current], ids=[ids])
             ids = sorted(sums)
             # one IEEE double division per component
             current = [(sums[i][1] / sums[i][0]).tolist() for i in ids]

@@ -17,17 +17,17 @@ Two paths, one semantics:
 
 Product quantization has one form per step: codebooks from
 :func:`pq_codebooks_first` (trainless, the checked contract) or
-:func:`pq_codebooks_trained` (all subspaces in one grouped Lloyd);
-encoding by :func:`_pq_codes_sql`; and one ADC shortlist + exact-rerank
-tail, :func:`_adc_rerank`, shared by :func:`ann_pq` and
-:func:`ann_ivfpq`.
+:func:`pq_codebooks_trained` (all subspaces in one Lloyd pass per
+iteration); and one encode + ADC shortlist + exact-rerank tail,
+:func:`_adc_rerank`, shared by :func:`ann_pq` and :func:`ann_ivfpq`.
 
-The per-row vector arithmetic is JVM-side (functions.vector): every
-squared-L2 fold and nearest-codeword argmin here is built by its
-``squared_l2_sql`` / ``nearest_codeword_sql``.  Query vectors enter the
-plan as literal arrays.  Cell means (:func:`cell_centroids`) are the
-numpy kernel's per-partition sums (``label_sums``), added on the
-driver.
+Every nearest-codeword argmin here is the one numpy kernel over Arrow
+batches in functions.vector: cell means (:func:`cell_centroids`) and
+PQ training are its per-partition sums (``label_sums``), added on the
+driver; PQ encoding is its ``mapInArrow`` pass (``assign_nearest``).
+The rest of the per-row vector arithmetic is JVM-side: the squared-L2
+folds are ``squared_l2_sql`` and the cosines higher-order functions.
+Query vectors enter the plan as literal arrays.
 """
 
 from __future__ import annotations
@@ -39,16 +39,16 @@ from pyspark.sql import functions as F
 
 from flink_kmeans_clustering_spark.operators.common import (
     array_lit_sql,
+    fresh_name,
     quote_ident,
-    session_conf,
     spread,
 )
 from flink_kmeans_clustering_spark.functions.vector import (
+    assign_nearest,
     cosine_similarity,
     dot,
     l2_norm,
     label_sums,
-    nearest_codeword_sql,
     squared_l2_sql,
 )
 
@@ -100,7 +100,7 @@ def cell_centroids(
     rows.  Rows with a NULL cell and cells with no element are left
     out.
     """
-    sums = label_sums(df, vec_col, label_col=cell_col)
+    [sums] = label_sums(df, vec_col, label_col=cell_col)
     rows = [
         (cell, [float(s[j] / c[j]) if c[j] else None for j in range(w)], n)
         for cell, (n, s, c, w) in sorted(sums.items())
@@ -130,6 +130,19 @@ def ann_search(
     The ``isin(probed)`` filter is pushed into the scan; on a
     cell-partitioned table that is partition pruning.
     """
+    probed = [c for c, _ in _probe_cells(centroids, list(query_vec), n_probe)]
+    pruned = df.filter(F.col(cell_col).isin(probed))
+    return topk_cosine(
+        pruned, query_vec, k=k, id_col=id_col, vec_col=vec_col, round_to=round_to
+    )
+
+
+def _probe_cells(
+    centroids: list[tuple[int, list[float]]], q: Sequence[float], n_probe: int
+) -> list[tuple[int, list[float]]]:
+    """The ``n_probe`` cells :func:`ann_search` and :func:`ann_ivfpq`
+    probe, ranked driver-side: cosine of the centroid to ``q``
+    descending (0 for a zero-norm vector), ties to the lowest cell."""
     import math
 
     def cos(a: Sequence[float], b: Sequence[float]) -> float:
@@ -137,14 +150,7 @@ def ann_search(
         den = math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(y * y for y in b))
         return num / den if den else 0.0
 
-    ranked = sorted(
-        centroids, key=lambda c: (-cos(c[1], list(query_vec)), c[0])
-    )
-    probed = [c[0] for c in ranked[:n_probe]]
-    pruned = df.filter(F.col(cell_col).isin(probed))
-    return topk_cosine(
-        pruned, query_vec, k=k, id_col=id_col, vec_col=vec_col, round_to=round_to
-    )
+    return sorted(centroids, key=lambda c: (-cos(c[1], q), c[0]))[:n_probe]
 
 
 def knn_join(
@@ -510,7 +516,14 @@ def pq_codebooks_first(
     Returns ``codebooks[s][c] = list[d/m floats]``.
     """
     rows = df.orderBy(id_col).limit(k).collect()
-    vecs = [[float(v) for v in r[vec_col]] for r in rows]
+    return _subvectors([r[vec_col] for r in rows], m)
+
+
+def _subvectors(vecs: list[Sequence[float]], m: int) -> list[list[list[float]]]:
+    """``vecs`` cut into m equal slices: ``out[s][c]`` is the s-th slice
+    of ``vecs[c]``, as floats.  The first vector's length sets the
+    dimension; one not divisible by ``m`` raises ``ValueError``."""
+    vecs = [[float(v) for v in vec] for vec in vecs]
     dim = len(vecs[0])
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -526,129 +539,43 @@ def pq_codebooks_trained(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> list[list[list[float]]]:
-    """Trained PQ codebooks: all ``m`` subspace k-means run as ONE
-    grouped Lloyd.
+    """Trained PQ codebooks: the ``m`` subspace k-means run together,
+    one Spark job per iteration.
 
-    The corpus is exploded ONCE into (subspace, subvector) rows and
-    every iteration is a single job: a narrow literal-argmin
-    assignment (the m×k×d codebook matrix is one array literal; each
-    row runs :func:`~flink_kmeans_clustering_spark.functions.vector.nearest_codeword_sql`
-    against its own subspace's codewords) and ONE groupBy(s, code)
-    per-dim mean — so the shuffle carries m·k rows and the corpus is
-    scanned iters times, not m·iters as m separate Lloyd jobs would.
-    Codeword ids are PERSISTENT per subspace (an emptied cluster's id retires —
-    lloyd_nd semantics), and the returned list orders codewords by
-    surviving id, matching the replaying oracle's dense re-rank.
+    An iteration is one ``mapInArrow`` pass over the corpus with no
+    exchange
+    (:func:`~flink_kmeans_clustering_spark.functions.vector.label_sums`
+    with m codebooks over m equal slices): each partition assigns every
+    subvector to its subspace's nearest codeword with the numpy kernel
+    and folds per-(subspace, code) sums in row order; the driver adds
+    the partitions in partition order and divides.  The corpus is
+    scanned iters times, not m·iters as m separate Lloyd runs would, and
+    no session conf is touched.  A subvector with a missing or null
+    element takes its subspace's lowest id and still counts in that
+    code's ``n``.  Codeword ids are PERSISTENT per subspace (an emptied
+    cluster's id retires — lloyd_nd semantics), and the returned list
+    orders codewords by surviving id, matching the replaying oracle's
+    dense re-rank.
 
     Deterministic given the data: init = the first k vectors by
     ``id_col``, sliced per subspace.  Returns
     ``codebooks[s][c] = list[d/m floats]`` (possibly ragged).
     """
-    init_rows = df.orderBy(id_col).limit(k).select(vec_col).collect()
-    dim = len(init_rows[0][vec_col])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    d = dim // m
-    books = [
-        [[float(v) for v in r[vec_col][s * d : (s + 1) * d]] for r in init_rows]
-        for s in range(m)
-    ]
-    ids: list[list[int]] = [list(range(len(b))) for b in books]
-
-    vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    # _spread before the explode+cache (r14): a single-file corpus
-    # otherwise leaves the cached subvector table on ONE partition and
-    # every iteration's interpreted argmin runs serially (measured
-    # 1.7 s single-task assignment stages at sf0.1); pass-through at
-    # scale, and the trained books are partition-independent (grouped
-    # sums) — re-hash-verified at 3 scales.
-    sub = (
-        spread(df, id_col).select(
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(m - 1)),
-                    lambda s: F.struct(
-                        s.cast("int").alias("s"),
-                        F.slice(vec, s * d + 1, d).alias("sv"),
-                    ),
-                )
-            ).alias("p")
-        )
-        .select(F.col("p.s").alias("s"), F.col("p.sv").alias("sv"))
-        .cache()
-    )
-    # Per-iteration plan construction is selectExpr-authored (the
-    # Lloyd-cut pattern): one f-string parses JVM-side instead of ~30
-    # py4j round trips of Column building.  The value-INdependent
-    # aggregation Columns are hoisted out of the loop.
-    sums = [
-        F.sum(F.element_at("sv", j + 1)).alias(f"_s{j}") for j in range(d)
-    ]
-    n_agg = F.count(F.lit(1)).alias("n")
-    # Loop-local exchange sizing (the Lloyd pattern, kmeans.py): the
-    # update shuffle carries ≤ m·k tiny rows, so 32 reduce tasks per
-    # iteration is pure scheduling overhead — m partitions suffice and
-    # AQE has nothing to re-plan on a k-row exchange.  Trained books
-    # verified bit-identical at shuffle.partitions ∈ {1, 8, 32}
-    # (measured ~0.55 s/call saved at sf0.1); session_conf restores.
-    #
-    # Every iteration's assignment parses FRESH codebook literals, so
-    # whole-stage codegen would Janino-compile a new class per iteration
-    # for a ≤16k-row job — interpreted eval skips that (measured ~0.4
-    # s/call warm at sf0.1; books verified bit-identical on/off, and
-    # re-hash-matched at 3 scales).
-    loop_conf = {
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.shuffle.partitions": str(max(1, m)),
-        "spark.sql.codegen.wholeStage": "false",
-    }
-    # fill the cache BEFORE the loop flips codegen off (r14): the
-    # spread+explode+cast materialization is value-independent, so it
-    # may as well run compiled — measured ~2.0 s as iteration 1's
-    # interpreted side-effect vs ~0.4 s as its own codegen-on job; the
-    # iterations then scan the same in-memory batches either way.
-    sub.count()
-    try:
-        with session_conf(df.sparkSession, loop_conf):
-            for _ in range(iters):
-                cb = array_lit_sql(books)
-                idl = array_lit_sql(ids, kind="int")
-                assign = nearest_codeword_sql(
-                    "sv", f"get({cb}, s)", f"size(get({cb}, s))", f"get({idl}, s)"
-                )
-                assigned = sub.selectExpr("s", "sv", f"({assign}).cluster AS code")
-                rows = (
-                    assigned.groupBy("s", "code")
-                    .agg(*sums, n_agg)
-                    .collect()
-                )
-                books = [[] for _ in range(m)]
-                ids = [[] for _ in range(m)]
-                for r in sorted(rows, key=lambda r: (r["s"], r["code"])):
-                    ids[r["s"]].append(int(r["code"]))
-                    books[r["s"]].append(
-                        [float(r[f"_s{j}"]) / r["n"] for j in range(d)]
-                    )
-    finally:
-        sub.unpersist()
+    init = df.orderBy(id_col).limit(k).select(vec_col).collect()
+    books = _subvectors([r[vec_col] for r in init], m)
+    ids = [list(range(len(b))) for b in books]
+    # a single-file corpus is one input partition: spread it, or every
+    # iteration assigns on one task
+    corpus = spread(df, id_col)
+    for _ in range(iters):
+        sums = label_sums(corpus, vec_col, codebooks=books, ids=ids, sliced=True)
+        ids = [sorted(sub) for sub in sums]
+        # one IEEE double division per component
+        books = [
+            [(sub[i][1] / sub[i][0]).tolist() for i in sub_ids]
+            for sub, sub_ids in zip(sums, ids)
+        ]
     return books
-
-
-def _pq_codes_sql(vec_sql: str, codebooks: list[list[list[float]]]) -> str:
-    """PQ encoding as one SQL expression: ``codes[s]`` is the position
-    of the nearest codeword of subspace ``s`` to the s-th subvector of
-    ``vec_sql`` (an ``array<double>``), via
-    :func:`~flink_kmeans_clustering_spark.functions.vector.nearest_codeword_sql`
-    — ties go to the lowest code.  Subspaces may be ragged (a trained
-    codebook can lose an emptied cluster).  The vector is let-bound
-    once per row, outside every per-codeword lambda, and each subspace
-    embeds only its own k×d literal."""
-    d = len(codebooks[0][0])
-    codes = []
-    for s, book in enumerate(codebooks):
-        sub = f"slice(w, {s * d + 1}, {d})"
-        codes.append(f"({nearest_codeword_sql(sub, array_lit_sql(book), len(book))}).cluster")
-    return f"element_at(transform(array({vec_sql}), w -> array({', '.join(codes)})), 1)"
 
 
 def _adc_lut(q: Sequence[float], codebooks: list[list[list[float]]]) -> list[list[float]]:
@@ -667,7 +594,8 @@ def _adc_lut(q: Sequence[float], codebooks: list[list[list[float]]]) -> list[lis
 
 def _adc_rerank(
     candidates: DataFrame,
-    codes_sql: str,
+    enc_col: str,
+    codebooks: list[list[list[float]]],
     lut_sql: str,
     q: list[float],
     k: int,
@@ -676,20 +604,29 @@ def _adc_rerank(
     vec_col: str,
     round_to: int | None,
 ) -> DataFrame:
-    """The PQ search tail :func:`ann_pq` and :func:`ann_ivfpq` share:
-    ADC-score each candidate as ``Σ_s lut[s][codes[s]]`` (an ordered
-    fold of m array lookups), keep the ``shortlist`` best, rerank them
-    by exact squared L2 to ``q``, keep the top ``k``.  Both cuts are
-    TakeOrderedAndProject with ties to the lowest id.  ``codes_sql``
-    (``array<int>``) and ``lut_sql`` (``array<array<double>>``, m rows)
-    are SQL text read outside every lambda.  Output: (id, d2)."""
+    """The PQ search tail :func:`ann_pq` and :func:`ann_ivfpq` share.
+
+    Each candidate's ``enc_col`` is encoded in one kernel pass
+    (:func:`~flink_kmeans_clustering_spark.functions.vector.assign_nearest`
+    with the m codebooks over m equal slices): ``codes[s]`` is the
+    position of the nearest codeword of subspace s, ties to the lowest
+    position, and a slice with a missing or null element takes
+    position 0.  The codebooks may be ragged.  Then each candidate is
+    ADC-scored as ``Σ_s lut[s][codes[s]]`` (an ordered fold of m array
+    lookups), the ``shortlist`` best are reranked by exact squared L2
+    to ``q``, and the top ``k`` kept.  Both cuts are
+    TakeOrderedAndProject with ties to the lowest id.  ``lut_sql``
+    (``array<array<double>>``, m rows) is SQL text read outside every
+    lambda.  Output: (id, d2)."""
+    codes = fresh_name("_codes", candidates.columns)
+    coded = assign_nearest(candidates, enc_col, codebooks, out_col=codes, sliced=True)
     qid, qvec = quote_ident(id_col), quote_ident(vec_col)
     score = (
-        f"aggregate(zip_with({codes_sql}, {lut_sql}, (code, t) -> get(t, code)),"
+        f"aggregate(zip_with({quote_ident(codes)}, {lut_sql}, (code, t) -> get(t, code)),"
         " 0.0D, (acc, x) -> acc + x)"
     )
     short = (
-        candidates.selectExpr(qid, qvec, f"{score} AS _score")
+        coded.selectExpr(qid, qvec, f"{score} AS _score")
         .orderBy("_score", id_col)
         .limit(shortlist)
     )
@@ -712,9 +649,9 @@ def ann_pq(
     round_to: int | None = 6,
 ) -> DataFrame:
     """Product-quantization ANN (Jégou et al., TPAMI 2011): encode the
-    corpus as m uint8 codes, score candidates with an asymmetric
-    distance computation (ADC) lookup table, exact-L2 rerank the
-    shortlist.
+    corpus as m codes per vector (one numpy-kernel pass,
+    :func:`_adc_rerank`), score candidates with an asymmetric distance
+    computation (ADC) lookup table, exact-L2 rerank the shortlist.
 
     Scale shape: the m×k LUT (distances from the query's subvectors to
     every codeword) is computed DRIVER-side and enters the plan as one
@@ -728,17 +665,13 @@ def ann_pq(
     lowest id at both the shortlist and final cut.
     """
     q = [float(v) for v in query_vec]
-    # Whole scoring projection authored as SQL text: one JVM-side parse
-    # instead of ~1.4 s of py4j Column building per call.
-    vec_sql = f"transform({quote_ident(vec_col)}, x -> CAST(x AS DOUBLE))"
-    # spread before the ADC scan: the per-row scoring is an interpreted
-    # m-subspace argmin (HOFs are not codegen'd), and a single-file
-    # corpus otherwise scores on ONE task (measured a 2.7 s single-task
-    # stage at sf0.1).  Pass-through at 100 TB where the scan has
+    # spread before the encoding: a single-file corpus otherwise encodes
+    # and scores on ONE task.  Pass-through at 100 TB where the scan has
     # splits; the plan pin allows the one under-parallel rebalance.
     return _adc_rerank(
-        spread(df, id_col),
-        _pq_codes_sql(vec_sql, codebooks),
+        spread(df, id_col).select(quote_ident(id_col), quote_ident(vec_col)),
+        vec_col,
+        codebooks,
         array_lit_sql(_adc_lut(q, codebooks)),
         q, k, shortlist, id_col, vec_col, round_to,
     )
@@ -1215,11 +1148,7 @@ def ivfpq_residual_codebooks(
         [float(v) - c for v, c in zip(r[vec_col], cmap[int(r[cell_col])])]
         for r in rows
     ]
-    dim = len(res[0])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    d = dim // m
-    return [[vec[s * d : (s + 1) * d] for vec in res] for s in range(m)]
+    return _subvectors(res, m)
 
 
 def ann_ivfpq(
@@ -1248,8 +1177,9 @@ def ann_ivfpq(
        cell-partitioned table that is partition pruning — the 100 TB
        corpus shrinks to the probed cells' files.
     2. **ADC over residuals** — within probed cells each vector's
-       residual (v − centroid(cell)) is encoded as m codes
-       (:func:`_pq_codes_sql`); the query side is a PER-CELL lookup table
+       residual (v − centroid(cell), a SQL ``zip_with``) is encoded as
+       m codes by the kernel pass of :func:`_adc_rerank`, after the
+       probe filter; the query side is a PER-CELL lookup table
        (residual q − centroid(cell) against every codeword) computed
        driver-side and shipped as ONE map literal keyed by cell —
        scoring is m array lookups + an ordered fold, no join, no
@@ -1263,19 +1193,10 @@ def ann_ivfpq(
 
     Output: (vec_id, d2) — ties to the lowest id at both cuts.
     """
-    import math
-
     q = [float(v) for v in query_vec]
-
-    def cos(a: Sequence[float], b: Sequence[float]) -> float:
-        num = sum(x * y for x, y in zip(a, b))
-        den = math.sqrt(sum(x * x for x in a)) * math.sqrt(
-            sum(y * y for y in b)
-        )
-        return num / den if den else 0.0
-
-    ranked = sorted(centroids, key=lambda c: (-cos(c[1], q), c[0]))
-    probed = [(int(c), [float(x) for x in v]) for c, v in ranked[:n_probe]]
+    probed = [
+        (int(c), [float(x) for x in v]) for c, v in _probe_cells(centroids, q, n_probe)
+    ]
     probed_cells = [c for c, _ in probed]
 
     # Per-cell ADC lookup tables from the query's per-cell residual
@@ -1293,9 +1214,12 @@ def ann_ivfpq(
 
     vec = f"transform({quote_ident(vec_col)}, x -> CAST(x AS DOUBLE))"
     residual = f"zip_with({vec}, {by_cell([c for _, c in probed])}, (a, b) -> a - b)"
+    res = fresh_name("_residual", [id_col, vec_col, cell_col])
+    candidates = df.filter(F.col(cell_col).cast("int").isin(probed_cells)).selectExpr(
+        quote_ident(id_col), quote_ident(vec_col), quote_ident(cell_col),
+        f"{residual} AS {quote_ident(res)}",
+    )
     return _adc_rerank(
-        df.filter(F.col(cell_col).cast("int").isin(probed_cells)),
-        _pq_codes_sql(residual, codebooks),
-        by_cell(luts),
+        candidates, res, codebooks, by_cell(luts),
         q, k, shortlist, id_col, vec_col, round_to,
     )

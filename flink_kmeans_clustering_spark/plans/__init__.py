@@ -17,7 +17,6 @@ correctness oracle can't see and these assertions can.
 from flink_kmeans_clustering_spark.plans.introspect import (
     assert_has_node,
     assert_max_shuffles,
-    assert_no_node,
     explain_str,
     measured_shuffle_write_bytes,
     pushed_filters,
@@ -28,7 +27,6 @@ from flink_kmeans_clustering_spark.plans.introspect import (
 __all__ = [
     "assert_has_node",
     "assert_max_shuffles",
-    "assert_no_node",
     "explain_str",
     "measured_shuffle_write_bytes",
     "pushed_filters",

@@ -114,11 +114,6 @@ def assert_has_node(df: DataFrame, node: str) -> None:
     assert node in plan, f"expected {node!r} in physical plan:\n{plan}"
 
 
-def assert_no_node(df: DataFrame, node: str) -> None:
-    plan = explain_str(df)
-    assert node not in plan, f"unexpected {node!r} in physical plan:\n{plan}"
-
-
 def assert_max_shuffles(df: DataFrame, n: int) -> None:
     got = shuffle_count(df)
     assert got <= n, (

@@ -1,8 +1,9 @@
-"""Sources: schema'd CSV/Parquet scans and collection sources.
+"""Sources: schema'd CSV and Parquet scans.
 
-Covers the reference's full source surface (SURVEY.md §2.1, S1-S3:
-``KMeans.java:73-77`` points CSV, ``:138-142`` centroids CSV, ``:120``
-collection source) and adds the Parquet scans the driver testdata uses.
+Covers the reference's file sources (SURVEY.md §2.1, S1-S2:
+``KMeans.java:73-77`` points CSV, ``:138-142`` centroids CSV) and adds
+the Parquet scans the driver testdata uses.  The collection source
+(S3, ``:120``) is a plain ``spark.createDataFrame`` over driver rows.
 """
 
 from flink_kmeans_clustering_spark.sources.csv import (
@@ -11,8 +12,7 @@ from flink_kmeans_clustering_spark.sources.csv import (
     read_centroids_csv,
     read_points_csv,
 )
-from flink_kmeans_clustering_spark.sources.parquet import TABLES, load_table, load_tables
-from flink_kmeans_clustering_spark.sources.collection import centroids_from_collection
+from flink_kmeans_clustering_spark.sources.parquet import TABLES, load_table
 
 __all__ = [
     "CENTROIDS_SCHEMA",
@@ -21,6 +21,4 @@ __all__ = [
     "read_points_csv",
     "TABLES",
     "load_table",
-    "load_tables",
-    "centroids_from_collection",
 ]

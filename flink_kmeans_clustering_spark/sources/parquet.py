@@ -35,11 +35,6 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    """Scan every testdata table into a name → DataFrame map."""
-    return {name: load_table(spark, name, sf_dir) for name in TABLES}
-
-
 def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     """Coerce an event-time column to session-tz TIMESTAMP (micros).
 

@@ -191,8 +191,9 @@ PICKS = [
     ),
     (
         "q_ann_pq",
-        "Product-quantization ADC — codes and the LUT are literals: "
-        "join-free scoring, both cuts TakeOrderedAndProject",
+        "Product-quantization ADC — codes from one numpy-kernel "
+        "MapInArrow pass, the LUT a literal: join-free scoring, both "
+        "cuts TakeOrderedAndProject",
     ),
     (
         "q_text_mlquality",
@@ -258,8 +259,8 @@ PICKS = [
     (
         "q_ann_ivfpq",
         "IVFADC — probed-cell filter pushed to the scan, residual codes "
-        "and per-cell ADC LUTs as parsed literals (join-free), both "
-        "cuts TakeOrderedAndProject",
+        "from the numpy kernel (MapInArrow) and per-cell ADC LUTs as "
+        "parsed literals (join-free), both cuts TakeOrderedAndProject",
     ),
     (
         "q_text_dsir",

@@ -251,17 +251,22 @@ def _persistent_rdds(spark) -> set[int]:
     return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
 
 
-@pytest.mark.parametrize("op", ["lloyd_nd", "assign_points_nd", "ivf_knn_join"])
+@pytest.mark.parametrize(
+    "op", ["lloyd_nd", "assign_points_nd", "ivf_knn_join", "pq_codebooks_trained"]
+)
 def test_nd_operators_leave_no_cache_and_no_conf_change(spark, op):
-    """lloyd_nd (with its default cache), a collected assign_points_nd
-    and a collected ivf_knn_join leave no persistent RDD behind and the
-    session conf byte-identical; an input the caller cached stays
-    cached through lloyd_nd."""
+    """lloyd_nd (with its default cache), a collected assign_points_nd,
+    a collected ivf_knn_join and pq_codebooks_trained leave no
+    persistent RDD behind and the session conf byte-identical; an input
+    the caller cached stays cached through lloyd_nd."""
     from flink_kmeans_clustering_spark.operators.kmeans import (
         assign_points_nd,
         lloyd_nd,
     )
-    from flink_kmeans_clustering_spark.operators.similarity import ivf_knn_join
+    from flink_kmeans_clustering_spark.operators.similarity import (
+        ivf_knn_join,
+        pq_codebooks_trained,
+    )
 
     df = spark.createDataFrame(
         [(i, i % 2, [float(i % 5), float(i % 3)]) for i in range(40)],
@@ -274,6 +279,7 @@ def test_nd_operators_leave_no_cache_and_no_conf_change(spark, op):
         "ivf_knn_join": lambda d: ivf_knn_join(
             d, d.limit(3).withColumnRenamed("vec_id", "query_id"), k=3, n_probe=1
         ).collect(),
+        "pq_codebooks_trained": lambda d: pq_codebooks_trained(d, m=2, k=2, iters=1),
     }
     conf, rdds = dict(spark.conf.getAll), _persistent_rdds(spark)
     runs[op](df)

@@ -308,13 +308,13 @@ def test_pq_trained_codebooks_same_plumbing(spark):
 
 
 def test_pq_grouped_trainer_equals_per_subspace_lloyd(spark):
-    """pq_codebooks_trained (all m subspace k-means in ONE grouped
-    Lloyd) must land on the codebooks of m independent per-subspace
+    """pq_codebooks_trained (all m subspace k-means in one pass per
+    iteration) must land on the codebooks of m independent per-subspace
     Lloyd runs, replayed in numpy: same init (the first k vectors by
     id, sliced), same iteration count, persistent codeword ids with
     emptied clusters dropped, lowest-id ties, dist² folded in index
-    order.  Equal up to distributed-sum rounding (~1 ulp), hence
-    allclose."""
+    order.  Equal bit for bit: the sums of these float32-widened values
+    are exact in doubles, so no summation order can move a bit."""
     import numpy as np
 
     from flink_kmeans_clustering_spark.operators.similarity import (
@@ -338,7 +338,7 @@ def test_pq_grouped_trainer_equals_per_subspace_lloyd(spark):
             cents = np.array([sub[near == p].mean(axis=0) for p in keep])
             ids = [ids[p] for p in keep]
         assert len(got[s]) == len(ids), f"subspace {s} codeword count"
-        assert np.allclose(np.array(got[s]), cents, atol=1e-9), s
+        assert np.array_equal(np.array(got[s]), cents), s
 
 
 def _synth64(spark, n=24):
@@ -480,11 +480,12 @@ def test_filtered_knn_join_prefilters(spark):
     )
 
 
-def test_pq_codes_sql_equals_python_argmin(spark):
-    """_pq_codes_sql must produce, for a ragged codebook, the codes of
-    a pure-Python argmin: dist² folded in index order, lowest code on
+def test_pq_encoder_equals_python_argmin(spark):
+    """The PQ encoder (the kernel pass with m codebooks over m equal
+    slices) must produce, for a ragged codebook, the codes of a
+    pure-Python argmin: dist² folded in index order, lowest code on
     ties (row 3 sits exactly between two codewords of subspace 0)."""
-    from flink_kmeans_clustering_spark.operators.similarity import _pq_codes_sql
+    from flink_kmeans_clustering_spark.functions.vector import assign_nearest
 
     books = [
         [[0.0, 0.0], [1.0, 1.0], [2.5, -1.0]],
@@ -499,8 +500,5 @@ def test_pq_codes_sql_equals_python_argmin(spark):
         return min(range(len(book)), key=lambda c: (d2[c], c))
 
     want = [[nearest(v[2 * s:2 * s + 2], book) for s, book in enumerate(books)] for v in vecs]
-    got = df.selectExpr(
-        _pq_codes_sql("transform(embedding, x -> CAST(x AS DOUBLE))", books)
-        + " AS codes"
-    ).collect()
+    got = assign_nearest(df, "embedding", books, out_col="codes", sliced=True).collect()
     assert [r["codes"] for r in got] == want
