@@ -2212,9 +2212,8 @@ def q_ann_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     (first-k-by-vec_id init, persistent ids) instead of MLlib, so the
     whole pipeline — training loop, cell ranking, nearest-cell
     assignment, probed exact top-k — replays in DuckDB
-    (_ann_trained_oracle_sql).  The MLlib production twin stays
-    available as operators.similarity.ivf_index (all-cells-probe ==
-    brute force pinned in tests/test_similarity.py)."""
+    (_ann_trained_oracle_sql).  The all-cells-probe == brute force
+    pin of these cells is in tests/test_similarity.py."""
     from flink_kmeans_clustering_spark.operators.kmeans import (
         assign_points_nd,
         lloyd_nd,

@@ -2,24 +2,30 @@
 
 Column expressions stay JVM-side, inside whole-stage codegen where they
 can (built-in ``pyspark.sql.functions`` compositions, higher-order array
-functions).  The one Python stage is the nearest-codeword kernel in
-``vector`` (numpy over Arrow batches in ``mapInArrow``) behind n-d
-K-Means, the IVF cell means and product quantization, which replaced an
-interpreted k·d higher-order argmin.
+functions).  The vector folds (squared L2, dot, norm, cosine, unit
+normalization) are SQL-text builders in ``vector``, one each, which
+the operators embed in their projections.  The one Python stage is the
+nearest-codeword kernel in ``vector`` (numpy over Arrow batches in
+``mapInArrow``) behind n-d K-Means, the IVF cell means and product
+quantization, which replaced an interpreted k·d higher-order argmin.
 """
 
 from flink_kmeans_clustering_spark.functions.vector import (
-    cosine_similarity,
-    dot,
-    l2_norm,
+    cosine_sql,
+    dot_sql,
+    l2_normalize_sql,
+    norm_sql,
+    squared_l2_sql,
 )
 from flink_kmeans_clustering_spark.functions.text import ngram_shingles, tokenize
 from flink_kmeans_clustering_spark.functions.hashing import signature_similarity
 
 __all__ = [
-    "cosine_similarity",
-    "dot",
-    "l2_norm",
+    "cosine_sql",
+    "dot_sql",
+    "l2_normalize_sql",
+    "norm_sql",
+    "squared_l2_sql",
     "ngram_shingles",
     "tokenize",
     "signature_similarity",

@@ -4,11 +4,16 @@ Two homes, picked by what the caller's rows need:
 
 * JVM-side SQL, for light per-row arithmetic.  ``zip_with`` +
   ``aggregate`` keep it in Tungsten (SURVEY.md §7 hard part d): no
-  Arrow transfer and no Python.  :func:`squared_l2_sql` is the one
-  squared-L2 fold, which the PQ rerank, the quantization-error report
-  and the coreset sensitivities build from.  It is SQL text rather than
-  a Column, because its callers author whole projections as one string
-  (one JVM-side parse instead of a py4j round trip per node).
+  Arrow transfer and no Python.  Each fold has one builder, and every
+  operator builds from it: :func:`squared_l2_sql` (the PQ rerank, the
+  quantization-error report, the coreset sensitivities),
+  :func:`dot_sql`, :func:`norm_sql`, :func:`cosine_sql` (which takes
+  norms computed once per row, so a pair folds only its dot) and
+  :func:`l2_normalize_sql` (the norm folded once per row).  Each folds
+  from ``0.0D`` in index order, so an independent engine summing in
+  that order lands on the same doubles.  They are SQL text rather than
+  Columns, because their callers author whole projections as one
+  string (one JVM-side parse instead of a py4j round trip per node).
 * One numpy kernel over Arrow record batches for every nearest-codeword
   argmin: :func:`nearest_codeword` over one codebook, and
   :func:`_nearest_codes` over either one codebook spanning the vector
@@ -51,28 +56,6 @@ from flink_kmeans_clustering_spark.operators.common import quote_ident
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Dot product of two equal-length array columns (double)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def l2_norm(a: Column) -> Column:
-    """Euclidean norm of an array column."""
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v)
-    )
-
-
-def cosine_similarity(a: Column, b: Column) -> Column:
-    """Cosine similarity; null-safe for zero vectors (returns NULL)."""
-    denom = l2_norm(a) * l2_norm(b)
-    return F.when(denom != 0.0, dot(a, b) / denom)
-
-
 def squared_l2_sql(a: str, b: str) -> str:
     """Σ (aᵢ − bᵢ)² of two ``array<double>`` SQL expressions, folded
     left to right from ``0.0D`` in index order — an independent engine
@@ -84,6 +67,54 @@ def squared_l2_sql(a: str, b: str) -> str:
     return (
         f"aggregate(zip_with({a}, {b}, (a, b) -> (a - b) * (a - b)), "
         "0.0D, (acc, x) -> acc + x)"
+    )
+
+
+def dot_sql(a: str, b: str) -> str:
+    """Σ aᵢ·bᵢ of two ``array<double>`` SQL expressions, folded from
+    ``0.0D`` in index order.  NULL when a vector is NULL, holds a NULL
+    element or the lengths differ (``zip_with`` null-pads).  ``a`` and
+    ``b`` sit outside the fold's lambdas."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (a, b) -> a * b), "
+        "0.0D, (acc, x) -> acc + x)"
+    )
+
+
+def norm_sql(a: str) -> str:
+    """‖a‖: the square root of Σ aᵢ² folded from ``0.0D`` in index
+    order; NULL for a NULL vector or one with a NULL element."""
+    return f"sqrt(aggregate({a}, 0.0D, (acc, x) -> acc + x * x))"
+
+
+def cosine_sql(a: str, b: str, norm_a: str, norm_b: str) -> str:
+    """``dot_sql(a, b) / (norm_a * norm_b)``, NULL when that product is
+    0 or NULL (``try_divide``, in every ANSI mode) or the dot is NULL.
+
+    The norms are SQL expressions, each read once: columns projected
+    below a join, so a scored pair folds its dot and nothing else, or
+    :func:`norm_sql` of a row scored against a literal, folded once."""
+    return f"try_divide({dot_sql(a, b)}, ({norm_a}) * ({norm_b}))"
+
+
+def l2_normalize_sql(v: str) -> str:
+    """``v / ‖v‖`` elementwise, NULL unless 0 < Σ vᵢ² < ∞ (so a NULL,
+    empty, zero, NULL-element, NaN or overflowing vector has none).
+
+    Σ vᵢ² is folded once per row and reaches the division through
+    ``aggregate``'s finish lambda: a norm read inside ``transform``'s
+    lambda would be refolded for every element (docs/TUNING.md, third
+    corollary).  ``v`` is read again inside that finish lambda, whose
+    variable is named so that it occurs nowhere in ``v``: a column of
+    ``v`` is never captured by it.  NaN sorts above every double in
+    Spark, so ``< Infinity`` also rejects a NaN sum."""
+    ss = "ss"
+    while ss in v.lower():
+        ss += "_"
+    return (
+        f"aggregate({v}, 0.0D, (acc, x) -> acc + x * x, {ss} -> "
+        f"CASE WHEN {ss} > 0.0D AND {ss} < CAST('Infinity' AS DOUBLE) "
+        f"THEN transform({v}, x -> x / sqrt({ss})) END)"
     )
 
 

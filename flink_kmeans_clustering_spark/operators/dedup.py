@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
+from flink_kmeans_clustering_spark.functions.vector import dot_sql, l2_normalize_sql
 from flink_kmeans_clustering_spark.operators.common import array_lit_sql, spread as _spread
 from flink_kmeans_clustering_spark.functions.hashing import (
     band_hashes,
@@ -1272,8 +1273,8 @@ def semantic_blocks(
     stage flat at 100 TB (a fixed small k would leave blocks growing
     as N/k and the pair stage as N²/k).  The sizing count is one
     scan.  At real corpus scale the seeds
-    would come from a trained k-means model (``ivf_index``); the
-    assignment plan is identical either way — k seed rows against the
+    would come from trained k-means cells (``kmeans.lloyd_nd``, as
+    ``q_ann_trained`` trains them); the assignment plan is identical either way — k seed rows against the
     scan, one argmax per row, no shuffle of the corpus.
 
     The seeds are the vectors with the ``k`` smallest ids — selected
@@ -1285,9 +1286,11 @@ def semantic_blocks(
     Ties break to the lowest seed id on the ROUNDED cosine (the
     struct-max trick: max over (cos, -seed_id) lexicographic), so an
     oracle recomputing the same rounded values assigns identically.
-    Every norm and dot is a fold from 0.0 in index order.  Null, empty,
-    null-element, NaN and zero-norm vectors are dropped before seeding
-    (the same rule as :func:`embedding_cosine_pairs`).
+    Vectors are unit-normalized by ``functions.vector.l2_normalize_sql``
+    and a cosine to a seed is their ``dot_sql``: folds from 0.0 in
+    index order.  Null, empty, null-element, NaN and zero-norm vectors
+    have no unit vector and are dropped before seeding (the same rule
+    as :func:`embedding_cosine_pairs`).
 
     Output: (id, nv, blk) — id, L2-normalized vector, block id (the
     seed's id, in the id column's type).
@@ -1306,22 +1309,14 @@ def _semantic_blocks(
     target_block_size: int,
 ) -> DataFrame:
     """:func:`semantic_blocks` with the raw vector kept: (id, v, nv, blk)."""
-
-    def sq_then(finish: str) -> str:
-        return f"aggregate(v, 0.0D, (acc, x) -> acc + x * x, acc -> {finish})"
-
-    # ‖v‖² is folded once per row and handed to the division by the
-    # finish lambda: a norm column read inside ``transform`` would be
-    # inlined into the lambda and refolded per element.  NaN sorts
-    # above every double in Spark, so ``< Infinity`` also rejects a NaN
-    # ‖v‖²; a null one fails both comparisons.
+    # nv is a unit vector, so its cosine to a seed is the dot of the two
     base = (
         df.select(
             F.col(id_col).alias("id"),
             F.col(vec_col).cast("array<double>").alias("v"),
         )
-        .where(sq_then("acc > 0.0D AND acc < CAST('Infinity' AS DOUBLE)"))
-        .selectExpr("id", "v", sq_then("transform(v, x -> x / sqrt(acc))") + " AS nv")
+        .selectExpr("id", "v", f"{l2_normalize_sql('v')} AS nv")
+        .where("nv IS NOT NULL")
     )
     if k is None:
         n = base.count()
@@ -1329,12 +1324,6 @@ def _semantic_blocks(
     # a block id is its seed's id, in the id's own type: a narrower
     # cast would overflow (or, with ANSI off, merge seeds 2^32 apart)
     id_type = base.schema["id"].dataType.simpleString()
-
-    def seed_cos(a: str, b: str) -> str:
-        return (
-            f"round(aggregate(zip_with({a}, {b}, (p, q) -> p * q), 0.0D,"
-            f" (acc, x) -> acc + x), {round_to})"
-        )
 
     if k <= SEMANTIC_LITERAL_SEED_MAX:
         # Small seed set → the k-means-assignment shape (see
@@ -1348,7 +1337,7 @@ def _semantic_blocks(
         # ~1,500 py4j calls at d=64, k=8.
         seed_rows = base.orderBy("id").limit(k).select("id", "nv").collect()
         cands = ", ".join(
-            f"named_struct('c', {seed_cos('nv', array_lit_sql(r['nv']))},"
+            f"named_struct('c', round({dot_sql('nv', array_lit_sql(r['nv']))}, {round_to}),"
             f" 'neg', CAST({-int(r['id'])} AS BIGINT))"
             for r in seed_rows
         )
@@ -1362,7 +1351,7 @@ def _semantic_blocks(
         base.join(F.broadcast(seeds))
         .selectExpr(
             "id",
-            f"named_struct('c', {seed_cos('nv', 'sv')},"
+            f"named_struct('c', round({dot_sql('nv', 'sv')}, {round_to}),"
             " 'neg', CAST(-seed_id AS BIGINT)) AS s",
         )
         .groupBy("id")

@@ -61,6 +61,7 @@ from pyspark.sql import functions as F
 
 from flink_kmeans_clustering_spark.functions.vector import (
     assign_nearest,
+    l2_normalize_sql,
     label_sums,
     nearest_dist2_sum,
 )
@@ -915,36 +916,16 @@ def _decimal_sums_sql(dim: int, vec_col: str) -> list[str]:
 def normalize_unit_nd(
     vectors: DataFrame, vec_col: str = "embedding"
 ) -> DataFrame:
-    """Project a vector column onto the unit sphere (zero-norm rows
-    dropped): the preprocessing step of spherical K-Means.  The norm is
-    let-bound through a single-element ``transform`` so it is computed
-    ONCE per row, not re-inlined per component (the projection-collapse
-    lesson); the fold order (index-sequential) matches any engine's
-    left-fold ``list_sum``, so normalized values are bit-identical
-    across engines."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    nrm = F.sqrt(
-        F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    return (
-        vectors.withColumn("_nrm", nrm)
-        .filter(F.col("_nrm") > 0)
-        .withColumn(
-            vec_col,
-            F.element_at(
-                F.transform(
-                    F.array(F.col("_nrm")),
-                    lambda nn: F.transform(
-                        F.transform(
-                            F.col(vec_col), lambda x: x.cast("double")
-                        ),
-                        lambda x: x / nn,
-                    ),
-                ),
-                1,
-            ),
-        )
-        .drop("_nrm")
+    """Project a vector column onto the unit sphere: the preprocessing
+    step of spherical K-Means.  Each vector becomes
+    :func:`~flink_kmeans_clustering_spark.functions.vector.l2_normalize_sql`
+    of its doubles (the norm folded once per row, index-sequential, so
+    the normalized values are bit-identical to any engine's left-fold
+    ``list_sum``), and rows with no unit vector (NULL, empty, zero,
+    NULL-element, NaN or overflowing) are dropped."""
+    v = f"CAST({quote_ident(vec_col)} AS array<double>)"
+    return vectors.withColumn(vec_col, F.expr(l2_normalize_sql(v))).filter(
+        F.col(quote_ident(vec_col)).isNotNull()
     )
 
 

@@ -480,26 +480,26 @@ def embedding_health(
     distribution (un-normalized corpora break cosine shortcuts).
 
     One single-pass conditional aggregate over the scan — zero
-    joins, one 1-row exchange.  Norms fold index-ordered (the shared
-    ``l2_norm``) so min/max are exact cross-engine; the mean rounds
-    after the order-dependent sum (norms are O(1), so 6 decimals
-    absorbs summation-order ulps).
+    joins, one 1-row exchange.  Each row's norm folds once,
+    index-ordered (``functions.vector.norm_sql``), so min/max are exact
+    cross-engine; the mean rounds after the order-dependent sum (norms
+    are O(1), so 6 decimals absorbs summation-order ulps).
 
     Output: one row — (n_vecs, n_null_vec, n_wrong_dim, n_zero_norm,
     min_norm, max_norm, mean_norm).
     """
-    from flink_kmeans_clustering_spark.functions.vector import l2_norm
+    from flink_kmeans_clustering_spark.functions.vector import norm_sql
 
-    v = F.col(vec_col).cast("array<double>")
+    v, nrm = F.col("_v"), F.col("_n")
     ok = v.isNotNull() & (F.size(v) == expected_dim)
-    nrm = F.when(ok, l2_norm(v))
-    return df.agg(
+    rows = df.select(F.col(vec_col).cast("array<double>").alias("_v"))
+    return rows.withColumn("_n", F.when(ok, F.expr(norm_sql("_v")))).agg(
         F.count(F.lit(1)).alias("n_vecs"),
         F.sum(v.isNull().cast("long")).alias("n_null_vec"),
         F.sum((v.isNotNull() & (F.size(v) != expected_dim)).cast("long")).alias(
             "n_wrong_dim"
         ),
-        F.sum((ok & (l2_norm(v) == 0.0)).cast("long")).alias("n_zero_norm"),
+        F.sum((ok & (nrm == 0.0)).cast("long")).alias("n_zero_norm"),
         F.min(nrm).alias("min_norm"),
         F.max(nrm).alias("max_norm"),
         F.round(F.avg(nrm), round_to).alias("mean_norm"),
@@ -593,25 +593,25 @@ def isotropy_profile(
     Output: ONE row — (n_panel, n_pairs, mean_abs_cos, p90_abs_cos,
     max_abs_cos, iso_floor) with iso_floor = 1/√d for reference.
     """
-    from flink_kmeans_clustering_spark.functions.vector import (
-        cosine_similarity,
-        l2_norm,
-    )
+    from flink_kmeans_clustering_spark.functions.vector import cosine_sql, norm_sql
     from flink_kmeans_clustering_spark.operators.sampling import hash_bucket
 
-    v = F.col(vec_col).cast("array<double>")
+    # each panel row's norm is folded once, below the self-join, so a
+    # pair folds only its dot
     panel = (
         df.filter(
             hash_bucket(F.col(id_col).cast("string"), panel_buckets) == 0
         )
-        .filter(l2_norm(v) > 0)
-        .select(F.col(id_col).alias("id"), v.alias("v"))
+        .select(
+            F.col(id_col).alias("id"),
+            F.col(vec_col).cast("array<double>").alias("v"),
+        )
+        .withColumn("n", F.expr(norm_sql("v")))
+        .filter(F.col("n") > 0)
     )
     dim = F.size(F.col("v"))
     a, b = panel.alias("a"), panel.alias("b")
-    cos = F.round(
-        F.abs(cosine_similarity(F.col("a.v"), F.col("b.v"))), round_to
-    )
+    cos = F.expr(f"round(abs({cosine_sql('a.v', 'b.v', 'a.n', 'b.n')}), {round_to})")
     pairs = a.join(
         F.broadcast(b), F.col("a.id") < F.col("b.id")
     ).select(cos.alias("c"))

@@ -923,8 +923,9 @@ def clip_agreement_filter(
     row-locally inside ONE let-bound codegen expression — no explode,
     no shuffle.  Each tower is projected by its frozen
     ``out_dim × 16`` head (:func:`clip_head_weights` literals via
-    ``array_lit`` — zero py4j chatter), and agreement is the cosine of
-    the two projections.
+    ``array_lit_sql`` — zero py4j chatter; one ``dot_sql`` per output
+    dimension), and agreement is the ``cosine_sql`` of the two
+    projections.
 
     Scale shape: modality pruning (``doc_id % 3 = 0`` — the image
     slice) pushes to the scan; the only shuffle is the image-features
@@ -939,7 +940,8 @@ def clip_agreement_filter(
     unfilterable, not spuriously aligned.
     """
     from flink_kmeans_clustering_spark.functions.text import tokenize
-    from flink_kmeans_clustering_spark.operators.common import array_lit
+    from flink_kmeans_clustering_spark.functions.vector import cosine_sql, dot_sql, norm_sql
+    from flink_kmeans_clustering_spark.operators.common import array_lit_sql
 
     img_docs = docs.filter((F.col("doc_id") % 3) == 0)
     feats = byte_histogram_features(synthesize_assets(img_docs))
@@ -975,41 +977,21 @@ def clip_agreement_filter(
         "doc_id", hist.alias("ht")
     )
 
-    w_img = array_lit(clip_head_weights("img", out_dim, n_buckets))
-    w_txt = array_lit(clip_head_weights("txt", out_dim, n_buckets))
-
-    def project(w: "F.Column", h: "F.Column") -> "F.Column":
-        return F.transform(
-            F.sequence(F.lit(1), F.lit(out_dim)),
-            lambda j: F.aggregate(
-                F.sequence(F.lit(1), F.lit(n_buckets)),
-                F.lit(0.0),
-                lambda acc, i: acc
-                + F.element_at(F.element_at(w, j.cast("int")), i.cast("int"))
-                * F.element_at(h, i.cast("int")),
-            ),
-        )
-
-    def l2(z: "F.Column") -> "F.Column":
-        return F.sqrt(
-            F.aggregate(z, F.lit(0.0), lambda acc, v: acc + v * v)
+    def project(tag: str, h: str) -> "F.Column":
+        # the frozen head times a tower: one dot per output dimension
+        w = array_lit_sql(clip_head_weights(tag, out_dim, n_buckets))
+        return F.expr(
+            f"transform(sequence(1, {out_dim}), j -> {dot_sql(f'element_at({w}, j)', h)})"
         )
 
     joined = img.join(txt, "doc_id")
-    zi, zt = project(w_img, F.col("hi")), project(w_txt, F.col("ht"))
+    zi, zt = project("img", "hi"), project("txt", "ht")
     # let-bind both projections so norms + dot don't recompute them
     bound = joined.select(
         "doc_id", zi.alias("_zi"), zt.alias("_zt")
     )
-    dot = F.aggregate(
-        F.zip_with(F.col("_zi"), F.col("_zt"), lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    ni, nt = l2(F.col("_zi")), l2(F.col("_zt"))
-    agreement = F.when(
-        (ni > 0) & (nt > 0), F.round(dot / (ni * nt), 6)
-    )
+    cos = cosine_sql("_zi", "_zt", norm_sql("_zi"), norm_sql("_zt"))
+    agreement = F.expr(f"round({cos}, 6)")
     return (
         bound.select(
             "doc_id",

@@ -25,16 +25,20 @@ Every nearest-codeword argmin here is the one numpy kernel over Arrow
 batches in functions.vector: cell means (:func:`cell_centroids`) and
 PQ training are its per-partition sums (``label_sums``), added on the
 driver; PQ encoding is its ``mapInArrow`` pass (``assign_nearest``).
-The rest of the per-row vector arithmetic is JVM-side: the squared-L2
-folds are ``squared_l2_sql`` and the cosines higher-order functions.
-Query vectors enter the plan as literal arrays.
+The rest of the per-row vector arithmetic is JVM-side, built from the
+SQL-text folds of functions.vector: squared L2 is ``squared_l2_sql``,
+and every cosine is ``cosine_sql`` over norms (``norm_sql``) computed
+once per row, below any join, so a scored pair folds only its dot.
+Query vectors enter the plan as literal arrays, and a literal query's
+norm is folded once on the driver, in the same order.
 """
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from flink_kmeans_clustering_spark.operators.common import (
@@ -45,16 +49,52 @@ from flink_kmeans_clustering_spark.operators.common import (
 )
 from flink_kmeans_clustering_spark.functions.vector import (
     assign_nearest,
-    cosine_similarity,
-    dot,
-    l2_norm,
+    cosine_sql,
+    dot_sql,
     label_sums,
+    norm_sql,
     squared_l2_sql,
 )
 
 
-def _query_lit(query_vec: Sequence[float]):
-    return F.array(*[F.lit(float(v)) for v in query_vec])
+def _double_sql(x: float) -> str:
+    """A double as SQL text; a non-finite one as a cast from its name,
+    which the optimizer folds to a literal."""
+    return repr(x) + "D" if math.isfinite(x) else f"CAST('{x}' AS DOUBLE)"
+
+
+def _norm(v: Sequence[float]) -> float:
+    """:func:`norm_sql` on the driver: the same fold in the same order,
+    so the same double."""
+    ss = 0.0
+    for x in v:
+        ss += x * x
+    return math.sqrt(ss)
+
+
+def _cosine(a: Sequence[float] | None, b: Sequence[float] | None) -> float | None:
+    """:func:`cosine_sql` on the driver, with its NULL (None) rule: a
+    NULL vector or element, a length mismatch or a norm product of 0."""
+    if a is None or b is None or len(a) != len(b) or None in a or None in b:
+        return None
+    a, b = [float(x) for x in a], [float(x) for x in b]
+    den = _norm(a) * _norm(b)
+    if den == 0.0:
+        return None
+    dot = 0.0
+    for x, y in zip(a, b):
+        dot += x * y
+    return dot / den
+
+
+def _query_cosine(query_vec: Sequence[float], round_to: int | None) -> Column:
+    """The cosine of each row's ``_v`` to a literal query vector,
+    rounded to ``round_to``.  The query's norm is folded once, on the
+    driver (:func:`_norm`), not once per row."""
+    q = [float(v) for v in query_vec]
+    qv = "array(" + ", ".join(map(_double_sql, q)) + ")"
+    sim = cosine_sql("_v", qv, norm_sql("_v"), _double_sql(_norm(q)))
+    return F.expr(sim if round_to is None else f"round({sim}, {round_to})")
 
 
 def topk_cosine(
@@ -77,11 +117,12 @@ def topk_cosine(
     (``zip_with`` null-pads) and sort last — they never displace a
     real result.
     """
-    sim = cosine_similarity(F.col(vec_col).cast("array<double>"), _query_lit(query_vec))
-    if round_to is not None:
-        sim = F.round(sim, round_to)
-    scored = df.select(F.col(id_col), sim.alias("cosine"))
-    return scored.orderBy(F.desc("cosine"), F.col(id_col)).limit(k)
+    scored = df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v"))
+    return (
+        scored.select(F.col(id_col), _query_cosine(query_vec, round_to).alias("cosine"))
+        .orderBy(F.desc("cosine"), F.col(id_col))
+        .limit(k)
+    )
 
 
 def cell_centroids(
@@ -141,16 +182,18 @@ def _probe_cells(
     centroids: list[tuple[int, list[float]]], q: Sequence[float], n_probe: int
 ) -> list[tuple[int, list[float]]]:
     """The ``n_probe`` cells :func:`ann_search` and :func:`ann_ivfpq`
-    probe, ranked driver-side: cosine of the centroid to ``q``
-    descending (0 for a zero-norm vector), ties to the lowest cell."""
-    import math
+    probe, ranked driver-side by the order :func:`ivf_knn_join` ranks
+    cells in: cosine of the centroid to ``q`` (:func:`_cosine`)
+    descending, NaN above every number as Spark sorts it, an undefined
+    (NULL) cosine after every defined one, ties to the lowest cell."""
 
-    def cos(a: Sequence[float], b: Sequence[float]) -> float:
-        num = sum(x * y for x, y in zip(a, b))
-        den = math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(y * y for y in b))
-        return num / den if den else 0.0
+    def key(cell: tuple[int, list[float]]) -> tuple:
+        cos = _cosine(cell[1], q)
+        if cos is None:
+            return (2, 0.0, cell[0])
+        return (0, 0.0, cell[0]) if math.isnan(cos) else (1, -cos, cell[0])
 
-    return sorted(centroids, key=lambda c: (-cos(c[1], q), c[0]))[:n_probe]
+    return sorted(centroids, key=key)[:n_probe]
 
 
 def knn_join(
@@ -178,8 +221,8 @@ def knn_join(
     exchange.
 
     Determinism (FIXTURES.md): cosine rounded to ``round_to`` BEFORE
-    ranking, ties broken by neighbor id ascending; NULL cosines
-    (zero vectors) are filtered, never ranked.
+    ranking, ties broken by neighbor id ascending; NULL cosines (zero
+    vectors) rank after every real neighbor and are dropped.
 
     Output: (query_id, neighbor_id, cosine, rnk), rnk in 1..k.
     """
@@ -187,79 +230,37 @@ def knn_join(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("_v"),
-    )
+    ).withColumn("_vn", F.expr(norm_sql("_v")))
     return _top_k_per_query(c.join(F.broadcast(q)), k, round_to)
 
 
 def _query_batch(queries: DataFrame, query_id_col: str, query_vec_col: str) -> DataFrame:
+    """(query_id, ``_qv``, ``_qn``): each query vector and its norm."""
     return queries.select(
         F.col(query_id_col).alias("query_id"),
         F.col(query_vec_col).cast("array<double>").alias("_qv"),
-    )
+    ).withColumn("_qn", F.expr(norm_sql("_qv")))
 
 
 def _top_k_per_query(pairs: DataFrame, k: int, round_to: int | None) -> DataFrame:
     """The tail :func:`knn_join` and :func:`ivf_knn_join` share: the
-    cosine of each (``_v``, ``_qv``) pair, rounded, NULLs dropped, then
+    cosine of each (``_v``, ``_qv``) pair from the norms ``_vn`` and
+    ``_qn`` computed below the join (one dot per pair), rounded, then
     the top k per query by (cosine desc, neighbor_id asc) through a
-    ``row_number() ≤ k`` window (``WindowGroupLimit``)."""
-    sim = cosine_similarity(F.col("_v"), F.col("_qv"))
+    ``row_number() ≤ k`` window (``WindowGroupLimit``), NULLs dropped.
+    A NULL sorts last under DESC, so dropping it after the window keeps
+    the same rows and ranks, and the cosine is not evaluated a second
+    time in a filter pushed into the join."""
+    sim = cosine_sql("_v", "_qv", "_vn", "_qn")
     if round_to is not None:
-        sim = F.round(sim, round_to)
+        sim = f"round({sim}, {round_to})"
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
     return (
-        pairs.select("query_id", "neighbor_id", sim.alias("cosine"))
-        .filter(F.col("cosine").isNotNull())
+        pairs.select("query_id", "neighbor_id", F.expr(sim).alias("cosine"))
         .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
+        .filter((F.col("rnk") <= k) & F.col("cosine").isNotNull())
         .select("query_id", "neighbor_id", "cosine", "rnk")
     )
-
-
-def normalize_vectors(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Add ``<vec_col>_norm``: the L2-normalized vector (array<double>).
-
-    Pre-normalizing once turns every later cosine into a plain dot
-    product — the standard preparation pass for a similarity corpus.
-    """
-    v = F.col(vec_col).cast("array<double>")
-    # ‖v‖² folds once per row and reaches the division through the
-    # finish lambda; a norm column read inside ``transform`` would be
-    # refolded for every element (docs/TUNING.md, third corollary)
-    return df.withColumn(
-        f"{vec_col}_norm",
-        F.aggregate(
-            v,
-            F.lit(0.0),
-            lambda acc, x: acc + x * x,
-            lambda sq: F.when(sq != 0.0, F.transform(v, lambda x: x / F.sqrt(sq))),
-        ),
-    )
-
-
-def ivf_index(
-    df: DataFrame,
-    n_cells: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 42,
-    max_iter: int = 10,
-):
-    """Train a real IVF index: k-means cells learned from the data.
-
-    Returns ``(assigned, centroids)``: the input with a ``cell`` column
-    (MLlib k-means|| assignment) and the driver-side cell→centroid list
-    for :func:`ann_search`.  On a production corpus the assigned table
-    is written partitioned by ``cell`` so probe filters become partition
-    pruning; cells should hold ~10³-10⁴ vectors (n_cells ≈ N/4096).
-    """
-    from flink_kmeans_clustering_spark.operators.kmeans_ml import fit_kmeans_ml
-
-    res = fit_kmeans_ml(
-        df, k=n_cells, features_col=vec_col, max_iter=max_iter, seed=seed
-    )
-    assigned = res.predictions.withColumnRenamed("cluster", "cell")
-    return assigned, [(cid, vec) for cid, vec in res.centroids]
 
 
 def random_hyperplanes(n_planes: int, dim: int, seed: int = 7) -> list[list[float]]:
@@ -275,23 +276,20 @@ def random_hyperplanes(n_planes: int, dim: int, seed: int = 7) -> list[list[floa
     return [[float(v) for v in row] for row in rs.standard_normal((n_planes, dim))]
 
 
-def lsh_bucket(vec, planes: list[list[float]]):
-    """Sign-LSH bucket id of an array column: bit i = (vec · plane_i) > 0.
+def lsh_bucket(vec: str, planes: list[list[float]]) -> Column:
+    """Sign-LSH bucket id of an ``array<double>`` SQL expression:
+    bit i = (vec · plane_i) > 0.
 
     A narrow in-scan expression — at corpus scale the bucket id is the
     column you write ``partitionBy``, making probe filters partition
     pruning exactly like IVF cells.
     """
-    bits = [
-        F.when(dot(vec, F.array(*[F.lit(v) for v in p])) > 0.0, F.lit(1 << i)).otherwise(
-            F.lit(0)
+    return F.expr(
+        " + ".join(
+            f"CASE WHEN {dot_sql(vec, array_lit_sql(p))} > 0.0D THEN {1 << i} ELSE 0 END"
+            for i, p in enumerate(planes)
         )
-        for i, p in enumerate(planes)
-    ]
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
+    )
 
 
 def ann_lsh(
@@ -331,7 +329,7 @@ def ann_lsh(
     # max_hamming > 1 not needed at these bucket counts; extend with
     # itertools.combinations over bit pairs if it ever is.
     bucketed = df.withColumn(
-        "_bucket", lsh_bucket(F.col(vec_col).cast("array<double>"), planes)
+        "_bucket", lsh_bucket(f"CAST({quote_ident(vec_col)} AS array<double>)", planes)
     )
     pruned = bucketed.filter(F.col("_bucket").isin(probe)).drop("_bucket")
     return topk_cosine(
@@ -346,8 +344,6 @@ def _quantize_query_int8(query_vec: Sequence[float]) -> list[int]:
     and DuckDB's ``round`` apply to doubles — so the literal the plan
     embeds equals what either engine computes from the same values.
     """
-    import math
-
     amax = max(abs(float(v)) for v in query_vec)
     if amax == 0.0:
         return [0 for _ in query_vec]
@@ -383,9 +379,6 @@ def ann_quantized(
     kept beside the exact one so recall loss is observable.
     """
     qq = _quantize_query_int8(query_vec)
-    import math
-
-    qn = math.sqrt(sum(x * x for x in qq))
     v = F.col(vec_col).cast("array<double>")
     amax = F.array_max(F.transform(v, lambda x: F.abs(x)))
     scale = F.lit(127.0) / amax
@@ -395,19 +388,16 @@ def ann_quantized(
         v.alias("_v"),
         F.when(amax > 0.0, qv).alias("_q"),
     ).filter(F.col("_q").isNotNull())
-    qlit = F.array(*[F.lit(float(x)) for x in qq])
-    qdot = dot(F.col("_q"), qlit)
-    qrow_norm = l2_norm(F.col("_q"))
-    approx = qdot / (qrow_norm * F.lit(qn))
+    approx = F.expr(
+        f"{dot_sql('_q', array_lit_sql(qq))} / ({norm_sql('_q')} * {_double_sql(_norm(qq))})"
+    )
     if round_to is not None:
         approx = F.round(approx, round_to)
     scored = base.select(
         F.col(id_col), "_v", approx.alias("approx_cosine")
     ).filter(F.col("approx_cosine").isNotNull())
     short = scored.orderBy(F.desc("approx_cosine"), F.col(id_col)).limit(shortlist)
-    exact = cosine_similarity(F.col("_v"), _query_lit(query_vec))
-    if round_to is not None:
-        exact = F.round(exact, round_to)
+    exact = _query_cosine(query_vec, round_to)
     return (
         short.select(F.col(id_col), "approx_cosine", exact.alias("cosine"))
         .orderBy(F.desc("cosine"), F.col(id_col))
@@ -489,9 +479,7 @@ def ann_binary(
         .orderBy(F.col("hamming"), F.col(id_col))
         .limit(shortlist)
     )
-    exact = cosine_similarity(F.col("_v"), _query_lit(query_vec))
-    if round_to is not None:
-        exact = F.round(exact, round_to)
+    exact = _query_cosine(query_vec, round_to)
     return (
         short.select(F.col(id_col), "hamming", exact.alias("cosine"))
         .orderBy(F.desc("cosine"), F.col(id_col))
@@ -615,7 +603,9 @@ def _adc_rerank(
     ADC-scored as ``Σ_s lut[s][codes[s]]`` (an ordered fold of m array
     lookups), the ``shortlist`` best are reranked by exact squared L2
     to ``q``, and the top ``k`` kept.  Both cuts are
-    TakeOrderedAndProject with ties to the lowest id.  ``lut_sql``
+    TakeOrderedAndProject with ties to the lowest id; a NULL d2 (a
+    null, short, long or null-element vector) ranks after every real
+    neighbour, as in :func:`topk_cosine`.  ``lut_sql``
     (``array<array<double>>``, m rows) is SQL text read outside every
     lambda.  Output: (id, d2)."""
     codes = fresh_name("_codes", candidates.columns)
@@ -632,7 +622,7 @@ def _adc_rerank(
     )
     vec = f"transform({qvec}, x -> CAST(x AS DOUBLE))"
     d2 = squared_l2_sql(vec, array_lit_sql(q))
-    out = short.selectExpr(qid, f"{d2} AS d2").orderBy("d2", id_col).limit(k)
+    out = short.selectExpr(qid, f"{d2} AS d2").orderBy(F.asc_nulls_last("d2"), id_col).limit(k)
     if round_to is not None:
         out = out.selectExpr(qid, f"round(d2, {round_to}) AS d2")
     return out
@@ -711,27 +701,35 @@ def ivf_knn_join(
     prune partitions exactly like :func:`ann_search`.
 
     Determinism: cosine rounded BEFORE ranking, neighbor-id ascending
-    tie-break; cell ranking ties break on cell id ascending — all
-    replayable in any SQL engine (q_ann_recall's DuckDB oracle does).
+    tie-break; cell ranking ties break on cell id ascending, and a cell
+    with no cosine (a zero-norm centroid) ranks last, the rule
+    :func:`ann_search` probes by — all replayable in any SQL engine
+    (q_ann_recall's DuckDB oracle does).  Every norm is projected once
+    per row below its join, so a (query, cell) or (query, corpus row)
+    pair folds one dot.
 
     Output: (query_id, neighbor_id, cosine, rnk), rnk in 1..k.
     """
-    cents = cell_centroids(corpus, cell_col, vec_col).select("cell", "centroid")
+    cents = (
+        cell_centroids(corpus, cell_col, vec_col)
+        .select("cell", "centroid")
+        .withColumn("_cn", F.expr(norm_sql("centroid")))
+    )
     q = _query_batch(queries, query_id_col, query_vec_col)
-    csim = cosine_similarity(F.col("centroid"), F.col("_qv"))
+    csim = F.expr(cosine_sql("centroid", "_qv", "_cn", "_qn"))
     wq = Window.partitionBy("query_id").orderBy(F.desc("_csim"), F.col("cell"))
     probes = (
         q.join(F.broadcast(cents))
-        .select("query_id", "_qv", "cell", csim.alias("_csim"))
+        .select("query_id", "_qv", "_qn", "cell", csim.alias("_csim"))
         .withColumn("_crnk", F.row_number().over(wq))
         .filter(F.col("_crnk") <= n_probe)
-        .select("query_id", "_qv", "cell")
+        .select("query_id", "_qv", "_qn", "cell")
     )
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(cell_col).alias("_cell"),
         F.col(vec_col).cast("array<double>").alias("_v"),
-    )
+    ).withColumn("_vn", F.expr(norm_sql("_v")))
     return _top_k_per_query(
         c.join(F.broadcast(probes), F.col("_cell") == F.col("cell")), k, round_to
     )
@@ -822,23 +820,21 @@ def matryoshka_recall(
     """
     levels = sorted(set(int(d) for d in dims_levels))
 
-    def _prefix_norms(vec: Column) -> Column:
+    def _prefix_norms(vec: str) -> Column:
         # per-ROW prefix norms, one array per vector: computed once per
         # corpus/query row instead of once per (row × query) pair —
         # HOF folds are interpreted per element, so moving them off
         # the pair product is the dominant cost lever here
-        return F.array(
-            *[F.sqrt(dot(F.slice(vec, 1, d), F.slice(vec, 1, d))) for d in levels]
-        )
+        return F.array(*[F.expr(norm_sql(f"slice({vec}, 1, {d})")) for d in levels])
 
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         F.col(query_vec_col).cast("array<double>").alias("_qv"),
-    ).withColumn("_qn", _prefix_norms(F.col("_qv")))
+    ).withColumn("_qn", _prefix_norms("_qv"))
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("_v"),
-    ).withColumn("_vn", _prefix_norms(F.col("_v")))
+    ).withColumn("_vn", _prefix_norms("_v"))
 
     # Per pair, the only remaining folds are over ONE shared
     # elementwise-product array.  The product is let-bound via a
@@ -1100,7 +1096,7 @@ def quantization_error(
     scale = f"(127.0D / array_max(transform({v}, x -> abs(x))))"
     xhat = f"transform({v}, x -> round(x * {scale}) / {scale})"
     num = squared_l2_sql(v, xhat)
-    den = f"aggregate(transform({v}, x -> x * x), 0.0D, (acc, e) -> acc + e)"
+    den = dot_sql(v, v)
     per_vec = df.filter(
         F.expr(f"array_max(transform({v}, x -> abs(x)))") > 0
     ).select(

@@ -156,8 +156,9 @@ PICKS = [
     (
         "q_knn_join",
         "k-NN join — query batch broadcast (corpus scanned once), "
-        "WindowGroupLimit bounds the per-query ranking before the only "
-        "exchange",
+        "norms projected once per row below the join so a pair folds one "
+        "dot, WindowGroupLimit bounds the per-query ranking before the "
+        "only exchange, NULL cosines dropped after the window",
     ),
     (
         "q_embed_cov",

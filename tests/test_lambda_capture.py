@@ -1,11 +1,12 @@
 """A caller's column named like a kernel lambda variable stays a column.
 
-The assignment and PQ kernels are SQL text with higher-order functions;
-a column read inside a lambda whose variable has the same name would
-silently resolve to the variable instead.  Each operator below runs with
-its input column renamed to every lambda-variable name the kernels use
-(Spark resolves names case-insensitively, hence ``I``), and is checked
-against a pure-Python argmin reference.
+The assignment and PQ kernels and the vector folds are SQL text with
+higher-order functions; a column read inside a lambda whose variable has
+the same name would silently resolve to the variable instead.  Each
+operator below runs with its input column renamed to every
+lambda-variable name the kernels use (Spark resolves names
+case-insensitively, hence ``I``), and is checked against a pure-Python
+reference.
 """
 
 from __future__ import annotations
@@ -14,6 +15,12 @@ import math
 
 import pytest
 
+from flink_kmeans_clustering_spark.functions.vector import (
+    cosine_sql,
+    l2_normalize_sql,
+    norm_sql,
+)
+from flink_kmeans_clustering_spark.operators.common import quote_ident
 from flink_kmeans_clustering_spark.operators.kmeans import assign_points, lloyd
 from flink_kmeans_clustering_spark.operators.similarity import (
     ann_ivfpq,
@@ -153,3 +160,31 @@ def test_ivfpq_search_reads_the_columns(spark, name):
         )
         want = _ivfpq_reference(cents, books, n_probe=2, k=5, shortlist=10)
         assert [(r["vec_id"], r["d2"]) for r in got.collect()] == want
+
+
+@pytest.mark.parametrize("name", ["acc", "x", "p"])
+def test_normalize_and_cosine_builders_read_the_columns(spark, name):
+    """l2_normalize_sql and cosine_sql over vector columns named like
+    their lambda variables, against a Python fold."""
+    rows = [(0, [3.0, 4.0], [4.0, -3.0]), (1, [0.0, 0.0], [1.0, 2.0]), (2, None, [0.5, 0.25])]
+
+    def ref(a, b):
+        if a is None or not any(a):
+            return None, None
+        ss, dot = 0.0, 0.0
+        for x, y in zip(a, b):
+            ss, dot = ss + x * x, dot + x * y
+        nb = math.sqrt(sum(y * y for y in b))
+        return [x / math.sqrt(ss) for x in a], dot / (math.sqrt(ss) * nb)
+
+    other = _other(name)
+    df = spark.createDataFrame(rows, f"id long, `{name}` array<double>, `{other}` array<double>")
+    a, b = quote_ident(name), quote_ident(other)
+    got = df.selectExpr(
+        "id", a, b, f"{norm_sql(a)} AS na", f"{norm_sql(b)} AS nb"
+    ).selectExpr(
+        "id", f"{l2_normalize_sql(a)} AS u", f"{cosine_sql(a, b, 'na', 'nb')} AS c"
+    )
+    assert {r["id"]: (r["u"], r["c"]) for r in got.collect()} == {
+        i: ref(va, vb) for i, va, vb in rows
+    }

@@ -944,24 +944,65 @@ def _lambda_bodies(plan: str) -> list[str]:
     return bodies
 
 
-def test_normalize_vectors_folds_the_norm_once_per_row(spark):
-    """normalize_vectors folds the norm once per row: no lambda of the
+@pytest.mark.parametrize("op", ["normalize_unit_nd", "semantic_blocks"])
+def test_unit_normalization_folds_the_norm_once_per_row(spark, op):
+    """Unit normalization folds the norm once per row: no lambda of the
     optimized plan holds an ``aggregate`` (a norm read inside the
     per-element ``transform`` lambda is refolded for every element, d²
-    work per row), and the values are unchanged."""
-    from flink_kmeans_clustering_spark.operators.similarity import normalize_vectors
+    work per row), and the values are unchanged: zero and NULL vectors
+    have no unit vector."""
+    from flink_kmeans_clustering_spark.operators.dedup import semantic_blocks
+    from flink_kmeans_clustering_spark.operators.kmeans import normalize_unit_nd
 
     df = spark.createDataFrame(
         [(0, [3.0, 4.0]), (1, [0.0, 0.0]), (2, None)],
         "vec_id long, embedding array<double>",
     )
-    out = normalize_vectors(df)
+    if op == "normalize_unit_nd":
+        out = normalize_unit_nd(df)
+    else:
+        out = semantic_blocks(df, k=1).withColumnRenamed("id", "vec_id").withColumnRenamed(
+            "nv", "embedding"
+        )
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "aggregate(" in plan and "transform(" in plan, plan
     for body in _lambda_bodies(plan):
         assert "aggregate(" not in body, plan
-    got = {r["vec_id"]: r["embedding_norm"] for r in out.collect()}
-    assert got == {0: [0.6, 0.8], 1: None, 2: None}
+    got = {r["vec_id"]: r["embedding"] for r in out.collect()}
+    assert got == {0: [0.6, 0.8]}
+
+
+@pytest.mark.parametrize("op", ["knn_join", "ivf_knn_join", "isotropy_profile"])
+def test_pair_cosines_fold_one_dot_per_pair(spark, op):
+    """A scored pair folds its dot and nothing else: the projection
+    right above each pair join holds exactly one ``aggregate`` (the
+    dot), the join condition none, and every norm is folded below the
+    joins, once per row.  Nothing above the top pair projection folds
+    (the NULL-cosine filter sits after the window, not in the join)."""
+    from flink_kmeans_clustering_spark.operators.linalg import isotropy_profile
+    from flink_kmeans_clustering_spark.operators.similarity import (
+        ivf_knn_join,
+        knn_join,
+    )
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    queries = emb.filter("vec_id < 5").withColumnRenamed("vec_id", "query_id")
+    df = {
+        "knn_join": lambda: knn_join(emb, queries, k=3),
+        "ivf_knn_join": lambda: ivf_knn_join(emb, queries, k=3),
+        "isotropy_profile": lambda: isotropy_profile(emb, panel_buckets=4),
+    }[op]()
+    lines = df._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    joins = [i for i, line in enumerate(lines) if "Join Inner" in line]
+    assert joins, lines
+    for i in joins:
+        pair = lines[i - 1]
+        assert "Project [" in pair and pair.count("aggregate(") == 1, pair
+        assert "zip_with(" in pair and "SQRT(" not in pair, pair
+        assert "aggregate(" not in lines[i], lines[i]
+    assert not any("aggregate(" in line for line in lines[: joins[0] - 1]), lines
+    norms = [i for i, line in enumerate(lines) if "SQRT(aggregate(" in line]
+    assert norms and min(norms) > joins[0], lines
 
 
 def test_assignment_with_dist2_evaluates_argmin_once(spark):

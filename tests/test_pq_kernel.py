@@ -14,9 +14,12 @@ The semantics the reference spells out:
   above every number, and ties go to the lowest codeword id;
 * trained codeword ids are persistent per subspace: a codeword no row
   picks is dropped and its id retired;
-* the searches rank the ADC score and then the exact dist² with
-  Spark's ascending order of a nullable double (NULL, numbers, NaN),
-  ties to the lowest id.
+* the searches rank the ADC score and then the exact dist² ascending,
+  numbers, then NaN, then NULL (a vector with no dist² never displaces
+  a real neighbour), ties to the lowest id;
+* ``ann_ivfpq`` probes cells by cosine to the query descending, a
+  zero-norm centroid (no cosine) after every other, ties to the lowest
+  cell.
 
 Every value is a multiple of 0.25, so sums are exact in any order.
 """
@@ -76,12 +79,12 @@ def _fold(a, b):
 
 
 def _order(d2):
-    """Spark's ascending order of a nullable double: NULL, numbers, NaN."""
+    """Ascending order of a nullable double, NULLs last: numbers, NaN, NULL."""
     if d2 is None:
-        return (0, 0.0)
-    if math.isnan(d2):
         return (2, 0.0)
-    return (1, d2)
+    if math.isnan(d2):
+        return (1, 0.0)
+    return (0, d2)
 
 
 def _slice(vec, s):
@@ -168,24 +171,25 @@ def test_pq_trained_edge_cases_match_python_reference(spark, rows_df):
 def test_ann_pq_edge_cases_match_python_reference(rows_df):
     """ann_pq over the ragged, tie-carrying BOOKS: degenerate rows are
     coded like the lowest codeword, reach the shortlist on that score
-    and rank first in the final cut with a NULL dist² (NaN last)."""
+    and rank last in the final cut with a NULL dist², after NaN."""
     lut = _lut(QUERY)
     want = ref_search([(i, v, lut, v) for i, _, v in ROWS], k=12, shortlist=12)
     got = ann_pq(rows_df, QUERY, BOOKS, k=12, shortlist=12, round_to=None).collect()
     got = [(r["vec_id"], r["d2"]) for r in got]
     assert _same(got, want), (got, want)
-    assert got[0][1] is None
+    assert got[-1][1] is None
 
 
 def test_ann_ivfpq_edge_cases_match_python_reference(rows_df):
     """ann_ivfpq encodes the residual (vector minus its cell's centroid,
     null-padded to the longer side) with the same rules; rows of the
-    unprobed cell never appear."""
+    unprobed cell (the zero-norm centroid, ranked last) never appear."""
     def cos(a, b):
         den = math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(y * y for y in b))
-        return sum(x * y for x, y in zip(a, b)) / den if den else 0.0
+        return sum(x * y for x, y in zip(a, b)) / den if den else -math.inf
 
     probed = dict(sorted(CENTS, key=lambda c: (-cos(c[1], QUERY), c[0]))[:2])
+    assert sorted(probed) == [1, 2]
     rows = []
     for vid, cell, vec in ROWS:
         if cell not in probed:

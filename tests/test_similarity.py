@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from flink_kmeans_clustering_spark.operators.similarity import (
     ann_search,
     cell_centroids,
-    normalize_vectors,
     topk_cosine,
 )
 
@@ -76,26 +75,54 @@ def test_ann_probe_restricts_then_matches_bruteforce_when_probing_all(spark, vec
     assert exact == approx
 
 
-def test_normalize_vectors(spark, vectors):
-    withz = vectors.union(
-        spark.createDataFrame([(9, [0.0, 0.0], 3)], vectors.schema)
+def test_probe_ranking_is_one_rule_for_single_and_batch_ivf(spark):
+    """A centroid with no cosine to the query (zero norm, a NULL
+    element, another length) ranks after every centroid with one, ties
+    to the lowest cell: ann_search, ann_ivfpq and ivf_knn_join probe the
+    same cells."""
+    from flink_kmeans_clustering_spark.operators.similarity import (
+        _probe_cells,
+        ann_ivfpq,
+        ivf_knn_join,
+        ivfpq_residual_codebooks,
     )
-    out = {r["vec_id"]: r["embedding_norm"] for r in normalize_vectors(withz).collect()}
-    assert out[1] == pytest.approx([0.9 / (0.81 + 0.01) ** 0.5, 0.1 / (0.82) ** 0.5])
-    assert out[9] is None  # zero vector -> NULL, not NaN
+
+    corpus = spark.createDataFrame(
+        [(0, 0, [-1.0, 0.0]), (1, 0, [-2.0, 0.0]), (2, 1, [1.0, 0.0]), (3, 1, [-1.0, 0.0])],
+        "vec_id long, label int, embedding array<double>",
+    )
+    cents = [(0, [-1.5, 0.0]), (1, [0.0, 0.0])]
+    assert [(r["cell"], r["centroid"]) for r in cell_centroids(corpus).collect()] == cents
+    q = [1.0, 0.0]
+    single = ann_search(corpus, cents, q, k=4, n_probe=1).collect()
+    books = ivfpq_residual_codebooks(corpus, cents, m=1, k=2)
+    pq = ann_ivfpq(corpus, q, cents, books, k=4, n_probe=1).collect()
+    queries = spark.createDataFrame([(9, q)], "query_id long, embedding array<double>")
+    batch = ivf_knn_join(corpus, queries, k=4, n_probe=1).collect()
+    assert {r["vec_id"] for r in single} == {r["vec_id"] for r in pq} == {0, 1}
+    assert {r["neighbor_id"] for r in batch} == {0, 1}
+
+    odd = [(0, [1.0, None]), (1, [1.0, 0.0, 0.0]), (2, [0.0, 0.0]), (3, [-1.0, 0.0])]
+    assert [c for c, _ in _probe_cells(odd, q, 4)] == [3, 0, 1, 2]
 
 
 def test_trained_ivf_full_probe_equals_bruteforce(spark):
-    from flink_kmeans_clustering_spark.operators.similarity import (
-        ann_search,
-        ivf_index,
-        topk_cosine,
+    from flink_kmeans_clustering_spark.operators.kmeans import (
+        assign_points_nd,
+        lloyd_nd,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     [q] = emb.filter("vec_id = 0").select("embedding").collect()
     qv = [float(v) for v in q["embedding"]]
-    assigned, cents = ivf_index(emb, n_cells=4)
+    init = [
+        [float(v) for v in r["embedding"]]
+        for r in emb.orderBy("vec_id").limit(4).collect()
+    ]
+    cells, _, ids = lloyd_nd(emb, init, max_iterations=3, cache=False)
+    assigned = assign_points_nd(emb, cells, centroid_ids=ids, cluster_col="cell")
+    cents = list(zip(ids, cells))
+    assert len(cents) == 4
     full = ann_search(assigned, cents, qv, k=5, n_probe=4, cell_col="cell")
     brute = topk_cosine(emb, qv, k=5)
     assert [r["vec_id"] for r in full.collect()] == [
