@@ -356,9 +356,9 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs within Hamming distance 3, md5-half bit
     lanes — oracle-exact (same bits, chunks, and Hamming counts in
-    DuckDB).  xxhash64 stays the production default."""
+    DuckDB)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return simhash_pairs(docs, max_hamming=3, chunks=4, hash_fn="md5")
+    return simhash_pairs(docs, max_hamming=3, chunks=4)
 
 
 # --- text analysis (SURVEY.md §2.6) -----------------------------------------
@@ -2772,8 +2772,8 @@ def q_embed_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     then a fixed-iteration pure-Python power iteration with deflation
     whose every fold is index-ordered — DuckDB replays the identical
     float sequence through list_sum folds in a recursive CTE
-    (_embed_pca_oracle_sql).  The LAPACK eigh production twin stays as
-    operators.linalg.pca_project (numpy-pinned in tests/test_linalg)."""
+    (_embed_pca_oracle_sql).  tests/test_linalg pins its top-2
+    subspace against numpy's eigh on a separated spectrum."""
     from flink_kmeans_clustering_spark.operators.linalg import (
         pca_project_checked,
     )

@@ -148,32 +148,26 @@ def quote_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def array_lit(nested, kind: str = "double"):
-    """Nested array literal as ONE parsed SQL expression.
+def array_lit_sql(nested, kind: str = "double") -> str:
+    """Nested array literal as the text of ONE SQL expression.
 
     ``F.lit(nested_list)`` recurses in Python and makes a py4j call per
     LEAF — an 8×16×8 codebook literal costs ~1 s of driver round-trips,
-    and an iterative trainer pays it EVERY iteration (measured: the
-    bulk of q_ann_pq_trained's local floor).  Rendering the same values
-    as one ``array(array(...))`` SQL string and parsing it JVM-side is
-    ~3 ms and bit-identical: ``repr(float)`` is the shortest
-    round-tripping decimal form and both Python and the JVM parse such
-    forms to the same IEEE-754 double (correctly-rounded semantics).
+    and an iterative trainer pays it EVERY iteration.  Rendering the
+    same values as one ``array(array(...))`` SQL string and parsing it
+    JVM-side is ~3 ms and bit-identical: ``repr(float)`` is the
+    shortest round-tripping decimal form and both Python and the JVM
+    parse such forms to the same IEEE-754 double (correctly-rounded
+    semantics).  Callers author whole expressions as f-strings (the
+    selectExpr plan-construction pattern — see docs/TUNING.md), so the
+    literal sits INSIDE a larger string and the entire projection stays
+    at ONE py4j call; ``F.expr(array_lit_sql(...))`` is the Column.
 
     ``kind``: "double" (default) suffixes leaves with ``D``; "int" /
     "long" render integer leaves (``L`` for long).  NaN/±Inf are
     rejected — they have no portable SQL literal form and no operator
     here ships them.
     """
-    return F.expr(array_lit_sql(nested, kind=kind))
-
-
-def array_lit_sql(nested, kind: str = "double") -> str:
-    """The SQL-text form of :func:`array_lit`, for callers that author
-    whole expressions as f-strings (the selectExpr plan-construction
-    pattern — see docs/TUNING.md): embedding the literal INSIDE a
-    larger string keeps the entire projection at ONE py4j call instead
-    of composing Columns around a parsed literal."""
     import math
 
     def render(x) -> str:

@@ -59,19 +59,6 @@ def exact_duplicate_groups(
     )
 
 
-def dedup_exact(df: DataFrame, keys: list[str], id_col: str = "doc_id") -> DataFrame:
-    """Keep one row (lowest id) per exact key group — full rows out.
-
-    Implemented as min-id-per-group + semi join back, which beats a
-    window sort (`row_number`) at scale: the aggregation is partial →
-    final, no per-group sort materializes.
-    """
-    keep = exact_duplicate_groups(df, keys, id_col).select(
-        F.col("keep_id").alias(id_col)
-    )
-    return df.join(keep, id_col, "left_semi")
-
-
 # ---------------------------------------------------------------------------
 # N-gram Jaccard near-dedup (exact similarity, blocked by shared shingle)
 # ---------------------------------------------------------------------------
@@ -415,7 +402,6 @@ def simhash_pairs(
     text_col: str = "text",
     max_hamming: int = 3,
     chunks: int = 4,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Pairs whose 64-bit SimHashes are within ``max_hamming`` bits.
 
@@ -425,10 +411,9 @@ def simhash_pairs(
     ``max_hamming < chunks`` for completeness (the classic trade-off —
     raise ``chunks`` to loosen the radius).
 
-    ``hash_fn``: ``"xxhash64"`` (default) takes the 64 bit lanes from
-    one xxhash64 per token; ``"md5"`` takes them from the two 32-bit
-    md5-hex halves of one digest per token — every intermediate
-    stays below 2³², so a DuckDB oracle recomputes identical bits.
+    The 64 bit lanes are the two 32-bit md5-hex halves of one digest
+    per token: every intermediate stays below 2³², so a DuckDB oracle
+    recomputes identical bits.
 
     Output: (id_a, id_b, hamming) with id_a < id_b.
     """
@@ -437,8 +422,6 @@ def simhash_pairs(
             f"banding with {chunks} chunks only guarantees recall for "
             f"hamming < {chunks}; got max_hamming={max_hamming}"
         )
-    if hash_fn not in ("xxhash64", "md5"):
-        raise ValueError(f"unknown hash_fn: {hash_fn!r}")
     # SimHash via explode + 64 per-lane SUM aggregates (same rationale
     # and same values as the minhash reformulation above: per-token bit
     # votes from the token hash, summed per lane, sign per bit).
@@ -455,24 +438,17 @@ def simhash_pairs(
     # ×2−1 int votes, left-assoc CASE fold, the b=63 negative-weight
     # two's-complement term), so hashes are unchanged — re-verified at
     # 3 scales.
-    if hash_fn == "md5":
-        # materialize the digest once, then slice both 32-bit halves
-        ex = tok.select("id", F.md5(F.col("t")).alias("_m")).select(
-            "id",
-            F.conv(F.substring("_m", 1, 8), 16, 10).cast("long").alias("h0"),
-            F.conv(F.substring("_m", 9, 8), 16, 10).cast("long").alias("h1"),
-        )
-        votes = [
-            f"sum((CAST((shiftright({'h0' if b < 32 else 'h1'}, {b % 32})"
-            f" & 1) AS INT) * 2 - 1)) AS _v{b}"
-            for b in range(64)
-        ]
-    else:
-        ex = tok.select("id", F.xxhash64(F.col("t")).alias("h"))
-        votes = [
-            f"sum((CAST((shiftright(h, {b}) & 1) AS INT) * 2 - 1)) AS _v{b}"
-            for b in range(64)
-        ]
+    # materialize the digest once, then slice both 32-bit halves
+    ex = tok.select("id", F.md5(F.col("t")).alias("_m")).select(
+        "id",
+        F.conv(F.substring("_m", 1, 8), 16, 10).cast("long").alias("h0"),
+        F.conv(F.substring("_m", 9, 8), 16, 10).cast("long").alias("h1"),
+    )
+    votes = [
+        f"sum((CAST((shiftright({'h0' if b < 32 else 'h1'}, {b % 32})"
+        f" & 1) AS INT) * 2 - 1)) AS _v{b}"
+        for b in range(64)
+    ]
     bit_terms = [
         f"(CASE WHEN _v{b} > 0 THEN CAST({1 << b} AS BIGINT)"
         " ELSE CAST(0 AS BIGINT) END)"
@@ -639,20 +615,6 @@ def _cosine_pairs(
         fields.append(StructField(block_out, types["blk"]))
     fields.append(StructField("cosine", DoubleType()))
     return base.groupBy("blk").applyInPandas(block_pairs, StructType(fields))
-
-
-def drop_near_duplicates(
-    df: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """Keep rows that are not the larger-id member of any near-dup pair.
-
-    Greedy single-pass policy: every dropped row had a smaller-id near
-    duplicate at decision time.  (Full transitive-closure dedup —
-    connected components — is an iterative algorithm; at corpus scale
-    run this greedy pass per LSH round instead.)
-    """
-    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(losers, id_col, "left_anti")
 
 
 # Largest pair table (rows) that connected_components collects and
@@ -1040,7 +1002,6 @@ def bbit_minhash_report(
     num_hashes: int = 16,
     bands: int = 4,
     b: int = 2,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """b-bit MinHash (Li & König, WWW'10) measured against the full
     sketch AND the exact truth, in one report.
@@ -1061,18 +1022,12 @@ def bbit_minhash_report(
     only the exact-Jaccard side re-shingles, candidate-sized, after a
     broadcast semi-join, so the corpus is scanned exactly twice (once
     for the sketch, once for the candidate shingles) and never
-    shuffled twice.  Lanes are md5 hex-slices (engine-replayable;
-    ``hash_fn`` must be "md5" — the whole point is an oracle-checkable
-    estimator study).
+    shuffled twice.  Lanes are md5 hex-slices (engine-replayable: the
+    whole point is an oracle-checkable estimator study).
 
     Output per full-estimate bucket: (est_jaccard, n_pairs, avg_exact,
     mae_full, avg_bbit, mae_bbit) — 6-decimal DECIMAL-summed means.
     """
-    if hash_fn != "md5":
-        raise ValueError(
-            "bbit_minhash_report is an oracle-checked estimator study; "
-            "lanes must be md5 hex-slices (hash_fn='md5')"
-        )
     if not 1 <= b <= 16:
         raise ValueError(f"b must be in [1, 16], got {b}")
     from flink_kmeans_clustering_spark.functions.text import (
@@ -1259,7 +1214,6 @@ def semantic_blocks(
     k: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_to: int = 6,
     target_block_size: int = 4096,
 ) -> DataFrame:
     """Assign every vector to its nearest of ``k`` seed vectors by
@@ -1283,32 +1237,19 @@ def semantic_blocks(
     would silently under-seed).  This mirrors the fixed given-centroid
     role of KMeans.java:148's initial centroids.
 
-    Ties break to the lowest seed id on the ROUNDED cosine (the
-    struct-max trick: max over (cos, -seed_id) lexicographic), so an
-    oracle recomputing the same rounded values assigns identically.
+    Ties break to the lowest seed id on the cosine ROUNDED to 6 places
+    (the struct-max trick: max over (cos, -seed_id) lexicographic), so
+    an oracle recomputing the same rounded values assigns identically.
     Vectors are unit-normalized by ``functions.vector.l2_normalize_sql``
     and a cosine to a seed is their ``dot_sql``: folds from 0.0 in
     index order.  Null, empty, null-element, NaN and zero-norm vectors
     have no unit vector and are dropped before seeding (the same rule
     as :func:`embedding_cosine_pairs`).
 
-    Output: (id, nv, blk) — id, L2-normalized vector, block id (the
-    seed's id, in the id column's type).
+    Output: (id, v, nv, blk) — id, the vector as ``array<double>``,
+    its L2-normalized form, block id (the seed's id, in the id column's
+    type).  :func:`semantic_dedup_pairs` scores pairs on ``v``.
     """
-    return _semantic_blocks(
-        df, k, id_col, vec_col, round_to, target_block_size
-    ).drop("v")
-
-
-def _semantic_blocks(
-    df: DataFrame,
-    k: int | None,
-    id_col: str,
-    vec_col: str,
-    round_to: int,
-    target_block_size: int,
-) -> DataFrame:
-    """:func:`semantic_blocks` with the raw vector kept: (id, v, nv, blk)."""
     # nv is a unit vector, so its cosine to a seed is the dot of the two
     base = (
         df.select(
@@ -1337,7 +1278,7 @@ def _semantic_blocks(
         # ~1,500 py4j calls at d=64, k=8.
         seed_rows = base.orderBy("id").limit(k).select("id", "nv").collect()
         cands = ", ".join(
-            f"named_struct('c', round({dot_sql('nv', array_lit_sql(r['nv']))}, {round_to}),"
+            f"named_struct('c', round({dot_sql('nv', array_lit_sql(r['nv']))}, 6),"
             f" 'neg', CAST({-int(r['id'])} AS BIGINT))"
             for r in seed_rows
         )
@@ -1351,7 +1292,7 @@ def _semantic_blocks(
         base.join(F.broadcast(seeds))
         .selectExpr(
             "id",
-            f"named_struct('c', round({dot_sql('nv', 'sv')}, {round_to}),"
+            f"named_struct('c', round({dot_sql('nv', 'sv')}, 6),"
             " 'neg', CAST(-seed_id AS BIGINT)) AS s",
         )
         .groupBy("id")
@@ -1390,7 +1331,7 @@ def semantic_dedup_pairs(
     """
     if dim is not None:
         df = df.where(F.size(F.col(vec_col)) == dim)
-    blocks = _semantic_blocks(df, k, id_col, vec_col, 6, target_block_size)
+    blocks = semantic_blocks(df, k, id_col, vec_col, target_block_size)
     return _cosine_pairs(blocks, "id", "v", "blk", threshold, None, "block").select(
         "id_a", "id_b", "block", F.round("cosine", 6).alias("cosine")
     )
@@ -2244,7 +2185,6 @@ def minhash_calibration(
     n: int = 3,
     num_hashes: int = 16,
     bands: int = 4,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """MinHash estimator calibration — measure the sketch against the
     truth it estimates, in-engine: every LSH candidate pair's estimated
@@ -2258,7 +2198,8 @@ def minhash_calibration(
     sees the estimator's full operating range).  Exact Jaccard uses the
     two-stage verify physics: candidate ids broadcast-semi-join the
     corpus BEFORE the shingle HOF runs, candidate-sized text work, the
-    corpus never shuffled.  Estimates are exact multiples of
+    corpus never shuffled.  Lanes are md5 hex-slices, so an oracle
+    replays the same sketch.  Estimates are exact multiples of
     1/num_hashes; the rollup sums 6-decimal-rounded values in DECIMAL.
 
     Output: (est_jaccard, n_pairs, avg_exact, mae) — mae is the mean
@@ -2277,7 +2218,7 @@ def minhash_calibration(
         num_hashes=num_hashes,
         bands=bands,
         threshold=1.0 / num_hashes,  # one matching band implies more
-        hash_fn=hash_fn,
+        hash_fn="md5",
     ).localCheckpoint()
     cand_ids = (
         cand.select(F.col("id_a").alias("_cid"))

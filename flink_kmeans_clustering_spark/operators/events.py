@@ -382,18 +382,6 @@ def daily_type_pivot(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     )
 
 
-def unpivot_daily_types(wide: DataFrame) -> DataFrame:
-    """Melt the wide daily report back to long (event_date, type, n) —
-    ``unpivot`` is the inverse of :func:`daily_type_pivot` up to rows
-    with zero counts."""
-    return wide.unpivot(
-        ids=["event_date"],
-        values=list(EVENT_TYPES),
-        variableColumnName="event_type",
-        valueColumnName="n_events",
-    )
-
-
 def funnel_counts(
     df: DataFrame,
     stages: tuple[str, ...] = ("view", "click", "purchase"),

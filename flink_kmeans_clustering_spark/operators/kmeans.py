@@ -15,16 +15,18 @@ step is an independent, composable DataFrame operator:
   (``KMeans.java:311-336``): one hash-partition exchange on the cluster
   id with map-side partial aggregation (Catalyst's HashAggregate
   partial→final mirrors Flink's combiner insertion).
-* :func:`objective_from_assigned` / :func:`objective` — O9/O10 WCSS.
+* :func:`objective_from_assigned` — O9/O10 WCSS, Σ d² over an
+  assignment that carries each point's d².
 * :func:`moved_centroids` — O6 convergence join+filter
   (``KMeans.java:169-181``).
 * :func:`lloyd` — O5 bulk iteration as a driver loop: each superstep is
   the assignment plus the grouped update, the k-row centroid state
   collects to the driver and re-enters the next round as array
   literals (MLlib's internal collect+broadcast pattern).
-* :func:`assign_points_nd` / :func:`update_centroids_nd` /
-  :func:`lloyd_nd` / :func:`spherical_kmeans_nd` — the same superstep
-  over an ``array<double>`` vector column.
+* :func:`assign_points_nd` / :func:`lloyd_nd` /
+  :func:`spherical_kmeans_nd` — the same superstep over an
+  ``array<double>`` vector column; :func:`lloyd_nd` folds its own
+  per-cluster means from the kernel's partial sums.
 
 Each kernel has one definition.  The 2-D argmin is SQL text,
 :func:`_argmin_2d_sql`; :func:`lloyd` pastes it into one ``selectExpr``
@@ -56,7 +58,7 @@ import random
 from collections.abc import Sequence
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flink_kmeans_clustering_spark.functions.vector import (
@@ -104,13 +106,6 @@ def _with_argmin(
 # ---------------------------------------------------------------------------
 # O1 / O7 — nearest-centroid assignment
 # ---------------------------------------------------------------------------
-
-
-def squared_distance(x: Column, y: Column, cx: float, cy: float) -> Column:
-    """Squared Euclidean distance from (x, y) to a constant (cx, cy)."""
-    dx = x - F.lit(float(cx))
-    dy = y - F.lit(float(cy))
-    return dx * dx + dy * dy
 
 
 def assign_points(
@@ -215,32 +210,6 @@ def update_centroids(
 def objective_from_assigned(assigned: DataFrame, dist2_col: str = "dist2") -> DataFrame:
     """Global Σ d² over an assignment that already carries d² (O10)."""
     return assigned.agg(F.sum(dist2_col).alias("wcss"))
-
-
-def objective(
-    assigned: DataFrame,
-    centroids: Sequence[Centroid],
-    cluster_col: str = "cluster",
-    x: str = "x",
-    y: str = "y",
-) -> DataFrame:
-    """WCSS from scratch: look up each point's centroid, Σ d² (O9+O10).
-
-    The reference scans the broadcast centroid list per record
-    (``KMeans.java:343-362``); here the k-case expression is a literal
-    ``CASE`` over the cluster id — still narrow, still codegen'd.
-    """
-    if not centroids:
-        return assigned.select(F.lit(0.0).alias("wcss")).limit(1)
-    expr = None
-    for cid, cx, cy in centroids:
-        d2 = squared_distance(F.col(x), F.col(y), cx, cy)
-        expr = (
-            F.when(F.col(cluster_col) == int(cid), d2)
-            if expr is None
-            else expr.when(F.col(cluster_col) == int(cid), d2)
-        )
-    return assigned.select(expr.alias("_d2")).agg(F.sum("_d2").alias("wcss"))
 
 
 # ---------------------------------------------------------------------------
@@ -832,25 +801,6 @@ def assign_points_nd(
         return _with_argmin(vectors, None, cluster_col, dist2_col)
     return assign_nearest(
         vectors, vec_col, [centroids], [centroid_ids], cluster_col, dist2_col
-    )
-
-
-def update_centroids_nd(
-    assigned: DataFrame,
-    dim: int,
-    vec_col: str = "embedding",
-    cluster_col: str = "cluster",
-) -> DataFrame:
-    """O3/O4 mean update for vector columns WITHOUT exploding: the
-    kernel's per-partition sums
-    (:func:`~flink_kmeans_clustering_spark.functions.vector.label_sums`,
-    one job, no exchange), added on the driver, then the mean ``Σ/n``.
-    Returns (id, centroid array<double>, n) as a driver-side frame."""
-    [sums] = label_sums(assigned, vec_col, dim, label_col=cluster_col)
-    rows = [(i, (s / n).tolist(), n) for i, (n, s, _, _) in sorted(sums.items())]
-    id_type = assigned.select(quote_ident(cluster_col)).schema[0].dataType.simpleString()
-    return assigned.sparkSession.createDataFrame(
-        rows, f"id {id_type}, centroid array<double>, n bigint"
     )
 
 

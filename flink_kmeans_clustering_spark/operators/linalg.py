@@ -31,20 +31,19 @@ def gram_matrix(
     df: DataFrame,
     vec_col: str = "embedding",
     dim: int = 64,
-    add_intercept: bool = True,
 ) -> DataFrame:
-    """Upper-triangle of the (optionally augmented) Gram matrix ``XᵀX``.
+    """Upper-triangle of the intercept-augmented Gram matrix ``XᵀX``.
 
     Rows whose vector length differs from ``dim`` are EXCLUDED up front
     (never silently truncated or zero-padded — the ADVICE.md dim-
-    mismatch rule).  With ``add_intercept`` the index ``dim`` is the
-    constant-1 column: ``G[i][dim] = Σ xᵢ`` and ``G[dim][dim] = n``.
+    mismatch rule).  The index ``dim`` is the constant-1 column:
+    ``G[i][dim] = Σ xᵢ`` and ``G[dim][dim] = n``.
 
     Output: (i, j, g) for ``0 ≤ i ≤ j ≤ last``; ``O(dim²)`` rows total.
     """
     import numpy as np
 
-    width = dim + 1 if add_intercept else dim
+    width = dim + 1
     iu, ju = np.triu_indices(width)
     iu_l, ju_l = iu.astype("int32"), ju.astype("int32")
 
@@ -55,8 +54,7 @@ def gram_matrix(
             if len(pdf) == 0:
                 continue
             v = np.asarray(list(pdf["_v"]), dtype="float64")
-            if add_intercept:
-                v = np.hstack([v, np.ones((v.shape[0], 1))])
+            v = np.hstack([v, np.ones((v.shape[0], 1))])
             acc += v.T @ v
             seen = True
         if seen:
@@ -68,73 +66,6 @@ def gram_matrix(
     )
     partials = vecs.mapInPandas(partial_gram, schema=_GRAM_SCHEMA)
     return partials.groupBy("i", "j").agg(F.sum("g").alias("g"))
-
-
-def pca_project(
-    df: DataFrame,
-    n_components: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int = 64,
-    round_to: int | None = 6,
-) -> DataFrame:
-    """Project the corpus onto its top principal components — the
-    standard embedding-space reduction (visualization, whitening,
-    drift monitors) composed exactly the way it scales:
-
-    1. sufficient statistics: ONE corpus pass via :func:`gram_matrix`
-       (O(dim²) exchange, see module docstring);
-    2. eigendecomposition DRIVER-side: the covariance is dim×dim —
-       64×64 here — a microsecond `numpy.linalg.eigh` no matter how
-       many rows fed it (never a distributed job);
-    3. projection: loadings re-enter the plan as LITERALS in a narrow
-       per-row map (`pc_k = Σᵢ (xᵢ−μᵢ)·vᵢₖ`), authored as ONE SQL
-       expression string per component (the TUNING.md py4j lesson) —
-       codegen end-to-end, zero shuffle, composes with any downstream
-       write.
-
-    Eigenvector sign is canonicalized (largest-|component| made
-    positive) so results are deterministic across LAPACK builds.
-    Rows-only correctness contract: eigensolves aren't SQL-expressible;
-    tests pin the projection against numpy on the same data.
-
-    Output: (id, pc1..pcK), one row per in-width input row.
-    """
-    import numpy as np
-
-    rows = gram_matrix(df, vec_col=vec_col, dim=dim, add_intercept=True).collect()
-    g = np.zeros((dim + 1, dim + 1))
-    for r in rows:
-        g[r["i"], r["j"]] = r["g"]
-        g[r["j"], r["i"]] = r["g"]
-    n = g[dim, dim]
-    if n < 2:
-        raise ValueError("PCA needs at least 2 in-width rows")
-    mu = g[:dim, dim] / n
-    cov = (g[:dim, :dim] - np.outer(mu, mu) * n) / (n - 1.0)
-    vals, vecs = np.linalg.eigh(cov)  # ascending
-    order = np.argsort(vals)[::-1][:n_components]
-    comps = vecs[:, order]  # dim × k
-    # sign canonicalization: flip so the largest-|x| entry is positive
-    for k in range(comps.shape[1]):
-        j = int(np.argmax(np.abs(comps[:, k])))
-        if comps[j, k] < 0:
-            comps[:, k] = -comps[:, k]
-
-    exprs = [id_col]
-    for k in range(n_components):
-        terms = " + ".join(
-            f"(element_at(_v, {i + 1}) - {mu[i]!r}) * {comps[i, k]!r}"
-            for i in range(dim)
-        )
-        e = f"({terms})"
-        if round_to is not None:
-            e = f"round({e}, {round_to})"
-        exprs.append(f"{e} AS pc{k + 1}")
-    vecs_df = df.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
-    ).filter(F.size("_v") == dim)
-    return vecs_df.selectExpr(*exprs)
 
 
 def _matvec_fold(a: list[list[float]], v: list[float]) -> list[float]:
@@ -198,10 +129,10 @@ def pca_project_checked(
 ) -> DataFrame:
     """Top-2 PCA projection with a FULLY REPLAYABLE eigensolve.
 
-    :func:`pca_project` uses ``numpy.linalg.eigh`` — correct, but a
-    LAPACK black box no SQL engine can replay, so it was rows-only.
-    This variant trades the closed-form solve for determinism the way
-    q_kmeans_scalable did for k-means‖:
+    A closed-form ``numpy.linalg.eigh`` solve is correct, but a LAPACK
+    black box no SQL engine can replay, so its rows could not be
+    oracle-checked.  This projection trades the closed-form solve for
+    determinism the way q_kmeans_scalable did for k-means‖:
 
     1. sufficient statistics: the same one-pass distributed GEMM
        (:func:`covariance_matrix`), but consumed at ROUND-6 — the
@@ -223,9 +154,8 @@ def pca_project_checked(
 
     Output: (id, pc1, pc2), one row per in-width input row.
     """
-    g = gram_matrix(
-        df, vec_col=vec_col, dim=dim, add_intercept=True
-    ).localCheckpoint()  # the ONLY statistics pass over the corpus
+    # the ONLY statistics pass over the corpus
+    g = gram_matrix(df, vec_col=vec_col, dim=dim).localCheckpoint()
     cov_rows = _cov_from_gram(g, dim, round_to).collect()
     a = [[0.0] * dim for _ in range(dim)]
     for r in cov_rows:
@@ -295,7 +225,7 @@ def covariance_matrix(
 
     Output: (i, j, gram, cov) for ``0 ≤ i ≤ j < dim``.
     """
-    g = gram_matrix(df, vec_col=vec_col, dim=dim, add_intercept=True)
+    g = gram_matrix(df, vec_col=vec_col, dim=dim)
     g = g.localCheckpoint()  # O(dim²) rows; 3 consumers below
     return _cov_from_gram(g, dim, round_to)
 

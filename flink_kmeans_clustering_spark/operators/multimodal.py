@@ -15,11 +15,11 @@ first-class pattern:
   ``mapInPandas`` — whole record-batches cross the boundary, never
   rows.  Audio (RIFF/WAVE via stdlib ``wave``) and image (PNG via
   stdlib ``zlib``: CRC-checked chunks, all five scanline filters) are
-  REAL codecs run through the shared decode contract; only lossy
-  codec decode (JPEG/video) is stubbed — those genuinely need
-  PIL/pyav, absent in this container — with
-  ``byte_histogram_features`` as the deterministic fake that keeps
-  that pipeline shape testable.
+  REAL codecs run through the shared decode contract.  Lossy codec
+  decode (JPEG/video) needs PIL/pyav and has no decoder here;
+  ``byte_histogram_features`` is the deterministic fake that keeps
+  that pipeline shape testable, and a real lossy decoder plugs into
+  :func:`decode_features` the same way.
 
 At 100 TB: content-bearing DataFrames should be partitioned so one
 parquet row group holds O(100) assets (``spark.sql.files.
@@ -164,34 +164,6 @@ def decode_features(assets: DataFrame, decoder, dim: int) -> DataFrame:
     )
 
 
-def decode_real(assets: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
-    """LOSSY codec decode (JPEG / video frames) — NOT AVAILABLE here.
-
-    Scoped to the codecs that genuinely need PIL/pyav; those libraries
-    are not in this container, so this raises immediately rather than
-    pretending.  Audio and PNG images are NOT stubbed: both
-    :func:`wav_features` (stdlib ``wave``) and :func:`png_features`
-    (stdlib ``zlib``, CRC-checked chunks, full scanline unfiltering)
-    run real strict decoders through the same :func:`decode_features`
-    plumbing; ``byte_histogram_features`` remains the deterministic
-    fake for the lossy-codec path only.
-    """
-
-    def _codec_decoder(blob: bytes):
-        raise NotImplementedError(
-            "lossy codec decode (JPEG/video) requires PIL/pyav (not "
-            "installed); WAV and PNG have real stdlib decoders "
-            "(wav_features / png_features); use byte_histogram_features "
-            "for the deterministic fake path"
-        )
-
-    # Fail at CALL time, not first-batch time: the stub's contract is
-    # "raises immediately", and a lazily-failing plan would look healthy
-    # until an executor task dies.
-    _codec_decoder(b"")
-    return decode_features(assets, _codec_decoder, dim)
-
-
 def _histogram_decoder(dim: int):
     """The deterministic fake decoder: normalized ``dim``-bucket byte
     histogram — the exact batch/shape contract of a real embedding
@@ -303,8 +275,8 @@ def audio_window_stats(
     scan).
 
     The content bytes are treated as unsigned 8-bit PCM samples (the
-    deterministic stand-in — a real s16le/flac decode belongs in the
-    stubbed :func:`decode_real` slot) and cut into non-overlapping
+    deterministic stand-in — a real s16le/flac decode would be a
+    :func:`decode_features` decoder) and cut into non-overlapping
     ``window_bytes`` windows; each window emits its sample count, RMS
     and peak.  Arrow-batched ``mapInPandas``, zero shuffle, one output
     row per window.

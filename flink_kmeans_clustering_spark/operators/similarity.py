@@ -1169,9 +1169,11 @@ def ann_ivfpq(
 
     1. **Probe** — cell centroids are a k-row driver-side list; the
        query ranks them (cosine, ties → lowest cell) and keeps
-       ``n_probe``.  The ``isin`` filter pushes into the scan; on a
-       cell-partitioned table that is partition pruning — the 100 TB
-       corpus shrinks to the probed cells' files.
+       ``n_probe``; a probed cell whose centroid is NULL or holds a
+       NULL element has no residual and adds no candidates.  The
+       ``isin`` filter pushes into the scan; on a cell-partitioned
+       table that is partition pruning — the 100 TB corpus shrinks to
+       the probed cells' files.
     2. **ADC over residuals** — within probed cells each vector's
        residual (v − centroid(cell), a SQL ``zip_with``) is encoded as
        m codes by the kernel pass of :func:`_adc_rerank`, after the
@@ -1191,8 +1193,12 @@ def ann_ivfpq(
     """
     q = [float(v) for v in query_vec]
     probed = [
-        (int(c), [float(x) for x in v]) for c, v in _probe_cells(centroids, q, n_probe)
+        (int(c), [float(x) for x in v])
+        for c, v in _probe_cells(centroids, q, n_probe)
+        if v is not None and None not in v
     ]
+    if not probed:
+        return df.limit(0).selectExpr(quote_ident(id_col), "CAST(NULL AS DOUBLE) AS d2")
     probed_cells = [c for c, _ in probed]
 
     # Per-cell ADC lookup tables from the query's per-cell residual

@@ -11,8 +11,6 @@ from pyspark.sql import functions as F
 
 from flink_kmeans_clustering_spark.operators.dedup import (
     connected_components,
-    dedup_exact,
-    drop_near_duplicates,
     embedding_cosine_pairs,
     exact_duplicate_groups,
     minhash_lsh_pairs,
@@ -108,8 +106,8 @@ def test_exact_dedup(spark, docs):
     groups = {r["keep_id"]: r["n_dups"] for r in exact_duplicate_groups(docs, ["text"]).collect()}
     assert groups[0] == 2  # doc 1 collapsed into doc 0
     assert groups[2] == 1
-    kept = sorted(r["doc_id"] for r in dedup_exact(docs, ["text"]).collect())
-    assert kept == [0, 2, 3, 4]
+    # one keep_id (the lowest id) per exact group: the rows a dedup keeps
+    assert sorted(groups) == [0, 2, 3, 4]
 
 
 def test_ngram_jaccard_finds_near_dup(spark, docs):
@@ -185,26 +183,15 @@ def test_minhash_hash_families_agree_on_pairs(spark):
     assert xx == md
 
 
-def test_simhash_hash_families_agree_on_exact_dups(spark, docs):
-    """Exact duplicates have identical token streams, so both hash
-    families must report them at Hamming distance 0 and keep unrelated
-    docs out.  (Full pair-set equality across families does NOT hold on
-    a real corpus: near-zero distances are family-specific.)"""
-    for fam in ("xxhash64", "md5"):
-        pairs = {
-            (r["id_a"], r["id_b"]): r["hamming"]
-            for r in simhash_pairs(docs, max_hamming=3, hash_fn=fam).collect()
-        }
-        assert pairs[(0, 1)] == 0, f"{fam}: planted exact dup not at distance 0"
-        assert (0, 3) not in pairs, f"{fam}: unrelated docs within radius"
-
-
 def test_simhash_identical_distance_zero(spark, docs):
+    """Exact duplicates have identical token streams, so they sit at
+    Hamming distance 0; unrelated docs stay outside the radius."""
     pairs = {
         (r["id_a"], r["id_b"]): r["hamming"]
         for r in simhash_pairs(docs, max_hamming=3).collect()
     }
     assert pairs[(0, 1)] == 0
+    assert (0, 3) not in pairs
     assert all(h <= 3 for h in pairs.values())
 
 
@@ -329,13 +316,6 @@ def test_cc_star_route_equals_union_find_route(spark, monkeypatch):
         assert len(got) == len(want)  # one row per node, one null row
 
 
-def test_drop_near_duplicates_greedy(spark, docs):
-    pairs = ngram_jaccard_pairs(docs, threshold=0.3)
-    kept = sorted(r["doc_id"] for r in drop_near_duplicates(docs, pairs).collect())
-    # docs 1 and 2 both have smaller-id near-dup 0; 4 near-dups 3
-    assert kept == [0, 3]
-
-
 def test_gemm_cosine_matches_exact_variant(spark):
     """The BLAS-shortlisted kernel emits exactly the pure-Python
     index-ordered fold: every in-block pair at t=-1 and the t=0.3 subset,
@@ -393,8 +373,10 @@ def test_semantic_blocks_assignment(spark):
     )
     got = {r["id"]: r["blk"] for r in semantic_blocks(df, k=2).collect()}
     assert got == {0: 0, 1: 1, 2: 0, 3: 1, 4: 1}
-    # exactly one block per id
-    assert semantic_blocks(df, k=2).count() == 5
+    # exactly one block per id, beside the raw and the unit vector
+    out = semantic_blocks(df, k=2)
+    assert out.columns == ["id", "v", "nv", "blk"]
+    assert out.count() == 5
 
 
 def test_semantic_dedup_pairs_within_blocks_only(spark):

@@ -133,15 +133,21 @@ def test_running_window_cumulative(spark):
 
 def test_pivot_unpivot_roundtrip(spark):
     from flink_kmeans_clustering_spark.operators.events import (
+        EVENT_TYPES,
         daily_type_pivot,
-        unpivot_daily_types,
     )
 
     wide = daily_type_pivot(_events(spark))
     rows = {r["event_date"]: r for r in wide.collect()}
     assert rows["2024-01-01"]["view"] == 3
     assert rows["2024-01-01"]["click"] == 2
-    long = unpivot_daily_types(wide)
+    # unpivot is the inverse of the pivot, up to zero-count rows
+    long = wide.unpivot(
+        ids=["event_date"],
+        values=list(EVENT_TYPES),
+        variableColumnName="event_type",
+        valueColumnName="n_events",
+    )
     back = {
         (r["event_date"], r["event_type"]): r["n_events"] for r in long.collect()
     }

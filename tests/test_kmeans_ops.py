@@ -15,7 +15,6 @@ from flink_kmeans_clustering_spark.operators.kmeans import (
     assign_points,
     lloyd,
     moved_centroids,
-    objective,
     objective_from_assigned,
     random_centroids,
     recompute_nearest,
@@ -114,10 +113,15 @@ def test_update_means_and_drop_semantics(spark, points):
 def test_objective_is_squared_euclidean(spark, points):
     assigned = assign_points(points, CENTROIDS, dist2_col="dist2")
     [r1] = objective_from_assigned(assigned).collect()
-    [r2] = objective(assign_points(points, CENTROIDS), CENTROIDS).collect()
+    # independent Python Σ d²: each point's squared distance to the
+    # nearest centroid, recomputed from the raw coordinates
+    ref = sum(
+        min((r["x"] - cx) ** 2 + (r["y"] - cy) ** 2 for _, cx, cy in CENTROIDS)
+        for r in points.collect()
+    )
     expected = 0.0 + 1.0 + 0.0 + 25.0
+    assert ref == expected
     assert r1["wcss"] == pytest.approx(expected)
-    assert r2["wcss"] == pytest.approx(expected)
 
 
 def test_moved_centroids_filters_by_plain_euclidean(spark):
@@ -259,7 +263,7 @@ def test_mllib_fixpoint_checked_by_lloyd_nd_at_scale(spark):
 
     from flink_kmeans_clustering_spark.operators.kmeans import (
         assign_points_nd,
-        update_centroids_nd,
+        lloyd_nd,
     )
     from flink_kmeans_clustering_spark.operators.kmeans_ml import fit_kmeans_ml
 
@@ -272,9 +276,8 @@ def test_mllib_fixpoint_checked_by_lloyd_nd_at_scale(spark):
     [row] = a.agg(F.sum("_d2").alias("wcss")).collect()
     assert abs(float(row["wcss"]) - ml.wcss) / ml.wcss < 1e-6
 
-    dim = len(centroids[0])
-    moved = update_centroids_nd(a, dim).collect()
-    nxt = {int(r["id"]): list(r["centroid"]) for r in moved}
+    moved, _, ids = lloyd_nd(emb, centroids, max_iterations=1)
+    nxt = dict(zip(ids, moved))
     assert len(nxt) == len(centroids)  # no cluster emptied at fixpoint
     for i, c in enumerate(centroids):
         drift2 = sum((x - y) ** 2 for x, y in zip(c, nxt[i]))
@@ -601,10 +604,10 @@ def test_assign_nd_quotes_vector_column(spark):
     """A vector column whose name needs backticks (space, dot, backtick)
     assigns, updates and iterates exactly like the same data under a
     plain name."""
+    from flink_kmeans_clustering_spark.functions.vector import label_sums
     from flink_kmeans_clustering_spark.operators.kmeans import (
         assign_points_nd,
         lloyd_nd,
-        update_centroids_nd,
     )
 
     plain = spark.createDataFrame(
@@ -624,11 +627,13 @@ def test_assign_nd_quotes_vector_column(spark):
         )
 
     assert rows(odd, name) == rows(plain, "embedding")
-    upd_odd = update_centroids_nd(
-        assign_points_nd(odd, cents, vec_col=name), dim=2, vec_col=name
-    )
-    upd_ref = update_centroids_nd(assign_points_nd(plain, cents), dim=2)
-    assert sorted(upd_odd.collect()) == sorted(upd_ref.collect())
+
+    def sums(df, col):
+        a = assign_points_nd(df, cents, vec_col=col)
+        [s] = label_sums(a, col, 2, label_col="cluster")
+        return {i: (n, v.tolist(), c.tolist(), w) for i, (n, v, c, w) in s.items()}
+
+    assert sums(odd, name) == sums(plain, "embedding")
     assert lloyd_nd(odd, cents, max_iterations=1, vec_col=name, cache=False) == (
         lloyd_nd(plain, cents, max_iterations=1, cache=False)
     )

@@ -27,11 +27,11 @@ def mat():
 def test_gram_matches_numpy(spark, mat):
     df = _vec_df(spark, mat).repartition(5)  # several GEMM partials
     got = {
-        (r["i"], r["j"]): r["g"]
-        for r in gram_matrix(df, dim=6, add_intercept=False).collect()
+        (r["i"], r["j"]): r["g"] for r in gram_matrix(df, dim=6).collect()
     }
-    want = mat.T @ mat
-    assert len(got) == 6 * 7 // 2  # upper triangle only
+    aug = np.hstack([mat, np.ones((len(mat), 1))])  # the intercept column
+    want = aug.T @ aug
+    assert len(got) == 7 * 8 // 2  # upper triangle only
     for (i, j), g in got.items():
         assert i <= j
         assert g == pytest.approx(want[i, j], abs=1e-9)
@@ -75,52 +75,14 @@ def test_gram_empty_input(spark):
     assert covariance_matrix(empty, dim=4).count() == 0
 
 
-def test_pca_projection_matches_numpy(spark, mat):
-    from flink_kmeans_clustering_spark.operators.linalg import pca_project
-
-    rows = [(i, [float(v) for v in mat[i]]) for i in range(len(mat))]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = {
-        r["vec_id"]: (r["pc1"], r["pc2"])
-        for r in pca_project(df, n_components=2, dim=6, round_to=None).collect()
-    }
-    centered = mat - mat.mean(axis=0)
-    vals, vecs = np.linalg.eigh(np.cov(mat, rowvar=False))
-    comps = vecs[:, np.argsort(vals)[::-1][:2]]
-    for k in range(2):
-        j = int(np.argmax(np.abs(comps[:, k])))
-        if comps[j, k] < 0:
-            comps[:, k] = -comps[:, k]
-    want = centered @ comps
-    for i in range(len(mat)):
-        assert got[i][0] == pytest.approx(want[i, 0], abs=1e-6)
-        assert got[i][1] == pytest.approx(want[i, 1], abs=1e-6)
-    # top component carries the most variance
-    import numpy as _np
-
-    p1 = _np.array([got[i][0] for i in range(len(mat))])
-    p2 = _np.array([got[i][1] for i in range(len(mat))])
-    assert p1.var() >= p2.var()
-
-
 def test_pca_projection_is_narrow(spark, mat):
-    from flink_kmeans_clustering_spark.operators.linalg import pca_project
+    from flink_kmeans_clustering_spark.operators.linalg import pca_project_checked
     from flink_kmeans_clustering_spark.plans import shuffle_count
 
     rows = [(i, [float(v) for v in mat[i]]) for i in range(len(mat))]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = pca_project(df, n_components=2, dim=6)
+    out = pca_project_checked(df, dim=6)
     assert shuffle_count(out) == 0  # projection itself never shuffles
-
-
-def test_pca_requires_two_rows(spark):
-    from flink_kmeans_clustering_spark.operators.linalg import pca_project
-
-    one = spark.createDataFrame(
-        [(0, [1.0, 2.0])], "vec_id long, embedding array<double>"
-    )
-    with pytest.raises(ValueError):
-        pca_project(one, n_components=1, dim=2)
 
 
 def test_pca_checked_matches_eigh_on_separated_spectrum(spark):

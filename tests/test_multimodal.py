@@ -11,7 +11,6 @@ from flink_kmeans_clustering_spark.operators.multimodal import (
     FEATURE_DIM,
     asset_metadata,
     byte_histogram_features,
-    decode_real,
     frame_sample,
     synthesize_assets,
 )
@@ -82,11 +81,6 @@ def test_byte_histogram_matches_numpy(spark):
     np.testing.assert_allclose(feats[0], want, atol=1e-6)
     assert feats[0].shape == (FEATURE_DIM,)
     np.testing.assert_array_equal(feats[3], np.zeros(FEATURE_DIM))  # empty doc
-
-
-def test_decode_real_is_explicit_stub(spark):
-    with pytest.raises(NotImplementedError):
-        decode_real(synthesize_assets(_docs(spark)))
 
 
 def test_decode_contract_accepts_any_decoder_without_plan_changes(spark):

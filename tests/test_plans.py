@@ -911,13 +911,14 @@ def test_runtime_bloom_filter_prunes_fact_scan(spark):
 
 def test_nd_assignment_narrow_and_update_single_shuffle(spark):
     """The n-dim generalization keeps the 2-D physics: assignment is a
-    zero-exchange narrow map (centroid matrix is ONE literal), and the
-    mean update is one k-row-per-partition hash aggregate — no explode
-    of the vector column."""
-    from flink_kmeans_clustering_spark.operators.kmeans import (
-        assign_points_nd,
-        update_centroids_nd,
-    )
+    zero-exchange narrow map, and the mean update's per-cluster sums
+    (the kernel's ``label_sums``, which ``lloyd_nd`` folds its means
+    from) are one Spark job of one stage: no exchange, and the vector
+    column is never exploded into per-element rows."""
+    import uuid
+
+    from flink_kmeans_clustering_spark.functions.vector import label_sums
+    from flink_kmeans_clustering_spark.operators.kmeans import assign_points_nd
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     init = [
@@ -926,9 +927,19 @@ def test_nd_assignment_narrow_and_update_single_shuffle(spark):
     ]
     a = assign_points_nd(emb, init)
     assert shuffle_count(a) == 0, explain_str(a)
-    upd = update_centroids_nd(a, dim=len(init[0]))
-    assert_max_shuffles(upd, 1)
-    assert "Generate" not in explain_str(upd), "vector must not explode"
+    assert "Generate" not in explain_str(a), "vector must not explode"
+    sc = spark.sparkContext
+    group = f"nd-update-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        [sums] = label_sums(a, "embedding", len(init[0]), label_col="cluster")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert [len(tracker.getJobInfo(j).stageIds) for j in jobs] == [1]
+    assert sum(n for n, _, _, _ in sums.values()) == emb.count()
 
 
 def _lambda_bodies(plan: str) -> list[str]:

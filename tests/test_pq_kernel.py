@@ -205,3 +205,28 @@ def test_ann_ivfpq_edge_cases_match_python_reference(rows_df):
     ).collect()
     got = [(r["vec_id"], r["d2"]) for r in got]
     assert _same(got, want), (got, want)
+
+
+def test_ann_ivfpq_skips_a_probed_cell_with_no_residual(spark):
+    """A probed cell whose centroid holds a NULL element has no
+    residual: it adds no candidates, and the other cell's rows are
+    ranked as if it had not been probed.  One codeword per subspace
+    gives every candidate the same ADC score, so the reference is the
+    exact dist² cut on (d2, id)."""
+    cents = [(0, [1.0, None]), (1, [1.0, 0.0])]
+    books = [[[0.0]], [[0.0]]]
+    q = [1.0, 0.0]
+    rows = [  # (vec_id, label, embedding): vectors in both cells
+        (0, 0, [1.0, 0.25]), (1, 0, [0.75, 0.0]),
+        (2, 1, [0.5, 0.5]), (3, 1, [1.25, 0.0]), (4, 1, [1.0, -0.5]), (5, 1, [0.75, 0.0]),
+    ]
+    df = spark.createDataFrame(rows, SCHEMA)
+    want = sorted(
+        ((_fold(v, q), vid) for vid, cell, v in rows if cell == 1)
+    )[:3]
+    want = [(vid, d2) for d2, vid in want]
+    for n_probe in (1, 2):
+        got = ann_ivfpq(df, q, cents, books, k=3, n_probe=n_probe, round_to=None).collect()
+        assert [(r["vec_id"], r["d2"]) for r in got] == want, n_probe
+    only_null = ann_ivfpq(df, q, cents[:1], books, k=3, n_probe=1, round_to=None)
+    assert only_null.collect() == []

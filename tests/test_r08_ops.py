@@ -327,8 +327,6 @@ def test_bbit_minhash_rejects_unreplayable_config(spark):
     )
 
     docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="md5"):
-        bbit_minhash_report(docs, hash_fn="xxhash64")
     with pytest.raises(ValueError, match="b must be"):
         bbit_minhash_report(docs, b=0)
 

@@ -249,18 +249,18 @@ def test_coreset_empty_input_yields_empty(spark):
     assert coreset_sample(df, k=3).count() == 0
 
 
-# --- array_lit (the nested-literal fast path) --------------------------------
+# --- array_lit_sql (the nested-literal fast path) ----------------------------
 
 
 def test_array_lit_bit_identical_to_f_lit(spark):
-    """array_lit renders repr(float) literals parsed JVM-side; they
+    """array_lit_sql renders repr(float) literals parsed JVM-side; they
     must be BIT-identical to F.lit for adversarial doubles (subnormal,
     huge, tiny, negative zero, long mantissas) — the guarantee that
     let the PQ/Lloyd trainers swap literal construction without
     re-proving every oracle."""
     from hypothesis import given, settings, strategies as st
 
-    from flink_kmeans_clustering_spark.operators.common import array_lit
+    from flink_kmeans_clustering_spark.operators.common import array_lit_sql
 
     adversarial = [
         0.0, -0.0, 1.0, -1.0, 1e-308, 5e-324, 1.7976931348623157e308,
@@ -268,7 +268,7 @@ def test_array_lit_bit_identical_to_f_lit(spark):
         123456789.123456789, 3.141592653589793,
     ]
     df = spark.range(1).select(
-        F.lit(adversarial).alias("a"), array_lit(adversarial).alias("b")
+        F.lit(adversarial).alias("a"), F.expr(array_lit_sql(adversarial)).alias("b")
     )
     [r] = df.collect()
     import struct
@@ -293,15 +293,15 @@ def test_array_lit_rejects_non_finite_and_renders_ints(spark):
 
     import pytest as _pytest
 
-    from flink_kmeans_clustering_spark.operators.common import array_lit
+    from flink_kmeans_clustering_spark.operators.common import array_lit_sql
 
     with _pytest.raises(ValueError):
-        array_lit([1.0, float("nan")])
+        array_lit_sql([1.0, float("nan")])
     with _pytest.raises(ValueError):
-        array_lit([float("inf")])
+        array_lit_sql([float("inf")])
     [r] = spark.range(1).select(
-        array_lit([[1, 2], [3, 4]], kind="int").alias("a"),
-        array_lit([2**40], kind="long").alias("b"),
+        F.expr(array_lit_sql([[1, 2], [3, 4]], kind="int")).alias("a"),
+        F.expr(array_lit_sql([2**40], kind="long")).alias("b"),
     ).collect()
     assert r["a"] == [[1, 2], [3, 4]] and r["b"] == [2**40]
 
