@@ -1816,7 +1816,7 @@ def q_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     upsert/tombstone labeling as batch cdc_apply; the final emission
     per key (max n_ops) is the final state, tombstoned keys drop.
     Oracle: the batch CDC apply verbatim."""
-    from flink_kmeans_clustering_spark.operators.sampling import hash_bucket
+    from flink_kmeans_clustering_spark.functions.hashing import hash_bucket
     from flink_kmeans_clustering_spark.streaming.stateful import (
         cdc_latest_state,
     )

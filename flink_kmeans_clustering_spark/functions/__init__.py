@@ -8,6 +8,11 @@ the operators embed in their projections.  The one Python stage is the
 nearest-codeword kernel in ``vector`` (numpy over Arrow batches in
 ``mapInArrow``) behind n-d K-Means, the IVF cell means and product
 quantization, which replaced an interpreted k·d higher-order argmin.
+``hashing`` holds the md5 digest contract (a hex slice of an md5 digest
+read as an integer: ``md5_int``, ``md5_unit``, ``hash_bucket`` and the
+driver-side ``md5_u32``) that every DuckDB-replayable sample, sketch
+lane and synthetic column builds from, beside the xxhash64 MinHash
+signature helpers.
 """
 
 from flink_kmeans_clustering_spark.functions.vector import (

@@ -1,36 +1,81 @@
-"""Deterministic hashing primitives over MinHash signatures and SimHash
-values: signature similarity, LSH band digests, Hamming distance and
-SimHash chunks.  The signatures themselves are built by the dedup
-operators (explode + per-lane MIN aggregates, ``operators.dedup``).
+"""Deterministic hashing primitives, in two families.
 
-All hashing runs JVM-side on ``xxhash64`` (a Catalyst expression), so
-signatures are computed inside codegen during the scan — the shape that
-holds up when the shingle sets are petabyte-scale.  Hash family i is
-``xxhash64(i, value)``: seeding by prepending the function index.
+**The md5 digest contract** (``hex_int``, ``md5_int``, ``md5_unit``,
+``md5_u32``, ``hash_bucket``).  Everything the engine must let another
+engine replay bit-for-bit — content-hash samples, sketch buckets,
+md5 MinHash/SimHash/Bloom lanes, synthetic columns, hashed draws —
+reads a slice of an md5 hex digest as an integer:
+``conv(substring(md5(s), start, width), 16, 10)``, almost always the
+first 8 chars as a uniform 32-bit value.  md5 is bit-identical in
+Spark, DuckDB and every warehouse, and a slice of at most 15 hex chars
+fits a signed 64-bit int in all of them, so there are no overflow
+semantics to reconcile.  The functions here are the one place that
+spells the contract out; ``md5_u32`` is its driver-side twin for
+values computed in Python (gear tables, projection weights, hashed
+picks).  When several lanes slice ONE digest, materialize the digest
+once and slice it with ``hex_int``.
 
-Hash-function counts / band widths are compile-time constants, so the
-per-lane expressions are unrolled into literal arrays — Catalyst folds
-the constants and codegen fuses the lanes.
-
-These produce engine-specific hash values (DuckDB has no xxhash64), so
-operators built on them take the driver's rows-only correctness check;
-their *semantics* are covered by unit tests with known-similar inputs.
+**xxhash64 over MinHash signatures and SimHash values**
+(``signature_similarity``, ``band_hashes``, ``hamming64``,
+``simhash_chunks``).  The default MinHash lanes are
+``xxhash64(i, shingle)`` (seeding by prepending the function index), a
+Catalyst expression computed inside codegen during the scan, ~2-3×
+cheaper than the md5 lanes.  The signatures themselves are built by
+the dedup operators (explode + per-lane MIN aggregates,
+``operators.dedup``).  Hash-function counts and band widths are
+compile-time constants, so per-lane expressions unroll into literal
+arrays.  DuckDB has no xxhash64, so operators built on it take the
+driver's rows-only correctness check; their semantics are covered by
+unit tests with known-similar inputs.
 """
 
 from __future__ import annotations
+
+import hashlib
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-# The md5-based lane family (for DuckDB-reproducible MinHash/SimHash)
-# lives inline in operators.dedup: lanes are 60-bit md5 hex slices
-# (chars 1-15 / 16-30 of a seeded digest) and SimHash bit lanes are the
-# two 32-bit md5 halves.  Every intermediate fits a signed 64-bit int in
-# both engines, so there are no overflow semantics to reconcile; the
-# digests are materialized in a projection before aggregation so each is
-# computed exactly once.  ~2-3× xxhash64's cost — verification surface,
-# not the production default.
+def hex_int(digest: Column | str, start: int = 1, width: int = 8) -> Column:
+    """Hex chars ``[start, start + width)`` (1-based) of ``digest`` as a
+    bigint: ``conv(substring(digest, start, width), 16, 10)``.  At most
+    15 chars, so the value fits a signed 64-bit int in every engine."""
+    if not 1 <= width <= 15:
+        raise ValueError(f"width must be in [1, 15], got {width}")
+    return F.conv(F.substring(digest, start, width), 16, 10).cast("long")
+
+
+def md5_int(s: Column | str, start: int = 1, width: int = 8) -> Column:
+    """:func:`hex_int` of ``md5(s)``; the default is the uniform 32-bit
+    value of the first 8 hex chars.  NULL in, NULL out."""
+    return hex_int(F.md5(s), start, width)
+
+
+def md5_unit(s: Column | str) -> Column:
+    """Uniform double in (0, 1]: ``(md5_int(s) + 1) / 2³²`` — never 0,
+    so its log is finite."""
+    return (md5_int(s) + F.lit(1.0)) / F.lit(4294967296.0)
+
+
+def md5_u32(s: str) -> int:
+    """Driver-side :func:`md5_int`: the first 8 md5 hex chars of the
+    UTF-8 bytes of ``s`` as an int in [0, 2³²)."""
+    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
+
+
+def hash_bucket(key: Column | str, buckets: int = 16) -> Column:
+    """Stable bucket in [0, buckets) from the md5 of ``key``.
+
+    The bucket id is the first md5 hex byte (a uniform 0..255 value)
+    mod ``buckets``, so ``buckets`` must divide 256 — a non-divisor
+    (e.g. 10) would bias low buckets and break the nested-sample
+    prefix property (a 1/2N sample must be a subset of the 1/N
+    sample).  Enforced, not just documented.
+    """
+    if not (1 <= buckets <= 256) or 256 % buckets != 0:
+        raise ValueError("buckets must be a divisor of 256 (1, 2, 4, ..., 256)")
+    return md5_int(key, 1, 2).cast("int") % buckets
 
 
 def signature_similarity(sig_a: Column, sig_b: Column) -> Column:

@@ -163,8 +163,8 @@ def array_lit_sql(nested, kind: str = "double") -> str:
     literal sits INSIDE a larger string and the entire projection stays
     at ONE py4j call; ``F.expr(array_lit_sql(...))`` is the Column.
 
-    ``kind``: "double" (default) suffixes leaves with ``D``; "int" /
-    "long" render integer leaves (``L`` for long).  NaN/±Inf are
+    ``kind``: "double" (default) suffixes leaves with ``D``; "int"
+    renders integer leaves.  NaN/±Inf are
     rejected — they have no portable SQL literal form and no operator
     here ships them.
     """
@@ -178,8 +178,6 @@ def array_lit_sql(nested, kind: str = "double") -> str:
             if math.isnan(v) or math.isinf(v):
                 raise ValueError(f"non-finite literal {v!r}")
             return repr(v) + "D"
-        if kind == "long":
-            return str(int(x)) + "L"
         return str(int(x))
 
     return render(nested)

@@ -30,6 +30,10 @@ from flink_kmeans_clustering_spark.operators.common import array_lit_sql, spread
 from flink_kmeans_clustering_spark.functions.hashing import (
     band_hashes,
     hamming64,
+    hash_bucket,
+    hex_int,
+    md5_int,
+    md5_u32,
     signature_similarity,
     simhash_chunks,
 )
@@ -338,11 +342,7 @@ def _minhash_lsh_sig_pairs(
             ],
         )
         lanes = [
-            F.min(
-                F.conv(
-                    F.substring(F.col(f"_m{i // 2}"), 1 + 15 * (i % 2), 15), 16, 10
-                ).cast("long")
-            ).alias(f"_h{i}")
+            F.min(hex_int(f"_m{i // 2}", 1 + 15 * (i % 2), 15)).alias(f"_h{i}")
             for i in range(num_hashes)
         ]
     else:
@@ -441,8 +441,8 @@ def simhash_pairs(
     # materialize the digest once, then slice both 32-bit halves
     ex = tok.select("id", F.md5(F.col("t")).alias("_m")).select(
         "id",
-        F.conv(F.substring("_m", 1, 8), 16, 10).cast("long").alias("h0"),
-        F.conv(F.substring("_m", 9, 8), 16, 10).cast("long").alias("h1"),
+        hex_int("_m", 1).alias("h0"),
+        hex_int("_m", 9).alias("h1"),
     )
     votes = [
         f"sum((CAST((shiftright({'h0' if b < 32 else 'h1'}, {b % 32})"
@@ -845,10 +845,7 @@ def _bloom_lane_pos(j: int, col: Column, m: int) -> Column:
     digest supports k ≤ 4."""
     if not 0 <= j <= 3:
         raise ValueError(f"lane must be in [0, 3], got {j}")
-    return (
-        F.conv(F.substring(F.md5(col), 1 + 8 * j, 8), 16, 10).cast("long")
-        % m
-    )
+    return md5_int(col, 1 + 8 * j) % m
 
 
 def bloom_prefilter(
@@ -939,13 +936,7 @@ def bloom_prefilter(
     # transform() lambda producing the k lane positions, and the
     # bit-test chain binds the positions array the same way.
     def _lane_positions(h: Column) -> Column:
-        return F.array(
-            *[
-                F.conv(F.substring(h, 1 + 8 * j, 8), 16, 10).cast("long")
-                % m
-                for j in range(k)
-            ]
-        )
+        return F.array(*[hex_int(h, 1 + 8 * j) % m for j in range(k)])
 
     def _test_all(p: Column) -> Column:
         def test(j: int) -> Column:
@@ -1011,13 +1002,14 @@ def bbit_minhash_report(
     of accidental collisions; the unbiased estimator corrects them:
     Ĵ_b = (match_rate − 2⁻ᵇ) / (1 − 2⁻ᵇ).  At 100 TB the sketch column
     IS the dedup index's storage bill, so this is the "what does 16×
-    compression cost in MAE" report — read it next to
-    :func:`minhash_calibration` before sizing signatures.
+    compression cost in MAE" report.  Its full-sketch columns are
+    :func:`minhash_calibration`.
 
-    Physics mirrors the calibration operator: candidates are every
-    band-collision pair at the structural minimum threshold, and the
-    b-bit estimate re-slices the SAME md5 lane values the LSH pass
-    already computed (the signatures ride along on the pair rows —
+    Candidates are every band-collision pair (threshold = one matching
+    band, the structural minimum — no extra cut, so the report sees the
+    estimator's full operating range), and the b-bit estimate
+    re-slices the SAME md5 lane values the LSH pass already computed
+    (the signatures ride along on the pair rows —
     no candidate-sized signature rebuild, no second eager checkpoint);
     only the exact-Jaccard side re-shingles, candidate-sized, after a
     broadcast semi-join, so the corpus is scanned exactly twice (once
@@ -1805,8 +1797,7 @@ def synthesize_urls(
 
     Output: input columns + ``url``.
     """
-    h = F.md5(F.col(id_col).cast("string"))
-    lane = F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
+    lane = md5_int(F.col(id_col).cast("string"))
 
     def bit(k: int):
         return (F.floor(lane / F.lit(float(2**k))).cast("long") % 2) == 1
@@ -2193,75 +2184,17 @@ def minhash_calibration(
     picking a band/row configuration or trusting a threshold — the
     sketch-quality twin of :func:`similarity.quantization_error`.
 
-    Candidates are every band-collision pair (threshold = one matching
-    band, the structural minimum — no extra cut, so the calibration
-    sees the estimator's full operating range).  Exact Jaccard uses the
-    two-stage verify physics: candidate ids broadcast-semi-join the
-    corpus BEFORE the shingle HOF runs, candidate-sized text work, the
-    corpus never shuffled.  Lanes are md5 hex-slices, so an oracle
-    replays the same sketch.  Estimates are exact multiples of
-    1/num_hashes; the rollup sums 6-decimal-rounded values in DECIMAL.
+    The full-sketch columns of :func:`bbit_minhash_report`, which
+    builds the same candidates (every band-collision pair, md5 lanes)
+    and the same exact Jaccard; the b-bit columns it also computes are
+    projected away.
 
     Output: (est_jaccard, n_pairs, avg_exact, mae) — mae is the mean
     |est − exact| within the estimate bucket.
     """
-    from flink_kmeans_clustering_spark.functions.text import (
-        ngram_shingles,
-        tokenize,
-    )
-
-    cand = minhash_lsh_pairs(
-        docs,
-        id_col=id_col,
-        text_col=text_col,
-        n=n,
-        num_hashes=num_hashes,
-        bands=bands,
-        threshold=1.0 / num_hashes,  # one matching band implies more
-        hash_fn="md5",
-    ).localCheckpoint()
-    cand_ids = (
-        cand.select(F.col("id_a").alias("_cid"))
-        .union(cand.select(F.col("id_b").alias("_cid")))
-        .distinct()
-    )
-    needed = docs.join(
-        F.broadcast(cand_ids), docs[id_col] == F.col("_cid"), "left_semi"
-    )
-    sh = needed.select(
-        F.col(id_col).alias("_id"),
-        ngram_shingles(tokenize(F.col(text_col)), n).alias("_sh"),
-    ).localCheckpoint()
-    with_a = (
-        sh.join(F.broadcast(cand), F.col("_id") == F.col("id_a"))
-        .drop("_id")
-        .withColumnRenamed("_sh", "sh_a")
-    )
-    with_ab = (
-        sh.join(F.broadcast(with_a), F.col("_id") == F.col("id_b"))
-        .drop("_id")
-        .withColumnRenamed("_sh", "sh_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    exact = F.round(inter.cast("double") / union, 6)
-    scored = with_ab.filter(union > 0).select(
-        "est_jaccard",
-        exact.alias("_exact"),
-        F.round(F.abs(F.col("est_jaccard") - exact), 6).alias("_err"),
-    )
-    cnt = F.count(F.lit(1))
-    return scored.groupBy("est_jaccard").agg(
-        cnt.alias("n_pairs"),
-        F.round(
-            F.sum(F.col("_exact").cast("decimal(20,6)")).cast("double") / cnt,
-            6,
-        ).alias("avg_exact"),
-        F.round(
-            F.sum(F.col("_err").cast("decimal(20,6)")).cast("double") / cnt,
-            6,
-        ).alias("mae"),
-    )
+    return bbit_minhash_report(
+        docs, id_col, text_col, n=n, num_hashes=num_hashes, bands=bands
+    ).select("est_jaccard", "n_pairs", "avg_exact", F.col("mae_full").alias("mae"))
 
 
 GEAR_WINDOW = 8       # rolling window width (chars)
@@ -2273,12 +2206,7 @@ def gear_table() -> list[int]:
     first 8 md5-hex chars of ``"gear:c"`` — the same portable-digest
     contract as the MinHash/SimHash/CMS lane families, so any engine
     regenerates the identical table from the same one-line recipe."""
-    import hashlib
-
-    return [
-        int(hashlib.md5(f"gear:{c}".encode()).hexdigest()[:8], 16)
-        for c in range(256)
-    ]
+    return [md5_u32(f"gear:{c}") for c in range(256)]
 
 
 def gear_chunks(
@@ -2423,8 +2351,7 @@ def snapshot_delta_dedup(
     docs carry zero chunk bytes but still count in n_new_docs.
     """
     def _is_new(c):
-        b = F.conv(F.substring(F.md5(c.cast("string")), 1, 2), 16, 10)
-        return b.cast("int") % 2 == 1
+        return hash_bucket(c.cast("string"), 2) == 1
 
     is_new = _is_new(F.col(id_col))
     chunks = gear_chunks(
@@ -2532,7 +2459,6 @@ def crossmodal_dedup_pairs(
     max_caption_group: int = 200,
     id_col: str = "doc_id",
     text_col: str = "text",
-    checkpoint_captions: bool = True,
 ) -> DataFrame:
     """Cross-modal JOINT dedup (new r11): catch asset reuse that a
     single-modality pass misses — an image re-posted under a rewritten
@@ -2572,10 +2498,7 @@ def crossmodal_dedup_pairs(
         max_hamming=max_hamming,
         max_block=max_block,
     )
-    caps = caption_fingerprints(
-        docs, max_caption_group, id_col, text_col,
-        checkpoint=checkpoint_captions,
-    )
+    caps = caption_fingerprints(docs, max_caption_group, id_col, text_col)
     x, y = caps.alias("x"), caps.alias("y")
     cpairs = x.join(
         y,

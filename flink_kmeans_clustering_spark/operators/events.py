@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from flink_kmeans_clustering_spark.functions.hashing import hash_bucket, md5_int
+
 __all__ = [
     "asof_join",
     "extract_props",
@@ -914,8 +916,6 @@ def cdc_apply(
     """
     from pyspark.sql.window import Window
 
-    from flink_kmeans_clustering_spark.operators.sampling import hash_bucket
-
     op = F.when(
         hash_bucket(F.col(seq_col).cast("string"), delete_buckets) == 0,
         F.lit("D"),
@@ -1013,9 +1013,7 @@ def rfm_segments(
         "monetary",
     )
     denom = round(1 / rate)
-    bucket = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10
-    ).cast("long") % denom
+    bucket = md5_int(F.col("user_id").cast("string")) % denom
     med = ru.filter(bucket == 0).agg(
         F.round(F.expr("percentile(recency_days, 0.5)"), round_to).alias("_rm"),
         F.round(F.expr("percentile(frequency, 0.5)"), round_to).alias("_fm"),

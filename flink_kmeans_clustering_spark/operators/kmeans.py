@@ -61,6 +61,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flink_kmeans_clustering_spark.functions.hashing import md5_int, md5_u32
 from flink_kmeans_clustering_spark.functions.vector import (
     assign_nearest,
     l2_normalize_sql,
@@ -526,23 +527,9 @@ def scalable_init(
         if phi <= 0.0:
             break  # every point coincides with a candidate
         if draw_fn == "md5":
-            u = (
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.lit(f"kr:{seed}:{r}:"),
-                                F.col(id_col).cast("string"),
-                            )
-                        ),
-                        1,
-                        8,
-                    ),
-                    16,
-                    10,
-                ).cast("double")
-                / F.lit(4294967296.0)
-            )
+            u = md5_int(
+                F.concat(F.lit(f"kr:{seed}:{r}:"), F.col(id_col).cast("string"))
+            ) / F.lit(4294967296.0)
             new_df = a.filter(u * phi < F.lit(float(l)) * F.col("_d2"))
             # collect in id order: candidate ids must be reproducible,
             # not an artifact of partition-collect order
@@ -615,14 +602,6 @@ def _weighted_kmeanspp(
     return centers
 
 
-def _md5_u32(s: str) -> float:
-    """Uniform in [0,1): first 8 md5-hex chars over 2³² (the repo-wide
-    cross-engine hash contract — any SQL engine reproduces it)."""
-    import hashlib
-
-    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16) / 4294967296.0
-
-
 def _weighted_kmeanspp_hash(
     cand: list[tuple[float, float]],
     w: list[float],
@@ -634,7 +613,7 @@ def _weighted_kmeanspp_hash(
     :func:`_weighted_kmeanspp`.
 
     Pick j crosses the cumulative (weight·d²) mass at the uniform
-    ``md5_u32("pp:seed:j")``: cum and total accumulate as quantized
+    ``md5_u32("pp:seed:j") / 2³²``: cum and total accumulate as quantized
     Decimals (order-exact), comparisons happen on their nearest
     doubles — precisely ``CAST(SUM(CAST(mass AS DECIMAL(38,12))) OVER
     (ORDER BY cid) AS DOUBLE) > u * CAST(total AS DOUBLE)`` in SQL.
@@ -660,7 +639,7 @@ def _weighted_kmeanspp_hash(
     w_mass = [Decimal(wi).quantize(q12) for wi in w]
     if sum(w_mass) <= 0:
         w_mass = [Decimal(1)] * len(cand)  # degenerate: uniform
-    centers = [cand[_cross(w_mass, _md5_u32(f"pp:{seed}:0"))]]
+    centers = [cand[_cross(w_mass, md5_u32(f"pp:{seed}:0") / 4294967296.0)]]
     d2 = [
         (cx - centers[0][0]) ** 2 + (cy - centers[0][1]) ** 2
         for cx, cy in cand
@@ -676,7 +655,7 @@ def _weighted_kmeanspp_hash(
                         break
             break
         j = len(centers)
-        nxt = cand[_cross(mass, _md5_u32(f"pp:{seed}:{j}"))]
+        nxt = cand[_cross(mass, md5_u32(f"pp:{seed}:{j}") / 4294967296.0)]
         centers.append(nxt)
         d2 = [
             min(di, (cx - nxt[0]) ** 2 + (cy - nxt[1]) ** 2)
@@ -833,12 +812,11 @@ def lloyd_nd(
     cache = cache and not vectors.is_cached
     if cache:
         vectors = vectors.cache()
-    dim = len(init_centroids[0])
     current = [list(map(float, c)) for c in init_centroids]
     ids = list(range(len(current)))
     try:
         for _ in range(max_iterations):
-            [sums] = label_sums(vectors, vec_col, dim, codebooks=[current], ids=[ids])
+            [sums] = label_sums(vectors, vec_col, codebooks=[current], ids=[ids])
             ids = sorted(sums)
             # one IEEE double division per component
             current = [(sums[i][1] / sums[i][0]).tolist() for i in ids]

@@ -24,6 +24,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flink_kmeans_clustering_spark.functions.hashing import hash_bucket
+from flink_kmeans_clustering_spark.operators.common import quote_ident
+
 _GRAM_SCHEMA = "i int, j int, g double"
 
 
@@ -295,12 +298,9 @@ def embedding_drift(
     # (conditional SUMs, left-assoc + chains, identical parenthesis
     # structure), so values are bit-identical — oracle hashes
     # unchanged at sf0.01 and sf0.1.
-    qid = "`" + id_col.replace("`", "``") + "`"
-    qvec = "`" + vec_col.replace("`", "``") + "`"
-    base = df.selectExpr(
-        "CAST(conv(substring(md5(CAST({} AS STRING)), 1, 2), 16, 10)"
-        " AS INT) % 2 AS _h".format(qid),
-        f"transform({qvec}, x -> CAST(x AS DOUBLE)) AS _v",
+    base = df.select(
+        hash_bucket(F.col(quote_ident(id_col)).cast("string"), 2).alias("_h"),
+        F.expr(f"transform({quote_ident(vec_col)}, x -> CAST(x AS DOUBLE))").alias("_v"),
     ).filter(F.size("_v") == dim)
     agg_exprs = [
         "sum(CASE WHEN _h = 0 THEN 1 ELSE 0 END) AS _na",
@@ -524,7 +524,6 @@ def isotropy_profile(
     max_abs_cos, iso_floor) with iso_floor = 1/√d for reference.
     """
     from flink_kmeans_clustering_spark.functions.vector import cosine_sql, norm_sql
-    from flink_kmeans_clustering_spark.operators.sampling import hash_bucket
 
     # each panel row's norm is folded once, below the self-join, so a
     # pair folds only its dot

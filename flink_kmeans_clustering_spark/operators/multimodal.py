@@ -36,6 +36,8 @@ from typing import TYPE_CHECKING
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flink_kmeans_clustering_spark.functions.hashing import md5_int, md5_u32
+
 if TYPE_CHECKING:  # pandas only crosses the boundary inside mapInPandas
     import pandas as pd
 
@@ -865,12 +867,10 @@ def clip_head_weights(tag: str, out_dim: int = CLIP_OUT_DIM, in_dim: int = CLIP_
     literal matrix, codegen'd matvec, no UDF in the hot path — is
     identical.
     """
-    import hashlib
+    import math
 
     def w(j: int, i: int) -> float:
-        h = int(hashlib.md5(f"clip:{tag}:{j}:{i}".encode()).hexdigest()[:8], 16)
-        import math
-
+        h = md5_u32(f"clip:{tag}:{j}:{i}")
         return math.floor((h / 4294967296.0 * 2.0 - 1.0) * 1e6 + 0.5) / 1e6
 
     return [[w(j, i) for i in range(in_dim)] for j in range(out_dim)]
@@ -921,10 +921,7 @@ def clip_agreement_filter(
     img = feats.select(F.col("asset_id").alias("doc_id"), h_img.alias("hi"))
 
     bks = tokenize(F.col("text"))
-    bucket_of = lambda t: (
-        F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long")
-        % n_buckets
-    )
+    bucket_of = lambda t: md5_int(t) % n_buckets
     # let-bind the token-bucket array (projection-collapse guard): the
     # histogram reads it 16 times
     hist = F.get(

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from flink_kmeans_clustering_spark.functions.hashing import hex_int
+
 DEC = "decimal(18,4)"
 DEC_WIDE = "decimal(25,8)"
 
@@ -1059,17 +1061,14 @@ def synth_partsupp(part: DataFrame, supplier: DataFrame) -> DataFrame:
         )
     )
 
-    def hslice(start: int) -> Column:
-        return F.conv(F.substring(F.col("_h"), start, 8), 16, 10).cast("long")
-
     return (
         ps.select("ps_partkey", suppkey.cast("long").alias("ps_suppkey"))
         .withColumn("_h", h)
         .select(
             "ps_partkey",
             "ps_suppkey",
-            (F.lit(1) + hslice(1) % 9999).alias("ps_availqty"),
-            ((F.lit(100) + hslice(9) % 99900).cast("double") / F.lit(100)).alias(
+            (F.lit(1) + hex_int("_h", 1) % 9999).alias("ps_availqty"),
+            ((F.lit(100) + hex_int("_h", 9) % 99900).cast("double") / F.lit(100)).alias(
                 "ps_supplycost"
             ),
         )
@@ -1258,22 +1257,19 @@ def synth_shipping(lineitem: DataFrame) -> DataFrame:
         )
     )
 
-    def hslice(start: int) -> Column:
-        return F.conv(F.substring(F.col("_h"), start, 8), 16, 10).cast("long")
-
     ship = F.col("l_shipdate").cast("date")
     mode = F.array(*[F.lit(m) for m in SHIP_MODES])[
-        (hslice(1) % 5).cast("int")
+        (hex_int("_h", 1) % 5).cast("int")
     ]
     return (
         lineitem.withColumn("_h", h)
         .select(
             *lineitem.columns,
             mode.alias("l_shipmode"),
-            F.date_add(ship, (hslice(9) % 61 - 30).cast("int")).alias(
+            F.date_add(ship, (hex_int("_h", 9) % 61 - 30).cast("int")).alias(
                 "l_commitdate"
             ),
-            F.date_add(ship, (1 + hslice(17) % 30).cast("int")).alias(
+            F.date_add(ship, (1 + hex_int("_h", 17) % 30).cast("int")).alias(
                 "l_receiptdate"
             ),
         )

@@ -14,25 +14,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from flink_kmeans_clustering_spark.functions.hashing import (
+    hash_bucket,
+    md5_int,
+    md5_unit,
+)
 from flink_kmeans_clustering_spark.functions.vector import squared_l2_sql
 from flink_kmeans_clustering_spark.operators.common import quote_ident
-
-HEX = "0123456789abcdef"
-
-
-def hash_bucket(key: Column, buckets: int = 16) -> Column:
-    """Stable bucket in [0, buckets) from the md5 of ``key``.
-
-    The bucket id is the first md5 hex byte (a uniform 0..255 value)
-    mod ``buckets``, so ``buckets`` must divide 256 — a non-divisor
-    (e.g. 10) would bias low buckets and break the nested-sample
-    prefix property (a 1/2N sample must be a subset of the 1/N
-    sample).  Enforced, not just documented.
-    """
-    if not (1 <= buckets <= 256) or 256 % buckets != 0:
-        raise ValueError("buckets must be a divisor of 256 (1, 2, 4, ..., 256)")
-    b = F.conv(F.substring(F.md5(key), 1, 2), 16, 10).cast("int")
-    return b % buckets
 
 
 def deterministic_sample(
@@ -86,8 +74,6 @@ def stratified_hash_sample(
     (0.0 = drop).  Nested-sample property per stratum: lowering a rate
     always yields a subset of the higher-rate sample.
     """
-    if not (1 <= buckets <= 256) or 256 % buckets != 0:
-        raise ValueError("buckets must be a divisor of 256 (1, 2, 4, ..., 256)")
     # cast-to-string so numeric keys hash identically in any engine
     # (md5('123') is the cross-engine contract; md5 of raw int bytes
     # would be width/endianness-dependent)
@@ -154,9 +140,7 @@ def weighted_sample(
     Output: (key, weight, es_key) — es_key rounded BEFORE ranking so an
     independent engine ranks identically (ties broken by key).
     """
-    key_s = F.col(key_col).cast("string")
-    h = F.conv(F.substring(F.md5(key_s), 1, 8), 16, 10).cast("double")
-    u = (h + F.lit(1.0)) / F.lit(4294967296.0)  # (0, 1]
+    u = md5_unit(F.col(key_col).cast("string"))
     es = F.log(u) / F.col(weight_col).cast("double")
     if round_to is not None:
         es = F.round(es, round_to)
@@ -180,8 +164,7 @@ def _cms_bucket(token: Column, lane: int, width: int) -> Column:
     lane families.  The 32-bit value is non-negative, so plain ``%`` is
     already a positive modulus in every engine.
     """
-    h = F.md5(F.concat(token, F.lit(f"#{lane}")))
-    return F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % width
+    return md5_int(F.concat(token, F.lit(f"#{lane}"))) % width
 
 
 def cms_heavy_hitters(
@@ -316,10 +299,7 @@ def kmv_distinct(
     """
     from pyspark.sql import Window
 
-    h = F.conv(F.substring(F.md5(F.col(col).cast("string")), 1, 8), 16, 10).cast(
-        "double"
-    )
-    u = (h + F.lit(1.0)) / F.lit(4294967296.0)  # (0, 1]
+    u = md5_unit(F.col(col).cast("string"))
     hashes = df.select(F.col(group_by).alias("grp"), u.alias("u")).distinct()
     w = Window.partitionBy("grp").orderBy("u")
     kept = hashes.withColumn("rn", F.row_number().over(w)).filter(
@@ -364,9 +344,7 @@ def sampled_quantiles(
     Output: (group, n_sampled, q50, q90, q99) for the default probs.
     """
     denom = round(1 / rate)
-    bucket = F.conv(
-        F.substring(F.md5(F.col(key_col).cast("string")), 1, 8), 16, 10
-    ).cast("long") % denom
+    bucket = md5_int(F.col(key_col).cast("string")) % denom
     sampled = df.filter(bucket == 0)
     aggs = [F.count(F.lit(1)).alias("n_sampled")]
     for p in probs:
@@ -857,9 +835,7 @@ def coreset_sample(
             sens.alias("_sens"),
         )
     )
-    key_s = F.col(id_col).cast("string")
-    h = F.conv(F.substring(F.md5(key_s), 1, 8), 16, 10).cast("double")
-    u = (h + F.lit(1.0)) / F.lit(4294967296.0)  # (0, 1]
+    u = md5_unit(F.col(id_col).cast("string"))
     es = F.round(F.log(u) / F.col("_sens"), 6)
     return (
         scored.select(
@@ -938,10 +914,7 @@ def doremi_domain_weights(
         f"{domain_col} string, n_docs long, n_tokens long, "
         "token_share double, doremi_weight double, kl double"
     )
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("_tok")), 1, 8), 16, 10).cast("long")
-        % n_buckets
-    )
+    bucket = md5_int(F.col("_tok")) % n_buckets
     cnt_rows = (
         df.select(F.col(domain_col).alias("_d"), F.explode(tokenize(F.col(text_col))).alias("_tok"))
         .select("_d", bucket.alias("_b"))

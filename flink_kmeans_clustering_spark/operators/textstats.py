@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from flink_kmeans_clustering_spark.operators.common import session_conf, spread
+from flink_kmeans_clustering_spark.functions.hashing import md5_int
 from flink_kmeans_clustering_spark.functions.text import tokenize
 
 # language -> distinctive high-frequency stopwords (alphabetical language
@@ -1125,12 +1126,7 @@ def perplexity_buckets(
     """
     nll = lm_unigram_scores(docs, id_col, text_col).select(id_col, "nll")
     denom = round(1 / rate)
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10
-        ).cast("long")
-        % denom
-    )
+    bucket = md5_int(F.col(id_col).cast("string")) % denom
     s = nll.filter(bucket == 0)
     # repr() double literals: both engines parse the decimal string to
     # the same nearest double (Spark 'D' suffix, oracle VARCHAR cast)
@@ -1364,9 +1360,7 @@ def winnowing_fingerprints(
     hashed = grams.select(
         id_col,
         "pos",
-        F.conv(F.substring(F.md5("gram"), 1, 8), 16, 10)
-        .cast("long")
-        .alias("h"),
+        md5_int("gram").alias("h"),
     )
     w = (
         Window.partitionBy(id_col)
@@ -1548,10 +1542,7 @@ def dsir_weights(
         return F.concat(t, bigrams)
 
     ngrams = F.get(F.transform(F.array(tokenize(F.col(text_col))), _ngrams), 0)
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("_ng")), 1, 8), 16, 10).cast("long")
-        % n_buckets
-    )
+    bucket = md5_int(F.col("_ng")) % n_buckets
     # spread before the tokenize+bigram explode (r15, guide §2.5): the
     # plan references per_doc_bucket twice (LM-build broadcast subtree
     # + the fact side), and on a single-file corpus each reference

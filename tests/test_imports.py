@@ -12,6 +12,7 @@ from __future__ import annotations
 import ast
 import importlib
 import importlib.util
+import re
 from pathlib import Path
 
 import pytest
@@ -128,3 +129,75 @@ def test_public_engine_surface_is_reached_outside_tests():
     assert not extra, f"named by no non-test file: {extra}"
     stale = sorted(set(KEPT_FOR_TESTS) - set(unreached))
     assert not stale, f"reached (or gone); drop from KEPT_FOR_TESTS: {stale}"
+
+
+# --- the md5 digest contract has one home -------------------------------------
+
+#: The module that spells out "a hex slice of an md5 digest, read as an
+#: integer" — every other engine module builds from its functions.
+DIGEST_HOME = ROOT / PKG / "functions" / "hashing.py"
+
+#: ``path::function`` sites allowed to slice a hex digest themselves,
+#: each with the reason.
+DIGEST_SLICE_ALLOWED: dict[str, str] = {}
+
+_SQL_DIGEST_SLICE = re.compile(r"conv\s*\(\s*substring\s*\(", re.IGNORECASE)
+
+
+def _callee(node: ast.AST) -> str | None:
+    if isinstance(node, ast.Call):
+        f = node.func
+        return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+    return None
+
+
+def _is_digest_slice(node: ast.AST) -> bool:
+    """``conv(substring(...), ...)`` as a Column or in SQL text, or
+    ``int(<...>.hexdigest()[...], 16)``."""
+    if isinstance(node, ast.Constant) and isinstance(node.value, str):
+        return bool(_SQL_DIGEST_SLICE.search(node.value))
+    name = _callee(node)
+    if name == "conv" and node.args:
+        return _callee(node.args[0]) == "substring"
+    if name == "int" and len(node.args) == 2:
+        arg, base = node.args
+        return (
+            isinstance(base, ast.Constant)
+            and base.value == 16
+            and isinstance(arg, ast.Subscript)
+            and _callee(arg.value) == "hexdigest"
+        )
+    return False
+
+
+def _digest_slices(path: Path) -> list[str]:
+    """``path::function:line`` for every digest slice in ``path``
+    (``function`` is the enclosing top-level def, or ``<module>``)."""
+    rel = path.relative_to(ROOT)
+    out = []
+    for top in ast.parse(path.read_text(), str(path)).body:
+        owner = getattr(top, "name", "<module>")
+        for node in ast.walk(top):
+            if _is_digest_slice(node):
+                out.append(f"{rel}::{owner}:{node.lineno}")
+    return out
+
+
+def test_md5_digest_slices_only_in_hashing():
+    """The md5 contract (``hex_int``/``md5_int``/``md5_unit``/
+    ``md5_u32``/``hash_bucket``) lives in ``functions/hashing.py``; an
+    engine module that slices a hex digest into an integer itself is a
+    second copy of it.  The DuckDB oracle spellings in
+    ``__spark_entry__.py`` are independent references and not scanned."""
+    found = [
+        site
+        for path in sorted((ROOT / PKG).rglob("*.py"))
+        if path != DIGEST_HOME
+        for site in _digest_slices(path)
+    ]
+    extra = [s for s in found if s.rsplit(":", 1)[0] not in DIGEST_SLICE_ALLOWED]
+    assert not extra, f"build these from functions.hashing: {extra}"
+    kept = {s.rsplit(":", 1)[0] for s in found}
+    stale = sorted(set(DIGEST_SLICE_ALLOWED) - kept)
+    assert not stale, f"no longer slice a digest; drop from the allowlist: {stale}"
+    assert _digest_slices(DIGEST_HOME), "the contract itself must be found"

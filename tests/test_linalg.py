@@ -202,7 +202,7 @@ def test_embedding_drift_detects_shift_and_null_case(spark):
     # shifted variant: same ids, but rows whose md5-half == 1 move to a
     # different mean direction — the drift the monitor exists to catch
     shifted = base.copy()
-    from flink_kmeans_clustering_spark.operators.sampling import hash_bucket
+    from flink_kmeans_clustering_spark.functions.hashing import hash_bucket
     from pyspark.sql import functions as F
 
     halves = {

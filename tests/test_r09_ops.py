@@ -301,9 +301,8 @@ def test_array_lit_rejects_non_finite_and_renders_ints(spark):
         array_lit_sql([float("inf")])
     [r] = spark.range(1).select(
         F.expr(array_lit_sql([[1, 2], [3, 4]], kind="int")).alias("a"),
-        F.expr(array_lit_sql([2**40], kind="long")).alias("b"),
     ).collect()
-    assert r["a"] == [[1, 2], [3, 4]] and r["b"] == [2**40]
+    assert r["a"] == [[1, 2], [3, 4]]
 
 
 # --- gear_chunk_stats (late-r09: content-defined chunking dedup) -------------

@@ -5,10 +5,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from flink_kmeans_clustering_spark.functions.hashing import hash_bucket
 from flink_kmeans_clustering_spark.operators.sampling import (
     approx_distinct,
     deterministic_sample,
-    hash_bucket,
 )
 from flink_kmeans_clustering_spark.sources.parquet import load_events
 
@@ -531,10 +531,7 @@ def test_token_budget_sample_crossing_doc_taken(spark):
 def test_group_aware_split_no_leakage(spark):
     """All members of a duplicate group share the root's split; the
     root is the min id; distinct texts split independently."""
-    from flink_kmeans_clustering_spark.operators.sampling import (
-        group_aware_split,
-        hash_bucket,
-    )
+    from flink_kmeans_clustering_spark.operators.sampling import group_aware_split
 
     rows = [
         (5, "same text"),
